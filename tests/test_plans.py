@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from weather_data_pipeline_spark import registry
@@ -299,32 +300,94 @@ def test_min_label_propagate_multi_hop_chain(spark):
 
 
 def test_min_label_propagate_broadcast_gate_fallback(spark, monkeypatch):
-    """VERDICT r15 ask #3: the propagation broadcasts (edges and the
-    per-round nbr_min) are GATED on a bounded edge count — a broadcast
-    hint overrides Spark's size threshold, so an ungated hint on a
-    web-scale dup graph would collect it to the driver instead of
-    degrading to a shuffle join. Force the gate shut and pin that the
-    shuffle-join path converges to the identical fixpoint; pin in
-    source that BOTH hints sit behind the same gate."""
-    import inspect
-
+    """The propagation broadcasts (edges and the per-round nbr_min) are
+    GATED on the shared row budget — a broadcast hint overrides Spark's
+    size threshold, so an ungated hint on a web-scale dup graph would
+    collect it to the driver instead of degrading to a shuffle join.
+    Force the budget to 0 and pin that the shuffle-join path converges
+    to the identical fixpoint."""
+    from weather_data_pipeline_spark.functions import broadcast
     from weather_data_pipeline_spark.operators import dedup
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
     )
-    monkeypatch.setattr(dedup, "CC_BROADCAST_EDGES", 0)
+    monkeypatch.setattr(broadcast, "BROADCAST_ROWS", 0)
     got = {
         r.doc_id: r.component
         for r in dedup.min_label_propagate(nodes, pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
-    src = inspect.getsource(dedup.min_label_propagate)
-    assert "small = edges.count() <= CC_BROADCAST_EDGES" in src
-    # every broadcast in the function is conditioned on the gate
-    assert "F.broadcast(edges)" in src and "if small" in src
-    assert 'F.broadcast(nbr_min.alias("n")) if small' in src
+
+
+def test_broadcast_budget_helper_gates_the_hint(spark, monkeypatch):
+    """The shared helper puts a broadcast hint on the optimized plan
+    only while the probed row count fits the budget, and the gated graph
+    kernels hint through it — no direct, ungated ``F.broadcast(`` call."""
+    import inspect
+
+    from weather_data_pipeline_spark.functions import broadcast
+    from weather_data_pipeline_spark.operators import dedup, graph
+    from weather_data_pipeline_spark.plans.inspect import optimized_plan
+
+    a = spark.range(100)
+    b = spark.range(10)
+
+    def joined():
+        return a.join(broadcast.broadcast_under_budget(b, 10), "id")
+
+    assert "strategy=broadcast" in optimized_plan(joined())
+    monkeypatch.setattr(broadcast, "BROADCAST_ROWS", 0)
+    assert "strategy=broadcast" not in optimized_plan(joined())
+    kernels = [
+        graph.x9_pagerank,
+        graph.x9_label_propagation,
+        graph.x9_kcore_peel,
+        graph.x9_jaccard_neighbors,
+        graph.sssp_rounds,
+        dedup.min_label_propagate,
+    ]
+    for fn in kernels:
+        src = inspect.getsource(fn)
+        assert "broadcast_under_budget(" in src, fn.__name__
+        assert "F.broadcast(" not in src, fn.__name__
+
+
+#: queries whose joins hint through the shared budget; the first three
+#: return a plan that still carries the hint (the others checkpoint it
+#: away before the returned plan)
+_BUDGET_GATED = [
+    ("x9_pagerank", True),
+    ("x9_label_propagation", True),
+    ("x9_jaccard_neighbors", True),
+    ("x9_kcore_peel", False),
+    ("x9_bfs_reach", False),
+    ("x9_sssp_weighted", False),
+    ("x2_dup_components", False),
+]
+
+
+@pytest.mark.parametrize("name,hint_in_plan", _BUDGET_GATED)
+def test_broadcast_budget_shuffle_fallback(
+    spark, sf_dir, monkeypatch, name, hint_in_plan
+):
+    """With the broadcast budget forced to 0 every gated join takes the
+    planner's shuffle path; the rows must equal the default-budget rows
+    (at the sf0.001 smoke scale), and where the returned plan exposes
+    the hint it must be gone."""
+    from weather_data_pipeline_spark.functions import broadcast
+    from weather_data_pipeline_spark.plans.inspect import optimized_plan
+
+    df = _Q[name](spark, sf_dir)
+    want = sorted(tuple(r) for r in df.collect())
+    if hint_in_plan:
+        assert "strategy=broadcast" in optimized_plan(df)
+    monkeypatch.setattr(broadcast, "BROADCAST_ROWS", 0)
+    df = _Q[name](spark, sf_dir)
+    assert sorted(tuple(r) for r in df.collect()) == want
+    if hint_in_plan:
+        assert "strategy=broadcast" not in optimized_plan(df)
 
 
 def test_int8_quantization_recall_floor(spark):
@@ -1133,10 +1196,10 @@ def test_temperature_mixture_broadcast_total(spark):
 
 
 def test_pagerank_broadcasts_rank_vector(spark):
-    """Round 8 (VERDICT r7 ask #7): under PR_BROADCAST_NODES the rank
-    vector broadcasts into the edge join each power step — the edge
-    list is never re-shuffled and no sort-merge join appears; the only
-    per-step exchange is the partial-aggregated contribution sum."""
+    """Under the shared broadcast budget the rank vector broadcasts into
+    the edge join each power step — the edge list is never re-shuffled
+    and no sort-merge join appears; the only per-step exchange is the
+    partial-aggregated contribution sum."""
     from weather_data_pipeline_spark.plans.inspect import executed_plan
 
     plan = executed_plan(_Q["x9_pagerank"](spark, SF))

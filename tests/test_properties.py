@@ -931,7 +931,7 @@ def test_bloom_positions_no_false_negative_by_construction(member, registry):
 
 
 # ----------------------------------------------------------------------
-# round 12: the BFS kernel vs reference breadth-first search
+# the frontier kernel at unit weights vs reference breadth-first search
 # ----------------------------------------------------------------------
 
 bfs_graphs = st.tuples(
@@ -980,19 +980,22 @@ def _reference_bfs(edges, seeds, max_hop):
 )
 @given(bfs_graphs)
 def test_bfs_kernel_matches_reference(spark, graph):
-    """The distributed frontier/anti-join BFS must agree with a queue
-    BFS on arbitrary digraphs — cycles, self-loops, seeds outside the
-    edge list, duplicate edges, early exhaustion — for every hop
-    bound (min-hop semantics: the anti-join must never relabel an
-    already-reached node with a later hop)."""
-    from weather_data_pipeline_spark.operators.graph import bfs_hops
+    """Hop-bounded BFS is the unit-weight case of the frontier kernel:
+    ``sssp_rounds`` with ``w = 1`` must agree with a queue BFS on
+    arbitrary digraphs — cycles, self-loops, seeds outside the edge
+    list, duplicate edges, early exhaustion — for every hop bound
+    (min-hop semantics: a later round must never relabel an
+    already-reached node with a larger hop)."""
+    from weather_data_pipeline_spark.operators.graph import sssp_rounds
 
     edges, seeds, max_hop = graph
-    edf = spark.createDataFrame(edges, "src long, dst long")
+    edf = spark.createDataFrame(
+        [(s, d, 1) for s, d in edges], "src long, dst long, w long"
+    )
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
     got = sorted(
-        (r["node"], r["hop"])
-        for r in bfs_hops(sdf, edf, max_hop).collect()
+        (r["node"], r["dist"])
+        for r in sssp_rounds(sdf, edf, max_hop).collect()
     )
     assert got == _reference_bfs(edges, set(seeds), max_hop)
 

@@ -7,7 +7,7 @@ UNSHIFTED while the supplier universe grows 10x: the hot node's degree
 itself grows ~10x, the adversarial case for any per-node fan-out.
 
 Expected (then measured) behavior of the Pregel-shaped plans: the
-per-round label/keep joins BROADCAST under PR_BROADCAST_NODES, so the
+per-round label/keep joins BROADCAST under the shared row budget, so the
 hot node never concentrates a join partition; the per-(src,label) and
 per-src aggregates partial-aggregate map-side, so the celebrity's rows
 combine before the exchange. Degradation should therefore track edge

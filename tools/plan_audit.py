@@ -84,10 +84,11 @@ MULTI_JOB = {
     "position agg + one cached-probe scan + three bounded counts run as "
     "prior jobs (13 driver-traffic jobs total); the result plan is the "
     "|configs|-row local relation of the tuning curve",
-    "x9_bfs_reach": "edge thinning + per-hop visited vectors "
-    "localCheckpoint as prior jobs (one frontier join + one anti-join "
-    "each, early-stop on empty frontier); the result plan is the rollup "
-    "over the node universe left-joined to the final visited vector",
+    "x9_bfs_reach": "edge thinning + per-hop dist vectors of the "
+    "sssp_rounds kernel on unit-weight edges localCheckpoint as prior "
+    "jobs (one frontier join + one candidate min + one full-outer merge "
+    "each, early-stop on empty improved set); the result plan is the "
+    "rollup over the node universe left-joined to the final hop vector",
     "x3_rank_fusion": "the dense arm's query-vector collect (N_QUERIES "
     "rows) runs as a prior bounded job (the x3_cosine_topk kernel); the "
     "plan shows both arms' rank windows feeding the fusion partial agg",

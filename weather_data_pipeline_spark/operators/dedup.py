@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.broadcast import broadcast_under_budget
 from ..registry import query
 from ..session import fan_out
 from ..sources.testdata import load_table
@@ -505,17 +506,6 @@ def decontaminate_containment_flags(tr: DataFrame, ev: DataFrame) -> DataFrame:
 #: near-dup clusters; dup groups are clique-ish, so real diameters are tiny)
 _MAX_CC_ITERS = 50
 
-#: broadcast budget for the component-propagation joins, in materialized
-#: symmetric edge ROWS (two 8-byte keys each): under it the edge list and
-#: the per-round nbr_min vector ride broadcast joins (zero corpus-side
-#: exchanges per round); over it both hints are withheld so the planner
-#: falls back to a shuffle join instead of collecting a web-scale dup
-#: graph to the driver (VERDICT r15 ask #3 — a broadcast hint overrides
-#: the size threshold, it never "drops out"). Mirrors graph.py's
-#: PR_BROADCAST_NODES posture; production tunes it to the driver/executor
-#: broadcast budget.
-CC_BROADCAST_EDGES = 5_000_000
-
 
 @query(
     "x2_dup_components",
@@ -576,20 +566,13 @@ def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # near-dup graphs are tiny relative to the corpus: broadcast the edge
     # list so each propagation round is map-side (the corpus never
-    # reshuffles to meet edges). The hint is GATED on a bounded count of
-    # the materialized edge list (round 16, VERDICT r15 ask #3): a
-    # broadcast HINT does not "drop out" past the auto-broadcast
-    # threshold — Spark honors it at any estimated size, so an ungated
-    # hint on a web-scale dup graph collects the edges to the driver and
-    # OOMs where a shuffle join degrades gracefully. Past the gate both
-    # propagation joins fall back to the planner's shuffle strategy.
-    # CC_BROADCAST_EDGES rows ≈ 2·|pairs| symmetric (src, dst) longs
-    # (~16 B/row → ≤ ~80 MB framed, the graph.py PR_BROADCAST_NODES
-    # posture); the count is a metadata job over the checkpoint.
+    # reshuffles to meet edges). The hint is gated on a bounded count of
+    # the materialized edge list: past the shared budget both
+    # propagation joins fall back to the planner's shuffle strategy
+    # instead of collecting a web-scale dup graph to the driver.
     edges = edges.localCheckpoint()
-    small = edges.count() <= CC_BROADCAST_EDGES
-    if small:
-        edges = F.broadcast(edges)
+    n_edges = edges.count()
+    edges = broadcast_under_budget(edges, n_edges)
     labels = nodes.select("doc_id", F.col("doc_id").alias("component"))
     labels = labels.localCheckpoint()
     for _ in range(_MAX_CC_ITERS):
@@ -600,23 +583,18 @@ def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         )
         # `shrunk` rides along in the checkpointed step so convergence is
         # a limit-1 existence probe on materialized data — overflow-proof
-        # at any scale (the previous SUM(component) probe could alias on
-        # int64 overflow once Σ doc_id exceeds 2^63; ADVICE r4 #3) and no
-        # costlier: labels only decrease, so "no label shrank" IS the
-        # fixpoint.
+        # at any scale (a SUM(component) probe could alias on int64
+        # overflow once Σ doc_id exceeds 2^63) and no costlier: labels
+        # only decrease, so "no label shrank" IS the fixpoint.
         # nbr_min is bounded by the edge list's distinct endpoints, so
-        # it broadcasts under the SAME gate as edges (round-15
-        # optimization + round-16 gate): while small, the |corpus|-row
-        # label vector never shuffles per round (before: SMJ with two
-        # exchanges per round; after: zero — the only per-round
-        # exchange left is nbr_min's own groupBy); past the gate the
-        # hint is withheld and the planner's shuffle join carries the
-        # round, trading exchanges for not OOMing the driver.
+        # it broadcasts under the SAME probe as edges: while small, the
+        # |corpus|-row label vector never shuffles per round — the only
+        # per-round exchange left is nbr_min's own groupBy; past the
+        # budget the planner's shuffle join carries the round.
         stepped = (
             labels.alias("l")
             .join(
-                F.broadcast(nbr_min.alias("n")) if small
-                else nbr_min.alias("n"),
+                broadcast_under_budget(nbr_min.alias("n"), n_edges),
                 "doc_id",
                 "left",
             )

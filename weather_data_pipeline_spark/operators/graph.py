@@ -1,20 +1,37 @@
-"""X9 — graph analytics: PageRank over the order graph.
+"""X9 — graph analytics over the TPC-H trade graph.
 
-The dedup tier already ships one iterative graph algorithm (connected
-components, dedup.py); this module adds the other canonical one.
-Nodes are customers and suppliers, edges the distinct
-customer↔supplier trade relationships induced by orders⋈lineitem
-(symmetric — influence flows both ways). Fixed-iteration power method:
-at 100 TB each iteration is one edge-join + one partial-aggregated
-shuffle on the destination key, the textbook Pregel step expressed as
-plain DataFrame ops — no driver-side state beyond the loop counter.
+Nodes are customers and suppliers (supplier keys offset by
+``SUPP_OFFSET``), edges the customer↔supplier trade relationships
+induced by orders⋈lineitem. The module holds the iterative Pregel-style
+kernels — PageRank, label propagation (LPA), k-core peeling, hop-bounded
+BFS reach and weighted shortest paths (one delta-Bellman–Ford kernel,
+``sssp_rounds``; BFS is its unit-weight case) — plus the one-pass
+shape queries: triangle count, degree histogram and neighborhood
+Jaccard. Connected components live with the dedup tier
+(``dedup.min_label_propagate``).
 
-Determinism across engines: every per-edge contribution is cast to
-DECIMAL(28,12) BEFORE the destination sum (exact, order-independent),
-so each iteration's ranks are IEEE-identical doubles on both engines;
-the oracle unrolls the same ``N_ITER`` steps as nested CTEs generated
-from one Python template — the two engines cannot disagree on the
-recurrence.
+Shared pieces, each built once here:
+
+- ``_trade_pairs`` / ``_trade_edges``: the distinct trade pairs and
+  their symmetric, checkpointed edge list (PageRank, LPA, k-core,
+  degree histogram);
+- ``_strength_graph``: the strength-thinned edge list, node universe
+  and seed set (BFS, SSSP);
+- ``_node_rollup`` / ``_reach_rollup``: the per-group node rollup
+  (count, customer/supplier split, min member) for LPA, BFS and SSSP.
+
+Every per-round vector join hints a broadcast only under the shared
+row budget (``functions.broadcast``), probed from a materialized
+checkpoint; past it the planner's keyed shuffle join carries the round.
+Each round joins a |V|-bounded vector to the checkpointed edges and
+aggregates per node — no driver-side state beyond loop counters and
+bounded probes.
+
+Determinism across engines: PageRank floor-quantizes every per-edge
+contribution to an integer before an exact DECIMAL sum, LPA breaks ties
+to the smallest label, and path costs are integers, so every oracle —
+the same rounds unrolled as DuckDB CTEs from one Python template —
+agrees row for row.
 
 Reference parity: no graph ops in the reference (440-line pandas ETL);
 §2.10 extension surface.
@@ -22,9 +39,10 @@ Reference parity: no graph ops in the reference (440-line pandas ETL);
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.broadcast import broadcast_under_budget
 from ..registry import query
 from ..sources.testdata import load_table
 
@@ -37,44 +55,99 @@ DAMPING = 0.85
 #: supplier node-id offset (disjoint from customer keys at any SF)
 SUPP_OFFSET = 100_000_000
 
-#: broadcast the rank vector per power-method step while |nodes| stays
-#: under this; above it, fall back to keyed shuffle joins. The rank
-#: vector is 3 narrow columns (~24 B/row) so 5M nodes ≈ 120 MB — the
-#: upper edge of a sane executor broadcast. Entity-keyed trade graphs
-#: sit far below this at any tested SF; a web-scale graph (|V| ≫ 10⁷)
-#: takes the shuffle path automatically.
-PR_BROADCAST_NODES = 5_000_000
-
-#: LPA per-round exchange form, chosen from a bounded edge-count probe
-#: (round 16, VERDICT r15 finding #2): UNDER this many symmetric edge
-#: rows the explicit repartition("src") form wins — one exchange per
-#: round instead of two, and at overhead-dominated sizes the saved
-#:  exchange is the whole game (measured ~11-17% at sf0.1). OVER it the
-#: two-exchange partial-agg form wins: the (src,label) combiners ship
-#: far fewer bytes than |edges| joined rows once labels converge (the
-#: 100-copy replica measured the one-exchange form at 69.2 s vs the
-#: partial-agg form's 56.7 s — byte volume beats exchange count at
-#: scale, exactly the flip the round-15 comment predicted). 20M rows
-#: ≈ 320 MB of (src,label) pairs — comfortably before byte volume
-#: dominates on a real network; production tunes it to measured
-#: combiner reduction.
+#: LPA per-round exchange form, chosen from a bounded edge-count probe.
+#: UNDER this many symmetric edge rows the explicit repartition("src")
+#: form wins — one exchange per round instead of two, and at
+#: overhead-dominated sizes the saved exchange is the whole game
+#: (measured ~11-17% at sf0.1). OVER it the two-exchange partial-agg
+#: form wins: the (src,label) combiners ship far fewer bytes than
+#: |edges| joined rows once labels converge (the 100-copy replica
+#: measured the one-exchange form at 69.2 s vs the partial-agg form's
+#: 56.7 s). 20M rows ≈ 320 MB of (src,label) pairs — comfortably before
+#: byte volume dominates on a real network; production tunes it to
+#: measured combiner reduction.
 LPA_ONE_EXCHANGE_MAX_EDGES = 20_000_000
 
 
-def _edges_sql() -> str:
-    """Symmetric distinct trade edges, customer keys as-is, supplier
-    keys offset. Shared shape with the Spark build below."""
+def _pairs_sql() -> str:
+    """Distinct customer→supplier trade pairs, supplier keys offset."""
     return f"""
-      SELECT src, dst FROM (
         SELECT DISTINCT o_custkey AS src, l_suppkey + {SUPP_OFFSET} AS dst
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      )
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM (
-        SELECT DISTINCT o_custkey AS src, l_suppkey + {SUPP_OFFSET} AS dst
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      )
     """
+
+
+def _edges_sql() -> str:
+    """Symmetric distinct trade edges — the DuckDB twin of
+    ``_trade_edges``."""
+    return f"""
+      SELECT src, dst FROM ({_pairs_sql()})
+      UNION ALL
+      SELECT dst AS src, src AS dst FROM ({_pairs_sql()})
+    """
+
+
+def _rollup_sql(key: str, src: str) -> str:
+    """DuckDB twin of ``_node_rollup`` over a (node, ``key``)
+    relation."""
+    return f"""
+    SELECT {key}, COUNT(*) AS n_nodes,
+           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_customers,
+           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_suppliers,
+           MIN(node) AS min_node
+    FROM {src}
+    GROUP BY {key}
+    """
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct customer→supplier trade pairs as (src, dst) — the Spark
+    twin of ``_pairs_sql``."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(
+            F.col("o_custkey").alias("src"),
+            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric trade edges (both directions of every pair — influence
+    flows both ways), materialized once for every round that reads them.
+
+    Without reuse each round re-runs the orders⋈lineitem build (PageRank
+    measured 53 exchanges → 13 at N_ITER=3). localCheckpoint rather than
+    cache(): storage follows the RDD's driver-side lifetime, so the
+    ContextCleaner frees it once the caller drops the result — no
+    per-sf_dir MEMORY_AND_DISK entries pinned for the session — and it
+    truncates the iteration lineage. Cluster caveat: a lost executor
+    loses checkpoint partitions; a long-lived production job would set a
+    reliable checkpoint dir and use checkpoint() here."""
+    base = _trade_pairs(spark, sf_dir)
+    return base.unionAll(
+        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
+
+
+def _node_rollup(df: DataFrame, key: Column | str) -> DataFrame:
+    """Per-``key`` rollup of a frame with a ``node`` column: node count,
+    customer/supplier split and min member."""
+    return df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
+        .cast("long")
+        .alias("n_customers"),
+        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
+        .cast("long")
+        .alias("n_suppliers"),
+        F.min("node").alias("min_node"),
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -123,34 +196,11 @@ def x9_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer↔supplier trade graph, ``N_ITER``
     power-method steps. Per iteration: contributions = rank/outdeg per
     edge source (one join on src), summed per destination (one
-    partial-aggregated shuffle on dst) — both keyed exchanges AQE-sized.
-    The edge list and degrees are built once and reused by every
-    iteration; only the rank vector (|nodes| rows) changes. Emitted
-    ranks floor-truncate at 1e-9 (ranks are O(1/N) — 6 decimals would
-    flatten them)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    # iteration-invariant: materialized once (eager), read by every step —
-    # without reuse each step re-runs the orders⋈lineitem edge build
-    # (measured: 53 exchanges → 13 at N_ITER=3). localCheckpoint instead
-    # of cache() (ADVICE/VERDICT r6 #4): storage follows the RDD's
-    # driver-side lifetime, so ContextCleaner frees it once the caller
-    # drops the result — no per-sf_dir MEMORY_AND_DISK entries pinned for
-    # the session (the cache-churn failure mode of the first scale-bench
-    # run). It also truncates the iteration lineage. Cluster caveat: a
-    # lost executor loses checkpoint partitions; a long-lived production
-    # job would set a reliable checkpoint dir and use checkpoint() here.
+    partial-aggregated shuffle on dst). The edge list and degrees are
+    built once and reused by every iteration; only the rank vector
+    (|nodes| rows) changes. Emitted ranks floor-truncate at 1e-9 (ranks
+    are O(1/N) — 6 decimals would flatten them)."""
+    edges = _trade_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     ).localCheckpoint(eager=True)
@@ -159,27 +209,20 @@ def x9_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + one partial-aggregated shuffle + the frontier re-join — not a
     # separate degree join per step
     pr = deg.select("node", "outdeg", (F.lit(1.0) / n).alias("rank"))
-    # rank-vector join strategy (VERDICT r7 ask #7): |nodes| is a
-    # driver scalar, so pick per-job. Under PR_BROADCAST_NODES the
-    # rank vector broadcasts into the edge join (NO edge shuffle, no
-    # SMJ sort — the per-step cost collapses to one partial-aggregated
-    # exchange of ≤|nodes| combiner rows) and the |nodes|-row
-    # contribution table broadcasts back into the degree join. Past
-    # the threshold both joins fall back to keyed shuffles — the only
-    # shape that works when the rank vector itself is too big for one
-    # executor (web-scale |V|). localCheckpoint does NOT preserve
-    # output partitioning (LogicalRDD loses it — verified), so
-    # pre-partitioning edges by src cannot elide the shuffle; the
-    # broadcast path is what removes it.
-    small = n <= PR_BROADCAST_NODES
+    # Under the broadcast budget the rank vector broadcasts into the edge
+    # join (no edge shuffle, no SMJ sort — the per-step cost collapses
+    # to one partial-aggregated exchange of ≤|nodes| combiner rows) and
+    # the |nodes|-row contribution table broadcasts back into the degree
+    # join; past it both fall back to keyed shuffles. localCheckpoint
+    # does NOT preserve output partitioning, so pre-partitioning edges by
+    # src cannot elide the shuffle; the broadcast is what removes it.
     for _ in range(N_ITER):
         pv = pr.withColumnRenamed("node", "src")
         # per-edge contributions floor-quantize to integers at 1e-15
-        # before the exact DECIMAL(38,0) sum (VERDICT r13 ask #3 — a
-        # derived double never casts to decimal; contrib ≤ 1 so
-        # contrib·1e15 < 2^53 always)
+        # before the exact DECIMAL(38,0) sum — a derived double never
+        # casts to decimal; contrib ≤ 1 so contrib·1e15 < 2^53 always
         contrib = (
-            edges.join(F.broadcast(pv) if small else pv, "src")
+            edges.join(broadcast_under_budget(pv, n), "src")
             .select(
                 F.col("dst").alias("node"),
                 F.floor(
@@ -192,7 +235,7 @@ def x9_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").alias("acc"))
         )
         pr = deg.join(
-            F.broadcast(contrib) if small else contrib, "node", "left"
+            broadcast_under_budget(contrib, n), "node", "left"
         ).select(
             "node",
             "outdeg",
@@ -372,15 +415,12 @@ def _count_triangles(edges: DataFrame, deg: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Degree distribution (round 8): the graph-shape audit histogram
+# Degree distribution: the graph-shape audit histogram
 # ----------------------------------------------------------------------
 @query(
     "x9_degree_hist",
     oracle=f"""
-    WITH base AS (
-      SELECT DISTINCT o_custkey AS src, l_suppkey + {SUPP_OFFSET} AS dst
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
+    WITH base AS ({_pairs_sql()}),
     deg AS (
       SELECT node, COUNT(*) AS d
       FROM (SELECT UNNEST([src, dst]) AS node FROM base)
@@ -410,24 +450,12 @@ def x9_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape note: the symmetric-union degree (deg in the undirected
     graph) is computed in ONE pass by exploding each distinct pair
     into its two endpoints — no union of two copies of the edge-build
-    subtree (the doubled-subtree pattern) and no checkpoint: a
-    same-session A/B at sf0.1 (best-of-5 after 3 warmup passes)
-    measured explode 1.44 s vs checkpointed-union 1.58 s — the
-    explode form is the fastest AND structurally cleanest (one scan,
-    one partial-aggregated count, nothing materialized). Checkpointing
-    pays off for expensive subtrees (the bigram LM); here the subtree
-    is one broadcast join + distinct."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    deg = base.select(
+    subtree and no checkpoint: a same-session A/B at sf0.1 (best-of-5
+    after 3 warmup passes) measured explode 1.44 s vs checkpointed-union
+    1.58 s — one scan, one partial-aggregated count, nothing
+    materialized. Checkpointing pays off for expensive subtrees; here
+    the subtree is one broadcast join + distinct."""
+    deg = _trade_pairs(spark, sf_dir).select(
         F.explode(F.array("src", "dst")).alias("node")
     ).groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     return deg.groupBy(
@@ -443,9 +471,7 @@ def x9_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Label propagation (round 10): synchronous LPA community detection —
-# the third canonical iterative graph algorithm after connected
-# components (dedup tier) and PageRank
+# Label propagation: synchronous LPA community detection
 # ----------------------------------------------------------------------
 #: synchronous LPA rounds (unrolled in the oracle; loop here)
 LPA_ROUNDS = 3
@@ -468,17 +494,12 @@ def _lpa_oracle() -> str:
       ) WHERE rn = 1
     )"""
         )
+    final = f"(SELECT node, label AS community FROM lab{LPA_ROUNDS})"
     return f"""
     WITH edges AS ({_edges_sql()}),
     lab0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)
     {"".join(rounds)}
-    SELECT label AS community, COUNT(*) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
-    FROM lab{LPA_ROUNDS} GROUP BY label
+    {_rollup_sql("community", final)}
     """
 
 
@@ -491,48 +512,27 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     SMALLEST label so every round is engine-deterministic (classic
     LPA breaks ties randomly; a reproducible data pipeline cannot).
     After ``LPA_ROUNDS`` rounds the output is the community rollup
-    (size, customer/supplier split, min member). Reference scope: no
-    graph ops in the reference; §2.10 extension tier.
+    (size, customer/supplier split, min member).
 
-    Scale shape — the textbook Pregel step as plain DataFrame ops,
-    sharing x9_pagerank's machinery: edges localCheckpoint once and
-    every round joins them against the |nodes|-row label vector
-    (broadcast under PR_BROADCAST_NODES — no edge shuffle; keyed
-    shuffle past it, the web-scale shape), then ONE partial-aggregated
-    (src,label) count exchange and a max_by(label, (cnt,-label))
-    argmax per src — the same struct-ordered engine-exact pick as the
-    oracle's ROW_NUMBER. Label vectors localCheckpoint per round
-    (truncated lineage, same ADVICE r6 #4 rationale as PageRank's
-    edge build)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    # round 16 (VERDICT r15 finding #2 + guide §2.3 "aggregate before
-    # you shuffle"): round 0 collapses to min-neighbor-id. Labels start
-    # as the node's own id, so round 0's joined label IS dst and —
-    # edges being globally distinct rows — every (src, label) count is
-    # exactly 1; max_by(label, (cnt, -label)) over all-ones counts
-    # picks the SMALLEST label, i.e. min(dst) per src, computable
-    # straight off the edge list with a combiner-heavy partial agg
-    # (≤|nodes| rows cross the exchange) and no label join at all. The
-    # generic form shipped all |edges| joined rows here because
-    # identity labels give partial aggregation nothing to combine —
-    # profiled at 48 s of the 85 s 100-copy wall, the rung's hottest
-    # phase. This also makes the identity-label init table DEAD: round
-    # 0's output IS the first label vector and its row count IS
-    # |nodes| (every node appears as src of ≥1 edge), so the old
-    # distinct-over-|edges| init exchange (+ checkpoint) is dropped
-    # outright (profiled 4-50 s at 100 copies).
+    Scale shape — the textbook Pregel step as plain DataFrame ops: the
+    checkpointed edges join the |nodes|-row label vector every round
+    (broadcast under the shared budget — no edge shuffle; keyed shuffle
+    past it, the web-scale shape), then the (src,label) count and a
+    max_by(label, (cnt,-label)) argmax per src — the same struct-ordered
+    engine-exact pick as the oracle's ROW_NUMBER. Label vectors
+    localCheckpoint per round (truncated lineage)."""
+    edges = _trade_edges(spark, sf_dir)
+    # Round 0 collapses to min-neighbor-id ("aggregate before you
+    # shuffle"): labels start as the node's own id, so round 0's joined
+    # label IS dst and — edges being globally distinct rows — every
+    # (src, label) count is exactly 1; max_by over all-ones counts picks
+    # the SMALLEST label, i.e. min(dst) per src, computable straight off
+    # the edge list with a combiner-heavy partial agg (≤|nodes| rows
+    # cross the exchange) and no label join. The generic form would ship
+    # all |edges| joined rows, because identity labels give partial
+    # aggregation nothing to combine. Round 0's output is also the first
+    # label vector and its row count is |nodes| (every node is the src of
+    # ≥1 edge), so no identity-label init table is built.
     one_exchange = edges.count() <= LPA_ONE_EXCHANGE_MAX_EDGES
     labels = (
         edges.groupBy(F.col("src").alias("node"))
@@ -540,26 +540,17 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n = labels.count()  # |nodes| — metadata job over the materialized r0
-    small = n <= PR_BROADCAST_NODES
-    # Rounds ≥ 1: the per-round exchange form is GATED on a bounded
-    # edge-count probe instead of hard-coding either shape (VERDICT r15
-    # finding #2). UNDER the gate: ONE src exchange per round (round-15,
-    # guide §2.4 "operations keyed the same way share one exchange") —
-    # the explicit repartition("src") satisfies BOTH the (src, label)
-    # count's ClusteredDistribution (subset hash partitioning) and the
-    # per-src argmax's, so neither aggregation inserts its own exchange;
-    # measured ~11-17% off the rung at sf0.1 where per-exchange fixed
-    # overhead dominates. OVER the gate: the classic two-exchange
-    # partial-agg form — it ships per-map-distinct (src,label) combiners
-    # where the repartition ships every |edges| joined row, and once
-    # labels converge (map-side duplication ≥ 2x) combiner bytes win;
-    # the 100-copy replica measured the one-exchange form slower (82.1 s
-    # vs the partial-agg 85.1 s same-box was within noise, but the
-    # driver's cross-box refresh read 69.2 vs 56.7 — the predicted
-    # flip). The probe is a metadata count over the eager checkpoint.
+    # Rounds ≥ 1: UNDER the LPA_ONE_EXCHANGE_MAX_EDGES gate, ONE src
+    # exchange per round — the explicit repartition("src") satisfies
+    # BOTH the (src, label) count's ClusteredDistribution (subset hash
+    # partitioning) and the per-src argmax's, so neither aggregation
+    # inserts its own exchange. OVER it, the two-exchange partial-agg
+    # form ships per-map-distinct (src,label) combiners where the
+    # repartition ships every |edges| joined row, and once labels
+    # converge combiner bytes win.
     for r in range(1, LPA_ROUNDS):
         lv = labels.withColumnRenamed("node", "dst")
-        joined = edges.join(F.broadcast(lv) if small else lv, "dst")
+        joined = edges.join(broadcast_under_budget(lv, n), "dst")
         if one_exchange:
             joined = joined.repartition("src")
         counts = joined.groupBy("src", "label").agg(
@@ -578,20 +569,11 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (broadcast label join + one partial-agg exchange) for
             # the plan gate, and skips one |nodes|-row materialization
             labels = labels.localCheckpoint(eager=True)
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
-    )
+    return _node_rollup(labels, F.col("label").alias("community"))
 
 
 # ----------------------------------------------------------------------
-# k-core peeling (round 10): the graph-sparsification kernel — iterative
+# k-core peeling: the graph-sparsification kernel — iterative
 # degree-threshold peeling with the removal CASCADE made visible
 # ----------------------------------------------------------------------
 #: peel threshold (chosen so the cascade is non-trivial on the trade
@@ -649,78 +631,53 @@ def x9_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 while K=46 fixpoints after one round. Node counts are
     nodes-with-surviving-edges (COUNT DISTINCT src on the symmetric
     edge list) and n_edges counts DIRECTED rows of that symmetric list
-    (2× the undirected count), identical on both engines. Reference scope: no graph
-    ops in the reference; §2.10 extension tier.
+    (2× the undirected count), identical on both engines.
 
-    Scale shape — same Pregel discipline as x9_label_propagation: the
-    edge list localCheckpoints once and per round is filtered by TWO
-    semi-joins against the |nodes|-bounded keep set (broadcast under
-    PR_BROADCAST_NODES; keyed-shuffle fallback past it), then
+    Scale shape — the same Pregel discipline as x9_label_propagation:
+    the edge list localCheckpoints once and per round is filtered by
+    TWO semi-joins against the |nodes|-bounded keep set (broadcast under
+    the shared budget; keyed-shuffle fallback past it), then
     checkpointed so the next round's degree count reads the shrunken
-    list, never the lineage. Per-round stats collect EAGERLY as ONE
-    row each (round 11 — the lazily-unioned form pinned EVERY round's
-    edge snapshot until the final collect, so resident checkpoint
-    blocks grew with KCORE_ROUNDS × |edges| and OOMed the 100-copy
-    spot check; eager stats drop each superseded snapshot for the
-    ContextCleaner, bounding residency at ~2 snapshots), and the
-    returned merge table is a local relation of those K rows —
-    nothing data-sized reaches the driver either way."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.unionAll(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    list, never the lineage. Per-round stats collect EAGERLY as ONE row
+    each: a lazily unioned form would pin EVERY round's edge snapshot
+    until the final collect, so resident checkpoint blocks would grow
+    with KCORE_ROUNDS × |edges| (it OOMed the 100-copy spot check);
+    eager stats drop each superseded snapshot for the ContextCleaner,
+    bounding residency at ~2 snapshots. The returned table is a local
+    relation of those rows — nothing data-sized reaches the driver."""
+    edges = _trade_edges(spark, sf_dir)
     rounds: list[tuple] = []
-    # Per-round degree table, materialized once and consumed TWICE
-    # (round-15 optimization): the keep filter AND the round's stats
-    # both derive from deg — the symmetric edge list has one row per
-    # (node, neighbor), so deg's row set IS the distinct surviving
-    # nodes (n_nodes = |deg|, customer/supplier splits are row counts,
-    # n_edges = Σ d). Before, the stats ran three COUNT DISTINCTs over
-    # the full edge snapshot per round — a 2-phase expand exchange of
-    # |edges| rows that at 100x re-aggregates the 120M-row list three
-    # extra times per round; now the only per-round edge-volume
-    # aggregation is the degree count the peel needs anyway, and stats
-    # are a tiny pass over the |nodes|-bounded deg table.
+    # Per-round degree table, materialized once and consumed TWICE: the
+    # keep filter AND the round's stats both derive from deg — the
+    # symmetric edge list has one row per (node, neighbor), so deg's row
+    # set IS the distinct surviving nodes (n_nodes = |deg|,
+    # customer/supplier splits are row counts, n_edges = Σ d). The only
+    # per-round edge-volume aggregation is the degree count the peel
+    # needs anyway; stats are a tiny pass over the |nodes|-bounded deg.
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
         .localCheckpoint(eager=True)
     )
-    # |nodes| from the materialized deg (round 16): deg's row set IS
-    # the distinct srcs, so the old select("src").distinct().count()
-    # pre-flight — a full |edges|-row distinct exchange, profiled at
-    # 5-29 s on the 100-copy replica — is a metadata count here.
-    n = deg.count()
-    small = n <= PR_BROADCAST_NODES
-    # Fixpoint skip (round 16, guide §1.2.1 "don't compute things you
-    # throw away"): if after round i NO surviving node sits below
-    # KCORE_K (n_below == 0, folded into the same stats row — zero
-    # extra jobs), round i+1's keep set is ALL of deg, both semi-joins
-    # are identity (every dst of the symmetric list is also a src), and
-    # every later round's stats row equals round i's. Emit the repeated
-    # rows from the driver instead of re-filtering, re-checkpointing
-    # and re-aggregating an unchanged multi-M-row graph per round — the
-    # 100-copy replica fixpoints after round 1 (483 400 nodes / 43.4 M
-    # edges, rounds 2-3 identical), where each skipped round was
-    # profiled at 10-50 s; the emptied-graph cascade (sf0.01) hits the
-    # same branch with an all-zero row.
+    n = deg.count()  # |nodes| — metadata count over the materialized deg
+    # Fixpoint skip ("don't compute things you throw away"): if after
+    # round i NO surviving node sits below KCORE_K (n_below == 0, folded
+    # into the same stats row — zero extra jobs), round i+1's keep set is
+    # ALL of deg, both semi-joins are identity (every dst of the
+    # symmetric list is also a src), and every later round's stats row
+    # equals round i's. Emit the repeated rows from the driver instead
+    # of re-filtering, re-checkpointing and re-aggregating an unchanged
+    # graph per round; the emptied-graph cascade (sf0.01) hits the same
+    # branch with an all-zero row.
     fixpoint = False
     row: tuple = ()
     for i in range(1, KCORE_ROUNDS + 1):
         if fixpoint:
             rounds.append((i, *row))
             continue
-        keep = deg.filter(F.col("d") >= KCORE_K).select("src")
-        keep = F.broadcast(keep) if small else keep
+        keep = broadcast_under_budget(
+            deg.filter(F.col("d") >= KCORE_K).select("src"), n
+        )
         edges = (
             edges.join(keep, "src", "semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "semi")
@@ -758,8 +715,8 @@ def x9_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Neighborhood-Jaccard node similarity (round 10): the link-prediction
-# primitive — which customers trade with the same suppliers?
+# Neighborhood-Jaccard node similarity: the link-prediction primitive —
+# which customers trade with the same suppliers?
 # ----------------------------------------------------------------------
 #: per-supplier adjacency cap: keep the K strongest customer links
 #: (order-count DESC, custkey tiebreak) before the wedge join, so pair
@@ -815,16 +772,15 @@ def x9_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic ordering. Degrees are memberships in the SAME capped
     lists, so ∩/∪ are consistent and the score is exact for the capped
     graph — the documented sketch-variant semantics, like
-    x9_triangle_count's support-capped graph. Reference scope: no
-    graph ops in the reference; §2.10 extension tier.
+    x9_triangle_count's support-capped graph.
 
     Scale shape: strength build is one partial-aggregated (supp,cust)
     exchange; the cap rewrites to WindowGroupLimit (per-task top-K
     heap BEFORE the supp exchange); the wedge self-join is equi-keyed
     on supp over lists bounded at K rows each (pair volume
     |suppliers|·K²/2, linear in suppliers); the |customers|-row degree
-    table broadcasts back under PR_BROADCAST_NODES (keyed fallback
-    past it); the final top-N is TakeOrderedAndProject. Plan-gated:
+    table broadcasts back under the shared budget (keyed fallback past
+    it); the final top-N is TakeOrderedAndProject. Plan-gated:
     WindowGroupLimit present, no cartesian, TakeOrdered result."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -845,7 +801,6 @@ def x9_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = capped.groupBy("cust").agg(F.count(F.lit(1)).alias("d"))
     n = capped.select("cust").distinct().count()  # bounded pre-flight
-    small = n <= PR_BROADCAST_NODES
     b = capped.select(F.col("supp"), F.col("cust").alias("c2"))
     pairs = (
         capped.select("supp", F.col("cust").alias("c1"))
@@ -857,8 +812,8 @@ def x9_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     d1 = deg.select(F.col("cust").alias("c1"), F.col("d").alias("dd1"))
     d2 = deg.select(F.col("cust").alias("c2"), F.col("d").alias("dd2"))
     scored = (
-        pairs.join(F.broadcast(d1) if small else d1, "c1")
-        .join(F.broadcast(d2) if small else d2, "c2")
+        pairs.join(broadcast_under_budget(d1, n), "c1")
+        .join(broadcast_under_budget(d2, n), "c2")
         .select(
             "c1",
             "c2",
@@ -877,11 +832,11 @@ def x9_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# multi-source BFS reach (round 12): the taint-propagation kernel —
-# hop-bounded frontier expansion with the visited set as mergeable state
+# Reach over the strength-thinned trade graph: hop-bounded BFS and
+# weighted shortest paths share one graph build and one frontier kernel
 # ----------------------------------------------------------------------
-#: hop bound (unrolled in the oracle; loop + early-stop here). Chosen so
-#: the sf0.01 trade graph exposes a 5-level frontier curve
+#: BFS hop bound (unrolled in the oracle; loop + early-stop here). Chosen
+#: so the sf0.01 trade graph exposes a 5-level frontier curve
 #: (27→42→375→58→287 new nodes) while sf0.001 exhausts early (hop 3) —
 #: both the saturating and the early-stop paths are exercised by the
 #: driver's two scale factors.
@@ -896,23 +851,53 @@ BFS_SEED_NATION = 3
 #: graph applies by requiring repeated citations). 3 keeps the curve
 #: non-trivial at both test SFs (measured above).
 BFS_MIN_ORDERS = 3
+#: integer edge-cost numerator: cost = ceil(SSSP_COST_NUM / strength),
+#: so a stronger trade link is a CHEAPER propagation step (strength 3
+#: → cost 4 … strength ≥ 12 → cost 1). Integer arithmetic end-to-end —
+#: distances are exact BIGINT sums on both engines, no float hazard.
+SSSP_COST_NUM = 12
+#: relaxation-round bound (unrolled in the oracle; loop here). Within
+#: R rounds the result is the exact min cost over paths of ≤ R edges —
+#: the same bounded-propagation semantics as BFS_MAX_HOP, on costs.
+SSSP_MAX_ROUNDS = 5
 
 
-def _bfs_edges_sql() -> str:
-    """Strength-thinned symmetric trade edges (DuckDB side)."""
+def _strength_graph_sql() -> str:
+    """DuckDB twin of ``_strength_graph``: CTEs ``edges`` (src, dst, w),
+    ``nodes`` and ``seeds``."""
     return f"""
       base AS (
-        SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s
+        SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s,
+               ({SSSP_COST_NUM} + COUNT(DISTINCT o_orderkey) - 1)
+                 // COUNT(DISTINCT o_orderkey) AS w
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         GROUP BY 1, 2
         HAVING COUNT(DISTINCT o_orderkey) >= {BFS_MIN_ORDERS}
       ),
       edges AS (
-        SELECT c AS src, s AS dst FROM base
+        SELECT c AS src, s AS dst, w FROM base
         UNION ALL
-        SELECT s AS src, c AS dst FROM base
+        SELECT s AS src, c AS dst, w FROM base
+      ),
+      nodes AS (SELECT DISTINCT src AS node FROM edges),
+      seeds AS (
+        SELECT DISTINCT e.src AS node FROM edges e
+        JOIN customer ON c_custkey = e.src
+        WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
       )
     """
+
+
+def _reach_sql(vec: str, key: str) -> str:
+    """Rollup of the node universe left-joined to the (node, ``key``)
+    vector ``vec``; unreached nodes report -1."""
+    return _rollup_sql(
+        key,
+        f"""(
+      SELECT n.node, COALESCE(v.{key}, -1) AS {key}
+      FROM nodes n LEFT JOIN {vec} v ON v.node = n.node
+    )""",
+    )
 
 
 def _bfs_oracle() -> str:
@@ -933,156 +918,11 @@ def _bfs_oracle() -> str:
       SELECT node, {i} AS hop FROM f{i}
     )""")
     return f"""
-    WITH {_bfs_edges_sql()},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    vis0 AS (
-      SELECT DISTINCT e.src AS node, 0 AS hop FROM edges e
-      JOIN customer ON c_custkey = e.src
-      WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
-    )
+    WITH {_strength_graph_sql()},
+    vis0 AS (SELECT node, 0 AS hop FROM seeds)
     {"".join(steps)}
-    SELECT hop, COUNT(*) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
-    FROM (
-      SELECT n.node, COALESCE(v.hop, -1) AS hop
-      FROM nodes n LEFT JOIN vis{BFS_MAX_HOP} v ON v.node = n.node
-    )
-    GROUP BY hop
+    {_reach_sql(f"vis{BFS_MAX_HOP}", "hop")}
     """
-
-
-def bfs_hops(seeds: DataFrame, edges: DataFrame, max_hop: int) -> DataFrame:
-    """Hop-bounded multi-source BFS kernel: ``seeds`` is a (node)
-    frame, ``edges`` a directed (src, dst) frame (pass both directions
-    for an undirected walk); returns (node, hop) with the MINIMUM hop
-    per reached node. Each hop: one frontier⋈edges equi-join (frontier
-    broadcasts under ``PR_BROADCAST_NODES``, keyed shuffle past it),
-    one |V|-bounded DISTINCT, one anti-join against the visited
-    vector; visited localCheckpoints per round (truncated lineage) and
-    the early-stop probe counts an already-materialized ≤|V|-row
-    frontier. Extracted from the query body so hypothesis can drive it
-    on arbitrary graphs against a reference BFS."""
-    visited = seeds.select("node").distinct().withColumn(
-        "hop", F.lit(0)
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    # probe the SEED count too (bounded job over the materialized
-    # checkpoint) — a web-scale origin set must not broadcast blindly
-    small_graph = visited.count() <= PR_BROADCAST_NODES
-    for h in range(1, max_hop + 1):
-        nxt = (
-            edges.join(
-                F.broadcast(frontier.withColumnRenamed("node", "src"))
-                if small_graph
-                else frontier.withColumnRenamed("node", "src"),
-                "src",
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-        )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=True)
-        if h == max_hop:
-            break  # final hop: the early-stop probe's result is unused
-        frontier = visited.filter(F.col("hop") == h).select("node")
-        n_new = frontier.count()  # ≤|V| rows, already materialized
-        if n_new == 0:
-            break
-        small_graph = n_new <= PR_BROADCAST_NODES
-    return visited
-
-
-@query("x9_bfs_reach", oracle=_bfs_oracle())
-def x9_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source hop-bounded BFS over the strength-thinned trade
-    graph — the taint-propagation primitive of a curation pipeline
-    (a flagged origin set — here every in-graph customer of nation
-    ``BFS_SEED_NATION`` — contaminates everything within
-    ``BFS_MAX_HOP`` link hops; dedup-cluster spill, licensing taint,
-    and benchmark-contamination spread are all this kernel). Output is
-    the per-hop reach rollup (first-reached node counts, customer/
-    supplier split, min member), with never-reached nodes reported as
-    hop -1 — the reach-vs-isolated split IS the decision artifact.
-    Reference scope: no graph ops in the reference (440-line pandas
-    ETL); §2.10 extension tier.
-
-    Scale shape: edge thinning is ONE partial-aggregated (cust,supp)
-    exchange (HAVING over countDistinct — map-side partials first);
-    edges localCheckpoint once (shared by every hop and the node
-    universe, the x9 house pattern). Each hop is one frontier⋈edges
-    equi-join (frontier ≤ |V| narrow rows — broadcast under
-    ``PR_BROADCAST_NODES``, keyed shuffle past it, the web-scale
-    shape), one |V|-bounded DISTINCT exchange, and one anti-join
-    against the visited vector; the visited vector localCheckpoints
-    per round (truncated lineage, the ADVICE r6 #4 rationale). The
-    early-stop probe counts an already-materialized ≤|V|-row frontier
-    — bounded driver traffic, never data-sized. Unreached nodes come
-    from ONE left-anti join of the node universe at the end. Whole
-    rounds move |E| + |V| rows each — linear frontier BFS, never the
-    |V|² transitive closure."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
-        )
-        .agg(F.countDistinct("o_orderkey").alias("strength"))
-        .filter(F.col("strength") >= BFS_MIN_ORDERS)
-        .select("c", "s")
-    )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).unionAll(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    ).localCheckpoint(eager=True)
-    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
-    seeds = (
-        edges.filter(F.col("src") < SUPP_OFFSET)
-        .join(
-            customer.filter(
-                F.col("c_nationkey") == BFS_SEED_NATION
-            ).select(F.col("c_custkey").alias("src")),
-            "src",
-        )
-        .select(F.col("src").alias("node"))
-        .distinct()
-    )
-    visited = bfs_hops(seeds, edges, BFS_MAX_HOP)
-    reach = nodes.join(visited, "node", "left").select(
-        "node", F.coalesce(F.col("hop"), F.lit(-1)).alias("hop")
-    )
-    return reach.groupBy("hop").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
-    )
-
-
-# ----------------------------------------------------------------------
-# Weighted single-source shortest path (round 13): min-cost taint
-# ----------------------------------------------------------------------
-#: integer edge-cost numerator: cost = ceil(SSSP_COST_NUM / strength),
-#: so a stronger trade link is a CHEAPER propagation step (strength 3
-#: → cost 4 … strength ≥ 12 → cost 1). Integer arithmetic end-to-end —
-#: distances are exact BIGINT sums on both engines, no float hazard.
-SSSP_COST_NUM = 12
-#: relaxation-round bound (unrolled in the oracle; loop here). Within
-#: R rounds the result is the exact min cost over paths of ≤ R edges —
-#: the same bounded-propagation semantics as BFS_MAX_HOP, on costs.
-SSSP_MAX_ROUNDS = 5
 
 
 def _sssp_oracle() -> str:
@@ -1103,59 +943,87 @@ def _sssp_oracle() -> str:
       ) GROUP BY node
     )""")
     return f"""
-    WITH base AS (
-      SELECT o_custkey AS c, l_suppkey + {SUPP_OFFSET} AS s,
-             ({SSSP_COST_NUM} + COUNT(DISTINCT o_orderkey) - 1)
-               // COUNT(DISTINCT o_orderkey) AS w
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2
-      HAVING COUNT(DISTINCT o_orderkey) >= {BFS_MIN_ORDERS}
-    ),
-    edges AS (
-      SELECT c AS src, s AS dst, w FROM base
-      UNION ALL
-      SELECT s AS src, c AS dst, w FROM base
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    d0 AS (
-      SELECT DISTINCT e.src AS node, 0 AS dist FROM edges e
-      JOIN customer ON c_custkey = e.src
-      WHERE c_nationkey = {BFS_SEED_NATION} AND e.src < {SUPP_OFFSET}
-    )
+    WITH {_strength_graph_sql()},
+    d0 AS (SELECT node, 0 AS dist FROM seeds)
     {"".join(steps)}
-    SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(SUM(CASE WHEN node < {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN node >= {SUPP_OFFSET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_suppliers,
-           MIN(node) AS min_node
-    FROM (
-      SELECT n.node, COALESCE(d.dist, -1) AS dist
-      FROM nodes n LEFT JOIN d{SSSP_MAX_ROUNDS} d ON d.node = n.node
-    )
-    GROUP BY dist
+    {_reach_sql(f"d{SSSP_MAX_ROUNDS}", "dist")}
     """
+
+
+def _strength_graph(
+    spark: SparkSession, sf_dir: str, w: Column
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Strength-thinned symmetric trade graph: ``(edges, nodes, seeds)``
+    with edges (src, dst, w) — ``w`` an expression over the pair's
+    distinct-order ``strength`` — nodes the (node) universe and seeds
+    every in-graph customer of ``BFS_SEED_NATION``.
+
+    The thinning is ONE partial-aggregated (cust,supp) exchange (HAVING
+    over countDistinct — map-side partials first); edges localCheckpoint
+    once, shared by every round and by the node universe."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    customer = load_table(spark, sf_dir, "customer")
+    base = (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .groupBy(
+            F.col("o_custkey").alias("c"),
+            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
+        )
+        .agg(F.countDistinct("o_orderkey").alias("strength"))
+        .filter(F.col("strength") >= BFS_MIN_ORDERS)
+        .select("c", "s", w.alias("w"))
+    )
+    edges = base.select(
+        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
+    ).unionAll(
+        base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
+    ).localCheckpoint(eager=True)
+    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
+    seeds = (
+        edges.filter(F.col("src") < SUPP_OFFSET)
+        .join(
+            customer.filter(
+                F.col("c_nationkey") == BFS_SEED_NATION
+            ).select(F.col("c_custkey").alias("src")),
+            "src",
+        )
+        .select(F.col("src").alias("node"))
+        .distinct()
+    )
+    return edges, nodes, seeds
+
+
+def _reach_rollup(nodes: DataFrame, dist: DataFrame, key: str) -> DataFrame:
+    """Rollup of the node universe left-joined to a (node, dist) vector,
+    the distance reported as ``key``; never-reached nodes report -1 —
+    the reach-vs-isolated split IS the decision artifact."""
+    reach = nodes.join(dist, "node", "left").select(
+        "node", F.coalesce(F.col("dist"), F.lit(-1)).alias(key)
+    )
+    return _node_rollup(reach, key)
 
 
 def sssp_rounds(
     seeds: DataFrame, edges: DataFrame, max_rounds: int
 ) -> DataFrame:
     """Round-bounded multi-source weighted SSSP kernel (delta
-    Bellman–Ford) — the ``bfs_hops`` kernel generalized from hop counts
-    to min-cost paths (VERDICT r12 ask #5). ``seeds`` is a (node)
-    frame, ``edges`` a directed (src, dst, w) frame with non-negative
-    integer weights (pass both directions for an undirected walk);
-    returns (node, dist) = the exact minimum path cost over paths of
-    ≤ ``max_rounds`` edges (full shortest distances once the bound
-    reaches the shortest-path diameter — the hypothesis test pins
-    agreement with Dijkstra there). Each round relaxes ONLY the
-    frontier (nodes whose dist improved last round): one frontier⋈edges
-    equi-join (frontier broadcasts under ``PR_BROADCAST_NODES``, keyed
-    shuffle past it), one |V|-bounded candidate min, one full-outer
-    merge against the dist vector; dist localCheckpoints per round
-    (truncated lineage) and the early-stop probe counts an
-    already-materialized ≤|V|-row improved set, skipped on the final
-    round (the bfs_hops ADVICE r12 fix applied from birth)."""
+    Bellman–Ford); hop-bounded BFS is its unit-weight case. ``seeds`` is
+    a (node) frame, ``edges`` a directed (src, dst, w) frame with
+    non-negative integer weights (pass both directions for an
+    undirected walk); returns (node, dist) = the exact minimum path cost
+    over paths of ≤ ``max_rounds`` edges (full shortest distances once
+    the bound reaches the shortest-path diameter — the hypothesis tests
+    pin agreement with Bellman–Ford, Dijkstra and queue BFS).
+
+    Each round relaxes ONLY the frontier (nodes whose dist improved last
+    round): one frontier⋈edges equi-join (frontier broadcasts under the
+    shared budget, keyed shuffle past it), one |V|-bounded candidate
+    min, one full-outer merge against the dist vector; dist
+    localCheckpoints per round (truncated lineage) and the early-stop
+    probe counts an already-materialized ≤|V|-row improved set, skipped
+    on the final round. Whole rounds move |frontier⋈edges| + |V| rows —
+    linear frontier expansion, never the |V|² closure."""
     dist = (
         seeds.select("node")
         .distinct()
@@ -1163,13 +1031,15 @@ def sssp_rounds(
         .localCheckpoint(eager=True)
     )
     frontier = dist
-    small = dist.count() <= PR_BROADCAST_NODES
+    # probe the SEED count too (bounded job over the materialized
+    # checkpoint) — a web-scale origin set must not broadcast blindly
+    n_frontier = dist.count()
     for r in range(1, max_rounds + 1):
         cand = (
             edges.join(
-                F.broadcast(frontier.withColumnRenamed("node", "src"))
-                if small
-                else frontier.withColumnRenamed("node", "src"),
+                broadcast_under_budget(
+                    frontier.withColumnRenamed("node", "src"), n_frontier
+                ),
                 "src",
             )
             .select(
@@ -1191,11 +1061,35 @@ def sssp_rounds(
         if r == max_rounds:
             break  # final round: the early-stop probe's result is unused
         frontier = merged.filter("improved").select("node", "dist")
-        n_improved = frontier.count()  # ≤|V| rows, already materialized
-        if n_improved == 0:
+        n_frontier = frontier.count()  # ≤|V| rows, already materialized
+        if n_frontier == 0:
             break
-        small = n_improved <= PR_BROADCAST_NODES
     return dist
+
+
+@query("x9_bfs_reach", oracle=_bfs_oracle())
+def x9_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-source hop-bounded BFS over the strength-thinned trade
+    graph — the taint-propagation primitive of a curation pipeline
+    (a flagged origin set — here every in-graph customer of nation
+    ``BFS_SEED_NATION`` — contaminates everything within
+    ``BFS_MAX_HOP`` link hops; dedup-cluster spill, licensing taint,
+    and benchmark-contamination spread are all this kernel). Output is
+    the per-hop reach rollup (first-reached node counts, customer/
+    supplier split, min member), with never-reached nodes reported as
+    hop -1.
+
+    Scale shape: ``sssp_rounds`` over unit-weight edges — a node's
+    min-cost distance IS its min hop, and the improved set of round h is
+    exactly the nodes first reached at hop h, so the kernel's frontier
+    and early stop are BFS's. Unreached nodes come from ONE left join of
+    the node universe at the end."""
+    edges, nodes, seeds = _strength_graph(spark, sf_dir, F.lit(1))
+    # hop stays INTEGER, the oracle's type (the kernel's dist is BIGINT)
+    hops = sssp_rounds(seeds, edges, BFS_MAX_HOP).select(
+        "node", F.col("dist").cast("int").alias("dist")
+    )
+    return _reach_rollup(nodes, hops, "hop")
 
 
 @query("x9_sssp_weighted", oracle=_sssp_oracle())
@@ -1205,71 +1099,19 @@ def x9_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``x9_bfs_reach`` answers "within how many links"; this answers
     "at what minimum cost", with link cost inverse to trade strength:
     cost = ceil(``SSSP_COST_NUM``/strength), so taint/lineage flows
-    preferentially through strong relationships). Same seed set as BFS
-    (every in-graph customer of nation ``BFS_SEED_NATION``), same
-    ``BFS_MIN_ORDERS`` thinning; output is the per-cost reach rollup
-    (node counts, customer/supplier split, min member) with
-    never-reached nodes at dist -1. Reference scope: no graph ops in
-    the reference (440-line pandas ETL, weather_etl.py); §2.10
-    extension tier.
+    preferentially through strong relationships). Same graph, seeds and
+    kernel as BFS with the strength-derived weight; output is the
+    per-cost reach rollup (node counts, customer/supplier split, min
+    member) with never-reached nodes at dist -1.
 
-    Scale shape: the strength build is ONE partial-aggregated
-    (cust,supp) exchange (the x9_bfs_reach build, keeping the
-    countDistinct as the integer weight); edges localCheckpoint once,
-    shared by every round and the node universe. Each relaxation round
-    moves |frontier⋈edges| + |V| rows — the delta-Bellman–Ford linear
-    frontier shape, never the |V|² closure — and integer costs make
-    the result hash-exact with no float discipline needed. At 100 TB
-    the bound is rounds × (|E| + |V|) rows with rounds fixed by the
-    propagation-depth policy, the same posture as BFS/PageRank/k-core."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("c"),
-            (F.col("l_suppkey") + SUPP_OFFSET).alias("s"),
-        )
-        .agg(F.countDistinct("o_orderkey").alias("strength"))
-        .filter(F.col("strength") >= BFS_MIN_ORDERS)
-        .select(
-            "c",
-            "s",
-            F.expr(
-                f"CAST(({SSSP_COST_NUM} + strength - 1)"
-                " DIV strength AS LONG)"
-            ).alias("w"),
-        )
+    Integer costs make the result hash-exact with no float discipline
+    needed. At 100 TB the bound is rounds × (|E| + |V|) rows with rounds
+    fixed by the propagation-depth policy, the same posture as
+    BFS/PageRank/k-core."""
+    cost = F.expr(
+        f"CAST(({SSSP_COST_NUM} + strength - 1) DIV strength AS LONG)"
     )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionAll(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-    ).localCheckpoint(eager=True)
-    nodes = edges.select("src").distinct().select(F.col("src").alias("node"))
-    seeds = (
-        edges.filter(F.col("src") < SUPP_OFFSET)
-        .join(
-            customer.filter(
-                F.col("c_nationkey") == BFS_SEED_NATION
-            ).select(F.col("c_custkey").alias("src")),
-            "src",
-        )
-        .select(F.col("src").alias("node"))
-        .distinct()
-    )
-    dist = sssp_rounds(seeds, edges, SSSP_MAX_ROUNDS)
-    reach = nodes.join(dist, "node", "left").select(
-        "node", F.coalesce(F.col("dist"), F.lit(-1)).alias("dist")
-    )
-    return reach.groupBy("dist").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum((F.col("node") < SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_customers"),
-        F.sum((F.col("node") >= SUPP_OFFSET).cast("int"))
-        .cast("long")
-        .alias("n_suppliers"),
-        F.min("node").alias("min_node"),
+    edges, nodes, seeds = _strength_graph(spark, sf_dir, cost)
+    return _reach_rollup(
+        nodes, sssp_rounds(seeds, edges, SSSP_MAX_ROUNDS), "dist"
     )
