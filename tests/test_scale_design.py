@@ -87,9 +87,10 @@ def test_ema_kernel_fail_fast_on_oversized_shard():
 
 
 def test_uncapped_jaccard_gate(spark, monkeypatch):
-    """The uncapped near-dup rung fail-fasts past its corpus ceiling,
-    naming the capped and LSH rungs — it cannot be pointed at 100 TB by
-    accident (mirror of the gated all-pairs similarity rung)."""
+    """The uncapped near-dup rungs fail-fast past their corpus ceiling,
+    each naming its own capped twin (Jaccard also the LSH rung) — they
+    cannot be pointed at 100 TB by accident (mirror of the gated
+    all-pairs similarity rung)."""
     from weather_data_pipeline_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "MAX_UNCAPPED_DOCS", 10)
@@ -100,6 +101,8 @@ def test_uncapped_jaccard_gate(spark, monkeypatch):
     assert dedup._GATE_CACHE[dedup._gate_key(SF_ORACLE)] is True
     with pytest.raises(ValueError, match="x2_ngram_jaccard_capped"):
         dedup.x2_ngram_jaccard(spark, SF_ORACLE).count()  # served from cache
+    with pytest.raises(ValueError, match="x2_containment_capped"):
+        dedup.x2_containment_pairs(spark, SF_ORACLE).count()
     monkeypatch.setattr(dedup, "MAX_UNCAPPED_DOCS", 1_000_000)
     assert dedup.x2_ngram_jaccard(spark, SF_ORACLE).count() > 0
     assert dedup._GATE_CACHE[dedup._gate_key(SF_ORACLE)] is False

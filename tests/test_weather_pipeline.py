@@ -12,6 +12,8 @@ from weather_data_pipeline_spark import pipeline
 from weather_data_pipeline_spark.sources import weather as wsrc
 from weather_data_pipeline_spark.transforms import flatten_raw
 
+from .conftest import SF_SMOKE
+
 
 @pytest.fixture(scope="module")
 def curated(spark, tmp_path_factory):
@@ -204,3 +206,27 @@ def test_df_cap_defuses_viral_shingle(spark, tmp_path):
     assert len(boiler_pairs) > 1000  # quadratic blowup on the viral grams
     capped_pairs = {(r.doc_a, r.doc_b) for r in capped}
     assert capped_pairs == {(100, 101)}  # real near-dups survive the cap
+
+
+@pytest.mark.parametrize(
+    "capped, uncapped",
+    [
+        ("x2_ngram_jaccard_capped", "x2_ngram_jaccard"),
+        ("x2_containment_capped", "x2_containment_pairs"),
+    ],
+)
+def test_capped_pairs_match_uncapped_without_cap(spark, monkeypatch, capped, uncapped):
+    """The df-capped and uncapped pair builds differ ONLY by the cap:
+    with DF_CAP above every document frequency no gram is dropped and
+    each capped rung returns exactly its uncapped twin's rows, while at
+    the default cap the testdata's shared grams make them differ."""
+    from weather_data_pipeline_spark.operators import dedup
+
+    def rows(name):
+        fn = getattr(dedup, name)
+        return sorted(tuple(r) for r in fn(spark, SF_SMOKE).collect())
+
+    reference = rows(uncapped)
+    assert rows(capped) != reference
+    monkeypatch.setattr(dedup, "DF_CAP", 10**9)
+    assert rows(capped) == reference

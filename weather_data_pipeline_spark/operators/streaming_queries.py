@@ -566,6 +566,7 @@ from .dedup import (  # noqa: E402
     MINHASH_BAND_ROWS as _MH_R,
     MINHASH_K as _MH_K,
     _MINHASH_HX_CTE,
+    _bands_sql,
 )
 
 _MH_BANDS = _MH_K // _MH_R
@@ -574,13 +575,7 @@ _MH_BANDS = _MH_K // _MH_R
 @query(
     "s_minhash_dedup_stream",
     oracle=f"""
-    WITH {_MINHASH_HX_CTE},
-    bands AS (
-      SELECT doc_id, sig_idx // {_MH_R} AS band,
-             md5(string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY sig_idx))
-               AS band_key
-      FROM hx GROUP BY doc_id, sig_idx // {_MH_R}
-    ), wins AS (
+    WITH {_MINHASH_HX_CTE}, {_bands_sql("bands", _MH_R)}, wins AS (
       SELECT band, band_key, MIN(doc_id) AS keeper
       FROM bands GROUP BY band, band_key
     )

@@ -2408,18 +2408,14 @@ def x4_uniqueness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings → 8-byte keys) with the collision bound documented on
     x2_ngram_jaccard."""
     from ..session import fan_out
-    from .dedup import shingle_arrays
+    from .dedup import gram_postings
 
     doc = fan_out(load_table(spark, sf_dir, "documents"))
-    # Materialized once (round-15): the df count and the join-back side
-    # shuffle on h with DIFFERENT payloads (partial-agg combiners vs
-    # doc_id postings), so exchange reuse never fires and the corpus
-    # scan+explode ran twice — the capped-pair-rung checkpoint pattern.
-    sh = shingle_arrays(doc, 3).select(
-        "doc_id", F.explode("grams").alias("shingle")
-    ).select("doc_id", F.xxhash64("shingle").alias("h")).localCheckpoint(
-        eager=True
-    )
+    # Materialized once: the df count and the join-back side shuffle on
+    # h with DIFFERENT payloads (partial-agg combiners vs doc_id
+    # postings), so exchange reuse never fires and the corpus
+    # scan+explode would run twice.
+    sh = gram_postings(doc).select("doc_id", "h").localCheckpoint(eager=True)
     df_tbl = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     return (
         sh.join(df_tbl, "h")

@@ -167,85 +167,6 @@ _PRIORITY: tuple[str, ...] = (
     # r14-green, their rows stand in the union (staleness floor r9).
 )
 
-#: The pre-round-9 window, kept for the union math in
-#: test_driver_union_vs_registry documentation (rows all stand in
-#: CORRECTNESS_r08.json, which is committed):
-_R8_WINDOW_ROTATED_OUT: tuple[str, ...] = (
-    # --- round-8 rotation (47): the declared 12-query r8 queue rotates IN
-    # (VERDICT r7 ask #1); 12 r7-green slots rotate OUT (their rows stand
-    # in the r1–r7 union; family representation preserved — asserted by
-    # test_first_50_slots_cover_survey_operators). Rotated OUT this round:
-    # ext_q4_order_priority, ext_q6_revenue_delta, ext_q7_volume_shipping,
-    # ext_q8_market_share, ext_q12_shipping_delay, x4_token_normalize,
-    # x4_corpus_profile, x6_mad_outliers, x6_funnel_stages,
-    # x8_epoch_shuffle, x8_oversample_minority, x3_knn_classify —
-    # plus nine more displaced by the round-8 ADDITIONS (all r7-green):
-    # ext_q13_cust_distribution, ext_q14_promo_revenue,
-    # x6_holt_smoothing, x6_retention_cohorts, s_topk_stream,
-    # x4_gopher_filter, ext_q15_top_supplier, x6_interval_merge,
-    # x4_bigram_logprob, s_funnel_stream, x7_temporal_join,
-    # x2_dedup_keep_best, x2_semantic_dedup, ext_incremental_agg,
-    # x3_ivf_pq_topk, mm_audio_energy, x3_mips_topk, x6_rfm_scores,
-    # ext_q17_small_qty_revenue, ext_q19_disjunctive_revenue,
-    # x4_heavy_hitters, x1_intradoc_line_dedup, x1_line_dedup,
-    # ext_q22_dormant_customers, x4_vocab_coverage, x8_budget_select,
-    # x8_length_buckets, x4_perplexity_buckets (their scalable twins
-    # stay in-window on the SAME oracles), x5_json_keys_profile,
-    # ext_q21_waiting_supplier, x9_triangle_count.
-    # (Round-7 rotated-out list preserved in git history at this file.)
-    # --- the r8 queue (12): derived-partsupp TPC-H batch first ---
-    "ext_q2_min_cost_supplier",
-    "ext_q9_product_profit",
-    "ext_q11_important_stock",
-    "ext_q16_supplier_counts",
-    "ext_q20_promotion_suppliers",
-    "x8_budget_select_scalable",
-    "x8_length_buckets_scalable",
-    "x4_perplexity_buckets_scalable",
-    "x4_perplexity_buckets_approx",
-    "x6_rfm_scores_scalable",
-    "x7_asof_join_tolerance",
-    "x3_ivf_recall_eval",
-    # --- round-8 additions (6): driver-checked the round they land ---
-    "x8_sequence_pack",
-    "x4_bpe_pair_stats",
-    "x8_temperature_mixture",
-    "x8_c4_pipeline",
-    "x1_normalized_dedup",
-    "x9_degree_hist",
-    "x2_containment_pairs",
-    "x3_range_search",
-    "x3_prefix_dim_recall",
-    "x7_asof_nearest",
-    "s_c4_gate_stream",
-    "x4_entropy_score",
-    "x2_containment_capped",
-    "ext_bloom_join_prune",
-    "x3_ivf_rerank_topk",
-    "mm_image_phash_dedup",
-    "x6_seasonal_baseline",
-    "x3_binary_hamming_topk",
-    "ext_dq_audit",
-    "x3_centroid_outliers",
-    "x6_gap_report",
-    "mm_image_phash_neardup",
-    "x8_tokenize_to_ids",
-    "x6_cusum_changepoints",
-    "x4_uniqueness_score",
-    "x3_binary_recall_eval",
-    "x8_interleave_sources",
-    "x5_schema_evolution_read",
-    "s_stream_left_join",
-    "x5_variant_extract",
-    "s_api_stream",
-    # --- r7-green carryovers (4) ---
-    # graph / CDC / stateful streaming:
-    "x9_pagerank",
-    "ext_cdc_merge",
-    "w_csv_quarantine",
-    "ext_cogroup_pandas",
-)
-
 #: Next-round rotation queue — every registered query not yet covered by
 #: the union of driver CORRECTNESS rows plus the current window above.
 #: tests/test_entry.py::test_driver_union_vs_registry computes the gap
