@@ -12,7 +12,8 @@ import importlib.util
 import json
 from pathlib import Path
 
-BENCH_PY = Path(__file__).resolve().parents[1] / "bench.py"
+ROOT = Path(__file__).resolve().parents[1]
+BENCH_PY = ROOT / "bench.py"
 
 
 def _load_bench():
@@ -100,7 +101,7 @@ def test_bench_movers_math_and_committed_artifacts():
     import json
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, str(ROOT / "tools"))
     import bench_movers as bm
 
     old = {"a": 1.0, "b": 2.0, "c": 0.5, "d": 3.0}
@@ -120,9 +121,9 @@ def test_bench_movers_math_and_committed_artifacts():
     assert got["c"]["plan_hash_changed"] is True
     assert out["movers"][0]["query"] == "c"  # 0.7 = 1.43x > 1.3x
 
-    with open("/root/repo/BENCH_LOCAL_r13.json") as f:
+    with open(ROOT / "BENCH_LOCAL_r13.json") as f:
         q13 = json.load(f)["queries"]
-    with open("/root/repo/BENCH_LOCAL_r14.json") as f:
+    with open(ROOT / "BENCH_LOCAL_r14.json") as f:
         q14 = json.load(f)["queries"]
     real = bm.movers(q13, q14, 1.25)
     assert real["shared_queries"] == 136

@@ -4,11 +4,14 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", str(ROOT / "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod
@@ -66,7 +69,7 @@ def test_driver_union_vs_registry():
     from weather_data_pipeline_spark import registry
 
     union: set[str] = set(registry._PRIORITY)
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(str(ROOT / "CORRECTNESS_r*.json")):
         with open(path) as f:
             union |= set(json.load(f))
     gap = set(registry.queries()) - union

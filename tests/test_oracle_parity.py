@@ -122,7 +122,7 @@ def test_no_derived_double_decimal_casts():
     round-14 migrations are the precedents)."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     import microunit_audit as audit
 
     assert audit.misclassified() == [], audit.misclassified()

@@ -213,9 +213,10 @@ def test_skew_report_flags_hot_key(spark):
     its salt factor to the hot key's row count, (c) call a uniform key
     distribution clean — and its driver payload is top_k + one stats
     row regardless of key cardinality."""
+    import os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     from skew_report import skew_report
 
     hot = spark.range(10_000).select(

@@ -3,6 +3,9 @@ batch answer — stream-batch parity is the correctness bar."""
 
 from __future__ import annotations
 
+from functools import partial
+
+import pytest
 from pyspark.sql import functions as F
 
 from weather_data_pipeline_spark import pipeline
@@ -10,6 +13,8 @@ from weather_data_pipeline_spark.operators.flagship import latest_per_key
 from weather_data_pipeline_spark.sources import weather as wsrc
 from weather_data_pipeline_spark.streaming import jobs
 from weather_data_pipeline_spark.transforms import flatten_raw
+
+from .conftest import SF_SMOKE
 
 
 def test_incremental_latest_matches_batch(spark, tmp_path):
@@ -464,13 +469,7 @@ def test_ivf_assign_stream_multibatch_mergeable_state(spark, tmp_path):
     import os
     import shutil
 
-    import numpy as np
-
-    from weather_data_pipeline_spark.operators.similarity import (
-        _assign_fn,
-        _seq_self_norms,
-        build_centroids,
-    )
+    from weather_data_pipeline_spark.operators.similarity import _assign_fn
     from weather_data_pipeline_spark.streaming import jobs
 
     sf = "/root/testdata/sf0.001"
@@ -478,15 +477,9 @@ def test_ivf_assign_stream_multibatch_mergeable_state(spark, tmp_path):
     base = emb.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
     )
-    rows = build_centroids(base, "label", base.count()).collect()
-    rows.sort(key=lambda r: r["label"])
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(
-        (c_labels, c_mat, _seq_self_norms(c_mat))
-    )
+    bc = _frozen_ivf_centroids(spark, emb)
+    c_labels = bc.value[0]
 
     src = str(tmp_path / "emb_src")
     os.makedirs(src)
@@ -824,29 +817,71 @@ def test_cdc_registry_stream_multibatch_additive_counts(spark, tmp_path):
     assert any(df > 1 for _, df in got)  # dup chunks exist in the corpus
 
 
-def test_cdc_registry_replay_of_merged_batch_is_skipped(spark, tmp_path):
-    """ADVICE r13 + r14 pin: foreachBatch is at-least-once — a crash
-    after the _VERSION flip but before the checkpoint commit
-    re-delivers the batch on restart FROM THE SAME CHECKPOINT. The
-    merge keys its skip on (run token, batch id) where the token is
-    the checkpoint path's hash, so only a same-lineage re-delivery is
-    skipped. Simulated faithfully: drain once, delete the
-    checkpoint's ``commits/0`` marker (the exact crash window — flip
-    done, commit not), re-drain with the SAME checkpoint → Spark
-    re-executes batch 0 → the merge skips it → counts not doubled."""
+def _frozen_ivf_centroids(spark, emb):
+    """The batch IVF pipeline's broadcast (labels, matrix, norms)
+    triple over ``emb`` — the frozen index streaming_ivf_assign reads."""
+    import numpy as np
+
+    from weather_data_pipeline_spark.operators.similarity import (
+        _seq_self_norms,
+        build_centroids,
+    )
+
+    base = emb.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
+        "label",
+    )
+    rows = build_centroids(base, "label", base.count()).collect()
+    rows.sort(key=lambda r: r["label"])
+    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
+    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
+    return spark.sparkContext.broadcast(
+        (c_labels, c_mat, _seq_self_norms(c_mat))
+    )
+
+
+#: registry -> (input table, (spark, input frame) -> the registry's drain)
+_REPLAY_CASES = {
+    "cdc_registry": ("documents", lambda spark, df: jobs.streaming_cdc_registry),
+    "record_registry": ("customer", lambda spark, df: jobs.streaming_record_registry),
+    "countmin": ("documents", lambda spark, df: jobs.streaming_countmin),
+    "ivf_assign": (
+        "embeddings",
+        lambda spark, df: partial(
+            jobs.streaming_ivf_assign, bc=_frozen_ivf_centroids(spark, df)
+        ),
+    ),
+    "domain_caps": ("documents", lambda spark, df: jobs.streaming_domain_caps),
+}
+
+
+@pytest.mark.parametrize("registry", list(_REPLAY_CASES))
+def test_registry_replay_of_merged_batch_is_skipped(
+    spark, tmp_path, registry
+):
+    """foreachBatch is at-least-once: a crash after the _VERSION flip
+    but before the checkpoint commit re-delivers the batch on restart
+    FROM THE SAME CHECKPOINT, and the versioned-merge step must skip
+    it (its (run token, batch id) prefix already heads _VERSION).
+    Simulated faithfully: drain once, delete the checkpoint's
+    ``commits/0`` marker (the exact crash window — flip done, commit
+    not), re-drain with the SAME checkpoint → Spark re-executes batch
+    0 → the state must equal the single-drain state. Without the skip
+    additive registries double their counts (cdc, record, countmin,
+    ivf_assign) and the per-domain cap stores each doc twice and
+    evicts legitimate ones (domain_caps)."""
     import glob
     import os
     import shutil
 
-    from weather_data_pipeline_spark.operators.dedup import cdc_chunks
-    from weather_data_pipeline_spark.streaming import jobs
-
-    sf = "/root/testdata/sf0.001"
-    doc = spark.read.parquet(f"{sf}/documents.parquet")
-    src = str(tmp_path / "docs_src")
+    table, make_drain = _REPLAY_CASES[registry]
+    df = spark.read.parquet(f"{SF_SMOKE}/{table}.parquet")
+    drain = make_drain(spark, df)
+    src = str(tmp_path / "src")
     os.makedirs(src)
     tmp = str(tmp_path / "_tmp")
-    doc.coalesce(1).write.mode("overwrite").parquet(tmp)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.move(
         glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
         os.path.join(src, "b0.parquet"),
@@ -854,25 +889,21 @@ def test_cdc_registry_replay_of_merged_batch_is_skipped(spark, tmp_path):
 
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
-    stream = spark.readStream.schema(doc.schema).parquet(src)
-    jobs.streaming_cdc_registry(stream, state, checkpoint=ck)
-    os.remove(os.path.join(ck, "commits", "0"))  # crash window
+    commit = os.path.join(ck, "commits", "0")
+
+    def state_rows():
+        return sorted(tuple(r) for r in jobs.read_state(spark, state).collect())
+
+    drain(spark.readStream.schema(df.schema).parquet(src), state, checkpoint=ck)
+    once = state_rows()
+    assert once
+    os.remove(commit)  # crash window
     crc = os.path.join(ck, "commits", ".0.crc")  # local-FS sibling
     if os.path.exists(crc):
         os.remove(crc)
-    stream = spark.readStream.schema(doc.schema).parquet(src)
-    jobs.streaming_cdc_registry(stream, state, checkpoint=ck)
-    got = sorted(
-        (r["ch"], r["df"]) for r in jobs.read_state(spark, state).collect()
-    )
-    want = sorted(
-        (r["ch"], r["df"])
-        for r in cdc_chunks(doc.select("doc_id", "text"))
-        .groupBy("ch")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .collect()
-    )
-    assert got == want  # NOT doubled by the replayed merge
+    drain(spark.readStream.schema(df.schema).parquet(src), state, checkpoint=ck)
+    assert os.path.exists(commit)  # batch 0 really was re-delivered
+    assert state_rows() == once  # the replayed merge was skipped
 
 
 def test_cdc_registry_new_lineage_same_batch_id_merges(spark, tmp_path):
@@ -1109,36 +1140,3 @@ def test_record_registry_stream_multibatch_mergeable_collapse(
     # the injected dups collapsed across batches: one group of 3
     assert any(g[-2] == 3 for g in got)
 
-
-def test_record_registry_replay_of_merged_batch_is_skipped(
-    spark, tmp_path
-):
-    """Counts in the record registry ADD, so the (run token, batch id)
-    replay guard must skip a re-delivered batch from the same
-    checkpoint lineage — n_dup/sum_keys must not double."""
-    import glob
-    import os
-    import shutil
-
-    from weather_data_pipeline_spark.streaming import jobs
-
-    sf = "/root/testdata/sf0.001"
-    cust = spark.read.parquet(f"{sf}/customer.parquet")
-    src = str(tmp_path / "cust_src")
-    os.makedirs(src)
-    tmp = str(tmp_path / "_tmp")
-    cust.coalesce(1).write.mode("overwrite").parquet(tmp)
-    shutil.move(
-        glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
-        os.path.join(src, "b0.parquet"),
-    )
-
-    state = str(tmp_path / "state")
-    n = cust.count()
-    for _ in range(2):  # second run = same checkpoint → replay, skipped
-        stream = spark.readStream.schema(cust.schema).parquet(src)
-        jobs.streaming_record_registry(
-            stream, state, checkpoint=str(tmp_path / "ck")
-        )
-    st = jobs.read_state(spark, state)
-    assert st.agg(F.sum("n_dup")).first()[0] == n  # NOT doubled

@@ -6,10 +6,12 @@ Usage: python tools/parity_check.py [sf_dir] [name_filter...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from weather_data_pipeline_spark import registry
 from weather_data_pipeline_spark.session import get_spark
@@ -54,8 +56,6 @@ def main() -> int:
 
 
 def a_is_data_dir(a: str) -> bool:
-    import os
-
     return os.path.isdir(a) and os.path.exists(os.path.join(a, "lineitem.parquet"))
 
 

@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -96,7 +97,7 @@ def main() -> int:
         "exact-dedup first, join distinct codes, carry pair volume as "
         "counts"
     )
-    path = "/root/repo/BENCH_SCALE.json"
+    path = os.path.join(ROOT, "BENCH_SCALE.json")
     with open(path) as f:
         payload = json.load(f)
     payload.setdefault("skew", {}).update(out)

@@ -12,11 +12,13 @@ pairs, which a dense-co-occurrence corpus never delivers.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -120,7 +122,7 @@ def main() -> int:
             "corpora it was invented for."
         ),
     }
-    with open("/root/repo/BENCH_PREFIX_AB.json", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_PREFIX_AB.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out["median_s"]))
     return 0

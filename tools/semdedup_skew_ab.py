@@ -33,7 +33,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -153,7 +154,7 @@ def main() -> int:
         "SEMDEDUP_MAX_CLUSTER's fail-fast exists for (end-to-end guard "
         "test names the raise-k lever)"
     )
-    path = "/root/repo/BENCH_SCALE.json"
+    path = os.path.join(ROOT, "BENCH_SCALE.json")
     with open(path) as f:
         payload = json.load(f)
     payload.setdefault("skew", {}).update(out)

@@ -24,7 +24,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -119,7 +120,7 @@ def main() -> int:
                 "multiplicity ever dominates"
             ),
         }
-    path = "/root/repo/BENCH_SCALE.json"
+    path = os.path.join(ROOT, "BENCH_SCALE.json")
     with open(path) as f:
         payload = json.load(f)
     payload.setdefault("skew", {}).update(out)

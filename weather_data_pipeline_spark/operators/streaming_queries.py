@@ -40,7 +40,7 @@ def s_latest_per_key_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship O15 as an incremental stream: file source → foreachBatch
     merge into a latest-per-key state table. Oracle = the batch flagship —
     stream and batch must agree exactly."""
-    state = os.path.join(jobs.SCRATCH, f"s_latest_state_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("s_latest_state")
     src = jobs.stream_events(spark, sf_dir)
     jobs.incremental_latest_per_key(
         spark, src, key="user_id", order="ts", tiebreak="event_id", state_path=state
@@ -244,14 +244,11 @@ def s_weather_latest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-per-key state (snapshot-versioned parquet, atomic pointer
     flip). Oracle = the batch flagship SQL over the same fixture —
     stream-batch parity on the reference's own data shape."""
-    import os
-    import uuid
-
     from ..sources import weather as wsrc
     from ..transforms import flatten_raw
 
     root = wsrc.ensure_fixture()
-    state = os.path.join(jobs.SCRATCH, f"s_weather_state_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("s_weather_state")
     src = flatten_raw(jobs.stream_raw_weather(spark, root))
     jobs.incremental_latest_per_key(
         spark,
@@ -322,9 +319,7 @@ def s_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaderboard / best-offers primitive. Oracle = the batch window
     top-k over the full table: stream and batch must agree exactly
     (value ties break on event_id on both engines)."""
-    state = os.path.join(
-        jobs.SCRATCH, f"s_topk_state_{uuid.uuid4().hex[:8]}"
-    )
+    state = jobs._ckpt("s_topk_state")
     src = jobs.stream_events(spark, sf_dir).select(
         "user_id", "event_id", "value"
     )
@@ -603,7 +598,7 @@ def s_minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is a value check, not a bare id list. Docs under 3 words have
     no shingles hence no keys on either engine (the batch rungs'
     convention)."""
-    state = os.path.join(jobs.SCRATCH, f"mhdd_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("mhdd")
     src = jobs.stream_documents(spark, sf_dir)
     jobs.streaming_minhash_dedup(src, state)
     st = jobs.read_state(spark, state)
@@ -638,7 +633,7 @@ def s_bloom_prefilter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch rung's (flag = all K positions present, ground truth rides
     along) — oracle reused VERBATIM from x1_bloom_prefilter, the
     strongest stream-batch parity statement the contract can make."""
-    state = os.path.join(jobs.SCRATCH, f"bloomreg_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("bloomreg")
     src = jobs.stream_documents(spark, sf_dir)
     jobs.streaming_bloom_register(src, state)
     rpos = jobs.read_state(spark, state)
@@ -717,7 +712,7 @@ def s_ivf_assign_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_labels = _np.array([r["label"] for r in rows], dtype=_np.int64)
     c_mat = _np.array([r["centroid"] for r in rows], dtype=_np.float64)
     bc = spark.sparkContext.broadcast((c_labels, c_mat, _ivf_norms(c_mat)))
-    state = os.path.join(jobs.SCRATCH, f"ivfassign_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("ivfassign")
     jobs.streaming_ivf_assign(jobs.stream_embeddings(spark, sf_dir), state, bc)
     return jobs.read_state(spark, state).select(
         "cluster", "n_assigned", "min_vec", "max_vec"
@@ -742,7 +737,7 @@ def s_domain_caps_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_bloom_prefilter_stream discipline)."""
     from pyspark.sql.window import Window
 
-    state = os.path.join(jobs.SCRATCH, f"domcaps_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("domcaps")
     jobs.streaming_domain_caps(jobs.stream_documents(spark, sf_dir), state)
     st = jobs.read_state(spark, state)
     w = Window.partitionBy("domain").orderBy(
@@ -768,7 +763,7 @@ def s_degree_hist_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg count + log2 bucketing, the batch rung's exact shape —
     so the oracle is x9_degree_hist VERBATIM (the strongest
     stream-batch parity statement the contract can make)."""
-    state = os.path.join(jobs.SCRATCH, f"edgereg_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("edgereg")
     orders = _load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -812,7 +807,7 @@ def s_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     x4_countmin_sketch (the s_bloom_prefilter_stream discipline: the
     stream builds the registry, the drain check replays the batch
     rung exactly)."""
-    state = os.path.join(jobs.SCRATCH, f"cms_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("cms")
     jobs.streaming_countmin(jobs.stream_documents(spark, sf_dir), state)
     cells = jobs.read_state(spark, state)
     doc = _load_table(spark, sf_dir, "documents")
@@ -899,7 +894,7 @@ def s_cdc_chunk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingested duplicate volume (BENCH_STREAM_SCALE `cdc_registry`)."""
     from .dedup import cdc_chunks as _cdc_chunks
 
-    state = os.path.join(jobs.SCRATCH, f"cdcreg_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("cdcreg")
     jobs.streaming_cdc_registry(jobs.stream_documents(spark, sf_dir), state)
     reg = jobs.read_state(spark, state)
     chunks = _cdc_chunks(
@@ -943,7 +938,7 @@ def s_record_linkage_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import RL_BAL_CENTS as _RL_W
     from .dedup import _rl_link_groups
 
-    state = os.path.join(jobs.SCRATCH, f"recreg_{uuid.uuid4().hex[:8]}")
+    state = jobs._ckpt("recreg")
     jobs.streaming_record_registry(jobs.stream_customer(spark, sf_dir), state)
     grp = jobs.read_state(spark, state).withColumn(
         "bucket", F.floor(F.col("bal_cents") / F.lit(_RL_W))
