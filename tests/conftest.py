@@ -14,6 +14,19 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _scratch(tmp_path_factory):
+    """Streaming state and checkpoint directories go under the session's
+    temporary directory instead of the checkout's ``.scratch/``; callers
+    read ``jobs.SCRATCH`` at call time, so the patch reaches them all."""
+    from weather_data_pipeline_spark.streaming import jobs
+
+    patch = pytest.MonkeyPatch()
+    patch.setattr(jobs, "SCRATCH", str(tmp_path_factory.mktemp("scratch")))
+    yield
+    patch.undo()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -4,8 +4,11 @@ flagship → serving (reference lifecycle §3.1-3.3, restated Spark-first)."""
 from __future__ import annotations
 
 import json
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from weather_data_pipeline_spark import pipeline
@@ -83,6 +86,19 @@ def test_flagship_latest_snapshot(spark, curated):
         assert r.localtime == maxes[city]
 
 
+def _job_id(spark) -> int:
+    """The DAG scheduler's next job id: the delta around a call counts
+    every job the call ran."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _spark_rows(df, city: str) -> list[str]:
+    """The Spark path ``serve`` falls back to, as the reference for its memo."""
+    if city != "All":
+        df = df.filter(F.col("city") == city)
+    return df.toJSON().collect()
+
+
 def test_serve_filter_and_json(spark, curated):
     latest = pipeline.latest_snapshot(spark, curated)
     all_rows = pipeline.serve(latest, "All")
@@ -92,6 +108,101 @@ def test_serve_filter_and_json(spark, curated):
     doc = json.loads(london[0])
     assert doc["city"] == "London"
     assert "temp_c" in doc
+
+    # A persisted snapshot: point requests after 'All' run no Spark job and
+    # return the Spark path's strings, in its order.
+    snap = pipeline.latest_snapshot(spark, curated).persist()
+    try:
+        assert pipeline.serve(snap, "All") == _spark_rows(snap, "All")
+        for city in [*wsrc.CITIES, "Atlantis", "All"]:
+            before = _job_id(spark)
+            got = pipeline.serve(snap, city)
+            assert _job_id(spark) == before, city
+            assert got == _spark_rows(snap, city), city
+        assert pipeline.serve(snap, "Atlantis") == []
+    finally:
+        snap.unpersist()
+
+
+def test_serve_memo_invalidation(spark, tmp_path, monkeypatch):
+    """The memo answers only for the cache entry it was collected from: an
+    append re-caches the snapshot, an unpersist drops it, and an entry
+    over the row bound or without a ``city`` column takes the Spark path."""
+    root, table = str(tmp_path), "weather.weather_memo_test"
+    first, second = wsrc.FIXTURE_DATES[:2]
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    pipeline.extract_to_raw(root, [first, second])
+
+    def append(date: str) -> None:
+        pipeline.curate(spark, pipeline.stage(spark, root, date=date),
+                        table=table, path=f"{root}/curated")
+
+    append(first)
+    snap = pipeline.latest_snapshot(spark, table).persist()
+    old = pipeline.serve(snap, "London")
+    assert pipeline.serve(snap, "All") == _spark_rows(snap, "All")
+
+    append(second)
+    new = pipeline.serve(snap, "London")
+    assert new == _spark_rows(snap, "London") != old
+    assert json.loads(new[0])["localtime"].startswith(second)
+    assert pipeline.serve(snap, "All") == _spark_rows(snap, "All")
+
+    snap.unpersist()
+    before = _job_id(spark)
+    assert pipeline.serve(snap, "Tokyo") == _spark_rows(snap, "Tokyo")
+    assert _job_id(spark) > before
+
+    monkeypatch.setattr(pipeline, "SERVE_MEMO_ROWS", 8)
+    big = pipeline.latest_snapshot(spark, table).persist()
+    try:
+        for city in ["London", "All", "Tokyo", "Atlantis"]:
+            before = _job_id(spark)
+            assert pipeline.serve(big, city) == _spark_rows(big, city), city
+            assert _job_id(spark) > before, city
+        assert pipeline._memos[big].rows is None
+    finally:
+        big.unpersist()
+
+    # Filter resolves a dropped column through the projection, so a point
+    # request on this frame runs on the Spark path; one with no city
+    # column at all still raises.
+    dropped, no_city = snap.drop("city").persist(), spark.range(3).persist()
+    try:
+        assert pipeline.serve(dropped, "All") == _spark_rows(dropped, "All")
+        assert pipeline.serve(dropped, "London") == _spark_rows(dropped, "London")
+        with pytest.raises(AnalysisException):
+            pipeline.serve(no_city, "London")
+        assert pipeline.serve(no_city, "All") == _spark_rows(no_city, "All")
+        with pytest.raises(AnalysisException):
+            pipeline.serve(no_city, "London")
+    finally:
+        dropped.unpersist()
+        no_city.unpersist()
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_serve_memo_concurrent_requests(spark, curated):
+    """Threads that all miss the memo at once, then keep requesting, get
+    the Spark path's rows every time: the memo is shared by every caller."""
+    snap = pipeline.latest_snapshot(spark, curated).persist()
+    cities = [*wsrc.CITIES, "Atlantis", "All"]
+    want = {c: _spark_rows(snap, c) for c in cities}
+
+    def client(k: int) -> None:
+        for i in range(40):
+            city = cities[(k + i) % len(cities)]
+            assert pipeline.serve(snap, city) == want[city], city
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(client, k) for k in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+        snap.unpersist()
 
 
 def test_weather_api_datasource(spark):

@@ -352,8 +352,6 @@ def _decon_frontier(spark: SparkSession) -> dict:
     streaming_decontaminate at 1x and 10x documents against the fixed
     copy-0 benchmark side and counting checkpoint state directories
     (none) and flag rows."""
-    import glob as _glob
-
     from pyspark.sql import functions as F
 
     from weather_data_pipeline_spark.operators.dedup import shingle_arrays
@@ -394,9 +392,12 @@ def _decon_frontier(spark: SparkSession) -> dict:
             .parquet(d)
         )
         sink = os.path.join(WORK, f"dc_flags_{tag}")
+        ckpts = os.path.join(jobs.SCRATCH, "decon-stream-*")
+        before = set(glob.glob(ckpts))
         t0 = time.perf_counter()
         jobs.streaming_decontaminate(src, ev, sink)
         res[f"t_{tag}"] = round(time.perf_counter() - t0, 3)
+        drained = set(glob.glob(ckpts)) - before
         res[f"flag_rows_{tag}"] = (
             spark.read.schema(
                 "doc_id long, n_eval_hits long, max_containment double"
@@ -404,10 +405,10 @@ def _decon_frontier(spark: SparkSession) -> dict:
             .parquet(sink)
             .count()
         )
-        # no state store: the checkpoint tree has no state/ directory
+        # no state store: the drain's checkpoint has no state/ directory
         res[f"state_rows_{tag}"] = 0
-        res[f"state_dirs_{tag}"] = len(
-            _glob.glob(os.path.join(jobs.SCRATCH, "ckpt", "*", "state"))
+        res[f"state_dirs_{tag}"] = sum(
+            os.path.isdir(os.path.join(c, "state")) for c in drained
         )
     res["ratio"] = round(res["t_10x"] / res["t_1x"], 2)
     return res

@@ -61,9 +61,10 @@ SUPP_OFFSET = 100_000_000
 #: overhead-dominated sizes the saved exchange is the whole game
 #: (measured ~11-17% at sf0.1). OVER it the two-exchange partial-agg
 #: form wins: the (src,label) combiners ship far fewer bytes than
-#: |edges| joined rows once labels converge (the 100-copy replica
-#: measured the one-exchange form at 69.2 s vs the partial-agg form's
-#: 56.7 s). 20M rows ≈ 320 MB of (src,label) pairs — comfortably before
+#: |edges| joined rows once labels converge (a run of both forms on the
+#: 100-copy replica, on another box, timed the partial-agg form faster;
+#: that comparison is not re-measured here). 20M rows ≈ 320 MB of
+#: (src,label) pairs — comfortably before
 #: byte volume dominates on a real network; production tunes it to
 #: measured combiner reduction.
 LPA_ONE_EXCHANGE_MAX_EDGES = 20_000_000
