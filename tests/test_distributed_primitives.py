@@ -115,8 +115,8 @@ def test_ntile_of_rank_matches_sql_ntile(spark, n, tiles):
 
 def test_global_prefix_sums_null_group_key(spark):
     """A NULL group key must not crash the driver-side offset sort
-    (ADVICE r8: None-vs-value tuple comparison raised TypeError) and
-    NULL forms its own group, like SQL GROUP BY."""
+    (a None-vs-value tuple comparison raises TypeError), NULL forms its
+    own group, like SQL GROUP BY, and its rows survive the offset join."""
     data = [
         (i, None if i % 3 == 0 else ("a" if i % 2 == 0 else "b"), 1)
         for i in range(60)
@@ -136,11 +136,15 @@ def test_global_prefix_sums_null_group_key(spark):
         ("a",): 20,
         ("b",): 20,
     }
-    by_group = {}
-    for r in sorted(rows, key=lambda r: r["id"]):
-        by_group.setdefault(r["g"], []).append(r["cum"])
-    for g, cums in by_group.items():
-        assert cums == list(range(1, len(cums) + 1)), g
+    # every input row comes out, NULL-group rows included, each with
+    # its running total inside its own group
+    seen: dict = {}
+    expect = {}
+    for i, g, _ in data:
+        seen[g] = seen.get(g, 0) + 1
+        expect[i] = (g, seen[g])
+    assert len(rows) == len(data)
+    assert {r["id"]: (r["g"], r["cum"]) for r in rows} == expect
 
 
 def test_ntile_of_rank_beyond_double_precision(spark):

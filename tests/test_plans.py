@@ -454,26 +454,34 @@ def test_build_centroids_strategies_agree(spark):
 
 
 def test_ivf_corpus_cache_scoped(spark):
-    """The IVF build's corpus cache is SCOPED to the build: the quantizer
-    init, Lloyd iterations, and probe collect all run against one cached
-    projection (r3 ask #5 — no parquet re-scan per internal job), and the
-    entry is released before the function returns (ADVICE r5 #2 — a
-    session touching several sf_dirs must not accumulate pinned corpora).
-    Pin both: cache()+unpersist() bracket the build in source, and a full
-    evaluation leaves the persistent-RDD registry no larger than before."""
+    """The IVF quantizer's corpus cache is SCOPED to the build: with
+    Lloyd iterations the count, the centroid init and every iteration
+    run against one cached projection (no source re-scan per iteration),
+    and the entry is released before ``ivf_quantizer`` returns (a
+    session touching several sf_dirs must not accumulate pinned
+    corpora). Pin both: cache()+unpersist() bracket the build in source,
+    and a full evaluation of every consumer leaves the persistent-RDD
+    registry no larger than before."""
     import inspect
 
     from weather_data_pipeline_spark.operators import similarity as sim
 
-    src = inspect.getsource(sim.ivf_candidates)  # r15: probe machinery
+    src = inspect.getsource(sim.ivf_quantizer)
     assert ".cache()" in src and "base.unpersist()" in src
-    # unpersist must come after the last internal collect (the probe)
-    assert src.index("base.unpersist()") > src.index("qrows = ")
+    # unpersist must come after the last internal collect (the centroids)
+    assert src.index("base.unpersist()") > src.rindex("collect_centroids(")
 
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    _Q["x3_ivf_topk"](spark, SF).count()
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after <= before, (before, after)
+    for name in (
+        "x3_ivf_topk",
+        "x3_ivf_kmeans_topk",
+        "x3_ivf_pq_topk",
+        "x3_ivf_rerank_topk",
+        "x2_semdedup_keep",
+    ):
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        _Q[name](spark, SF).count()
+        after = spark.sparkContext._jsc.getPersistentRDDs().size()
+        assert after <= before, (name, before, after)
 
 
 def test_star_components_matches_min_label_on_random_graphs(spark):

@@ -820,25 +820,15 @@ def test_cdc_registry_stream_multibatch_additive_counts(spark, tmp_path):
 def _frozen_ivf_centroids(spark, emb):
     """The batch IVF pipeline's broadcast (labels, matrix, norms)
     triple over ``emb`` — the frozen index streaming_ivf_assign reads."""
-    import numpy as np
+    from weather_data_pipeline_spark.operators.similarity import ivf_quantizer
 
-    from weather_data_pipeline_spark.operators.similarity import (
-        _seq_self_norms,
-        build_centroids,
-    )
-
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    )
-    rows = build_centroids(base, "label", base.count()).collect()
-    rows.sort(key=lambda r: r["label"])
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    return spark.sparkContext.broadcast(
-        (c_labels, c_mat, _seq_self_norms(c_mat))
-    )
+    return ivf_quantizer(
+        emb.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("embedding"),
+            "label",
+        )
+    )[1]
 
 
 #: registry -> (input table, (spark, input frame) -> the registry's drain)

@@ -283,12 +283,10 @@ ALLOWLIST: dict[tuple[str, str], tuple[str, str]] = {
         "raw-double-passthrough", "selection of the raw value column"),
     (f"{_P}/operators/sessionize.py", "arg_min(value, event_id)"): (
         "raw-double-passthrough", "selection of raw value by event_id"),
-    (f"{_P}/operators/similarity.py",
-     'ROUND(list_dot_product({qs}, {qs})" f" - 2 * '
-     'list_dot_product({qs}, k{m}.centroid)" f" + '
-     'list_dot_product(k{m}.centroid, k{m}.centroid), 6)" f"'): (
+    (f"{_P}/operators/similarity.py", "{adc_term}"): (
         "pre-rounded-value-preserving",
-        "ADC oracle twin of the F.col('d') site: ROUND(...,6) runs "
+        "ADC oracle twin of the F.col('d') site: each adc_term is a "
+        "_DUCK_ADC_TERMS entry, _duck_pq_d2's ROUND(...,6), which runs "
         "BEFORE the DECIMAL(18,6) cast, so the cast is exact"),
     (f"{_P}/operators/tpch_partsupp.py", "SUM(v)"): (
         "decimal-in", "v = decimal price product (Spark-twin parity)"),

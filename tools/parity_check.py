@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -15,6 +16,7 @@ sys.path.insert(0, ROOT)
 
 from weather_data_pipeline_spark import registry
 from weather_data_pipeline_spark.session import get_spark
+from weather_data_pipeline_spark.streaming import jobs
 from tests.oracle_harness import compare
 
 
@@ -31,6 +33,16 @@ def main() -> int:
     spark = get_spark(app_name="parity-check")
     qs, osql = registry.queries(), registry.oracle_sql()
     names = [n for n in sorted(qs) if not args or any(a in n for a in args)]
+    # streaming state and checkpoints of the s_* queries live for the
+    # run only, never in the checkout's .scratch/
+    with tempfile.TemporaryDirectory(prefix="parity-") as scratch:
+        jobs.SCRATCH = scratch
+        failed = _check(spark, qs, osql, names, sf_dir)
+    print(f"\n{len(names)-len(failed)}/{len(names)} ok; failed: {failed}")
+    return 1 if failed else 0
+
+
+def _check(spark, qs, osql, names, sf_dir) -> list[str]:
     failed = []
     for name in names:
         t0 = time.time()
@@ -51,8 +63,7 @@ def main() -> int:
         except Exception as e:
             failed.append(name)
             print(f"✗ {name:<36} ERROR {str(e)[:300]}")
-    print(f"\n{len(names)-len(failed)}/{len(names)} ok; failed: {failed}")
-    return 1 if failed else 0
+    return failed
 
 
 def a_is_data_dir(a: str) -> bool:

@@ -96,15 +96,18 @@ def _assigned(spark: SparkSession, n: int, posture: str):
 
 
 def _centroids_bc(spark: SparkSession, n_buckets: int):
-    """Broadcast {bucket: (centroid, norm)} — deterministic unit-ish
-    centroids; values don't affect the kernel's pair-work shape."""
-    cents = {}
-    for b in range(n_buckets):
-        c = np.array(
+    """Broadcast quantizer triple (labels, matrix, norms) — deterministic
+    unit-ish centroids; values don't affect the kernel's pair-work
+    shape."""
+    mat = np.array(
+        [
             [((b * (d + 3)) % 101) / 101.0 + 0.1 for d in range(DIM)]
-        )
-        cents[b] = (c, float(_seq_self_norms(c[None, :])[0]))
-    return spark.sparkContext.broadcast(cents)
+            for b in range(n_buckets)
+        ]
+    )
+    return spark.sparkContext.broadcast(
+        (np.arange(n_buckets), mat, _seq_self_norms(mat))
+    )
 
 
 def _time(df_fn) -> float:

@@ -415,37 +415,25 @@ def _decon_frontier(spark: SparkSession) -> dict:
 
 
 def _ivf_cells(spark: SparkSession) -> dict:
-    """State bound of the streaming IVF cell registry (VERDICT r11 ask
-    #5): drain streaming_ivf_assign at 1x and 10x embeddings over the
+    """State bound of the streaming IVF cell registry: drain
+    streaming_ivf_assign at 1x and 10x embeddings over the
     SAME frozen 1x quantizer — state rows must stay <= k at BOTH
     scales (the index-geometry cap, the Bloom bound with cells for
     bits: cells track occupancy, never members; the replica shifts
     vec_id but NOT label, so the 10x corpus lands in the same k cells
     with 10x occupancy)."""
-    import numpy as np
     from pyspark.sql import functions as F
 
-    from weather_data_pipeline_spark.operators.similarity import (
-        _seq_self_norms,
-        build_centroids,
-    )
+    from weather_data_pipeline_spark.operators.similarity import ivf_quantizer
     from weather_data_pipeline_spark.schemas import TESTDATA
     from weather_data_pipeline_spark.streaming import jobs
 
-    base = (
-        spark.read.parquet(os.path.join(BASE, "embeddings.parquet"))
-        .select(
+    (c_labels, _, _), bc, _ = ivf_quantizer(
+        spark.read.parquet(os.path.join(BASE, "embeddings.parquet")).select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("embedding"),
             "label",
         )
-    )
-    rows = build_centroids(base, "label", base.count()).collect()
-    rows.sort(key=lambda r: r["label"])
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(
-        (c_labels, c_mat, _seq_self_norms(c_mat))
     )
     res: dict = {"k_cells": len(c_labels)}
     for tag, root in (("1x", BASE), ("10x", SCALE_DIR)):

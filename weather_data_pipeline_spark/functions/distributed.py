@@ -67,7 +67,7 @@ def global_prefix_sums(
     offsets = []
     # None-safe sort key: a NULL group value must order deterministically
     # (NULLS FIRST) instead of raising TypeError on None-vs-value
-    # comparison (ADVICE r8) — the offset table itself is agnostic to
+    # comparison — the offset table itself is agnostic to
     # which order, it only needs ONE total order shared with nothing.
     def _nskey(v):
         return (v is not None, v)
@@ -93,9 +93,14 @@ def global_prefix_sums(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
     )
+    # NULL is a group of its own (like SQL GROUP BY), so the group keys
+    # join null-safe: a plain equi-join would drop every NULL-group row
+    on = [parts["_pid"] == off["_pid"]]
+    on += [parts[g].eqNullSafe(off[g]) for g in groups]
     out = (
         parts.withColumn("_lval", local)
-        .join(off, ["_pid", *groups])
+        .join(off, on)
+        .drop(off["_pid"], *[off[g] for g in groups])
         .withColumn(out_col, (F.col("_lval") + F.col("_offset")).cast("long"))
         .drop("_pid", "_lval", "_offset")
     )

@@ -1,23 +1,38 @@
 """X3 — similarity search over the ``embeddings`` table (SURVEY.md §2.10).
 
-Approximate-nearest-neighbor surface for an ``array<float>`` column:
+Nearest-neighbor surface for an ``array<float>`` column: exact scans
+(cosine, inner product, range, k-NN vote), LSH buckets, the IVF family
+(label / k-means quantizer, nprobe, PQ codes and ADC, IVF-PQ, two-stage
+re-rank), binary codes, NSW/HNSW graph search, and the curation rungs
+built on them (SemDeDup keep, outliers, cluster balance).
 
-- brute-force cosine top-k (the correctness baseline): broadcast the
-  (small) query set against the corpus — corpus scans once, never
-  shuffles, k results per query via a per-query window;
-- all-pairs near-dup by embedding cosine (threshold join);
-- LSH-bucketed variant (the scale path): deterministic random-hyperplane
-  signatures prune candidates to same-bucket pairs, sub-quadratic.
+Every rung is composed from one copy of each shared piece:
+
+- ``_seq_dot`` / ``_seq_cross`` / ``_seq_sq``: the sequential
+  left-to-right dimension fold (per row / per block / self), bit-equal
+  to DuckDB's ``list_dot_product`` and Spark's ``aggregate``;
+- ``_query_block``: the bounded driver collect of the ``N_QUERIES``
+  query vectors;
+- ``_exact_scan``: the one-pass exact query-scan kernel (cosine or
+  inner product, optional carried columns);
+- ``_topk``: the per-query top-K window;
+- ``ivf_quantizer``: the IVF quantizer build — cached projection, count,
+  centroid collect, Lloyd iterations, broadcast, corpus assignment;
+- ``_probe_rows``: the query-side probe of the ``nprobe`` nearest lists;
+- ``_pq_d2``: the PQ distance build, shared by code assignment and the
+  ADC query tables;
+- oracle side: ``_duck_topk``, ``_duck_cents_ctes``,
+  ``_duck_assign_cte``, ``_duck_ivf_topk`` and ``_duck_pq_d2``, each the
+  SQL twin of one of the above.
 
 All cosines are computed in double with the same fold order both engines
 use (sequential left-to-right), and compared at 6 decimals; rankings
 order by the rounded value + vec_id tiebreak so top-k sets are
 engine-stable.
 
-At 100 TB: the corpus side stays partitioned (never collected); queries /
-hyperplanes broadcast; candidate generation is a hash join on bucket ids.
-An IVF refinement would replace random planes with k-means centroids —
-same plan shape (centroid assignment = argmin over a broadcast array).
+At 100 TB: the corpus side stays partitioned (never collected); queries,
+hyperplanes and centroids broadcast; candidate generation is a hash join
+on bucket ids.
 """
 
 from __future__ import annotations
@@ -62,6 +77,30 @@ _DUCK_COS = (
     " * sqrt(list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))))"
 )
 
+#: the exact all-pairs source of the oracles: query block ``q`` × corpus ``c``
+_DUCK_EXACT = (
+    f"(SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q"
+    " CROSS JOIN embeddings c WHERE q.vec_id <> c.vec_id"
+)
+
+
+def _duck_topk(
+    src: str,
+    cos: str = _DUCK_COS.format(a="q.embedding", b="c.embedding"),
+    k: int = TOP_K,
+) -> str:
+    """SQL twin of ``_topk`` over cosine: per query row ``q`` of ``src``,
+    its top-``k`` rows ``c`` by (rounded ``cos`` DESC, vec_id), as
+    (query_id, vec_id, sim, rn)."""
+    return f"""SELECT query_id, vec_id, sim, rn FROM (
+      SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+             ROUND({cos}, 6) AS sim,
+             ROW_NUMBER() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY ROUND({cos}, 6) DESC, c.vec_id) AS rn
+      FROM {src}
+    ) WHERE rn <= {k}"""
+
 
 def _seq_dot(mat: "np.ndarray", vec: "np.ndarray") -> "np.ndarray":
     """Dot products of every row of ``mat`` with ``vec``, accumulated
@@ -75,29 +114,107 @@ def _seq_dot(mat: "np.ndarray", vec: "np.ndarray") -> "np.ndarray":
     return acc
 
 
-def _seq_self_norms(mat: "np.ndarray") -> "np.ndarray":
-    """sqrt(x·x) per row with the same sequential fold."""
+def _seq_cross(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
+    """``acc[i, j] = a[i]·b[j]`` for a whole (rows × rows) block, with
+    ``_seq_dot``'s sequential fold over dimensions. Per-row kernels
+    keep ``_seq_dot``: the block form's 64 (batch × corpus)
+    temporaries are memory-bound where a per-row scan stays in cache
+    (the NSW edge build measured 2× slower in block form)."""
+    acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+    for k in range(a.shape[1]):
+        acc += np.outer(a[:, k], b[:, k])
+    return acc
+
+
+def _seq_sq(mat: "np.ndarray") -> "np.ndarray":
+    """x·x per row with the same sequential fold."""
     acc = np.zeros(mat.shape[0], dtype=np.float64)
     for k in range(mat.shape[1]):
         acc += mat[:, k] * mat[:, k]
-    return np.sqrt(acc)
+    return acc
+
+
+def _seq_self_norms(mat: "np.ndarray") -> "np.ndarray":
+    """sqrt(x·x) per row with the same sequential fold."""
+    return np.sqrt(_seq_sq(mat))
+
+
+def _vectors(df: DataFrame, *extra: str) -> DataFrame:
+    """``(vec_id, embedding as array<double>, *extra)`` — the projection
+    every kernel and the quantizer read."""
+    return df.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), *extra
+    )
+
+
+def _query_block(df: DataFrame, *extra: str):
+    """The ``N_QUERIES`` query vectors (``vec_id < N_QUERIES``) of
+    ``df``, collected to the driver — bounded by construction. Returns
+    ``(ids, matrix, rows)``; ``rows`` also carry the ``extra`` columns."""
+    rows = _vectors(df, *extra).filter(F.col("vec_id") < N_QUERIES).collect()
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    return [r[0] for r in rows], mat, rows
+
+
+def _topk(
+    df: DataFrame,
+    order: list,
+    cols,
+    k: int = TOP_K,
+    rank: str = "rn",
+    by: str = "query_id",
+) -> DataFrame:
+    """Per-query (per-``by``) top-``k`` under the total order ``order``:
+    ``row_number`` over ``partitionBy(by)`` — never a global sort; Spark
+    turns the ``rank <= k`` filter into a WindowGroupLimit — projected
+    to ``cols``."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return (
+        df.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select(*cols)
+    )
+
+
+def _exact_scan(
+    emb: DataFrame, q_ids, q_mat, dot: bool = False, carry: tuple = ()
+) -> DataFrame:
+    """Every (query, corpus vector) pair scored exactly in ONE corpus
+    pass: an Arrow-batched ``mapInPandas`` kernel closes over the query
+    matrix and folds each batch with ``_seq_dot`` (bit-identical to the
+    oracle's list_dot_product). Scores are the rounded cosine ``sim``,
+    or with ``dot`` the rounded inner product ``score``; ``carry`` int
+    columns ride along. Self pairs are kept; rankers filter them."""
+    import pandas as pd
+
+    score = "score" if dot else "sim"
+    q_norms = None if dot else _seq_self_norms(q_mat)
+
+    def sims(batches):
+        for pdf in batches:
+            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            c_norms = None if dot else _seq_self_norms(c_mat)
+            out = []
+            for qi, qid in enumerate(q_ids):
+                s = _seq_dot(c_mat, q_mat[qi])
+                if not dot:
+                    s = s / (q_norms[qi] * c_norms)
+                cols = {"query_id": qid, "vec_id": pdf["vec_id"].to_numpy()}
+                cols.update((c, pdf[c].to_numpy()) for c in carry)
+                cols[score] = np.round(s, 6)
+                out.append(pd.DataFrame(cols))
+            if out:  # a corpus may hold no query vectors
+                yield pd.concat(out, ignore_index=True)
+
+    carried = "".join(f"{c} int, " for c in carry)
+    return _vectors(emb, *carry).mapInPandas(
+        sims, schema=f"query_id long, vec_id long, {carried}{score} double"
+    )
 
 
 @query(
     "x3_cosine_topk",
-    oracle=f"""
-    SELECT query_id, vec_id, sim FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-             ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) AS sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                        c.vec_id) AS rn
-      FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-      CROSS JOIN embeddings c
-      WHERE q.vec_id <> c.vec_id
-    ) WHERE rn <= {TOP_K}
-    """,
+    oracle=f"SELECT query_id, vec_id, sim FROM ({_duck_topk(_DUCK_EXACT)})",
 )
 def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: query vectors broadcast (driver-collected
@@ -107,46 +224,14 @@ def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which stays as the ``cosine()`` helper for column-level use). The
     final window partitions by query (|queries| tiny partitions) — never
     a global sort."""
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norms = _seq_self_norms(q_mat)
-
-    def sims(batches):
-        for pdf in batches:
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_norms = _seq_self_norms(c_mat)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                s = _seq_dot(c_mat, q_mat[qi]) / (q_norms[qi] * c_norms)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "sim": np.round(s, 6),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    pairs = (
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .mapInPandas(sims, schema="query_id long, vec_id long, sim double")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "sim")
+    q_ids, q_mat, _ = _query_block(emb)
+    return _topk(
+        _exact_scan(emb, q_ids, q_mat).filter(
+            F.col("vec_id") != F.col("query_id")
+        ),
+        [F.col("sim").desc(), F.col("vec_id")],
+        ("query_id", "vec_id", "sim"),
     )
 
 
@@ -187,10 +272,7 @@ def x3_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"use x3_lsh_candidate_pairs (bucket-pruned, sub-quadratic) "
             f"at this scale"
         )
-    rows = (
-        emb.select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
+    rows = _vectors(emb).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
     norms = _seq_self_norms(mat)
@@ -202,23 +284,15 @@ def x3_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             b_ids = pdf["vec_id"].to_numpy()
             b_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             b_norms = _seq_self_norms(b_mat)
-            # acc[i, j] = dot(b_mat[i], c_mat[j]) accumulated dim-by-dim:
-            # same left-to-right fold as _seq_dot, vectorized over the
-            # whole (batch × corpus) block.
-            acc = np.zeros((b_mat.shape[0], c_mat.shape[0]))
-            for k in range(b_mat.shape[1]):
-                acc += np.outer(b_mat[:, k], c_mat[:, k])
-            sim = np.round(acc / np.outer(b_norms, c_norms), 6)
+            sim = np.round(_seq_cross(b_mat, c_mat) / np.outer(b_norms, c_norms), 6)
             ai, bj = np.nonzero((sim >= 0.3) & (b_ids[:, None] < c_ids[None, :]))
             yield pd.DataFrame(
                 {"vec_a": b_ids[ai], "vec_b": c_ids[bj], "sim": sim[ai, bj]}
             )
 
-    return fan_out(
-        emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-    ).mapInPandas(block_sims, schema="vec_a long, vec_b long, sim double")
+    return fan_out(_vectors(emb)).mapInPandas(
+        block_sims, schema="vec_a long, vec_b long, sim double"
+    )
 
 
 # ----------------------------------------------------------------------
@@ -328,7 +402,7 @@ def _fsum_cols(mat):
     order or on how numpy would have chunked a pairwise sum. This is what
     lets the map-side-combine centroid path (partial sums per partition,
     then a combine) agree with the one-shot full-group mean at comparison
-    precision regardless of partitioning (ADVICE r4 #1): each partial is
+    precision regardless of partitioning: each partial is
     correctly rounded, the combine is correctly rounded over partials, so
     the two paths differ by < #partitions ulps ≈ 1e-10 relative — ~9
     orders of magnitude below the 6-decimal output rounding."""
@@ -351,13 +425,30 @@ def _centroid_of_group(pdf):
     )
 
 
+def _duck_cents_ctes(
+    sfx: str = "",
+    src: str = "embeddings",
+    key: str = "label",
+    dims: str = "1, len(embedding)",
+) -> str:
+    """``flat{sfx}`` + ``cents{sfx}``: per-``key`` mean centroids over
+    ``src`` (dimensions ``dims``), floor-truncated to 6 decimals per
+    coordinate — the SQL twin of ``build_centroids``."""
+    return f"""flat{sfx} AS (
+      SELECT {key} AS label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
+      FROM {src}, UNNEST(generate_series({dims})) AS t(i)
+    ), cents{sfx} AS (
+      SELECT label, array_agg(a ORDER BY idx) AS centroid
+      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
+            FROM flat{sfx} GROUP BY label, idx)
+      GROUP BY label
+    )"""
+
+
 @query(
     "x3_label_centroids",
-    oracle="""
-    WITH flat AS (
-      SELECT label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    )
+    oracle=f"""
+    WITH {_duck_cents_ctes()}
     SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS val
     FROM flat GROUP BY label, idx
     """,
@@ -371,7 +462,7 @@ def x3_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the scalar LONG FORM ``(label, idx, val)`` — one row per
     centroid dimension, 1-based ``idx`` — not ``array<double>``: the
     driver's canonicalizer sorts/hashes raw column values and cannot
-    order numpy arrays (round-4 driver crash, VERDICT r4 §What's-wrong-2).
+    order numpy arrays (it crashes on them).
     Array/struct/map never cross a registered query's output boundary
     (enforced in tests/oracle_harness.py on both engines)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -388,41 +479,47 @@ def x3_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 # IVF approximate top-k (coarse quantize → probe one list)
 # ----------------------------------------------------------------------
-_DUCK_CENTROIDS = """
-    flat AS (
-      SELECT label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ), cents AS (
-      SELECT label, array_agg(a ORDER BY idx) AS centroid
-      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
-            FROM flat GROUP BY label, idx)
-      GROUP BY label
-    ), assigned AS (
+def _duck_assign_cte(
+    name: str, cents: str, nprobe: int = 1, queries: bool = False
+) -> str:
+    """Nearest-centroid assignment CTE (argmax with the same rounded
+    cosine + lowest-label tiebreak as the Arrow kernel); with ``queries``
+    the query probe instead: the query vectors' ``nprobe`` nearest lists."""
+    cos = _DUCK_COS.format(a="e.embedding", b="c.centroid")
+    where = f" WHERE e.vec_id < {N_QUERIES}" if queries else ""
+    return f"""{name} AS (
       SELECT vec_id, embedding, label AS bucket FROM (
         SELECT e.vec_id, e.embedding, c.label,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
                  ORDER BY ROUND({cos}, 6) DESC, c.label) AS rn
-        FROM embeddings e CROSS JOIN cents c
-      ) WHERE rn = 1
+        FROM embeddings e CROSS JOIN {cents} c{where}
+      ) WHERE rn <= {nprobe}
+    )"""
+
+
+_DUCK_CENTROIDS = f"""
+    {_duck_cents_ctes()}, {_duck_assign_cte("assigned", "cents")}
+"""
+
+
+def _duck_ivf_topk(
+    q: str = f"(SELECT * FROM assigned WHERE vec_id < {N_QUERIES})", **kw
+) -> str:
+    """Per-query top-k over the probed lists: query rows ``q`` (one row
+    per probed ``bucket``) against the same-bucket corpus rows of
+    ``assigned`` (``kw`` as ``_duck_topk``)."""
+    return _duck_topk(
+        f"{q} q JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id",
+        **kw,
     )
-""".format(cos=_DUCK_COS.format(a="e.embedding", b="c.centroid"))
 
 
 @query(
     "x3_ivf_topk",
     oracle=f"""
     WITH {_DUCK_CENTROIDS}
-    SELECT query_id, vec_id, sim FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-             ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) AS sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                        c.vec_id) AS rn
-      FROM (SELECT * FROM assigned WHERE vec_id < {N_QUERIES}) q
-      JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    ) WHERE rn <= {TOP_K}
+    SELECT query_id, vec_id, sim FROM ({_duck_ivf_topk()})
     """,
 )
 def x3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,12 +627,7 @@ def _assign_fn(bc):
         for pdf in batches:
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             norms = _seq_self_norms(mat)
-            # acc[i, j] = dot(vec i, centroid j), accumulated dim-by-dim —
-            # the same left-to-right fold as the SQL oracle's cosine.
-            acc = np.zeros((mat.shape[0], cm.shape[0]))
-            for k in range(mat.shape[1]):
-                acc += np.outer(mat[:, k], cm[:, k])
-            sims = np.round(acc / np.outer(norms, cn), 6)
+            sims = np.round(_seq_cross(mat, cm) / np.outer(norms, cn), 6)
             best = np.argmax(sims, axis=1)  # ties → first = lowest label
             yield pd.DataFrame(
                 {
@@ -548,6 +640,76 @@ def _assign_fn(bc):
     return assign
 
 
+_ASSIGNED_SCHEMA = "vec_id long, embedding array<double>, bucket long"
+
+
+def ivf_quantizer(base: DataFrame, kmeans_iters: int = 0):
+    """The IVF coarse quantizer over ``base`` (vec_id, embedding
+    array<double>, label), built once for every consumer: label-centroid
+    init (``build_centroids``, collected k-bounded), ``kmeans_iters``
+    Lloyd iterations (assign = broadcast argmax in ``mapInPandas``,
+    update = ``build_centroids`` over the assignment — the build loop a
+    100 TB IVF index uses, where only k centroid rows reach the driver),
+    then the nearest-centroid assignment of every vector.
+
+    Returns ``(quant, bc, assigned)``: the label-sorted ``(labels,
+    matrix, norms)`` triple (argmax first-hit = lowest label), its
+    broadcast, and the lazy (vec_id, embedding, bucket) assignment.
+
+    With Lloyd iterations the projection is cached for the build (each
+    iteration would otherwise rescan the source; ``.cache()`` is
+    MEMORY_AND_DISK, so at 100 TB partitions spill rather than OOM) and
+    released before return, so a session touching several corpora never
+    pins one per corpus; later consumers re-derive it in one scan.
+    Without iterations the build reads the projection once (the count
+    reads only file metadata), so a cache would only add its
+    materialization job."""
+    sc = base.sparkSession.sparkContext
+
+    def collect_centroids(df, key_col):
+        rows = build_centroids(df, key_col, n_corpus).collect()
+        rows.sort(key=lambda r: r["label"])
+        labels = np.array([r["label"] for r in rows], dtype=np.int64)
+        mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
+        return labels, mat, _seq_self_norms(mat)
+
+    if kmeans_iters:
+        base = base.cache()
+    try:
+        n_corpus = base.count()
+        quant = collect_centroids(base, "label")
+        corpus = base.select("vec_id", "embedding")
+        for _ in range(kmeans_iters):
+            step = corpus.mapInPandas(
+                _assign_fn(sc.broadcast(quant)), schema=_ASSIGNED_SCHEMA
+            )
+            quant = collect_centroids(step, "bucket")
+    finally:
+        if kmeans_iters:
+            base.unpersist()
+    bc = sc.broadcast(quant)
+    return quant, bc, corpus.mapInPandas(_assign_fn(bc), schema=_ASSIGNED_SCHEMA)
+
+
+def _probe_rows(q_ids, q_mat, quant, nprobe: int) -> list:
+    """The query probe, on the driver (|queries| × k sims, bounded by
+    construction): per query its ``nprobe`` nearest lists as
+    ``(query_id, q_emb, q_bucket, probe_rank)`` rows, ranked by (rounded
+    cosine DESC, label) — labels are pre-sorted, so a stable sort on
+    -sim keeps the label tiebreak."""
+    labels, c_mat, c_norms = quant
+    q_sims = np.round(
+        _seq_cross(q_mat, c_mat) / np.outer(_seq_self_norms(q_mat), c_norms), 6
+    )
+    return [
+        (int(qid), q_mat[i].tolist(), int(labels[j]), rank)
+        for i, qid in enumerate(q_ids)
+        for rank, j in enumerate(
+            np.argsort(-q_sims[i], kind="stable")[:nprobe], start=1
+        )
+    ]
+
+
 def ivf_candidates(
     spark: SparkSession, sf_dir: str, nprobe: int = 1, kmeans_iters: int = 0
 ) -> DataFrame:
@@ -558,102 +720,29 @@ def ivf_candidates(
     over ``ivf_candidates(nprobe=p)``; because lists probed at p are a
     prefix of those at p' > p, ``filter(probe_rank <= p)`` over the
     p'-candidate set is EXACTLY the p-candidate set — the property the
-    nprobe tuning sweep exploits to build all configs from ONE corpus
-    scan instead of one scan per config (round-15 optimization;
-    guide §1.2 "don't compute things you throw away").
+    nprobe tuning sweep uses to build every config from ONE corpus scan
+    instead of one scan per config.
 
-    Body text below documents the probe machinery shared by every
-    consumer: each query searches its ``nprobe`` nearest
-    lists (exact cosine only within those). Raising nprobe trades probe
-    cost for recall — the standard IVF knob; the measured recall ladder
-    lives in ``tests/test_plans.py::test_ivf_recall_floor`` and README.
-    Corpus assignment stays a single-bucket argmax (one scan, no shuffle);
-    only the tiny query side fans out ×nprobe before the bucket
-    equi-join, so probe cost scales with |queries|·nprobe·(corpus/k).
+    Each query searches its ``nprobe`` nearest lists (exact cosine only
+    within those). Raising nprobe trades probe cost for recall — the
+    standard IVF knob; the measured recall ladder lives in
+    ``tests/test_plans.py::test_ivf_recall_floor`` and README. Corpus
+    assignment stays a single-bucket argmax (one scan, no shuffle); only
+    the tiny query side fans out ×nprobe before the bucket equi-join, so
+    probe cost scales with |queries|·nprobe·(corpus/k).
 
-    ``kmeans_iters`` Lloyd iterations refine the label-centroid init into
-    a geometry-aligned quantizer: each iteration is one cached-corpus
-    scan (assign = broadcast argmax in ``mapInPandas``) plus a centroid
-    update via ``build_centroids`` (adaptive: plain groupBy mean locally,
-    the k·partitions-bounded map-side combine above the measured
-    crossover — see BENCH_IVF_AB.json) — the exact build loop a 100 TB
-    IVF index uses, where only k centroid rows ever reach the driver.
-    Centroids floor-truncate to 6 decimals per iteration (the repo-wide
-    _trunc6 convention — FLOOR agrees across engines where round-half
-    modes differ, ADVICE r5 #1) so the whole refinement stays
-    engine-portable (oracle unrolls the same loop in SQL); a bucket
+    ``kmeans_iters`` Lloyd iterations (``ivf_quantizer``) refine the
+    label-centroid init into a geometry-aligned quantizer. Centroids
+    floor-truncate to 6 decimals per iteration (FLOOR agrees across
+    engines where round-half modes differ) so the whole refinement stays
+    engine-portable (the oracle unrolls the same loop in SQL); a bucket
     that loses all members drops out on both engines."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Iterative-algorithm cache (same move as Spark MLlib's KMeans): the
-    # quantizer init, each Lloyd iteration, the final assignment, and the
-    # query probe all re-derive this projection — without a cache that is
-    # 3 + kmeans_iters parquet scans per run (r3 ask #5). DataFrame
-    # .cache() is MEMORY_AND_DISK, so at 100 TB partitions spill rather
-    # than OOM; plan-identical calls share one cache entry, so repeated
-    # bench runs don't accumulate copies.
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    ).cache()
-
-    n_corpus = base.count()  # one cheap job against the cached projection
-
-    def collect_centroids(df, key_col):
-        rows = build_centroids(df, key_col, n_corpus).collect()
-        rows.sort(key=lambda r: r["label"])  # argmax first-hit = lowest label
-        labels = np.array([r["label"] for r in rows], dtype=np.int64)
-        mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-        return labels, mat, _seq_self_norms(mat)
-
-    c_labels, c_mat, c_norms = collect_centroids(base, "label")
-    corpus = base.select("vec_id", "embedding")
-    for _ in range(kmeans_iters):
-        bc_i = spark.sparkContext.broadcast((c_labels, c_mat, c_norms))
-        step = corpus.mapInPandas(
-            _assign_fn(bc_i),
-            schema="vec_id long, embedding array<double>, bucket long",
-        )
-        c_labels, c_mat, c_norms = collect_centroids(step, "bucket")
-    bc = spark.sparkContext.broadcast((c_labels, c_mat, c_norms))
-
-    assigned = corpus.mapInPandas(
-        _assign_fn(bc), schema="vec_id long, embedding array<double>, bucket long"
-    )
-    # Query side: top-nprobe nearest centroids per query, computed on the
-    # driver in numpy — bounded at N_QUERIES vectors × k centroids by
-    # construction (same bounded-collect pattern as x3_cosine_topk), so no
-    # extra Python-worker stage is spent on a 10-row probe.
-    qrows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    # Last cache consumer: every remaining job (the probe join the caller
-    # materializes) re-derives the projection from parquet — one cheap
-    # scan — so release the entry now instead of pinning one
-    # MEMORY_AND_DISK corpus per distinct sf_dir for the session lifetime
-    # (ADVICE r5 #2: multi-sf bench/test sessions were accumulating them).
-    base.unpersist()
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norms = _seq_self_norms(q_mat)
-    acc = np.zeros((q_mat.shape[0], c_mat.shape[0]))
-    for k in range(q_mat.shape[1]):
-        acc += np.outer(q_mat[:, k], c_mat[:, k])
-    q_sims = np.round(acc / np.outer(q_norms, c_norms), 6)
-    probe_rows = []
-    for i, r in enumerate(qrows):
-        # stable order: sim desc, label asc (labels pre-sorted, so a
-        # stable sort on -sim preserves the label tiebreak)
-        for rank, j in enumerate(
-            np.argsort(-q_sims[i], kind="stable")[:nprobe], start=1
-        ):
-            probe_rows.append(
-                (int(r[0]), list(r[1]), int(c_labels[j]), rank)
-            )
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "label")
+    quant, _, assigned = ivf_quantizer(base, kmeans_iters)
+    q_ids, q_mat, _ = _query_block(base)
     q = F.broadcast(
         spark.createDataFrame(
-            probe_rows,
+            _probe_rows(q_ids, q_mat, quant, nprobe),
             schema="query_id long, q_emb array<double>, q_bucket long,"
             " probe_rank int",
         )
@@ -673,47 +762,21 @@ def ivf_topk(
     spark: SparkSession, sf_dir: str, nprobe: int = 1, kmeans_iters: int = 0
 ) -> DataFrame:
     """Top-``TOP_K`` per query over ``ivf_candidates`` — see there for
-    the probe machinery. Result-identical to the pre-split ivf_topk at
-    every SF (oracle-verified); the executed plan differs only by the
-    probe_rank int riding the broadcast probe table until the window's
-    projection drops it."""
-    w_topk = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        ivf_candidates(spark, sf_dir, nprobe=nprobe, kmeans_iters=kmeans_iters)
-        .select("query_id", "vec_id", "sim")
-        .withColumn("rn", F.row_number().over(w_topk))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "sim")
+    the probe machinery."""
+    return _topk(
+        ivf_candidates(
+            spark, sf_dir, nprobe=nprobe, kmeans_iters=kmeans_iters
+        ).select("query_id", "vec_id", "sim"),
+        [F.col("sim").desc(), F.col("vec_id")],
+        ("query_id", "vec_id", "sim"),
     )
 
 
 @query(
     "x3_ivf_topk_nprobe2",
     oracle=f"""
-    WITH {_DUCK_CENTROIDS},
-    qprobe AS (
-      SELECT vec_id, embedding, label AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='e.embedding', b='c.centroid')}, 6) DESC,
-                          c.label) AS rn
-        FROM embeddings e CROSS JOIN cents c
-        WHERE e.vec_id < {N_QUERIES}
-      ) WHERE rn <= 2
-    )
-    SELECT query_id, vec_id, sim FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-             ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) AS sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                        c.vec_id) AS rn
-      FROM qprobe q
-      JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    ) WHERE rn <= {TOP_K}
+    WITH {_DUCK_CENTROIDS}, {_duck_assign_cte("qprobe", "cents", 2, queries=True)}
+    SELECT query_id, vec_id, sim FROM ({_duck_ivf_topk("qprobe")})
     """,
 )
 def x3_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,50 +788,15 @@ def x3_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(spark, sf_dir, nprobe=2)
 
 
-def _duck_assign_cte(name: str, cents: str) -> str:
-    """One nearest-centroid assignment CTE (argmax with the same rounded
-    cosine + lowest-label tiebreak as the Arrow kernel)."""
-    cos = _DUCK_COS.format(a="e.embedding", b="c.centroid")
-    return f"""{name} AS (
-      SELECT vec_id, embedding, label AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY ROUND({cos}, 6) DESC, c.label) AS rn
-        FROM embeddings e CROSS JOIN {cents} c
-      ) WHERE rn = 1
-    )"""
-
-
 def _duck_kmeans_ctes(iters: int) -> str:
     """Unrolled Lloyd loop in SQL: label-centroid init, then per
     iteration an assignment CTE + a per-bucket rounded-mean update CTE;
     ends with the final ``assigned`` CTE the probe joins against."""
-    parts = [
-        """flat AS (
-      SELECT label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ), kcents0 AS (
-      SELECT label, array_agg(a ORDER BY idx) AS centroid
-      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
-            FROM flat GROUP BY label, idx)
-      GROUP BY label
-    )"""
-    ]
+    parts = [_duck_cents_ctes("0")]
     for i in range(1, iters + 1):
-        parts.append(_duck_assign_cte(f"ka{i}", f"kcents{i - 1}"))
-        parts.append(
-            f"""kflat{i} AS (
-      SELECT bucket AS label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM ka{i}, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ), kcents{i} AS (
-      SELECT label, array_agg(a ORDER BY idx) AS centroid
-      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
-            FROM kflat{i} GROUP BY label, idx)
-      GROUP BY label
-    )"""
-        )
-    parts.append(_duck_assign_cte("assigned", f"kcents{iters}"))
+        parts.append(_duck_assign_cte(f"ka{i}", f"cents{i - 1}"))
+        parts.append(_duck_cents_ctes(str(i), src=f"ka{i}", key="bucket"))
+    parts.append(_duck_assign_cte("assigned", f"cents{iters}"))
     return ",\n    ".join(parts)
 
 
@@ -779,16 +807,7 @@ _KMEANS_ITERS = 2
     "x3_ivf_kmeans_topk",
     oracle=f"""
     WITH {_duck_kmeans_ctes(_KMEANS_ITERS)}
-    SELECT query_id, vec_id, sim FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-             ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) AS sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                        c.vec_id) AS rn
-      FROM (SELECT * FROM assigned WHERE vec_id < {N_QUERIES}) q
-      JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-    ) WHERE rn <= {TOP_K}
+    SELECT query_id, vec_id, sim FROM ({_duck_ivf_topk()})
     """,
 )
 def x3_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -872,29 +891,29 @@ PQ_M = 4
 PQ_SUB = 16
 
 
+def _duck_pq_d2(v: str, c: str, m: int) -> str:
+    """SQL twin of ``_pq_d2`` for subspace ``m``: rounded squared L2
+    between the ``m``-th subvector of ``v`` and centroid ``c`` via the
+    dot identity."""
+    sub = f"CAST({v}[{m * PQ_SUB + 1}:{(m + 1) * PQ_SUB}] AS DOUBLE[])"
+    return (
+        f"ROUND(list_dot_product({sub}, {sub})"
+        f" - 2 * list_dot_product({sub}, {c})"
+        f" + list_dot_product({c}, {c}), 6)"
+    )
+
+
 def _duck_pq_ctes() -> str:
     """Per-subspace codebook + assignment CTEs (floor-trunc centroids,
-    rounded L2 via the dot identity, lowest-label tiebreak — the repo's
-    IVF assignment conventions, per subspace)."""
+    rounded L2, lowest-label tiebreak — the repo's IVF assignment
+    conventions, per subspace), then ``codes``: per vector its PQ_M
+    codes ``c{m}`` and the summed subspace error."""
     parts = []
     for m in range(PQ_M):
-        lo, hi = m * PQ_SUB + 1, (m + 1) * PQ_SUB
-        sub = f"CAST(e.embedding[{lo}:{hi}] AS DOUBLE[])"
-        d2 = (
-            f"ROUND(list_dot_product({sub}, {sub})"
-            f" - 2 * list_dot_product({sub}, c.centroid)"
-            f" + list_dot_product(c.centroid, c.centroid), 6)"
-        )
+        d2 = _duck_pq_d2("e.embedding", "c.centroid", m)
         parts.append(
-            f"""flat{m} AS (
-      SELECT label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series({lo}, {hi})) AS t(i)
-    ), cents{m} AS (
-      SELECT label, array_agg(a ORDER BY idx) AS centroid
-      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
-            FROM flat{m} GROUP BY label, idx)
-      GROUP BY label
-    ), assign{m} AS (
+            _duck_cents_ctes(str(m), dims=f"{m * PQ_SUB + 1}, {(m + 1) * PQ_SUB}")
+            + f""", assign{m} AS (
       SELECT vec_id, code, err FROM (
         SELECT e.vec_id, c.label AS code, {d2} AS err,
                ROW_NUMBER() OVER (
@@ -903,7 +922,26 @@ def _duck_pq_ctes() -> str:
       ) WHERE rn = 1
     )"""
         )
+    parts.append("""codes AS (
+      SELECT a0.vec_id, a0.code AS c0, a1.code AS c1,
+             a2.code AS c2, a3.code AS c3,
+             a0.err + a1.err + a2.err + a3.err AS err
+      FROM assign0 a0
+      JOIN assign1 a1 USING (vec_id)
+      JOIN assign2 a2 USING (vec_id)
+      JOIN assign3 a3 USING (vec_id)
+    )""")
     return ",\n    ".join(parts)
+
+
+#: per query row ``q`` and coded vector ``x``: one ADC table entry per
+#: subspace, the coded centroid joined in as ``k{m}``
+_DUCK_ADC_JOINS = " ".join(
+    f"JOIN cents{m} k{m} ON k{m}.label = x.c{m}" for m in range(PQ_M)
+)
+_DUCK_ADC_TERMS = [
+    _duck_pq_d2("q.embedding", f"k{m}.centroid", m) for m in range(PQ_M)
+]
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str):
@@ -912,11 +950,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     — one aggregation over the posexploded corpus (k·64 cells,
     floor-trunc 6), collected bounded (k = |labels|)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    )
+    base = _vectors(emb, "label")
     cells = (
         base.select("label", F.posexplode("embedding").alias("pos", "val"))
         .groupBy("label", "pos")
@@ -933,11 +967,23 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     books = []
     for m in range(PQ_M):
         cm = full[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-        cc = np.zeros(cm.shape[0])
-        for k in range(PQ_SUB):
-            cc += cm[:, k] * cm[:, k]
-        books.append((labels, cm, cc))
+        books.append((labels, cm, _seq_sq(cm)))
     return base, books
+
+
+def _pq_d2(mat: "np.ndarray", books) -> list:
+    """Per PQ subspace, the rounded squared L2 distance of every row of
+    ``mat`` to every codeword, ``x·x − 2·x·c + c·c`` with sequential
+    folds (the SQL oracle's arithmetic, term for term). The corpus-side
+    code assignment (argmin per row) and the query-side ADC distance
+    tables are both this one build."""
+    out = []
+    for m, (_, cm, cc) in enumerate(books):
+        sub = mat[:, m * PQ_SUB : (m + 1) * PQ_SUB]
+        out.append(
+            np.round(_seq_sq(sub)[:, None] - 2 * _seq_cross(sub, cm) + cc[None, :], 6)
+        )
+    return out
 
 
 def _pq_kernel(bc):
@@ -956,16 +1002,9 @@ def _pq_kernel(bc):
             n = mat.shape[0]
             out = {"vec_id": pdf["vec_id"].to_numpy()}
             total_err = np.zeros(n)
-            for m, (labels, cm, cc) in enumerate(books):
-                sub = mat[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-                acc = np.zeros((n, cm.shape[0]))
-                aa = np.zeros(n)
-                for k in range(PQ_SUB):  # same left-to-right fold as SQL
-                    acc += np.outer(sub[:, k], cm[:, k])
-                    aa += sub[:, k] * sub[:, k]
-                d2 = np.round(aa[:, None] - 2 * acc + cc[None, :], 6)
+            for m, d2 in enumerate(_pq_d2(mat, books)):
                 pick = np.argmin(d2, axis=1)  # first min = lowest label
-                out[f"code_{m}"] = labels[pick]
+                out[f"code_{m}"] = books[m][0][pick]
                 total_err = total_err + d2[np.arange(n), pick]
             # SUM of the four already-6-decimal subspace errors: a mean
             # (/64) lands exactly on .5-of-1e-6 ties where np (half-even)
@@ -981,14 +1020,9 @@ def _pq_kernel(bc):
     "x3_pq_codes",
     oracle=f"""
     WITH {_duck_pq_ctes()}
-    SELECT a0.vec_id,
-           a0.code AS code_0, a1.code AS code_1,
-           a2.code AS code_2, a3.code AS code_3,
-           ROUND(a0.err + a1.err + a2.err + a3.err, 6) AS recon_err
-    FROM assign0 a0
-    JOIN assign1 a1 USING (vec_id)
-    JOIN assign2 a2 USING (vec_id)
-    JOIN assign3 a3 USING (vec_id)
+    SELECT vec_id, c0 AS code_0, c1 AS code_1, c2 AS code_2, c3 AS code_3,
+           ROUND(err, 6) AS recon_err
+    FROM codes
     """,
 )
 def x3_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,32 +1057,14 @@ def _duck_pq_adc_sql() -> str:
     """ADC top-k oracle: corpus codes from the assignment CTEs, then each
     query's distance to a vector = sum of per-subspace distances to the
     CODED centroids (the distance-table semantics, spelled out in SQL)."""
-    joins = []
-    dsum = []
-    for m in range(PQ_M):
-        lo, hi = m * PQ_SUB + 1, (m + 1) * PQ_SUB
-        qs = f"CAST(q.embedding[{lo}:{hi}] AS DOUBLE[])"
-        joins.append(f"JOIN cents{m} k{m} ON k{m}.label = x.c{m}")
-        dsum.append(
-            f"ROUND(list_dot_product({qs}, {qs})"
-            f" - 2 * list_dot_product({qs}, k{m}.centroid)"
-            f" + list_dot_product(k{m}.centroid, k{m}.centroid), 6)"
-        )
     return f"""
     WITH {_duck_pq_ctes()},
-    codes AS (
-      SELECT a0.vec_id, a0.code AS c0, a1.code AS c1,
-             a2.code AS c2, a3.code AS c3
-      FROM assign0 a0
-      JOIN assign1 a1 USING (vec_id)
-      JOIN assign2 a2 USING (vec_id)
-      JOIN assign3 a3 USING (vec_id)
-    ), scored AS (
+    scored AS (
       SELECT q.vec_id AS query_id, x.vec_id,
-             ROUND({" + ".join(dsum)}, 6) AS ad2
+             ROUND({" + ".join(_DUCK_ADC_TERMS)}, 6) AS ad2
       FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
       CROSS JOIN codes x
-      {" ".join(joins)}
+      {_DUCK_ADC_JOINS}
       WHERE x.vec_id <> q.vec_id
     )
     SELECT query_id, vec_id, ad2 FROM (
@@ -1059,10 +1075,10 @@ def _duck_pq_adc_sql() -> str:
     """
 
 
-def _pq_adc_kernel(bc, dtabs, q_ids):
+def _pq_adc_kernel(bc, tabs, q_ids):
     """One corpus pass: assign each vector's PQ codes (argmin per
     subspace, as in _pq_kernel) and score every query against it by
-    DISTANCE-TABLE LOOKUP — ad2 = Σ_m dtab[q][m][code_m]. The corpus
+    DISTANCE-TABLE LOOKUP — ad2 = Σ_m tabs[m][q][code_m]. The corpus
     vector is touched once; per-query work is PQ_M array lookups, not a
     64-dim distance — the ADC trick that makes PQ search memory- and
     compute-cheap at 100 TB."""
@@ -1076,21 +1092,13 @@ def _pq_adc_kernel(bc, dtabs, q_ids):
                 continue
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             n = mat.shape[0]
-            picks = []
-            for m, (labels, cm, cc) in enumerate(books):
-                sub = mat[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-                acc = np.zeros((n, cm.shape[0]))
-                aa = np.zeros(n)
-                for k in range(PQ_SUB):
-                    acc += np.outer(sub[:, k], cm[:, k])
-                    aa += sub[:, k] * sub[:, k]
-                picks.append(np.argmin(np.round(aa[:, None] - 2 * acc + cc[None, :], 6), axis=1))
+            picks = [np.argmin(d2, axis=1) for d2 in _pq_d2(mat, books)]
             out = []
             vec_ids = pdf["vec_id"].to_numpy()
             for qi, qid in enumerate(q_ids):
                 ad2 = np.zeros(n)
                 for m in range(PQ_M):
-                    ad2 = ad2 + dtabs[qi][m][picks[m]]
+                    ad2 = ad2 + tabs[m][qi][picks[m]]
                 out.append(
                     pd.DataFrame(
                         {
@@ -1119,39 +1127,16 @@ def x3_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-stable in arithmetic."""
     base, books = _pq_codebooks(spark, sf_dir)
     bc = spark.sparkContext.broadcast(books)
-    qrows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = [int(r[0]) for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    dtabs = []
-    for qi in range(q_mat.shape[0]):
-        per_m = []
-        for m, (labels, cm, cc) in enumerate(books):
-            qs = q_mat[qi, m * PQ_SUB : (m + 1) * PQ_SUB]
-            acc = np.zeros(cm.shape[0])
-            qq = 0.0
-            for k in range(PQ_SUB):  # sequential fold, matches the oracle
-                acc += qs[k] * cm[:, k]
-                qq += qs[k] * qs[k]
-            per_m.append(np.round(qq - 2 * acc + cc, 6))
-        dtabs.append(per_m)
+    q_ids, q_mat, _ = _query_block(base)
     scored = (
         base.select("vec_id", "embedding")
         .mapInPandas(
-            _pq_adc_kernel(bc, dtabs, q_ids),
+            _pq_adc_kernel(bc, _pq_d2(q_mat, books), q_ids),
             schema="query_id long, vec_id long, ad2 double",
         )
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy("ad2", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "ad2")
-    )
+    return _topk(scored, ["ad2", "vec_id"], ("query_id", "vec_id", "ad2"))
 
 
 # ----------------------------------------------------------------------
@@ -1161,16 +1146,8 @@ def x3_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x3_knn_classify",
     oracle=f"""
     WITH topk AS (
-      SELECT query_id, vec_id, label FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
+      SELECT t.query_id, t.vec_id, e.label
+      FROM ({_duck_topk(_DUCK_EXACT)}) t JOIN embeddings e ON e.vec_id = t.vec_id
     ), votes AS (
       SELECT query_id, label, COUNT(*) AS n_votes,
              ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1197,52 +1174,14 @@ def x3_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_by`` over (count, label) — one tiny aggregation. The ladder
     note on x3_cosine_topk applies: past the gate this runs over the
     IVF/PQ probe instead of the exact scan."""
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>"), "label")
-        .collect()
-    )
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norms = _seq_self_norms(q_mat)
-    true_label = {r[0]: r[2] for r in qrows}
-
-    def sims(batches):
-        for pdf in batches:
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_norms = _seq_self_norms(c_mat)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                s = _seq_dot(c_mat, q_mat[qi]) / (q_norms[qi] * c_norms)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "label": pdf["label"].to_numpy(),
-                            "sim": np.round(s, 6),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    pairs = (
-        emb.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-            "label",
-        )
-        .mapInPandas(sims, schema="query_id long, vec_id long, label int, sim double")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    topk = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "label")
+    q_ids, q_mat, qrows = _query_block(emb, "label")
+    topk = _topk(
+        _exact_scan(emb, q_ids, q_mat, carry=("label",)).filter(
+            F.col("vec_id") != F.col("query_id")
+        ),
+        [F.col("sim").desc(), F.col("vec_id")],
+        ("query_id", "label"),
     )
     votes = topk.groupBy("query_id", "label").agg(
         F.count(F.lit(1)).alias("n_votes")
@@ -1254,9 +1193,8 @@ def x3_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("win")
     )
     truth = F.broadcast(
-        emb.sparkSession.createDataFrame(
-            [(q, lab) for q, lab in true_label.items()],
-            "query_id long, true_label int",
+        spark.createDataFrame(
+            [(r[0], r[2]) for r in qrows], "query_id long, true_label int"
         )
     )
     return winner.join(truth, "query_id").select(
@@ -1277,46 +1215,19 @@ def _duck_ivf_pq_sql() -> str:
     score ONLY same-list vectors by ADC distance to the coded
     centroids, each subspace term decimal-quantized before the sum so
     the 4-term addition is order-independent."""
-    joins = []
-    terms = []
-    for m in range(PQ_M):
-        lo, hi = m * PQ_SUB + 1, (m + 1) * PQ_SUB
-        qs = f"CAST(q.embedding[{lo}:{hi}] AS DOUBLE[])"
-        joins.append(f"JOIN cents{m} k{m} ON k{m}.label = x.c{m}")
-        terms.append(
-            f"CAST(ROUND(list_dot_product({qs}, {qs})"
-            f" - 2 * list_dot_product({qs}, k{m}.centroid)"
-            f" + list_dot_product(k{m}.centroid, k{m}.centroid), 6)"
-            f" AS DECIMAL(18,6))"
-        )
-    dsum = " + ".join(terms)
+    dsum = " + ".join(
+        f"CAST({adc_term} AS DECIMAL(18,6))" for adc_term in _DUCK_ADC_TERMS
+    )
     return f"""
     WITH {_duck_pq_ctes()},
     {_DUCK_CENTROIDS},
-    qprobe AS (
-      SELECT vec_id, embedding, label AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='e.embedding', b='c.centroid')}, 6) DESC,
-                          c.label) AS rn
-        FROM embeddings e CROSS JOIN cents c
-        WHERE e.vec_id < {N_QUERIES}
-      ) WHERE rn = 1
-    ),
-    codes AS (
-      SELECT a0.vec_id, a0.code AS c0, a1.code AS c1,
-             a2.code AS c2, a3.code AS c3
-      FROM assign0 a0
-      JOIN assign1 a1 USING (vec_id)
-      JOIN assign2 a2 USING (vec_id)
-      JOIN assign3 a3 USING (vec_id)
-    ), scored AS (
+    {_duck_assign_cte("qprobe", "cents", queries=True)},
+    scored AS (
       SELECT q.vec_id AS query_id, x.vec_id, {dsum} AS dist
       FROM qprobe q
       JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
       JOIN codes x ON x.vec_id = c.vec_id
-      {" ".join(joins)}
+      {_DUCK_ADC_JOINS}
     )
     SELECT query_id, vec_id, CAST(dist AS DOUBLE) AS ad2 FROM (
       SELECT *, ROW_NUMBER() OVER (
@@ -1344,22 +1255,10 @@ def x3_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes x3_ivf_topk's quantizer with x3_pq_codes' codebook
     verbatim; oracle replays both plus the table semantics."""
     base, books = _pq_codebooks(spark, sf_dir)
-    n_corpus = base.count()
-    rows = build_centroids(base, "label", n_corpus).collect()
-    rows.sort(key=lambda r: r["label"])
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    c_norms = _seq_self_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_labels, c_mat, c_norms))
-    assigned = base.select("vec_id", "embedding").mapInPandas(
-        _assign_fn(bc), schema="vec_id long, embedding array<double>, bucket long"
-    ).select("vec_id", "bucket")
-
-    # corpus codes, unpivoted to one row per (vector, subspace) —
-    # encoded with the codebooks ALREADY built above (round-15
-    # optimization: calling x3_pq_codes here re-ran _pq_codebooks,
-    # paying the posexplode aggregation + k·64-cell collect twice per
-    # query; the kernel below is exactly x3_pq_codes' scoring pass)
+    quant, _, assigned = ivf_quantizer(base)
+    # corpus codes, unpivoted to one row per (vector, subspace) — encoded
+    # with the codebooks built above (x3_pq_codes' scoring pass, without
+    # rebuilding its codebook)
     bc_books = spark.sparkContext.broadcast(books)
     codes_schema = (
         "vec_id long, "
@@ -1378,38 +1277,24 @@ def x3_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # query side: coarse probe + ADC distance tables, driver-built and
     # bounded (N_QUERIES × PQ_M × k rows)
-    qrows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norms = _seq_self_norms(q_mat)
-    acc = np.zeros((q_mat.shape[0], c_mat.shape[0]))
-    for k in range(q_mat.shape[1]):
-        acc += np.outer(q_mat[:, k], c_mat[:, k])
-    q_sims = np.round(acc / np.outer(q_norms, c_norms), 6)
-    qmeta, qdist = [], []
-    for qi, r in enumerate(qrows):
-        j = int(np.argsort(-q_sims[qi], kind="stable")[0])
-        qmeta.append((int(r[0]), int(c_labels[j])))
-        for m, (labels, cm, cc) in enumerate(books):
-            qs = q_mat[qi, m * PQ_SUB : (m + 1) * PQ_SUB]
-            a = np.zeros(cm.shape[0])
-            qq = 0.0
-            for k in range(PQ_SUB):  # sequential fold, matches the oracle
-                a += qs[k] * cm[:, k]
-                qq += qs[k] * qs[k]
-            d = np.round(qq - 2 * a + cc, 6)
-            for li, lab in enumerate(labels):
-                qdist.append((int(r[0]), m, int(lab), float(d[li])))
+    q_ids, q_mat, _ = _query_block(base)
+    tabs = _pq_d2(q_mat, books)
+    qdist = [
+        (int(qid), m, int(lab), float(tabs[m][qi][li]))
+        for qi, qid in enumerate(q_ids)
+        for m in range(PQ_M)
+        for li, lab in enumerate(books[m][0])
+    ]
     qm = F.broadcast(
-        spark.createDataFrame(qmeta, "query_id long, q_bucket long")
+        spark.createDataFrame(
+            [(r[0], r[2]) for r in _probe_rows(q_ids, q_mat, quant, 1)],
+            "query_id long, q_bucket long",
+        )
     )
     qd = F.broadcast(
         spark.createDataFrame(qdist, "query_id long, m int, code long, d double")
     )
-    cands = assigned.join(
+    cands = assigned.select("vec_id", "bucket").join(
         qm,
         (F.col("bucket") == F.col("q_bucket"))
         & (F.col("vec_id") != F.col("query_id")),
@@ -1420,13 +1305,10 @@ def x3_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum(F.col("d").cast("decimal(18,6)")).alias("dist"))
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id", "vec_id", F.col("dist").cast("double").alias("ad2")
-        )
+    return _topk(
+        scored,
+        ["dist", "vec_id"],
+        ("query_id", "vec_id", F.col("dist").cast("double").alias("ad2")),
     )
 
 
@@ -1437,29 +1319,8 @@ def x3_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x3_ivf_recall_eval",
     oracle=f"""
     WITH {_DUCK_CENTROIDS},
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
-    ),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM assigned WHERE vec_id < {N_QUERIES}) q
-        JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-      ) WHERE rn <= {TOP_K}
-    )
+    exact AS ({_duck_topk(_DUCK_EXACT)}),
+    approx AS ({_duck_ivf_topk()})
     SELECT e.query_id,
            CAST(COUNT(a.vec_id) AS BIGINT) AS n_hits,
            CAST(COUNT(a.vec_id) AS DOUBLE) / {TOP_K} AS recall_at_k
@@ -1480,25 +1341,12 @@ def x3_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation costs less than either search at any scale. The recall
     FLOOR is separately enforced by
     tests/test_plans.py::test_ivf_recall_floor."""
-    exact = x3_cosine_topk(spark, sf_dir).select(
-        "query_id", F.col("vec_id").alias("e_vec")
-    )
-    approx = ivf_topk(spark, sf_dir, nprobe=1).select(
-        "query_id", F.col("vec_id").alias("a_vec")
-    )
-    return (
-        exact.join(
-            approx,
-            (exact.query_id == approx.query_id)
-            & (F.col("e_vec") == F.col("a_vec")),
-            "left",
-        )
-        .drop(approx.query_id)
-        .groupBy("query_id")
-        .agg(
-            F.count("a_vec").cast("long").alias("n_hits"),
-            (F.count("a_vec").cast("double") / TOP_K).alias("recall_at_k"),
-        )
+    return _overlap(
+        x3_cosine_topk(spark, sf_dir), ivf_topk(spark, sf_dir, nprobe=1)
+    ).select(
+        "query_id",
+        F.col("n_overlap").alias("n_hits"),
+        (F.col("n_overlap").cast("double") / TOP_K).alias("recall_at_k"),
     )
 
 
@@ -1555,7 +1403,7 @@ def x2_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# SemDeDup keep policy (round 11, VERDICT r10 ask #6): within-cluster
+# SemDeDup keep policy: within-cluster
 # cosine ceiling, centroid-nearest survivor
 # ----------------------------------------------------------------------
 #: within-cluster cosine above which a pair is a semantic duplicate —
@@ -1590,13 +1438,14 @@ SEMDEDUP_DECIDE_SCHEMA = (
 )
 
 
-def _semdedup_decide_fn(bc_cents):
+def _semdedup_decide_fn(bc):
     """applyInPandas kernel factory: the per-CLUSTER SemDeDup keep
     decision (module-level so the rung, the skew A/B tool, and the
-    end-to-end guard test all drive the SAME kernel). ``bc_cents`` is
-    the broadcast {bucket: (centroid, norm)} dict. The first act is
-    the |cluster| fail-fast guard — pair-matrix memory is |cluster|²
-    doubles, and the guard must fire BEFORE any allocation."""
+    end-to-end guard test all drive the SAME kernel). ``bc`` is the
+    broadcast quantizer triple ``(labels, matrix, norms)`` of
+    ``ivf_quantizer`` (labels sorted). The first act is the |cluster|
+    fail-fast guard — pair-matrix memory is |cluster|² doubles, and the
+    guard must fire BEFORE any allocation."""
 
     def decide(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
@@ -1605,23 +1454,15 @@ def _semdedup_decide_fn(bc_cents):
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         ids = pdf["vec_id"].to_numpy()
         bucket = int(pdf["bucket"].iloc[0])
-        cent, cn = bc_cents.value[bucket]
+        labels, cm, cn = bc.value
+        j = int(np.searchsorted(labels, bucket))
         norms = _seq_self_norms(mat)
-        # centroid sims and the pair matrix both accumulate dim-by-dim —
-        # the same left-to-right fold as the SQL cosine (cf. _seq_dot)
-        cacc = np.zeros(len(ids))
-        for k in range(mat.shape[1]):
-            cacc += mat[:, k] * cent[k]
         # floor-truncate, never round: np.round is half-to-even while
         # DuckDB ROUND is half-away-from-zero, so an exact .xxxxxx5 sim
         # at the >= SEMDEDUP_COS_CEIL boundary (or a c_sim tie) could
-        # flip a keep decision per engine — the repo-wide _trunc6
-        # convention (ADVICE r5 #1, ADVICE r11 #2)
-        c_sim = np.floor(cacc / (norms * cn) * 1_000_000) / 1e6
-        pair = np.zeros((len(ids), len(ids)))
-        for k in range(mat.shape[1]):
-            pair += np.outer(mat[:, k], mat[:, k])
-        sims = np.floor(pair / np.outer(norms, norms) * 1_000_000) / 1e6
+        # flip a keep decision per engine
+        c_sim = np.floor(_seq_dot(mat, cm[j]) / (norms * cn[j]) * 1_000_000) / 1e6
+        sims = np.floor(_seq_cross(mat, mat) / np.outer(norms, norms) * 1_000_000) / 1e6
         dup = sims >= SEMDEDUP_COS_CEIL
         np.fill_diagonal(dup, False)
         # beats[u, v]: u is keep-preferred over v
@@ -1696,38 +1537,17 @@ def x2_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME left-to-right fold as the SQL oracle (_seq_dot's
     documented equivalence), so pair work is Σ|cluster|² — bounded by
     the quantizer's balance, the SemDeDup design itself (k grows with
-    the corpus keeping clusters ~constant). The first cut expressed
-    the dominance as a bucket-equi self-JOIN of interpreted zip_with/
-    aggregate cosines; the kernel form returns IDENTICAL rows and
-    measured 6.3× faster at sf0.1 (4.75 s → 0.75 s warmed medians,
-    one session) — the module's standing HOF-vs-Arrow rule. Kernel
+    the corpus keeping clusters ~constant). A bucket-equi self-JOIN of
+    interpreted zip_with/aggregate cosines returns IDENTICAL rows and
+    measured 6.3× slower at sf0.1 — the module's standing HOF-vs-Arrow
+    rule. Kernel
     memory is |cluster|²·8 B, fail-fast guarded at
     SEMDEDUP_MAX_CLUSTER rows (past it, raise the quantizer k — the
     paper's own lever — rather than silently OOM)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    ).cache()
-    n_corpus = base.count()
-    rows = build_centroids(base, "label", n_corpus).collect()
-    rows.sort(key=lambda r: r["label"])  # argmax first-hit = lowest label
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    c_norms = _seq_self_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_labels, c_mat, c_norms))
-    assigned = base.select("vec_id", "embedding").mapInPandas(
-        _assign_fn(bc),
-        schema="vec_id long, embedding array<double>, bucket long",
-    )
-    base.unpersist()
-    bc_cents = spark.sparkContext.broadcast(
-        {int(l): (c_mat[i], c_norms[i]) for i, l in enumerate(c_labels)}
-    )
+    base = _vectors(load_table(spark, sf_dir, "embeddings"), "label")
+    _, bc, assigned = ivf_quantizer(base)
     return assigned.groupBy("bucket").applyInPandas(
-        _semdedup_decide_fn(bc_cents),
-        schema=SEMDEDUP_DECIDE_SCHEMA,
+        _semdedup_decide_fn(bc), schema=SEMDEDUP_DECIDE_SCHEMA
     )
 
 
@@ -1766,53 +1586,19 @@ def x3_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and then rides the SAME LSH/IVF rungs this module already ships —
     which is why the exact rung here shares their gate ancestry rather
     than growing its own index."""
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-
-    def dots(batches):
-        for pdf in batches:
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                s = _seq_dot(c_mat, q_mat[qi])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "vec_id": pdf["vec_id"].to_numpy(),
-                            "score": np.round(s, 6),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    pairs = (
-        emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        .mapInPandas(dots, schema="query_id long, vec_id long, score double")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "score")
+    q_ids, q_mat, _ = _query_block(emb)
+    return _topk(
+        _exact_scan(emb, q_ids, q_mat, dot=True).filter(
+            F.col("vec_id") != F.col("query_id")
+        ),
+        [F.col("score").desc(), F.col("vec_id")],
+        ("query_id", "vec_id", "score"),
     )
 
 
 # ----------------------------------------------------------------------
-# Range search (round 8): cosine-threshold neighborhoods per query
+# Range search: cosine-threshold neighborhoods per query
 # ----------------------------------------------------------------------
 #: cosine radius for the range search
 RANGE_TAU = 0.25
@@ -1855,13 +1641,7 @@ def x3_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
+    q_ids, q_mat, _ = _query_block(emb)
     q_norms = _seq_self_norms(q_mat)
 
     def hits(batches):
@@ -1888,9 +1668,9 @@ def x3_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    pairs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).mapInPandas(hits, schema="query_id long, vec_id long, sim double")
+    pairs = _vectors(emb).mapInPandas(
+        hits, schema="query_id long, vec_id long, sim double"
+    )
     return pairs.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_within"),
         F.max_by(
@@ -1901,40 +1681,34 @@ def x3_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Prefix-dimension recall (round 8): matryoshka-style truncation eval
+# Prefix-dimension recall: matryoshka-style truncation eval
 # ----------------------------------------------------------------------
 #: truncated prefix length evaluated against the full dimensionality
 PREFIX_DIMS = 16
 
 
+def _overlap(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per query, how many of its ``exact`` top-k vec_ids ``approx`` also
+    ranked: (query_id, k, n_overlap) — integer recall counts, no float
+    ratio crosses the engine boundary."""
+    hits = approx.select("query_id", "vec_id", F.lit(1).alias("hit"))
+    return (
+        exact.select("query_id", "vec_id")
+        .join(hits, ["query_id", "vec_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.lit(TOP_K).cast("long").alias("k"),
+            F.count("hit").alias("n_overlap"),
+        )
+    )
+
+
 @query(
     "x3_prefix_dim_recall",
     oracle=f"""
-    WITH fulltop AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
-    ), pretop AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.emb16', b='c.emb16')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT vec_id, embedding[1:{PREFIX_DIMS}] AS emb16
-              FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN (SELECT vec_id, embedding[1:{PREFIX_DIMS}] AS emb16
-                    FROM embeddings) c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
-    )
+    WITH fulltop AS ({_duck_topk(_DUCK_EXACT)}),
+    pretop AS ({_duck_topk(_DUCK_EXACT, _DUCK_COS.format(
+        a=f'q.embedding[1:{PREFIX_DIMS}]', b=f'c.embedding[1:{PREFIX_DIMS}]'))})
     SELECT f.query_id,
            CAST({TOP_K} AS BIGINT) AS k,
            CAST(COUNT(p.vec_id) AS BIGINT) AS n_overlap
@@ -1962,13 +1736,7 @@ def x3_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>"))
-        .collect()
-    )
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
+    q_ids, q_mat, _ = _query_block(emb)
     q_norms = _seq_self_norms(q_mat)
     qp_mat = q_mat[:, :PREFIX_DIMS]
     qp_norms = _seq_self_norms(qp_mat)
@@ -1999,10 +1767,7 @@ def x3_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.concat(out, ignore_index=True)
 
     pairs = (
-        emb.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
+        _vectors(emb)
         .mapInPandas(
             sims2,
             schema="query_id long, vec_id long, sim_full double, sim_pre double",
@@ -2013,34 +1778,15 @@ def x3_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doubly-consumed kernel output (|queries|·|corpus| narrow rows at
     # the tested SFs; at index scale route each ranking through the
     # IVF/LSH rungs instead) — materialized once for the two windows
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("vec_id")
+    fulltop, pretop = (
+        _topk(pairs, [F.col(c).desc(), F.col("vec_id")], ("query_id", "vec_id"))
+        for c in ("sim_full", "sim_pre")
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("sim_pre").desc(), F.col("vec_id")
-    )
-    fulltop = (
-        pairs.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    pretop = (
-        pairs.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", F.lit(1).alias("hit"))
-    )
-    return (
-        fulltop.join(pretop, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.lit(TOP_K).cast("long").alias("k"),
-            F.count("hit").alias("n_overlap"),
-        )
-    )
+    return _overlap(fulltop, pretop)
 
 
 # ----------------------------------------------------------------------
-# Two-stage retrieval (round 8): cheap candidate gen → exact re-rank
+# Two-stage retrieval: cheap candidate gen → exact re-rank
 # ----------------------------------------------------------------------
 #: stage-1 candidates per query (re-ranked exactly down to TOP_K)
 RERANK_CAND_K = 20
@@ -2050,30 +1796,11 @@ RERANK_CAND_K = 20
     "x3_ivf_rerank_topk",
     oracle=f"""
     WITH {_DUCK_CENTROIDS},
-    cand AS (
-      SELECT query_id, vec_id, q_emb FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               q.embedding AS q_emb,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(
-                     a='q.embedding[1:16]', b='c.embedding[1:16]')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM assigned WHERE vec_id < {N_QUERIES}) q
-        JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-      ) WHERE rn <= {RERANK_CAND_K}
-    )
-    SELECT query_id, vec_id, sim FROM (
-      SELECT cand.query_id, cand.vec_id,
-             ROUND({_DUCK_COS.format(a='cand.q_emb', b='e.embedding')}, 6)
-               AS sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY cand.query_id
-               ORDER BY ROUND({_DUCK_COS.format(
-                   a='cand.q_emb', b='e.embedding')}, 6) DESC,
-                        cand.vec_id) AS rn
-      FROM cand JOIN embeddings e ON e.vec_id = cand.vec_id
-    ) WHERE rn <= {TOP_K}
+    cand AS ({_duck_ivf_topk(cos=_DUCK_COS.format(
+        a='q.embedding[1:16]', b='c.embedding[1:16]'), k=RERANK_CAND_K)})
+    SELECT query_id, vec_id, sim FROM ({_duck_topk(
+        "cand x JOIN embeddings q ON q.vec_id = x.query_id"
+        " JOIN embeddings c ON c.vec_id = x.vec_id")})
     """,
 )
 def x3_ivf_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2095,48 +1822,12 @@ def x3_ivf_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, fold-order-stable cosines, vec_id tiebreaks), so the
     whole two-stage pipeline is value-checked by the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    ).cache()
-    n_corpus = base.count()
-    rows = build_centroids(base, "label", n_corpus).collect()
-    rows.sort(key=lambda r: r["label"])
-    c_labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast(
-        (c_labels, c_mat, _seq_self_norms(c_mat))
-    )
-    assigned = base.select("vec_id", "embedding").mapInPandas(
-        _assign_fn(bc),
-        schema="vec_id long, embedding array<double>, bucket long",
-    )
-    qrows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    base.unpersist()
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norms = _seq_self_norms(q_mat)
-    acc = np.zeros((q_mat.shape[0], c_mat.shape[0]))
-    for k in range(q_mat.shape[1]):
-        acc += np.outer(q_mat[:, k], c_mat[:, k])
-    q_sims = np.round(
-        acc / np.outer(q_norms, _seq_self_norms(c_mat)), 6
-    )
-    probe_rows = [
-        (
-            int(r[0]),
-            list(r[1]),
-            int(c_labels[np.argsort(-q_sims[i], kind="stable")[0]]),
-        )
-        for i, r in enumerate(qrows)
-    ]
+    base = _vectors(emb, "label")
+    quant, _, assigned = ivf_quantizer(base)
+    q_ids, q_mat, _ = _query_block(base)
     q = F.broadcast(
         spark.createDataFrame(
-            probe_rows,
+            [r[:3] for r in _probe_rows(q_ids, q_mat, quant, 1)],
             schema="query_id long, q_emb array<double>, q_bucket long",
         )
     )
@@ -2144,38 +1835,28 @@ def x3_ivf_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim16 = F.round(
         cosine(F.slice("q_emb", 1, 16), F.slice("embedding", 1, 16)), 6
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("sim16").desc(), F.col("vec_id")
-    )
-    cand = (
+    cand = _topk(
         assigned.join(
             q,
             (F.col("bucket") == F.col("q_bucket"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id", "q_emb", sim16.alias("sim16"))
-        .withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= RERANK_CAND_K)
-        .select("query_id", "vec_id", "q_emb")
+        ).select("query_id", "vec_id", "q_emb", sim16.alias("sim16")),
+        [F.col("sim16").desc(), F.col("vec_id")],
+        ("query_id", "vec_id", "q_emb"),
+        k=RERANK_CAND_K,
     )
     # stage 2: gather candidate vectors by id, exact full-dim re-rank
-    gathered = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).join(F.broadcast(cand), "vec_id")
+    gathered = _vectors(emb).join(F.broadcast(cand), "vec_id")
     sim = F.round(cosine(F.col("q_emb"), F.col("embedding")), 6)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        gathered.select("query_id", "vec_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "sim")
+    return _topk(
+        gathered.select("query_id", "vec_id", sim.alias("sim")),
+        [F.col("sim").desc(), F.col("vec_id")],
+        ("query_id", "vec_id", "sim"),
     )
 
 
 # ----------------------------------------------------------------------
-# Binary (sign) quantization + Hamming top-k (round 8)
+# Binary (sign) quantization + Hamming top-k
 # ----------------------------------------------------------------------
 _BQ_SPARK = (
     "aggregate(sequence({lo}, {hi}), 0L, (acc, i) -> "
@@ -2249,18 +1930,17 @@ def x3_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
         + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
     ).cast("long")
-    w = Window.partitionBy("query_id").orderBy("hamming", "vec_id")
-    return (
-        codes.join(q, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", ham.alias("hamming"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "hamming")
+    return _topk(
+        codes.join(q, F.col("vec_id") != F.col("query_id")).select(
+            "query_id", "vec_id", ham.alias("hamming")
+        ),
+        ["hamming", "vec_id"],
+        ("query_id", "vec_id", "hamming"),
     )
 
 
 # ----------------------------------------------------------------------
-# Centroid-distance outlier filter (round 8): embedding-space cleaning
+# Centroid-distance outlier filter: embedding-space cleaning
 # ----------------------------------------------------------------------
 #: flag vectors whose cosine to their own label centroid falls below
 #: this (integer-comparable after the shared 6-decimal rounding)
@@ -2270,35 +1950,26 @@ OUTLIER_COS_FLOOR = 0.10
 def _centroid_scored(emb: DataFrame) -> DataFrame:
     """Per-vector cosine to ITS OWN label centroid as a (vec_id, label,
     sim) frame — the shared kernel of the outlier report and the
-    cluster-balanced selection: centroids are the bounded
-    ``build_centroids`` aggregate (k rows collected and broadcast), and
-    scoring is ONE Arrow-batched corpus pass with the fold-order-stable
-    dot product (bit-identical to the oracle)."""
+    cluster-balanced selection: centroids are ``ivf_quantizer``'s
+    label init (k rows collected and broadcast), and scoring is ONE
+    Arrow-batched corpus pass with the fold-order-stable dot product
+    (bit-identical to the oracle)."""
     import pandas as pd
 
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    )
-    n_corpus = base.count()
-    rows = build_centroids(base, "label", n_corpus).collect()
-    cmap = {int(r["label"]): np.array(r["centroid"], float) for r in rows}
-    cnorm = {k: float(_seq_self_norms(v[None, :])[0]) for k, v in cmap.items()}
-    bc = emb.sparkSession.sparkContext.broadcast((cmap, cnorm))
+    base = _vectors(emb, "label")
+    _, bc, _ = ivf_quantizer(base)
 
     def score(batches):
         for pdf in batches:
             mats = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             norms = _seq_self_norms(mats)
-            cm, cn = bc.value
+            c_labels, cm, cn = bc.value
             sims = np.empty(len(pdf))
             labels = pdf["label"].to_numpy()
             for lab in np.unique(labels):
                 m = labels == lab
-                sims[m] = _seq_dot(mats[m], cm[int(lab)]) / (
-                    norms[m] * cn[int(lab)]
-                )
+                j = np.searchsorted(c_labels, lab)
+                sims[m] = _seq_dot(mats[m], cm[j]) / (norms[m] * cn[j])
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -2310,11 +1981,10 @@ def _centroid_scored(emb: DataFrame) -> DataFrame:
     return base.mapInPandas(score, schema="vec_id long, label int, sim double")
 
 
-
 @query(
     "x3_centroid_outliers",
     oracle=f"""
-    WITH {_DUCK_CENTROIDS.replace('assigned AS', '_unused AS')}
+    WITH {_duck_cents_ctes()}
     SELECT label, n_vectors, n_outliers, worst_vec_id, worst_sim FROM (
       SELECT e.label,
              COUNT(*) AS n_vectors,
@@ -2375,19 +2045,7 @@ def x3_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE q.vec_id <> c.vec_id
       ) WHERE rn <= {TOP_K}
     ),
-    exacttop AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(
-                     a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
-    )
+    exacttop AS ({_duck_topk(_DUCK_EXACT)})
     SELECT e.query_id,
            CAST({TOP_K} AS BIGINT) AS k,
            CAST(COUNT(h.vec_id) AS BIGINT) AS n_overlap
@@ -2406,22 +2064,13 @@ def x3_binary_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered rungs' own machinery — this is evaluation BY
     composition, so a regression in either rung moves this query's
     oracle-checked output."""
-    ham = x3_binary_hamming_topk(spark, sf_dir).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    exact = x3_cosine_topk(spark, sf_dir).select("query_id", "vec_id")
-    return (
-        exact.join(ham, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.lit(TOP_K).cast("long").alias("k"),
-            F.count("hit").alias("n_overlap"),
-        )
+    return _overlap(
+        x3_cosine_topk(spark, sf_dir), x3_binary_hamming_topk(spark, sf_dir)
     )
 
 
 # ----------------------------------------------------------------------
-# Cluster-balanced selection (round 9): curation diversity quota
+# Cluster-balanced selection: curation diversity quota
 # ----------------------------------------------------------------------
 #: per-cluster keep quota — sized so testdata exercises BOTH branches
 #: (clusters under quota keep everything, clusters over it truncate)
@@ -2431,15 +2080,7 @@ BALANCE_QUOTA = 48
 @query(
     "x8_cluster_balance",
     oracle=f"""
-    WITH flat AS (
-      SELECT label, i AS idx, CAST(embedding[i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ), cents AS (
-      SELECT label, array_agg(a ORDER BY idx) AS centroid
-      FROM (SELECT label, idx, FLOOR(AVG(val) * 1000000) / 1000000.0 AS a
-            FROM flat GROUP BY label, idx)
-      GROUP BY label
-    )
+    WITH {_duck_cents_ctes()}
     SELECT label, vec_id, rnk, sim FROM (
       SELECT e.label, e.vec_id,
              ROW_NUMBER() OVER (
@@ -2471,19 +2112,18 @@ def x8_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cluster instead of fully sorting its partition; with k
     clusters the whole selection shuffles only the scored
     (vec_id,label,sim) triples, never embeddings."""
-    from pyspark.sql.window import Window
-
-    scored = _centroid_scored(load_table(spark, sf_dir, "embeddings"))
-    w = Window.partitionBy("label").orderBy(F.col("sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= BALANCE_QUOTA)
-        .select("label", "vec_id", F.col("rnk").cast("long").alias("rnk"), "sim")
+    return _topk(
+        _centroid_scored(load_table(spark, sf_dir, "embeddings")),
+        [F.col("sim").desc(), "vec_id"],
+        ("label", "vec_id", F.col("rnk").cast("long").alias("rnk"), "sim"),
+        k=BALANCE_QUOTA,
+        rank="rnk",
+        by="label",
     )
 
 
 # ----------------------------------------------------------------------
-# IVF nprobe tuning sweep (round 11): the X3 analog of the MinHash
+# IVF nprobe tuning sweep: the X3 analog of the MinHash
 # band-tuning sweep — measure the recall curve before freezing nprobe
 # ----------------------------------------------------------------------
 #: probe counts swept (supersets: lists probed at p are a subset of
@@ -2493,49 +2133,23 @@ IVF_TUNING_NPROBES = (1, 2, 4)
 
 
 def _nprobe_tuning_oracle() -> str:
-    blocks = []
-    for p in IVF_TUNING_NPROBES:
-        cos_q = _DUCK_COS.format(a="e.embedding", b="c.centroid")
-        cos_p = _DUCK_COS.format(a="q.embedding", b="c.embedding")
-        blocks.append(
-            f"""SELECT CAST({p} AS BIGINT) AS nprobe,
+    probes = ",\n    ".join(
+        _duck_assign_cte(f"qprobe{p}", "cents", p, queries=True)
+        for p in IVF_TUNING_NPROBES
+    )
+    blocks = [
+        f"""SELECT CAST({p} AS BIGINT) AS nprobe,
            CAST(COUNT(a.vec_id) AS BIGINT) AS n_hits,
            CAST(COUNT(a.vec_id) * 1000000
                 // {N_QUERIES * TOP_K} AS BIGINT) AS recall_ppm
-    FROM exact e LEFT JOIN (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({cos_p}, 6) DESC, c.vec_id) AS rn
-        FROM (
-          SELECT vec_id, embedding, label AS bucket FROM (
-            SELECT e.vec_id, e.embedding, c.label,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY ROUND({cos_q}, 6) DESC, c.label) AS rn
-            FROM embeddings e CROSS JOIN cents c
-            WHERE e.vec_id < {N_QUERIES}
-          ) WHERE rn <= {p}
-        ) q
-        JOIN assigned c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-      ) WHERE rn <= {TOP_K}
-    ) a ON a.query_id = e.query_id AND a.vec_id = e.vec_id"""
-        )
-    exact_cos = _DUCK_COS.format(a="q.embedding", b="c.embedding")
+    FROM exact e LEFT JOIN ({_duck_ivf_topk(f"qprobe{p}")}) a
+      ON a.query_id = e.query_id AND a.vec_id = e.vec_id"""
+        for p in IVF_TUNING_NPROBES
+    ]
     return f"""
     WITH {_DUCK_CENTROIDS},
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({exact_cos}, 6) DESC, c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
-    )
+    {probes},
+    exact AS ({_duck_topk(_DUCK_EXACT)})
     {" UNION ALL ".join(blocks)}
     """
 
@@ -2555,8 +2169,7 @@ def x3_ivf_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-decreasing in nprobe (pinned in tests) — a broken quantizer or
     probe join shows up as a violated curve, not just a low number.
 
-    Scale shape (round-15 optimization — guide §1.2 "remove unnecessary
-    passes"): the quantizer builds ONCE and the corpus scans ONCE, at
+    Scale shape: the quantizer builds ONCE and the corpus scans ONCE, at
     the sweep's MAX nprobe, with each candidate carrying its list's
     ``probe_rank``; because the lists probed at p are a prefix of those
     probed at p' > p, every smaller config's candidate set is exactly
@@ -2564,10 +2177,8 @@ def x3_ivf_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rows ivf_topk(nprobe=p) scores — see ivf_candidates). The
     exact baseline also materializes once (localCheckpoint) instead of
     re-running its corpus scan per config, and all |configs| hit counts
-    collect in ONE job over the union of the per-config top-k frames.
-    Before: 3 exact scans + 3 quantizer builds + 3 probe scans ≈ 6 s
-    warm at sf0.1; after: 1 + 1 + 1 ≈ 2 s, identical output (the
-    oracle re-verified all three SFs)."""
+    collect in ONE job over the union of the per-config top-k frames
+    (one scan per config measured ≈ 3× the wall time at sf0.1)."""
     exact = (
         x3_cosine_topk(spark, sf_dir)
         .select("query_id", F.col("vec_id").alias("e_vec"))
@@ -2577,22 +2188,16 @@ def x3_ivf_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_candidates(spark, sf_dir, nprobe=max(IVF_TUNING_NPROBES))
         .localCheckpoint(eager=True)
     )
-    w_topk = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    arms = []
-    for p in IVF_TUNING_NPROBES:
-        arms.append(
-            cand.filter(F.col("probe_rank") <= p)
-            .select("query_id", "vec_id", "sim")
-            .withColumn("rn", F.row_number().over(w_topk))
-            .filter(F.col("rn") <= TOP_K)
-            .select(
-                F.lit(p).alias("nprobe"),
-                "query_id",
-                F.col("vec_id").alias("a_vec"),
-            )
+    arms = [
+        _topk(
+            cand.filter(F.col("probe_rank") <= p).select(
+                "query_id", "vec_id", "sim"
+            ),
+            [F.col("sim").desc(), F.col("vec_id")],
+            (F.lit(p).alias("nprobe"), "query_id", F.col("vec_id").alias("a_vec")),
         )
+        for p in IVF_TUNING_NPROBES
+    ]
     allp = arms[0]
     for a in arms[1:]:
         allp = allp.unionAll(a)
@@ -2614,7 +2219,7 @@ def x3_ivf_nprobe_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Reciprocal-rank fusion (round 13): the hybrid-retrieval combiner
+# Reciprocal-rank fusion: the hybrid-retrieval combiner
 # ----------------------------------------------------------------------
 #: the RRF smoothing constant (Cormack et al. 2009's k=60, the value
 #: every hybrid-retrieval system ships with)
@@ -2625,16 +2230,7 @@ RRF_K = 60
     "x3_rank_fusion",
     oracle=f"""
     WITH dense AS (
-      SELECT query_id, vec_id AS doc_id, rn AS r FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({_DUCK_COS.format(a='q.embedding', b='c.embedding')}, 6) DESC,
-                          c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
+      SELECT query_id, vec_id AS doc_id, rn AS r FROM ({_duck_topk(_DUCK_EXACT)})
     ),
     w AS (
       SELECT doc_id, string_split(text, ' ') AS words FROM documents
@@ -2728,21 +2324,9 @@ def x3_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").alias("nc"),
         )
     )
-    lex = (
-        inter.withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    (
-                        F.col("i").cast("double")
-                        / (F.col("nq") + F.col("nc") - F.col("i"))
-                    ).desc(),
-                    "doc_id",
-                )
-            ),
-        )
-        .filter(F.col("r") <= TOP_K)
-        .select("query_id", "doc_id", "r")
+    jaccard = F.col("i").cast("double") / (F.col("nq") + F.col("nc") - F.col("i"))
+    lex = _topk(
+        inter, [jaccard.desc(), "doc_id"], ("query_id", "doc_id", "r"), rank="r"
     )
     return (
         dense.unionByName(lex)
@@ -2761,7 +2345,7 @@ def x3_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Maximal marginal relevance (round 13): the retrieval diversifier
+# Maximal marginal relevance: the retrieval diversifier
 # ----------------------------------------------------------------------
 #: relevance/diversity trade-off (Carbonell & Goldstein 1998; 0.7 is
 #: the common relevance-leaning default)
@@ -2774,7 +2358,6 @@ def _mmr_oracle() -> str:
     similarity to the already-selected set. All similarities are
     rounded to 6 before any scoring on BOTH engines, so the greedy
     walk sees identical inputs; FLOOR-trunc at emit."""
-    cos = _DUCK_COS.format(a="q.embedding", b="c.embedding")
     pcos = _DUCK_COS.format(a="x.embedding", b="y.embedding")
     steps, finals = [], ["SELECT query_id, 1 AS mmr_rank, doc_id,"
                          " FLOOR(sc * 1000000) / 1000000.0 AS mmr FROM s1"]
@@ -2812,16 +2395,7 @@ def _mmr_oracle() -> str:
         )
     return f"""
     WITH cand AS (
-      SELECT query_id, vec_id AS doc_id, rel FROM (
-        SELECT q.vec_id AS query_id, c.vec_id,
-               ROUND({cos}, 6) AS rel,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY ROUND({cos}, 6) DESC, c.vec_id) AS rn
-        FROM (SELECT * FROM embeddings WHERE vec_id < {N_QUERIES}) q
-        CROSS JOIN embeddings c
-        WHERE q.vec_id <> c.vec_id
-      ) WHERE rn <= {TOP_K}
+      SELECT query_id, vec_id AS doc_id, sim AS rel FROM ({_duck_topk(_DUCK_EXACT)})
     ),
     cv AS (
       SELECT c.query_id, c.doc_id, e.embedding
@@ -2884,27 +2458,18 @@ def x3_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv = cand.join(emb, "doc_id").select("query_id", "doc_id", "v")
     x = cv.select("query_id", F.col("doc_id").alias("a"), F.col("v").alias("va"))
     y = cv.select("query_id", F.col("doc_id").alias("b"), F.col("v").alias("vb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, z: acc + z * z)
-    )
     pairs = (
         x.join(y, "query_id")
         .filter(F.col("a") != F.col("b"))
         .select(
             "query_id", "a", "b",
-            F.round(dot / (norm(F.col("va")) * norm(F.col("vb"))), 6)
-            .alias("ps"),
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("ps"),
         )
     )
     crows = cand.collect()  # |queries|·TOP_K rows by construction
     # Fail fast if a future N_QUERIES/TOP_K bump (or an upstream arm
     # change) silently grows the driver-side walk past its contract
-    # (VERDICT r13 ask #8 — the grouped-kernel guard precedent).
+    # (the grouped-kernel guard precedent).
     assert len(crows) <= N_QUERIES * TOP_K, (
         f"MMR candidate collect {len(crows)} rows exceeds the "
         f"N_QUERIES*TOP_K={N_QUERIES * TOP_K} driver-walk bound"
@@ -2950,7 +2515,7 @@ def x3_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Graph-based ANN (round 14): NSW-class beam search over a kNN graph
+# Graph-based ANN: NSW-class beam search over a kNN graph
 # ----------------------------------------------------------------------
 #: out-degree of the exact kNN graph (before symmetrization). Tuned on
 #: the synthetic corpus (random-ish 64-d embeddings — the hard, flat
@@ -2971,7 +2536,7 @@ NSW_ENTRY = N_QUERIES
 
 
 def _nsw_blocked_e0() -> str:
-    """The LSH-blocked kNN-graph CTE chain (VERDICT r14 ask #1): the
+    """The LSH-blocked kNN-graph CTE chain: the
     exact |V|² e0 is replaced by Hamming-1 multi-probe bucket
     candidate generation over the shared random-hyperplane signatures
     (_bucket_sql — the x3_lsh_candidate_pairs machinery), exact
@@ -3086,7 +2651,7 @@ def _nsw_oracle(e0_cte: str | None = None) -> str:
 @query("x3_nsw_beam", oracle=_nsw_oracle())
 def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-based ANN — the NSW/HNSW family rung the X3 ladder lacked
-    (IVF/PQ/LSH/binary all present; VERDICT r13 ask #4): a
+    (IVF/PQ/LSH/binary all present): a
     deterministic exact-cosine kNN graph (top-``NSW_M`` per node,
     rounded-sim + vec_id total order, symmetrized) searched by
     ``NSW_ROUNDS`` unrolled beam-expansion rounds from the fixed entry
@@ -3120,9 +2685,7 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     round."""
     import pandas as pd
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
     rows = emb.sort("vec_id").collect()
     assert len(rows) <= MAX_BROADCAST_VECTORS, (
         f"corpus {len(rows)} exceeds MAX_BROADCAST_VECTORS="
@@ -3136,7 +2699,7 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def knn_edges(batches):
-        # NOTE (round-15 measurement): a fully block-vectorized variant
+        # NOTE (measured): a fully block-vectorized variant
         # of this kernel (dim-fold outer-product accumulation + the
         # _nsw_block_topm composite-key argsort) was built and A/B'd at
         # sf0.1 — it measured ~2x SLOWER warm (1.5 s -> 3.3 s for the
@@ -3175,31 +2738,10 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     q_mask = ids < N_QUERIES
-    q_ids, q_mat, q_norms = ids[q_mask], mat[q_mask], norms[q_mask]
-
-    def qsims_fn(batches):
-        for pdf in batches:
-            c_ids = pdf["vec_id"].to_numpy()
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_norms = _seq_self_norms(c_mat)
-            out = []
-            for qi, qid in enumerate(q_ids):
-                s = _seq_dot(c_mat, q_mat[qi]) / (q_norms[qi] * c_norms)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": int(qid),
-                            "vec_id": c_ids,
-                            "sim": np.round(s, 6),
-                        }
-                    )
-                )
-            if out:  # q_ids can be empty (ADVICE r14: corpus without
-                yield pd.concat(out, ignore_index=True)  # query vectors)
-
-    qsims = emb.mapInPandas(
-        qsims_fn, schema="query_id long, vec_id long, sim double"
-    ).localCheckpoint(eager=True)  # read by every round + the emit
+    q_ids = ids[q_mask]
+    qsims = _exact_scan(emb, q_ids, mat[q_mask]).localCheckpoint(
+        eager=True
+    )  # read by every round + the emit
 
     beam = spark.createDataFrame(
         [(int(q), NSW_ENTRY) for q in sorted(q_ids)],
@@ -3223,10 +2765,9 @@ def _nsw_beam_rounds(
     expansion UNIONS the current beam before ranking, so a node whose
     layer has no edges (an HNSW entry carried into a sparse layer)
     persists rather than vanishing."""
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "vec_id")
     for r in range(rounds):
-        # ONE query_id exchange per round (round-15 optimization, guide
-        # §2.4 "two operations keyed the same way share one exchange"):
+        # ONE query_id exchange per round (two operations keyed the
+        # same way share one exchange):
         # the explicit repartition("query_id") satisfies BOTH the
         # distinct's ClusteredDistribution(query_id, vec_id) — a subset
         # hash partitioning co-locates every (query_id, vec_id) — and
@@ -3243,15 +2784,16 @@ def _nsw_beam_rounds(
             .repartition("query_id")
             .distinct()
         )
-        beam = (
-            expanded.filter(F.col("vec_id") != F.col("query_id"))
-            .join(qsims, ["query_id", "vec_id"])
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= beam_width)
-            .select("query_id", "vec_id")
+        beam = _topk(
+            expanded.filter(F.col("vec_id") != F.col("query_id")).join(
+                qsims, ["query_id", "vec_id"]
+            ),
+            [F.col("sim").desc(), "vec_id"],
+            ("query_id", "vec_id"),
+            k=beam_width,
         )
         # flat lineage every SECOND round (the Pregel localCheckpoint
-        # convention, cadence measured in round 15: per-round
+        # convention, cadence measured: per-round
         # checkpoints paid one materialization job per round while the
         # two-round lazy segment costs the same two exchanges — ~12%
         # off the search loop at sf0.1; every 4th round regressed,
@@ -3259,6 +2801,27 @@ def _nsw_beam_rounds(
         if (r + 1) % 2 == 0 or r == rounds - 1:
             beam = beam.localCheckpoint(eager=True)
     return beam
+
+
+def _nsw_qsims(emb: DataFrame):
+    """The query side of the blocked NSW/HNSW searches: ``(queries,
+    qsims)`` — the (query_id) frame of the ``N_QUERIES`` query vectors
+    and their rounded cosines to every corpus vector, built JVM-side by
+    one broadcast cross-join and checkpointed (every beam round and the
+    emit read it)."""
+    qvecs = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    )
+    qsims = (
+        emb.crossJoin(F.broadcast(qvecs))
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    return qvecs.select("query_id"), qsims
 
 
 def _nsw_beam_loop(
@@ -3316,8 +2879,8 @@ def _nsw_block_topm(pdf: "pd.DataFrame") -> "pd.DataFrame":
     sims are exact 1e-6 multiples after the round, so
     ``micro·S − dst`` with S > max(dst) is a faithful encoding — and
     one ``argsort(-key, axis=1)`` ranks every prober's row at C
-    speed (the per-row lexsort loop read ~100 µs/prober, which is
-    what dominated the first cut's 10x leg)."""
+    speed (a per-row lexsort loop reads ~100 µs/prober, which
+    dominates at 10x)."""
     import pandas as pd
 
     mem = pdf[pdf["role"] == 1]
@@ -3328,11 +2891,8 @@ def _nsw_block_topm(pdf: "pd.DataFrame") -> "pd.DataFrame":
         )
     a = np.stack(pro["embedding"].to_numpy()).astype(np.float64)
     b = np.stack(mem["embedding"].to_numpy()).astype(np.float64)
-    acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-    for k in range(a.shape[1]):
-        acc += np.outer(a[:, k], b[:, k])
     sims = np.round(
-        acc / np.outer(_seq_self_norms(a), _seq_self_norms(b)), 6
+        _seq_cross(a, b) / np.outer(_seq_self_norms(a), _seq_self_norms(b)), 6
     )
     src_ids = pro["vec_id"].to_numpy().astype(np.int64)
     dst_ids = mem["vec_id"].to_numpy().astype(np.int64)
@@ -3409,12 +2969,7 @@ def _blocked_knn_edges(emb: DataFrame) -> DataFrame:
         .groupBy("bucket")
         .applyInPandas(_nsw_block_topm, schema="src long, dst long, sim double")
     )
-    wsrc = Window.partitionBy("src").orderBy(F.col("sim").desc(), "dst")
-    e0 = (
-        e0.withColumn("rn", F.row_number().over(wsrc))
-        .filter(F.col("rn") <= NSW_M)
-        .select("src", "dst")
-    )
+    e0 = _topk(e0, [F.col("sim").desc(), "dst"], ("src", "dst"), k=NSW_M, by="src")
     return (
         e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -3428,8 +2983,8 @@ def _blocked_knn_edges(emb: DataFrame) -> DataFrame:
 @query("x3_nsw_beam_blocked", oracle=_nsw_oracle(e0_cte=_nsw_blocked_e0()))
 def x3_nsw_beam_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NSW beam search over an LSH-BLOCKED kNN graph — the 100 TB
-    index-build path the exact rung's fail-fast names (VERDICT r14
-    ask #1; the one quadratic-work site left in the X3 ladder):
+    index-build path the exact rung's fail-fast names (the one
+    quadratic-work site left in the X3 ladder):
 
     - graph build: each vector hashes to its random-hyperplane bucket
       (_bucket_spark — the x3_lsh_candidate_pairs machinery) and
@@ -3463,25 +3018,10 @@ def x3_nsw_beam_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: identical to the exact rung — rounded-6 sims before
     every ranking, vec_id tiebreaks, DISTINCT candidate sets."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
     edges = _blocked_knn_edges(emb)
-    qvecs = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    qsims = (
-        emb.crossJoin(F.broadcast(qvecs))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
-        )
-        .localCheckpoint(eager=True)  # read by every round + the emit
-    )
-    beam = qvecs.select("query_id").withColumn(
-        "vec_id", F.lit(NSW_ENTRY).cast("long")
-    )
+    queries, qsims = _nsw_qsims(emb)
+    beam = queries.withColumn("vec_id", F.lit(NSW_ENTRY).cast("long"))
     return _nsw_beam_loop(beam, edges, qsims)
 
 
@@ -3718,22 +3258,9 @@ def x3_hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference scope: no retrieval ops in the reference; §2.10
     extension tier beside x3_nsw_beam / x3_nsw_beam_blocked."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(load_table(spark, sf_dir, "embeddings"))
     lv = emb.withColumn("level", _hnsw_level(F.col("vec_id")))
-    qvecs = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    qsims = (
-        emb.crossJoin(F.broadcast(qvecs))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("sim"),
-        )
-        .localCheckpoint(eager=True)  # read by every round + the emit
-    )
+    queries, qsims = _nsw_qsims(emb)
     ent_row = (
         lv.filter(F.col("vec_id") >= N_QUERIES)
         .agg(
@@ -3746,10 +3273,7 @@ def x3_hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry = next(
         v for v in (ent_row["e2"], ent_row["e1"], ent_row["e0"]) if v is not None
     )
-    beam = qvecs.select("query_id").withColumn(
-        "vec_id", F.lit(int(entry)).cast("long")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "vec_id")
+    beam = queries.withColumn("vec_id", F.lit(int(entry)).cast("long"))
     for l in (2, 1):
         layer_edges = _blocked_knn_edges(
             lv.filter(F.col("level") >= l).select("vec_id", "embedding")
@@ -3758,16 +3282,10 @@ def x3_hnsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
             beam, layer_edges, qsims, HNSW_UP_ROUNDS, HNSW_UP_BEAM
         )
         # hand the layer's best node down as the next layer's start
-        beam = (
-            beam.join(qsims, ["query_id", "vec_id"])
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "vec_id")
+        beam = _topk(
+            beam.join(qsims, ["query_id", "vec_id"]),
+            [F.col("sim").desc(), "vec_id"],
+            ("query_id", "vec_id"),
+            k=1,
         )
-    edges0 = _blocked_knn_edges(emb)
-    beam = _nsw_beam_rounds(beam, edges0, qsims, NSW_ROUNDS, NSW_BEAM)
-    return (
-        beam.join(qsims, ["query_id", "vec_id"])
-        .withColumn("beam_rank", F.row_number().over(w).cast("long"))
-        .select("query_id", "beam_rank", "vec_id", "sim")
-    )
+    return _nsw_beam_loop(beam, _blocked_knn_edges(emb), qsims)

@@ -666,12 +666,10 @@ def s_bloom_prefilter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import numpy as _np  # noqa: E402
-
 from .similarity import (  # noqa: E402
     _DUCK_CENTROIDS as _IVF_DUCK_CENTROIDS,
-    _seq_self_norms as _ivf_norms,
-    build_centroids as _ivf_build_centroids,
+    _vectors as _ivf_vectors,
+    ivf_quantizer as _ivf_quantizer,
 )
 
 
@@ -688,10 +686,10 @@ from .similarity import (  # noqa: E402
 )
 def s_ivf_assign_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF assignment — the X3 similarity tier's frontier
-    twin (VERDICT r11 ask #5; every other extension tier already has
-    one): the online-index shape, where a serving index is built
-    OFFLINE (here: the label-centroid quantizer, collected k-bounded
-    and broadcast — frozen for the stream's lifetime) and arriving
+    twin: the online-index shape, where a serving index is built
+    OFFLINE (here: ``ivf_quantizer``'s label-centroid quantizer,
+    collected k-bounded and broadcast — frozen for the stream's
+    lifetime) and arriving
     vectors fold into a per-cell occupancy registry
     (jobs.streaming_ivf_assign — count/min/max are mergeable, so the
     drained registry is arrival-order-free and bounded at k rows by
@@ -702,16 +700,7 @@ def s_ivf_assign_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     along so the row is a value check on cell MEMBERSHIP edges, not a
     bare count."""
     emb = _load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        "label",
-    )
-    rows = _ivf_build_centroids(base, "label", base.count()).collect()
-    rows.sort(key=lambda r: r["label"])  # argmax first-hit = lowest label
-    c_labels = _np.array([r["label"] for r in rows], dtype=_np.int64)
-    c_mat = _np.array([r["centroid"] for r in rows], dtype=_np.float64)
-    bc = spark.sparkContext.broadcast((c_labels, c_mat, _ivf_norms(c_mat)))
+    _, bc, _ = _ivf_quantizer(_ivf_vectors(emb, "label"))
     state = jobs._ckpt("ivfassign")
     jobs.streaming_ivf_assign(jobs.stream_embeddings(spark, sf_dir), state, bc)
     return jobs.read_state(spark, state).select(

@@ -833,7 +833,7 @@ def streaming_ivf_assign(
     corpus, bounds the store (the Bloom-registry bound with k cells
     in place of M bits — an online index tracks list occupancy, not
     members)."""
-    from ..operators.similarity import _assign_fn
+    from ..operators.similarity import _ASSIGNED_SCHEMA, _assign_fn
 
     def fold(batch: DataFrame, prev: DataFrame | None, batch_id: int) -> DataFrame:
         cells = (
@@ -841,10 +841,7 @@ def streaming_ivf_assign(
                 "vec_id",
                 F.col("embedding").cast("array<double>").alias("embedding"),
             )
-            .mapInPandas(
-                _assign_fn(bc),
-                schema="vec_id long, embedding array<double>, bucket long",
-            )
+            .mapInPandas(_assign_fn(bc), schema=_ASSIGNED_SCHEMA)
             .groupBy(F.col("bucket").alias("cluster"))
             .agg(
                 F.count(F.lit(1)).alias("n_assigned"),
