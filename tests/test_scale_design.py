@@ -239,35 +239,53 @@ def test_skew_report_flags_hot_key(spark):
     assert "no mitigation" in rep2["advice"]
 
 
-def test_scale100_artifact_within_ceilings():
-    """The 100x spot-check evidence (BENCH_SCALE100.json) is gated,
-    not just recorded (VERDICT r9 ask #8): every rung in
-    tools.scale100_spot.SPOT_CEILINGS must have a committed
-    measurement, and each measured 100x wall ratio must sit under its
-    rung-class ceiling — editing a rung into a worse scale shape (or
-    dropping it from the spot set) fails here instead of silently
-    rotting the artifact. Ceilings encode the CLASS bound (near-flat /
-    read-bandwidth / documented-linear), with contended-box headroom
-    above the idle-box measurements; a quadratic regression would
-    overshoot by orders of magnitude."""
+def _spot_artifact() -> dict:
     import json
     import os
 
-    from tools.scale100_spot import SPOT_CEILINGS
-
     path = os.path.join(os.path.dirname(__file__), "..", "BENCH_SCALE100.json")
     with open(path) as f:
-        payload = json.load(f)
-    assert payload["copies"] == 100
+        return json.load(f)
+
+
+def test_scale100_artifact_within_ceilings():
+    """The scale spot-check evidence (BENCH_SCALE100.json) is gated, not
+    just recorded: every rung in tools.scale100_spot.SPOT_CEILINGS must
+    have a committed measurement, and each measured counter ratio
+    (scaled replica over 1×: jobs, input rows, shuffle records or
+    shuffle records per map task, as the rung's class gates them) must
+    lie within its class — expected ratio ÷/× √copies.  Editing a rung
+    into a worse scale shape (or dropping it from the spot set) fails
+    here.  The gated ratios hold at any core count; the artifact's
+    wall times are information only and nothing reads them."""
+    from tools.scale100_spot import SPOT_CEILINGS, out_of_class, ratios
+
+    payload = _spot_artifact()
+    copies = payload["copies"]
+    assert copies >= 10
     qs = payload["queries"]
     missing = sorted(set(SPOT_CEILINGS) - set(qs))
-    assert not missing, f"spot rungs with no 100x measurement: {missing}"
+    assert not missing, f"spot rungs with no {copies}x measurement: {missing}"
     over = {
-        n: (qs[n]["ratio"], ceil)
-        for n, ceil in SPOT_CEILINGS.items()
-        if qs[n]["ratio"] > ceil
+        n: bad
+        for n, cls in SPOT_CEILINGS.items()
+        if (bad := out_of_class(ratios(qs[n]), cls, copies))
     }
-    assert not over, f"100x ratio over rung-class ceiling: {over}"
+    assert not over, f"{copies}x counter ratio outside its rung class: {over}"
+
+
+def test_scale_spot_gate_rejects_one_class_worse():
+    """The gate can fail: for every committed row, a shape one class
+    worse — any gated ratio multiplied by copies — is out of class."""
+    from tools.scale100_spot import CLASSES, SPOT_CEILINGS, out_of_class, ratios
+
+    payload = _spot_artifact()
+    copies = payload["copies"]
+    for name, cls in SPOT_CEILINGS.items():
+        for counter in CLASSES[cls]:
+            worse = ratios(payload["queries"][name])
+            worse[counter] *= copies
+            assert counter in out_of_class(worse, cls, copies), (name, counter)
 
 
 def test_semdedup_guard_fires_in_kernel_on_oversized_cluster(spark):

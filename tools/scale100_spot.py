@@ -1,230 +1,381 @@
-"""100x spot-check: measure a handful of structurally-bounded rungs on
-a 100-COPY key-shifted replica of sf0.1 (~60M lineitem rows) — the
-"would this hold at 1000x?" question answered one decade further than
-BENCH_SCALE.json's 10x. Reuses scale_bench's replica builder via env
-overrides; writes BENCH_SCALE100.json (separate artifact — never
-merged into the 10x file).
+"""Scale spot-check: gate each spot rung's shape on counters that do not
+depend on the box.
 
-Run on an idle box:  python tools/scale100_spot.py
+Every rung in ``SPOT_CEILINGS`` runs twice in ONE Spark session: on sf0.1
+(the 1× leg) and on a ``COPIES``-copy key-shifted replica of it (built by
+``tools/scale_bench.build``).  Each leg runs under a job group of its
+own, so the session's event log, read with
+``perfbench.spans.read_event_log``, folds back onto it: job count,
+input rows, shuffle records and shuffle bytes written, and shuffle-map
+tasks that wrote.
+Job counts and input rows repeat at any core count; raw shuffle records
+of a partial aggregate do not (each map task ships its own combiners),
+so the classes below gate only ratios that hold on any box.  Wall times
+are kept in the artifact for information only, stamped with the
+session's cpus, memory and application id; no gate reads them.
+
+A rung's class says how its counters grow with the replica (the cost
+model in its comment below); ``CLASSES`` turns that into an expected
+ratio per counter, ``copies ** exponent``.  One bound rule serves every
+class: a measured ratio must lie within expected ÷/× √copies — the
+log-scale midpoints to the neighbouring classes — so a shape one class
+worse (a linear counter reading copies², a constant one reading copies)
+fails, and so does a rung better than its class claims (its class is
+then wrong).  ``test_scale100_artifact_within_ceilings`` in
+``tests/test_scale_design.py`` applies ``out_of_class`` to the
+committed ``BENCH_SCALE100.json``.
+
+Run on an otherwise idle box (the counters do not need it; the wall
+times do)::
+
+    python tools/scale100_spot.py [--out PATH] [name-filter ...]
+
+Env: ``SPARK_GRAFT_CPUS`` (``local[N]``, default all cores),
+``SPARK_GRAFT_SPOT_MEM`` (driver heap, default 6g),
+``SPARK_GRAFT_SCALE_DIR`` (replica dir, default
+``/tmp/spark_graft_scale10``).  A filtered run writes only the
+matching rows; the committed artifact holds one full run.
 """
 
 from __future__ import annotations
 
+import argparse
+import importlib
 import json
+import math
 import os
+import shutil
 import sys
+import tempfile
 import time
+from contextlib import contextmanager
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-#: rungs whose 100-TB claim is a STRUCTURAL bound (calendar-bounded
-#: sweep tables, prefix-sum twins, single-pass scans) — the ones where
-#: a flat 10x->100x step is the designed behavior, plus one TPC-H
-#: baseline for context. Each maps to its 100x wall-ratio CEILING,
-#: gated by tests/test_scale_design.py::test_scale100_artifact_within_
-#: ceilings (round 10, VERDICT r9 ask #8) so the committed
-#: BENCH_SCALE100.json evidence can't silently rot as rungs are
-#: edited: prefix-sum/calendar-bounded rungs must stay well under the
-#: read-bandwidth slope, scan-bound rungs track it (~5x — 100x rows
-#: with 32 fixed cores amortizing per-query overheads ~20x), and the
-#: capped dedup rungs are documented-linear in the duplicate-heavy
-#: replica's pair volume (ceiling covers measured + contended-box
-#: headroom; quadratic behavior would read ~10^2-10^3x, far past any
-#: ceiling here).
+#: Replica copies: the 100-copy replica needs a ~48g heap for the graph
+#: kernels' ~120M-row edge checkpoint in one JVM; 10 copies run in 6g.
+COPIES = 10
+
+#: Counters folded per leg, from each task's metrics and each job start.
+COUNTERS = ("jobs", "input_rows", "shuffle_records", "shuffle_bytes", "map_tasks")
+
+BOUNDED, LINEAR, ITERATIVE = "bounded", "linear", "iterative"
+
+#: class -> {gated ratio: copies exponent of its expected value}.  Every
+#: class gates the job count, expected constant: no spot rung launches
+#: jobs per row, per copy or per key, and an iterative rung's round
+#: count is fixed by the kernel.
+#: - bounded: the exchange carries a fixed number of groups per map
+#:   task (partial aggregates over fixed keys, calendar-sized tables,
+#:   collapsed duplicates, or no exchange at all), so shuffle records
+#:   PER SHUFFLE-MAP TASK ≈ 1.  Raw shuffle records are not gated: they
+#:   are map tasks × groups, and the map-task count follows the input
+#:   splits and the core count, not the data's shape.
+#: - linear: input rows ≈ copies and shuffle records ≈ copies — each leg
+#:   reads its tables (and re-reads its checkpoints) a fixed number of
+#:   times, and every exchanged row belongs to one copy's keys.  A
+#:   per-copy rescan or a cross-copy pair join reads copies².
+#: - iterative: only the round count is gated (job count constant): the
+#:   rounds run over a derived relation whose size on the replica does
+#:   not follow the data volume (see the unigram rungs).
+CLASSES = {
+    BOUNDED: {"jobs": 0, "shuffle_records_per_map_task": 0},
+    LINEAR: {"jobs": 0, "input_rows": 1, "shuffle_records": 1},
+    ITERATIVE: {"jobs": 0},
+}
+
+#: spot rung (or forced-branch row, see ``FORCED``) -> its counter class.
 SPOT_CEILINGS = {
-    # structurally bounded (prefix-sum twins / calendar sweeps /
-    # latest-per-key partial agg): near-flat by design
-    "o15_latest_per_key": 4.0,
-    "x7_interval_coverage": 4.5,
-    "x8_budget_select_scalable": 3.0,
-    # scan-bound single-pass rungs: ratio tracks read bandwidth
-    "ext_q1_pricing_summary": 8.0,
-    "x7_interval_overlap_sweep": 8.0,
-    "x6_m4_downsample": 8.0,
-    "x4_hashed_linear_score": 9.0,
-    "x1_substring_spans": 11.0,
-    "x1_exact_dedup_hash": 4.0,
+    # latest-per-key: one window exchange keyed on the replica's shifted
+    # keys, so 10× keys ship 10× rows
+    "o15_latest_per_key": LINEAR,
+    # calendar sweeps: the exchange carries calendar-bounded tables
+    "x7_interval_coverage": BOUNDED,
+    "x7_interval_overlap_sweep": BOUNDED,
+    # prefix-sum twin: the per-partition totals are bounded, but the
+    # rows themselves are range-partitioned once
+    "x8_budget_select_scalable": LINEAR,
+    # partial aggregate over a fixed group set
+    "ext_q1_pricing_summary": BOUNDED,
+    # single-pass rungs: one exchange keyed per series/doc/digest, or
+    # none at all (the zero-exchange Arrow kernels)
+    "x6_m4_downsample": LINEAR,
+    "x4_hashed_linear_score": BOUNDED,
+    "mm_scene_cuts": BOUNDED,
+    "x1_substring_spans": LINEAR,
+    "x1_exact_dedup_hash": LINEAR,
     # capped dedup rungs: linear in the replica's pair volume — the
-    # DF-cap guarantee is "linear, never quadratic". DIAGNOSED round 13
-    # (VERDICT r12 ask #2, tools/capped_pair_diag.py →
-    # PAIR_VOLUME_100X.json): every volume counter is EXACTLY 100.0x at
-    # 100 copies — posting rows 260k→26.0M, post-cap survivors
-    # 10.9k→1.09M, pair-join work Σ C(df,2) 18.5k→1.85M, candidate
-    # pairs 18.4k→1.84M — because per-token copy tagging replicates
-    # each posting list with its df UNCHANGED (no cross-copy pairs, no
-    # df addition toward the cap). So the bound is the designed
-    # Σ_h C(min(df_h, DF_CAP), 2) ≤ |survivor postings|·(DF_CAP−1)/2,
-    # linear in docs; the 20.28x/13.1x wall ratios are that linear work
-    # on 32 fixed cores with a near-saturated 1x leg (the scan rungs'
-    # ~5x reflects fixed-cost amortization their overhead-dominated 1x
-    # legs leave on the table, not a better slope). Not cap-saturation,
-    # not a join-volume leak — ceiling-gated like BFS/kcore.
-    "x2_containment_capped": 22.0,
-    "x2_ngram_jaccard_capped": 32.0,
-    # round-10 bounded rungs: single-exchange scan-bound dedup key
-    # build, |groups|-bounded rollup audit, zero-exchange Arrow kernel,
-    # |domains|-bounded rollup — all designed read-bandwidth-or-flatter
-    "x1_url_dedup": 6.0,
-    "x8_k_anonymity": 8.0,
-    "mm_scene_cuts": 9.0,
-    "x4_domain_rollup": 6.0,
-    # iterative Pregel kernels (round 11, VERDICT r10 ask #4): fixed
-    # round count, per-round work grows with |edges| (degree counts /
-    # label exchanges over the checkpointed 120M-row symmetric edge
-    # list at 100x) while per-round fixed costs amortize — measured
-    # 17.09x (kcore; the 3-round cascade re-aggregates the shrinking
-    # list) and 4.78x (label-prop; broadcast label vector, one
-    # partial-agg exchange per round) on an idle box at 48g. Quadratic
-    # behavior — e.g. an uncapped wedge join sneaking in — would read
-    # 10^3-10^4x here.
-    "x9_kcore_peel": 26.0,
-    "x9_label_propagation": 9.0,
-    # round-12 (VERDICT r11 ask #2): the heaviest round-11 rungs. The
-    # nprobe sweep multiplies the corpus-scan count by |configs|+1 but
-    # its cost is dominated by the |queries|-bounded exact baseline and
-    # per-config fixed overheads — measured 1.77x at 100x. BPE apply's
-    # occurrence⇄dict equi-join fans out with the replica's growing
-    # vocabulary (per-copy suffix tokens are new word types by
-    # construction) — measured 12.54x, linear-in-vocab, far below any
-    # per-occurrence-folding signature (that form re-scans the corpus
-    # per merge: ~100x+ here).
-    "x3_ivf_nprobe_tuning": 3.0,
-    "x4_bpe_apply": 19.0,
-    # round-13 broadcast-arm trio: containment decontamination streams
-    # the 100x corpus's postings past the (fixed, copy-0) broadcast
-    # benchmark side — measured 10.39x, tracking the posting volume
-    # like the other capped-dedup rungs with a near-saturated 1x leg;
-    # RRF fusion scans the corpus once per arm against fixed broadcast
-    # query sets (4.74x — read-bandwidth class); STL decomposition is
-    # |users|·days linear with a RANGE-frame window riding the user
-    # partitioning (5.9x). A pair-quadratic or per-query-rescan
-    # signature would read 10^2-10^3x on each.
-    "x2_decontaminate_containment": 16.0,
-    "x3_rank_fusion": 8.0,
-    "x6_stl_decompose": 9.0,
-    # CDC chunking: the narrow per-doc cutter tracks token volume and
-    # the df exchange carries ~tokens/CDC_DIV chunk rows — measured
-    # 9.52x, the posting-volume class next to substring spans (6.79x);
-    # a pair-join signature is impossible by construction (dedup is a
-    # count per chunk hash, never a join on it).
-    "x1_cdc_chunk_dedup": 14.0,
-    # round-13: the fifth iterative graph kernel (weighted SSSP). Same
-    # rounds x (|E| + |V|) class as BFS, but each round pays a
-    # full-outer merge of the whole dist vector (BFS's visited union is
-    # append-only) and the improved frontier STAYS large under weights
-    # (cheaper paths keep relaxing nodes BFS would have frozen), so the
-    # measured 22.78x sits between kcore's cascade (17.09x) and the
-    # ceiling here; a closure/quadratic signature would read 10^2-10^3x.
-    "x9_sssp_weighted": 30.0,
-    # round-12: the fourth iterative graph kernel. Per-hop work grows
-    # with the 100x edge list (frontier joins + anti-joins over the
-    # checkpointed symmetric edges) while fixed per-round costs
-    # amortize — measured 8.72x on an idle box, between label-prop
-    # (4.78x, one exchange/round) and kcore (17.09x, cascade
-    # re-aggregation). A transitive-closure or uncapped-path
-    # signature would read 10^2-10^3x here.
-    "x9_bfs_reach": 13.0,
-    # round-12 structural-bound trio: count-min's d-cell fan-out runs
-    # over the DISTINCT vocab after the partial agg (measured 4.87x —
-    # token-count pass tracks read bandwidth, sketch work is
-    # geometry-bound); the Zipf fit cuts to top-K per language before
-    # any moment math (1.41x — vocab-bound); Theil–Sen's pair volume
-    # is |users|·days² with days calendar-fixed, so 100x users reads
-    # 2.64x (a per-event pair join would read ~10^4x).
-    "x4_countmin_sketch": 8.0,
-    "x4_zipf_fit": 3.0,
-    "x6_theil_sen": 5.0,
-    # round-14 (VERDICT r13 ask #7): ACF joins the |users|·days-linear
-    # class beside STL (5.9) — the lag join is calendar-equi-keyed on
-    # (user, day+k) so 100x users reads 4.05 on an idle box; a
-    # per-event pair-join signature would read ~10^4x.
-    "x6_acf_lags": 7.0,
-    # round-15 (VERDICT r14 ask #4): the blocked NSW build's adaptive
-    # geometry grows the plane count with log2(|V|/20) (15 planes at
-    # the 100x replica's 500k vectors), so per-bucket candidate work
-    # stays bounded and the measured 100x wall is 5.65 — the
-    # read-bandwidth class, where the broadcast |V|² build it replaces
-    # fail-fasts by design (test-pinned) and would read ~10^4x if
-    # forced. Unigram-LM train (6.05) is vocab-bound like BPE: EM
-    # rounds run over the DISTINCT-word lattice, so 100x occurrences
-    # collapse into the dedup'd word relation before any DP; apply
-    # (5.87) is the occurrence⇄dict equi-join class next to
-    # x4_bpe_apply with a smaller fan-out (final segmentations only).
-    "x3_nsw_beam_blocked": 9.0,
-    "x4_unigram_train": 9.0,
-    "x4_unigram_apply": 9.0,
-    # round-15 second wave: record linkage is COLLAPSE-bounded — the
-    # verbatim-copy replica collapses to the 1x representative set
-    # before any pair work, so 100x reads 2.35 (group-by scan class;
-    # the pre-collapse cut genuinely failed here on C(100,2)-per-name
-    # pair volume — that regression class reads >=10x or OOMs).
-    # HNSW joins the iterative-kernel class beside kcore (17.09) and
-    # SSSP (22.78): 16 fixed beam rounds whose per-round edge/qsims
-    # scans grow with the 100x corpus while fixed costs amortize —
-    # measured 16.91; a quadratic build regression (the exact |V|²
-    # pass the blocked build replaces) would read 10^3x.
-    "x2_record_linkage": 5.0,
-    "x3_hnsw_beam": 26.0,
+    # DF-cap guarantee is "linear, never quadratic".  Per-token copy
+    # tagging replicates each posting list with its df unchanged (no
+    # cross-copy pairs), so Σ_h C(min(df_h, DF_CAP), 2) ≤ |survivor
+    # postings|·(DF_CAP−1)/2 grows with docs (PAIR_VOLUME_100X.json:
+    # every volume counter exactly 100.0× at 100 copies).
+    "x2_containment_capped": LINEAR,
+    "x2_ngram_jaccard_capped": LINEAR,
+    # canonical-URL dedup (the URL set is not copy-shifted), the
+    # |groups|-bounded k-anonymity audit and the |domains|-bounded
+    # rollup: partial aggregates over fixed key sets
+    "x1_url_dedup": BOUNDED,
+    "x8_k_anonymity": BOUNDED,
+    "x4_domain_rollup": BOUNDED,
+    # iterative graph kernels (k-core, LPA, BFS, weighted SSSP): a fixed
+    # round count (the job gate) with per-round exchanges linear in
+    # |edges|.  A transitive-closure or uncapped wedge join would read
+    # copies² per round.
+    "x9_kcore_peel": LINEAR,
+    "x9_label_propagation": LINEAR,
+    # the same kernel with the one-exchange form forced off: the
+    # partial-agg branch that the replica's ~12M symmetric edges do not
+    # reach under LPA_ONE_EXCHANGE_MAX_EDGES
+    "x9_label_propagation@partial_agg": LINEAR,
+    "x9_sssp_weighted": LINEAR,
+    "x9_bfs_reach": LINEAR,
+    # the nprobe sweep multiplies the corpus-scan count by |configs|+1
+    # (fixed); BPE apply's occurrence⇄dict equi-join grows with the
+    # replica's vocabulary (per-copy tagged tokens are new word types)
+    "x3_ivf_nprobe_tuning": LINEAR,
+    "x4_bpe_apply": LINEAR,
+    # containment decontamination streams the corpus's postings past a
+    # fixed broadcast benchmark side; STL and ACF are |users|·days
+    # linear (ACF's lag join is calendar-equi-keyed on (user, day+k));
+    # Theil–Sen's pair volume is |users|·days² with days fixed
+    "x2_decontaminate_containment": LINEAR,
+    "x6_stl_decompose": LINEAR,
+    "x6_acf_lags": LINEAR,
+    "x6_theil_sen": LINEAR,
+    # RRF scans the corpus once per arm against fixed query sets and
+    # ships only per-query top-K candidates
+    "x3_rank_fusion": BOUNDED,
+    # CDC chunking: the df exchange carries ~tokens/CDC_DIV chunk rows;
+    # count-min and the Zipf fit aggregate the (copy-tagged, so growing)
+    # vocabulary before the sketch or the top-K cut
+    "x1_cdc_chunk_dedup": LINEAR,
+    "x4_countmin_sketch": LINEAR,
+    "x4_zipf_fit": LINEAR,
+    # blocked NSW: routing is (planes + 2)·|V| rows with the plane count
+    # growing as log2(|V|/20) (8 → 12 planes at 10 copies: ≈14× on the
+    # build exchange), far from the broadcast |V|² build's copies².
+    # HNSW runs 16 fixed beam rounds over the growing corpus; its job
+    # count reads 70–72 on identical code, inside the √copies bound.
+    "x3_nsw_beam_blocked": LINEAR,
+    "x3_hnsw_beam": LINEAR,
+    # unigram train/apply: UNI_ROUNDS EM rounds over the distinct-word
+    # mask lattice, |words|·2^(L−1) rows.  The replica's copy tag adds
+    # three characters to every word of copies 1.., so the lattice grows
+    # ~copies × 2³ (1797 → 188,313 rows at 10 copies) while the text
+    # volume grows copies×: its data counters measure the tag, not the
+    # volume, and only the round count is gated.
+    "x4_unigram_train": ITERATIVE,
+    "x4_unigram_apply": ITERATIVE,
+    # record linkage collapses the verbatim copies to the representative
+    # set before any pair work: pair volume stays at the 1× leg's
+    "x2_record_linkage": BOUNDED,
+}
+
+#: forced-branch row -> (registry query, module, constant, forced value).
+FORCED = {
+    "x9_label_propagation@partial_agg": (
+        "x9_label_propagation",
+        "weather_data_pipeline_spark.operators.graph",
+        "LPA_ONE_EXCHANGE_MAX_EDGES",
+        0,
+    ),
 }
 
 SPOT = list(SPOT_CEILINGS)
 
+GROUP_PREFIX = "scale-spot"
+LEGS = ("1x", "scaled")
+
+
+def _ratio(scaled: float, base: float) -> float:
+    """``scaled / base``; a counter that is 0 on both legs did not grow."""
+    if base:
+        return scaled / base
+    return math.inf if scaled else 1.0
+
+
+def ratios(row: dict) -> dict[str, float]:
+    """Scaled-over-1× ratio of every counter of a measured row, plus
+    that of shuffle records per shuffle-map task."""
+    base, scaled = row["1x"], row["scaled"]
+    out = {c: _ratio(scaled[c], base[c]) for c in COUNTERS}
+    per_task = [
+        leg["shuffle_records"] / leg["map_tasks"] if leg["map_tasks"] else 0.0
+        for leg in (base, scaled)
+    ]
+    out["shuffle_records_per_map_task"] = _ratio(per_task[1], per_task[0])
+    return out
+
+
+def class_bounds(cls: str, copies: int) -> dict[str, tuple[float, float]]:
+    """Gated counter -> (floor, ceiling): the class's expected ratio
+    ÷/× √copies, the log-scale midpoints to the neighbouring classes."""
+    half = math.sqrt(copies)
+    return {
+        c: (copies**e / half, copies**e * half) for c, e in CLASSES[cls].items()
+    }
+
+
+def out_of_class(got: dict[str, float], cls: str, copies: int) -> dict[str, tuple]:
+    """Gated ratios of ``got`` (see ``ratios``) outside ``cls``'s bounds,
+    as counter -> (ratio, (floor, ceiling)); empty when the row is in
+    its class."""
+    return {
+        c: (round(got[c], 3), (round(lo, 3), round(hi, 3)))
+        for c, (lo, hi) in class_bounds(cls, copies).items()
+        if not lo < got[c] <= hi
+    }
+
+
+def fold(events: list[dict]) -> dict[str, dict[str, float]]:
+    """Per job group of ours: the ``COUNTERS`` of every job, stage and
+    task that ran under it."""
+    out: dict[str, dict[str, float]] = {}
+    stage_group: dict[tuple[int, int], str] = {}
+    for ev in events:
+        kind = ev.get("Event")
+        group = ev.get("Properties", {}).get("spark.jobGroup.id") or ""
+        if kind == "SparkListenerJobStart" and group.startswith(GROUP_PREFIX):
+            out.setdefault(group, dict.fromkeys(COUNTERS, 0))["jobs"] += 1
+        elif kind == "SparkListenerStageSubmitted" and group.startswith(GROUP_PREFIX):
+            info = ev["Stage Info"]
+            stage_group[(info["Stage ID"], info["Stage Attempt ID"])] = group
+        elif kind == "SparkListenerTaskEnd":
+            group = stage_group.get((ev["Stage ID"], ev["Stage Attempt ID"]))
+            m = ev.get("Task Metrics")
+            if group is None or not m:
+                continue
+            c = out.setdefault(group, dict.fromkeys(COUNTERS, 0))
+            w = m["Shuffle Write Metrics"]
+            c["input_rows"] += m["Input Metrics"]["Records Read"]
+            c["shuffle_records"] += w["Shuffle Records Written"]
+            c["shuffle_bytes"] += w["Shuffle Bytes Written"]
+            # shuffle-map tasks that wrote: a split whose byte range holds
+            # no row group reads and writes nothing, and how many such
+            # splits a leg gets follows its file sizes and core count
+            c["map_tasks"] += w["Shuffle Records Written"] > 0
+    return out
+
+
+@contextmanager
+def _forced(row: str):
+    """Hold ``FORCED[row]``'s module constant at its forced value."""
+    if row not in FORCED:
+        yield
+        return
+    _, module, name, value = FORCED[row]
+    mod = importlib.import_module(module)
+    old = getattr(mod, name)
+    setattr(mod, name, value)
+    try:
+        yield
+    finally:
+        setattr(mod, name, old)
+
+
+def _run(spark, qs, row: str, sf_dir: str, group: str) -> float:
+    """One untimed warm-up, then one run under job group ``group``;
+    returns the second run's wall seconds."""
+    query = FORCED[row][0] if row in FORCED else row
+    sc = spark.sparkContext
+    # session-scoped caches (TF-IDF terms, IVF corpus, edges) must not
+    # carry from one leg into the next
+    spark.catalog.clearCache()
+    with _forced(row):
+        qs[query](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sc.setJobGroup(group, row)
+        t0 = time.perf_counter()
+        try:
+            qs[query](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return round(time.perf_counter() - t0, 3)
+
 
 def main() -> None:
-    # env overrides BEFORE the scale_bench import (it reads env at
-    # import time); kept inside main() so importing this module for
-    # SPOT_CEILINGS (the pytest ceiling gate) is side-effect-free.
-    os.environ["SPARK_GRAFT_SCALE_COPIES"] = "100"
-    os.environ["SPARK_GRAFT_SCALE_DIR"] = "/tmp/spark_graft_scale100"
-    global sb, registry
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH_SCALE100.json"))
+    ap.add_argument("filters", nargs="*", help="measure only rows containing one")
+    args = ap.parse_args()
+    names = [n for n in SPOT if not args.filters or any(f in n for f in args.filters)]
+
+    # env BEFORE the scale_bench import (it reads env at import time)
+    os.environ["SPARK_GRAFT_SCALE_COPIES"] = str(COPIES)
+    os.environ.setdefault("SPARK_GRAFT_SCALE_DIR", f"/tmp/spark_graft_scale{COPIES}")
+    # Python workers import the package (mapInPandas kernels) from any cwd
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
+    from perfbench.spans import read_event_log
     from tools import scale_bench as sb
     from weather_data_pipeline_spark import registry
 
-    spark = sb.SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    ).appName("scale100-spot").config("spark.ui.enabled", "false").config(
-        # 48g: the 100-copy replica puts a ~120M-row symmetric edge
-        # checkpoint plus its shuffle in ONE JVM for the graph kernels —
-        # on a real cluster that state is spread across executors; the
-        # single-process spot check needs the aggregate heap locally
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_SPOT_MEM", "48g")
-    ).getOrCreate()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    mem = os.environ.get("SPARK_GRAFT_SPOT_MEM", "6g")
+    log_dir = tempfile.mkdtemp(prefix="scale-spot-eventlog-")
+    spark = (
+        sb.SparkSession.builder.master(f"local[{cpus}]")
+        .appName("scale-spot")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.memory", mem)
+        # one plain-JSON application log that read_event_log can parse
+        .config("spark.eventLog.enabled", "true")
+        .config("spark.eventLog.dir", "file://" + log_dir)
+        .config("spark.eventLog.compress", "false")
+        .config("spark.eventLog.rolling.enabled", "false")
+        .config("spark.eventLog.includeTaskMetricsAccumulators", "false")
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("ERROR")
     sb.tune(spark)
+    session = {
+        "app_id": spark.sparkContext.applicationId,
+        "cpus": cpus,
+        "box_cpus": os.cpu_count(),
+        "box_memory_gb": round(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1
+        ),
+        "driver_memory": mem,
+        "started": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+    }
     t0 = time.perf_counter()
     sb.build(spark)
     build_s = round(time.perf_counter() - t0, 1)
     qs = registry.queries()
-    # argv filters: measure only matching rungs and MERGE into the
-    # existing artifact (same convention as scale_bench.py)
-    filters = sys.argv[1:]
-    names = [
-        n
-        for n in (filters and sorted(registry.queries()) or SPOT)
-        if not filters or any(f in n for f in filters)
-    ]
-    out = {}
+    wall = {}
+    try:
+        for name in names:
+            wall[name] = {
+                leg: _run(spark, qs, name, d, f"{GROUP_PREFIX}|{name}|{leg}")
+                for leg, d in zip(LEGS, (sb.BASE, sb.SCALE_DIR))
+            }
+            print(name, wall[name], flush=True)
+        spark.stop()  # closes the application log
+        counters = fold(read_event_log(log_dir))
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+    rows = {}
     for name in names:
-        t1 = sb._time(qs, name, spark, sb.BASE)
-        t100 = sb._time(qs, name, spark, sb.SCALE_DIR)
-        out[name] = {"t_1x": t1, "t_100x": t100, "ratio": round(t100 / t1, 2)}
-        print(name, out[name], flush=True)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "BENCH_SCALE100.json")
-    if filters and os.path.exists(path):
-        with open(path) as f:
-            payload = json.load(f)
-        payload["queries"].update(out)
-    else:
-        payload = {
-            "copies": 100,
-            "base": sb.BASE,
-            "replica_build_s": build_s,
-            "queries": out,
-        }
-    with open(path, "w") as f:
+        row = {leg: counters[f"{GROUP_PREFIX}|{name}|{leg}"] for leg in LEGS}
+        row["ratios"] = {k: round(v, 3) for k, v in ratios(row).items()}
+        w = wall[name]
+        row["wall_s"] = {**w, "ratio": round(w["scaled"] / w["1x"], 2)}
+        rows[name] = row
+        bad = out_of_class(ratios(row), SPOT_CEILINGS[name], COPIES)
+        print(name, SPOT_CEILINGS[name], row["ratios"], bad or "ok", flush=True)
+    payload = {
+        "copies": COPIES,
+        "base": sb.BASE,
+        "session": session,
+        "replica_build_s": build_s,
+        "queries": rows,
+    }
+    with open(args.out, "w") as f:
         json.dump(payload, f, indent=1)
-    print(json.dumps(payload))
 
 
 if __name__ == "__main__":

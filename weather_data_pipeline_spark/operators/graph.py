@@ -60,13 +60,19 @@ SUPP_OFFSET = 100_000_000
 #: form wins — one exchange per round instead of two, and at
 #: overhead-dominated sizes the saved exchange is the whole game
 #: (measured ~11-17% at sf0.1). OVER it the two-exchange partial-agg
-#: form wins: the (src,label) combiners ship far fewer bytes than
-#: |edges| joined rows once labels converge (a run of both forms on the
-#: 100-copy replica, on another box, timed the partial-agg form faster;
-#: that comparison is not re-measured here). 20M rows ≈ 320 MB of
-#: (src,label) pairs — comfortably before
-#: byte volume dominates on a real network; production tunes it to
-#: measured combiner reduction.
+#: form wins: the (src,label) combiners ship fewer bytes than |edges|
+#: joined rows once labels converge. Counters from one session
+#: (BENCH_SCALE100.json rows `x9_label_propagation` and
+#: `x9_label_propagation@partial_agg`, the latter with this constant
+#: forced to 0): at sf0.1 and on the 10-copy replica (~12M edges) alike,
+#: the partial-agg form writes 0.54-0.55× the shuffle records and
+#: 0.65-0.68× the shuffle bytes of the one-exchange form, for 2 more
+#: jobs (18 vs 16), and both forms grow linearly (10.0× / 10.2×
+#: records). So the counters back the byte saving at every size; the
+#: 20M crossover itself (≈ 320 MB of (src,label) pairs, where byte
+#: volume starts to dominate on a real network) is a wall-time
+#: judgement they do not settle — production tunes it to measured
+#: combiner reduction.
 LPA_ONE_EXCHANGE_MAX_EDGES = 20_000_000
 
 
