@@ -252,12 +252,12 @@ def test_scale100_artifact_within_ceilings():
     """The scale spot-check evidence (BENCH_SCALE100.json) is gated, not
     just recorded: every rung in tools.scale100_spot.SPOT_CEILINGS must
     have a committed measurement, and each measured counter ratio
-    (scaled replica over 1×: jobs, input rows, shuffle records or
-    shuffle records per map task, as the rung's class gates them) must
-    lie within its class — expected ratio ÷/× √copies.  Editing a rung
-    into a worse scale shape (or dropping it from the spot set) fails
-    here.  The gated ratios hold at any core count; the artifact's
-    wall times are information only and nothing reads them."""
+    (scaled replica over 1×: jobs, input rows or shuffle records, as
+    the rung's class gates them) must lie within its class — expected
+    ratio ÷/× √copies.  Editing a rung into a worse scale shape (or
+    dropping it from the spot set) fails here.  The gated ratios hold
+    at any core count; the artifact's wall times are information only
+    and nothing reads them."""
     from tools.scale100_spot import SPOT_CEILINGS, out_of_class, ratios
 
     payload = _spot_artifact()
@@ -276,16 +276,26 @@ def test_scale100_artifact_within_ceilings():
 
 def test_scale_spot_gate_rejects_one_class_worse():
     """The gate can fail: for every committed row, a shape one class
-    worse — any gated ratio multiplied by copies — is out of class."""
+    worse — the replica leg's counter multiplied by copies, or a
+    counter that was 0 on both legs (a zero-exchange kernel) turning
+    non-zero — is out of class.  The spot run pins every stage's task
+    count to the same value on both legs, so this is what a bounded
+    rung that starts shipping every row, or a linear one that starts
+    pairing across copies, records."""
+    import copy
+
     from tools.scale100_spot import CLASSES, SPOT_CEILINGS, out_of_class, ratios
 
     payload = _spot_artifact()
     copies = payload["copies"]
     for name, cls in SPOT_CEILINGS.items():
         for counter in CLASSES[cls]:
-            worse = ratios(payload["queries"][name])
-            worse[counter] *= copies
-            assert counter in out_of_class(worse, cls, copies), (name, counter)
+            worse = copy.deepcopy(payload["queries"][name])
+            worse["scaled"][counter] = worse["scaled"][counter] * copies or 1
+            assert counter in out_of_class(ratios(worse), cls, copies), (
+                name,
+                counter,
+            )
 
 
 def test_semdedup_guard_fires_in_kernel_on_oversized_cluster(spark):

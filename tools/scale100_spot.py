@@ -6,20 +6,26 @@ Every rung in ``SPOT_CEILINGS`` runs twice in ONE Spark session: on sf0.1
 ``tools/scale_bench.build``).  Each leg runs under a job group of its
 own, so the session's event log, read with
 ``perfbench.spans.read_event_log``, folds back onto it: job count,
-input rows, shuffle records and shuffle bytes written, and shuffle-map
-tasks that wrote.
-Job counts and input rows repeat at any core count; raw shuffle records
-of a partial aggregate do not (each map task ships its own combiners),
-so the classes below gate only ratios that hold on any box.  Wall times
-are kept in the artifact for information only, stamped with the
-session's cpus, memory and application id; no gate reads them.
+input rows, shuffle records and shuffle bytes written.
+
+The session pins the physical layout (``SPOT_CONF``): every table scan
+reads as one split and AQE does not coalesce shuffle partitions, so each
+stage runs as many tasks on the replica as on sf0.1.  Without the pin,
+the number of scan splits follows a table's bytes and the core count,
+and a partial aggregate over fixed keys ships one combiner per group
+per map task: its raw shuffle records would grow with the splits and
+read like a linear rung's.  With it, a partial aggregate over fixed
+keys ships the same records on both legs, and a rung that ships every
+row ships copies× as many, on any box.  Wall times are kept in the
+artifact for information only, stamped with the session's cpus, memory
+and application id; no gate reads them.
 
 A rung's class says how its counters grow with the replica (the cost
 model in its comment below); ``CLASSES`` turns that into an expected
 ratio per counter, ``copies ** exponent``.  One bound rule serves every
 class: a measured ratio must lie within expected ÷/× √copies — the
 log-scale midpoints to the neighbouring classes — so a shape one class
-worse (a linear counter reading copies², a constant one reading copies)
+worse (a linear counter reading copies², a bounded one reading copies)
 fails, and so does a rung better than its class claims (its class is
 then wrong).  ``test_scale100_artifact_within_ceilings`` in
 ``tests/test_scale_design.py`` applies ``out_of_class`` to the
@@ -40,7 +46,6 @@ matching rows; the committed artifact holds one full run.
 from __future__ import annotations
 
 import argparse
-import importlib
 import json
 import math
 import os
@@ -48,7 +53,6 @@ import shutil
 import sys
 import tempfile
 import time
-from contextlib import contextmanager
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -58,34 +62,42 @@ sys.path.insert(0, ROOT)
 COPIES = 10
 
 #: Counters folded per leg, from each task's metrics and each job start.
-COUNTERS = ("jobs", "input_rows", "shuffle_records", "shuffle_bytes", "map_tasks")
+COUNTERS = ("jobs", "input_rows", "shuffle_records", "shuffle_bytes")
 
-BOUNDED, LINEAR, ITERATIVE = "bounded", "linear", "iterative"
+#: Layered over the engine's ``session.RUNTIME_CONF`` for the spot run
+#: (every registry query re-applies it through ``tune``): one split per
+#: table scan, whatever its size — the split size is the scan's total
+#: bytes (minimum partition count 1, no per-file open cost) — and
+#: exactly ``spark.sql.shuffle.partitions`` reduce partitions per
+#: exchange.
+SPOT_CONF = {
+    "spark.sql.files.maxPartitionBytes": str(2**40),
+    "spark.sql.files.openCostInBytes": "0",
+    "spark.sql.files.minPartitionNum": "1",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+}
 
-#: class -> {gated ratio: copies exponent of its expected value}.  Every
-#: class gates the job count, expected constant: no spot rung launches
+BOUNDED, LINEAR = "bounded", "linear"
+
+#: class -> {gated ratio: copies exponent of its expected value}.  Both
+#: classes gate the job count, expected constant: no spot rung launches
 #: jobs per row, per copy or per key, and an iterative rung's round
 #: count is fixed by the kernel.
-#: - bounded: the exchange carries a fixed number of groups per map
-#:   task (partial aggregates over fixed keys, calendar-sized tables,
+#: - bounded: the exchanges carry a fixed number of groups per map task
+#:   (partial aggregates over fixed keys, calendar-sized tables,
 #:   collapsed duplicates, or no exchange at all), so shuffle records
-#:   PER SHUFFLE-MAP TASK ≈ 1.  Raw shuffle records are not gated: they
-#:   are map tasks × groups, and the map-task count follows the input
-#:   splits and the core count, not the data's shape.
+#:   ≈ 1 with the layout pinned.  Input rows are not gated: the scans
+#:   still read every copy.
 #: - linear: input rows ≈ copies and shuffle records ≈ copies — each leg
 #:   reads its tables (and re-reads its checkpoints) a fixed number of
 #:   times, and every exchanged row belongs to one copy's keys.  A
 #:   per-copy rescan or a cross-copy pair join reads copies².
-#: - iterative: only the round count is gated (job count constant): the
-#:   rounds run over a derived relation whose size on the replica does
-#:   not follow the data volume (see the unigram rungs).
 CLASSES = {
-    BOUNDED: {"jobs": 0, "shuffle_records_per_map_task": 0},
+    BOUNDED: {"jobs": 0, "shuffle_records": 0},
     LINEAR: {"jobs": 0, "input_rows": 1, "shuffle_records": 1},
-    ITERATIVE: {"jobs": 0},
 }
 
-#: spot rung (or forced-branch row, see ``FORCED``) -> its counter class.
+#: spot rung -> its counter class.
 SPOT_CEILINGS = {
     # latest-per-key: one window exchange keyed on the replica's shifted
     # keys, so 10× keys ship 10× rows
@@ -106,8 +118,8 @@ SPOT_CEILINGS = {
     "x1_substring_spans": LINEAR,
     "x1_exact_dedup_hash": LINEAR,
     # capped dedup rungs: linear in the replica's pair volume — the
-    # DF-cap guarantee is "linear, never quadratic".  Per-token copy
-    # tagging replicates each posting list with its df unchanged (no
+    # DF-cap guarantee is "linear, never quadratic".  Copy-specific
+    # tokens replicate each posting list with its df unchanged (no
     # cross-copy pairs), so Σ_h C(min(df_h, DF_CAP), 2) ≤ |survivor
     # postings|·(DF_CAP−1)/2 grows with docs (PAIR_VOLUME_100X.json:
     # every volume counter exactly 100.0× at 100 copies).
@@ -125,15 +137,11 @@ SPOT_CEILINGS = {
     # copies² per round.
     "x9_kcore_peel": LINEAR,
     "x9_label_propagation": LINEAR,
-    # the same kernel with the one-exchange form forced off: the
-    # partial-agg branch that the replica's ~12M symmetric edges do not
-    # reach under LPA_ONE_EXCHANGE_MAX_EDGES
-    "x9_label_propagation@partial_agg": LINEAR,
     "x9_sssp_weighted": LINEAR,
     "x9_bfs_reach": LINEAR,
     # the nprobe sweep multiplies the corpus-scan count by |configs|+1
     # (fixed); BPE apply's occurrence⇄dict equi-join grows with the
-    # replica's vocabulary (per-copy tagged tokens are new word types)
+    # replica's vocabulary (copy-specific tokens are new word types)
     "x3_ivf_nprobe_tuning": LINEAR,
     "x4_bpe_apply": LINEAR,
     # containment decontamination streams the corpus's postings past a
@@ -148,7 +156,7 @@ SPOT_CEILINGS = {
     # ships only per-query top-K candidates
     "x3_rank_fusion": BOUNDED,
     # CDC chunking: the df exchange carries ~tokens/CDC_DIV chunk rows;
-    # count-min and the Zipf fit aggregate the (copy-tagged, so growing)
+    # count-min and the Zipf fit aggregate the (copy-specific, so growing)
     # vocabulary before the sketch or the top-K cut
     "x1_cdc_chunk_dedup": LINEAR,
     "x4_countmin_sketch": LINEAR,
@@ -161,26 +169,14 @@ SPOT_CEILINGS = {
     "x3_nsw_beam_blocked": LINEAR,
     "x3_hnsw_beam": LINEAR,
     # unigram train/apply: UNI_ROUNDS EM rounds over the distinct-word
-    # mask lattice, |words|·2^(L−1) rows.  The replica's copy tag adds
-    # three characters to every word of copies 1.., so the lattice grows
-    # ~copies × 2³ (1797 → 188,313 rows at 10 copies) while the text
-    # volume grows copies×: its data counters measure the tag, not the
-    # volume, and only the round count is gated.
-    "x4_unigram_train": ITERATIVE,
-    "x4_unigram_apply": ITERATIVE,
+    # mask lattice, |words|·2^(L−1) rows.  The replica's copies keep
+    # every word's length (tools/scale_bench._copy_text), so the lattice
+    # grows with the distinct words: copies×
+    "x4_unigram_train": LINEAR,
+    "x4_unigram_apply": LINEAR,
     # record linkage collapses the verbatim copies to the representative
     # set before any pair work: pair volume stays at the 1× leg's
     "x2_record_linkage": BOUNDED,
-}
-
-#: forced-branch row -> (registry query, module, constant, forced value).
-FORCED = {
-    "x9_label_propagation@partial_agg": (
-        "x9_label_propagation",
-        "weather_data_pipeline_spark.operators.graph",
-        "LPA_ONE_EXCHANGE_MAX_EDGES",
-        0,
-    ),
 }
 
 SPOT = list(SPOT_CEILINGS)
@@ -197,16 +193,8 @@ def _ratio(scaled: float, base: float) -> float:
 
 
 def ratios(row: dict) -> dict[str, float]:
-    """Scaled-over-1× ratio of every counter of a measured row, plus
-    that of shuffle records per shuffle-map task."""
-    base, scaled = row["1x"], row["scaled"]
-    out = {c: _ratio(scaled[c], base[c]) for c in COUNTERS}
-    per_task = [
-        leg["shuffle_records"] / leg["map_tasks"] if leg["map_tasks"] else 0.0
-        for leg in (base, scaled)
-    ]
-    out["shuffle_records_per_map_task"] = _ratio(per_task[1], per_task[0])
-    return out
+    """Scaled-over-1× ratio of every counter of a measured row."""
+    return {c: _ratio(row["scaled"][c], row["1x"][c]) for c in COUNTERS}
 
 
 def class_bounds(cls: str, copies: int) -> dict[str, tuple[float, float]]:
@@ -252,45 +240,23 @@ def fold(events: list[dict]) -> dict[str, dict[str, float]]:
             c["input_rows"] += m["Input Metrics"]["Records Read"]
             c["shuffle_records"] += w["Shuffle Records Written"]
             c["shuffle_bytes"] += w["Shuffle Bytes Written"]
-            # shuffle-map tasks that wrote: a split whose byte range holds
-            # no row group reads and writes nothing, and how many such
-            # splits a leg gets follows its file sizes and core count
-            c["map_tasks"] += w["Shuffle Records Written"] > 0
     return out
 
 
-@contextmanager
-def _forced(row: str):
-    """Hold ``FORCED[row]``'s module constant at its forced value."""
-    if row not in FORCED:
-        yield
-        return
-    _, module, name, value = FORCED[row]
-    mod = importlib.import_module(module)
-    old = getattr(mod, name)
-    setattr(mod, name, value)
-    try:
-        yield
-    finally:
-        setattr(mod, name, old)
-
-
-def _run(spark, qs, row: str, sf_dir: str, group: str) -> float:
+def _run(spark, qs, name: str, sf_dir: str, group: str) -> float:
     """One untimed warm-up, then one run under job group ``group``;
     returns the second run's wall seconds."""
-    query = FORCED[row][0] if row in FORCED else row
     sc = spark.sparkContext
     # session-scoped caches (TF-IDF terms, IVF corpus, edges) must not
     # carry from one leg into the next
     spark.catalog.clearCache()
-    with _forced(row):
-        qs[query](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sc.setJobGroup(group, row)
-        t0 = time.perf_counter()
-        try:
-            qs[query](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sc.setJobGroup(group, name)
+    t0 = time.perf_counter()
+    try:
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     return round(time.perf_counter() - t0, 3)
 
 
@@ -310,7 +276,9 @@ def main() -> None:
     )
     from perfbench.spans import read_event_log
     from tools import scale_bench as sb
-    from weather_data_pipeline_spark import registry
+    from weather_data_pipeline_spark import registry, session as engine
+
+    engine.RUNTIME_CONF.update(SPOT_CONF)
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     mem = os.environ.get("SPARK_GRAFT_SPOT_MEM", "6g")
@@ -330,7 +298,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sb.tune(spark)
+    engine.tune(spark)
     session = {
         "app_id": spark.sparkContext.applicationId,
         "cpus": cpus,
@@ -339,6 +307,7 @@ def main() -> None:
             os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1
         ),
         "driver_memory": mem,
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "started": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     t0 = time.perf_counter()

@@ -5,9 +5,9 @@ column rests on a measured scaling exponent, not speculation.
 The 10x replica is built by unioning 10 key-shifted copies of the sf0.1
 tables (keys shifted per copy so join fan-outs and key cardinalities
 scale realistically instead of producing 10x duplicates of every key;
-document texts get a per-copy suffix token so the dedup duplicate RATE
-is preserved rather than collapsing across copies). Written once to
-$SPARK_GRAFT_SCALE_DIR (default /tmp/spark_graft_scale10) and reused.
+document texts get copy-specific, length-preserving tokens so the
+dedup duplicate RATE is preserved rather than collapsing across
+copies). Written once to $SPARK_GRAFT_SCALE_DIR (default /tmp/spark_graft_scale10) and reused.
 
 Run:  python tools/scale_bench.py
 Emits one JSON line {query: {t_1x, t_10x, ratio}} and writes
@@ -27,7 +27,7 @@ import os
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -265,6 +265,25 @@ SKEW1_DIR = os.environ.get("SPARK_GRAFT_SKEW1_DIR", "/tmp/spark_graft_skew1")
 SKEW10_DIR = os.environ.get("SPARK_GRAFT_SKEW10_DIR", "/tmp/spark_graft_skew10")
 
 
+_LETTERS = "abcdefghijklmnopqrstuvwxyz"
+
+
+def _copy_text(text: Column, i: int) -> Column:
+    """Copy ``i``'s text: no token shared with another copy, every token
+    as long as copy 0's.  Each letter is rotated by ``i mod 26`` (sf0.1's
+    vocabulary holds no word that is a rotation of another, so copies
+    0–25 share no token).  Word lengths are kept, so per-word costs (the unigram kernels' 2^(L−1) segment
+    lattice, BPE's symbol pairs) grow with the word count alone.  Past
+    26 copies the rotation repeats, and the block index ``i // 26`` is
+    prefixed to every token."""
+    k = i % len(_LETTERS)
+    rot = _LETTERS[k:] + _LETTERS[:k]
+    out = F.translate(text, _LETTERS + _LETTERS.upper(), rot + rot.upper())
+    if i >= len(_LETTERS):
+        out = F.regexp_replace(out, r"(\S+)", f"c{i // len(_LETTERS)}_$1")
+    return out
+
+
 def _replicate(df: DataFrame, shifts: dict[str, int], text_col: str | None = None) -> DataFrame:
     parts = []
     for i in range(COPIES):
@@ -272,16 +291,14 @@ def _replicate(df: DataFrame, shifts: dict[str, int], text_col: str | None = Non
         for col, k in shifts.items():
             c = c.withColumn(col, F.col(col) + F.lit(i * k))
         if text_col is not None and i > 0:
-            # Tag EVERY token with the copy index, not just append a
-            # suffix: a suffix leaves copies sharing all but one shingle,
-            # so every cross-copy pair becomes an n-gram near-dup
-            # candidate and candidate pairs grow ~copies² (the v2 replica
-            # showed a fake 34x at 10x on x2_ngram_jaccard). Per-token
-            # tagging keeps copies disjoint in shingle space — the dup
-            # RATE stays constant, matching how real 10x data behaves.
-            c = c.withColumn(
-                text_col, F.regexp_replace(F.col(text_col), r"(\S+)", f"c{i}_$1")
-            )
+            # Make EVERY token copy-specific, not just append a suffix: a
+            # suffix leaves copies sharing all but one shingle, so every
+            # cross-copy pair becomes an n-gram near-dup candidate and
+            # candidate pairs grow ~copies² (the v2 replica showed a fake
+            # 34x at 10x on x2_ngram_jaccard). Copy-specific tokens keep
+            # copies disjoint in shingle space — the dup RATE stays
+            # constant, matching how real 10x data behaves.
+            c = c.withColumn(text_col, _copy_text(F.col(text_col), i))
         parts.append(c)
     out = parts[0]
     for p in parts[1:]:
@@ -290,7 +307,7 @@ def _replicate(df: DataFrame, shifts: dict[str, int], text_col: str | None = Non
 
 
 #: Bump when the replica layout changes so stale dirs rebuild.
-_REPLICA_VERSION = 4
+_REPLICA_VERSION = 5
 
 
 def build(spark: SparkSession) -> None:

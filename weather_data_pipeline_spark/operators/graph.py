@@ -55,26 +55,6 @@ DAMPING = 0.85
 #: supplier node-id offset (disjoint from customer keys at any SF)
 SUPP_OFFSET = 100_000_000
 
-#: LPA per-round exchange form, chosen from a bounded edge-count probe.
-#: UNDER this many symmetric edge rows the explicit repartition("src")
-#: form wins — one exchange per round instead of two, and at
-#: overhead-dominated sizes the saved exchange is the whole game
-#: (measured ~11-17% at sf0.1). OVER it the two-exchange partial-agg
-#: form wins: the (src,label) combiners ship fewer bytes than |edges|
-#: joined rows once labels converge. Counters from one session
-#: (BENCH_SCALE100.json rows `x9_label_propagation` and
-#: `x9_label_propagation@partial_agg`, the latter with this constant
-#: forced to 0): at sf0.1 and on the 10-copy replica (~12M edges) alike,
-#: the partial-agg form writes 0.54-0.55× the shuffle records and
-#: 0.65-0.68× the shuffle bytes of the one-exchange form, for 2 more
-#: jobs (18 vs 16), and both forms grow linearly (10.0× / 10.2×
-#: records). So the counters back the byte saving at every size; the
-#: 20M crossover itself (≈ 320 MB of (src,label) pairs, where byte
-#: volume starts to dominate on a real network) is a wall-time
-#: judgement they do not settle — production tunes it to measured
-#: combiner reduction.
-LPA_ONE_EXCHANGE_MAX_EDGES = 20_000_000
-
 
 def _pairs_sql() -> str:
     """Distinct customer→supplier trade pairs, supplier keys offset."""
@@ -540,26 +520,23 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation nothing to combine. Round 0's output is also the first
     # label vector and its row count is |nodes| (every node is the src of
     # ≥1 edge), so no identity-label init table is built.
-    one_exchange = edges.count() <= LPA_ONE_EXCHANGE_MAX_EDGES
     labels = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("label"))
         .localCheckpoint(eager=True)
     )
     n = labels.count()  # |nodes| — metadata job over the materialized r0
-    # Rounds ≥ 1: UNDER the LPA_ONE_EXCHANGE_MAX_EDGES gate, ONE src
-    # exchange per round — the explicit repartition("src") satisfies
-    # BOTH the (src, label) count's ClusteredDistribution (subset hash
-    # partitioning) and the per-src argmax's, so neither aggregation
-    # inserts its own exchange. OVER it, the two-exchange partial-agg
-    # form ships per-map-distinct (src,label) combiners where the
-    # repartition ships every |edges| joined row, and once labels
-    # converge combiner bytes win.
+    # Rounds ≥ 1: the (src, label) count is a partial aggregate, so each
+    # map task ships its distinct (src, label) combiners, not every
+    # joined edge row; the per-src argmax then takes a second, |nodes|-
+    # bounded exchange. A repartition("src") ahead of the count would
+    # save that exchange but ship all |edges| joined rows: measured on
+    # sf0.1 and on its 10-copy replica (CHANGES.md), that form wrote
+    # 1.8× the shuffle records and 1.5× the bytes and ran slower at
+    # both sizes.
     for r in range(1, LPA_ROUNDS):
         lv = labels.withColumnRenamed("node", "dst")
         joined = edges.join(broadcast_under_budget(lv, n), "dst")
-        if one_exchange:
-            joined = joined.repartition("src")
         counts = joined.groupBy("src", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
