@@ -81,12 +81,11 @@ HEADLINE = [
     "ext_q19_disjunctive_revenue",
     "x1_line_dedup",
     "x4_gopher_filter",
-    "x8_length_buckets",
     # x9_triangle_count is scale-suite-only: ~4-5 s/run is support-build
     # stages, too heavy for the 5-pass interleaved bench loop
     "x8_epoch_shuffle",
-    # round-7 additions: the derived-partsupp TPC-H batch + the two
-    # scale-rung twins (their exact-rung partners already headline)
+    # the derived-partsupp TPC-H batch + the prefix-sum and sketch rungs
+    # (each prefix-sum body also answers its exact name)
     "ext_q2_min_cost_supplier",
     "ext_q9_product_profit",
     "ext_q11_important_stock",
@@ -137,9 +136,6 @@ HEADLINE = [
     "x2_source_overlap",
     "x2_tfidf_cosine_prefix",
     "mm_phash_neardup_codes",
-    # x7_interval_overlap (grid pair join) is scale-suite-only: ~6 s/run
-    # of intrinsically pair-volume-bound work, too heavy for the 5-pass
-    # interleaved loop — its aggregate-only twin headlines instead
     "x7_interval_overlap_sweep",
     "x6_lttb_downsample",
     "x6_holt_winters",

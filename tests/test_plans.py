@@ -1011,23 +1011,6 @@ def test_temporal_join_is_equi_on_user_not_nested_loop(spark):
     )
 
 
-def test_budget_select_scalable_no_single_partition(spark):
-    """The distributed-prefix-sum rung must have NO single-partition
-    exchange anywhere — the defining property vs the exact rung, whose
-    global cumulative window funnels every (doc_id, wc, score) triple
-    through one task (that rung's plan is asserted to SHOW the funnel,
-    so this pair of assertions can't both pass vacuously)."""
-    from weather_data_pipeline_spark.plans.inspect import executed_plan
-
-    exact = executed_plan(_Q["x8_budget_select"](spark, SF))
-    assert "SinglePartition" in exact  # the funnel the twin removes
-    twin = executed_plan(_Q["x8_budget_select_scalable"](spark, SF))
-    assert "SinglePartition" not in twin
-    # the window runs per range-partition (_pid), checkpoint-backed
-    assert "ExistingRDD" in twin
-    assert "Window" in twin and "hashpartitioning(_pid" in twin
-
-
 def test_perplexity_approx_no_window(spark):
     """The sketch decile cut must contain no window operator at all —
     the cut is one mergeable percentile_approx (partial-aggregated)
@@ -1091,53 +1074,45 @@ def test_partsupp_queries_prune_below_distinct(spark):
         assert "CartesianProduct" not in plan, name
 
 
-def test_length_buckets_scalable_no_whole_bucket_task(spark):
-    """The grouped prefix-sum rung must contain no single-partition
-    exchange and its window must group by (pid, bucket) — never by
-    bucket alone (a whole bucket through one task is the exact rung's
-    funnel, a corpus-sized fraction at 100 TB)."""
+#: alias -> the scale-safe body both names run
+SHARED_BODY_PAIRS = {
+    "x8_length_buckets": "x8_length_buckets_scalable",
+    "x8_budget_select": "x8_budget_select_scalable",
+    "x4_perplexity_buckets": "x4_perplexity_buckets_scalable",
+    "x6_rfm_scores": "x6_rfm_scores_scalable",
+    "x7_interval_overlap": "x7_interval_overlap_sweep",
+}
+
+
+@pytest.mark.parametrize("alias,body", sorted(SHARED_BODY_PAIRS.items()))
+def test_shared_result_contracts_resolve_to_one_body(alias, body):
+    """Each exact/scale name pair runs one function: the alias is
+    registered on the scale-safe body, not on a second implementation."""
+    assert _Q[alias].__name__ == _Q[body].__name__ == body
+
+
+@pytest.mark.parametrize(
+    "name",
+    sorted(
+        n
+        for pair in SHARED_BODY_PAIRS.items()
+        for n in pair
+        if not n.startswith("x7_")  # the sweep: test_interval_overlap_sweep_no_pairs
+    )
+    + ["x8_sequence_pack"],
+)
+def test_prefix_sum_rungs_no_single_partition(spark, name):
+    """Every rung built on the distributed prefix sum (global_prefix_sums
+    or global_ranks) has no single-partition exchange anywhere: its
+    windows group by range-partition id (never a whole bucket, score
+    order or user table through one task), the range partitions are
+    checkpoint-backed, and offsets come from O(partitions) driver rows."""
     from weather_data_pipeline_spark.plans.inspect import executed_plan
 
-    plan = executed_plan(_Q["x8_length_buckets_scalable"](spark, SF))
+    plan = executed_plan(_Q[name](spark, SF))
     assert "SinglePartition" not in plan
     assert "ExistingRDD" in plan
-    assert "hashpartitioning(_pid" in plan
-
-
-def test_perplexity_scalable_no_single_partition(spark):
-    """The exact distributed-NTILE rung must contain no single-partition
-    exchange: ranks come from per-range-partition windows + broadcast
-    offsets, deciles from arithmetic on the global rank."""
-    from weather_data_pipeline_spark.plans.inspect import executed_plan
-
-    plan = executed_plan(_Q["x4_perplexity_buckets_scalable"](spark, SF))
-    assert "SinglePartition" not in plan
-    assert "ExistingRDD" in plan
-    assert "hashpartitioning(_pid" in plan
-
-
-def test_rfm_scalable_no_single_partition(spark):
-    """All three quintile dimensions must rank via per-range-partition
-    windows + broadcast offsets — no single-partition exchange (the
-    exact rung funnels the whole user table through one task per
-    dimension)."""
-    from weather_data_pipeline_spark.plans.inspect import executed_plan
-
-    plan = executed_plan(_Q["x6_rfm_scores_scalable"](spark, SF))
-    assert "SinglePartition" not in plan
-    assert "hashpartitioning(_pid" in plan
-
-
-def test_sequence_pack_no_single_partition(spark):
-    """The packing layout's only global step is the distributed prefix
-    sum (global_prefix_sums): no single-partition exchange anywhere,
-    checkpoint-backed range partitions, per-partition windows."""
-    from weather_data_pipeline_spark.plans.inspect import executed_plan
-
-    plan = executed_plan(_Q["x8_sequence_pack"](spark, SF))
-    assert "SinglePartition" not in plan
-    assert "ExistingRDD" in plan
-    assert "hashpartitioning(_pid" in plan
+    assert "Window" in plan and "hashpartitioning(_pid" in plan
 
 
 def test_bpe_pairs_count_dict_not_corpus(spark):
@@ -1545,27 +1520,6 @@ def test_source_overlap_single_gram_build(spark):
     assert "documents.parquet" not in plan  # scan only at checkpoint time
     assert "SortMergeJoin" not in plan
     assert num_shuffles(df) <= 6
-
-
-def test_interval_overlap_is_equi_join(spark):
-    """The interval×interval overlap join must plan as an EQUI-join on
-    the grid cell id — never the BroadcastNestedLoopJoin that the raw
-    inequality predicate would produce (O(|A|·|B|) at scale). The
-    overlap test and the canonical-cell exactly-once rule are residual
-    filters on the matched pairs, and the aggregate partial-aggregates
-    before its one hash exchange."""
-    from weather_data_pipeline_spark.plans.inspect import (
-        executed_plan,
-        has_partial_aggregation,
-    )
-
-    df = _Q["x7_interval_overlap"](spark, SF)
-    plan = executed_plan(df)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
-    assert has_partial_aggregation(df)
 
 
 def test_interval_overlap_sweep_no_pairs(spark):
@@ -2649,17 +2603,18 @@ def test_nsw_planes_for_matches_oracle_geometry():
 def test_nsw_exact_build_fails_fast_past_broadcast_ceiling(
     spark, monkeypatch
 ):
-    """x3_nsw_beam's 100x posture is a DESIGNED refusal: past
+    """x3_nsw_beam's scale posture is a DESIGNED refusal: past
     MAX_BROADCAST_VECTORS the broadcast |V|^2 graph build must raise
     naming x3_nsw_beam_blocked (the implemented scale path), not
-    attempt the quadratic pass — which is why the 100x spot table
-    carries the blocked rung instead of this one."""
+    attempt the quadratic pass — which is why the scale spot table
+    carries the blocked rung instead of this one. The refusal is a
+    ValueError, so it also holds under ``python -O``."""
     import pytest
 
     from weather_data_pipeline_spark.operators import similarity as sim
 
     monkeypatch.setattr(sim, "MAX_BROADCAST_VECTORS", 10)
-    with pytest.raises(AssertionError, match="x3_nsw_beam_blocked"):
+    with pytest.raises(ValueError, match="x3_nsw_beam_blocked"):
         sim.x3_nsw_beam(spark, SF)
 
 

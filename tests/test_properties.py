@@ -410,35 +410,36 @@ def test_interval_merge_invariants(spark):
         assert INTERVAL_MIN * 60 <= r["covered_seconds"] <= n_ev * INTERVAL_MIN * 60
 
 
-def test_prefix_sum_twins_partitioning_invariant(spark):
-    """The three distributed-prefix-sum rungs must produce EXACTLY their
-    exact-rung's rows under adversarial partition counts — 1 (degenerate
+def test_prefix_sum_twins_partitioning_invariant(spark, monkeypatch):
+    """Every name that shares a body with another name must match its
+    DuckDB oracle under adversarial partition counts — 1 (degenerate
     single range), 3 (bucket/score ranges straddle partition borders),
     and 97 (more partitions than some buckets have rows, so many empty
-    or single-row window groups). This is the property the construction
-    claims: output identical on ANY partitioning."""
+    or single-row window groups). This is the property the distributed
+    prefix-sum and sweep constructions claim: output identical on ANY
+    partitioning. Every registered query re-applies the session conf
+    through ``tune``, which sizes the shuffle from
+    SPARK_GRAFT_SHUFFLE_PARTITIONS, so the count is set there."""
+    import collections
+
+    from tests.oracle_harness import compare
     from weather_data_pipeline_spark import registry
+    from weather_data_pipeline_spark.session import tune
 
     sf = "/root/testdata/sf0.001"
-    qs = registry.queries()
-    pairs = [
-        ("x8_budget_select", "x8_budget_select_scalable"),
-        ("x8_length_buckets", "x8_length_buckets_scalable"),
-        ("x4_perplexity_buckets", "x4_perplexity_buckets_scalable"),
-        ("x6_rfm_scores", "x6_rfm_scores_scalable"),
-    ]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    qs, oracles = registry.queries(), registry.oracle_sql()
+    bodies = collections.Counter(fn.__name__ for fn in qs.values())
+    shared = sorted(n for n, fn in qs.items() if bodies[fn.__name__] > 1)
+    assert len(shared) >= 10, shared
     try:
-        for exact_name, twin_name in pairs:
-            expected = sorted(
-                map(tuple, qs[exact_name](spark, sf).collect())
-            )
-            for n in (1, 3, 97):
-                spark.conf.set("spark.sql.shuffle.partitions", str(n))
-                got = sorted(map(tuple, qs[twin_name](spark, sf).collect()))
-                assert got == expected, (twin_name, n)
+        for n in (1, 3, 97):
+            monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(n))
+            for name in shared:
+                compare(spark, f"{name}@{n}", qs[name], oracles[name], sf)
+                assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        monkeypatch.undo()
+        tune(spark)
 
 
 def test_substring_rewrite_first_occurrence_wins(spark, tmp_path):

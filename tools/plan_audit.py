@@ -108,7 +108,6 @@ MULTI_JOB = {
 #: section (ADVICE r11 #4: mm_audio_silence_trim / mm_audio_energy were
 #: test-only).
 EXTRA = [
-    "x7_interval_overlap",  # keyframe/bloom rungs now in HEADLINE
     "mm_audio_silence_trim",
     "mm_audio_energy",
     "x1_bloom_geometry_tuning",  # scale-suite-only (13-job sweep)

@@ -115,7 +115,6 @@ QUERIES = [
     "x6_holt_smoothing",
     "x7_asof_join_tolerance",
     "x6_retention_cohorts",
-    "x6_rfm_scores",
     # x2_semantic_dedup is NOT scale-benched: its pair source is the
     # HARD-GATED exact all-pairs rung (x3_embedding_near_dup, O(N²) by
     # definition — measured 11.9x at 10x before removal, the expected
@@ -132,23 +131,21 @@ QUERIES = [
     "ext_q22_dormant_customers",
     "x1_line_dedup",
     "x4_gopher_filter",
-    "x8_length_buckets",
     "x9_triangle_count",
     "ext_q15_top_supplier",
     "ext_q19_disjunctive_revenue",
     "x8_epoch_shuffle",
     "x1_intradoc_line_dedup",
-    "x4_perplexity_buckets",
     "mm_audio_energy",
     "ext_q21_waiting_supplier",
     "x6_interval_merge",
     "x8_oversample_minority",
     "x3_mips_topk",
     "x4_vocab_coverage",
-    "x8_budget_select",
     "x7_temporal_join",
-    # round-7 additions: derived-partsupp TPC-H batch + the two
-    # scale-rung twins (the twins' WHOLE claim is their 10x behavior)
+    # derived-partsupp TPC-H batch + the prefix-sum and sketch rungs
+    # (each prefix-sum body also answers its exact name; its WHOLE
+    # claim is its 10x behavior)
     "ext_q2_min_cost_supplier",
     "ext_q9_product_profit",
     "ext_q11_important_stock",
@@ -199,7 +196,6 @@ QUERIES = [
     "x8_curriculum_order",
     "x6_resample_interpolate",
     "x2_source_overlap",
-    "x7_interval_overlap",
     "x7_interval_overlap_sweep",
     "x6_lttb_downsample",
     "x6_m4_downsample",

@@ -567,13 +567,8 @@ def x7_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# X7 — interval overlap join via grid bucketing (round 9)
+# X7 — interval × interval overlap: per-window aggregates by sweep line
 # ----------------------------------------------------------------------
-#: grid cell width in days. Chosen ≥ the longest probe interval (≤31 d)
-#: so a transit spans at most 2 cells and an audit window (≤91 d) at
-#: most 4 — the explode factors are small constants, never data-sized.
-OVERLAP_GRID_DAYS = 32
-
 _INTERVAL_OVERLAP_ORACLE = """
     WITH transit AS (
       SELECT CAST(l_shipdate AS DATE) AS t_start,
@@ -602,94 +597,20 @@ _INTERVAL_OVERLAP_ORACLE = """
 
 
 @query("x7_interval_overlap", oracle=_INTERVAL_OVERLAP_ORACLE)
-def x7_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval × interval OVERLAP join — the temporal-join mode the
-    x7 ladder lacked: x7_temporal_join is point-in-time on an equi
-    key, ext_range_join is point-in-range; here BOTH sides are
-    intervals with arbitrary endpoints and no shared key. Business
-    shape: per supplier audit window, how many shipments were in
-    transit (derived [ship, ship+1..30 d]) at any moment of the
-    window, with total quantity.
-
-    Execution is the grid-bucketing rewrite, NOT the naive theta
-    join: a raw `a.start <= b.end AND b.start <= a.end` predicate
-    has no equi key, so Spark plans BroadcastNestedLoopJoin —
-    O(|A|·|B|) comparisons, quadratic at 100 TB. Instead each
-    interval explodes onto the OVERLAP_GRID_DAYS-day cells it
-    touches (≤2 for transits, ≤4 for windows — constants set by the
-    max interval length, never by data volume) and the join becomes
-    a plain EQUI-join on the cell id with the overlap test as a
-    residual. A pair overlapping across several shared cells must
-    count ONCE: the canonical-cell rule keeps a pair only in the
-    cell containing greatest(t_start, w_start) — for a true overlap
-    that date lies inside both intervals, so exactly one surviving
-    cell per pair, no distinct, no pair-identity shuffle. The rows
-    ENTERING the join are O(|A| + |B|) (×small cell constants), but
-    the MATCHED pairs are Θ(|A|·|B| / span) whenever windows overlap
-    a constant fraction of history — measured 10× ratio 14.1, the
-    pair count itself growing ~100× (BENCH_SCALE.json). That volume
-    is irreducible when the downstream consumes the pairs (per-pair
-    enrichment); when it only needs per-window AGGREGATES — as this
-    query's output does — the ladder successor is
-    ``x7_interval_overlap_sweep`` (same oracle, zero pair
-    materialization, ratio 1.15). At local SF the exploded window
-    side broadcasts; on a 1000-executor cluster AQE swaps the same
-    plan to a shuffled hash join on the cell id. Plan-gated: no
-    BroadcastNestedLoopJoin / CartesianProduct. Oracle states the
-    semantics as the plain inequality join — DuckDB's IEJoin handles
-    the quadratic form at oracle SF."""
-    g = OVERLAP_GRID_DAYS
-
-    def cell(c):  # grid cell id of a date
-        return F.floor(F.unix_date(c) / g)
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.to_date("l_shipdate").alias("t_start"),
-        F.date_add(
-            F.to_date("l_shipdate"),
-            (
-                1 + (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 30
-            ).cast("int"),
-        ).alias("t_end"),
-        "l_quantity",
-    )
-    start = F.date_add(
-        F.to_date(F.lit("1994-01-01")),
-        ((F.col("s_suppkey") * 37) % 2400).cast("int"),
-    )
-    win = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("window_id"),
-        start.alias("w_start"),
-        F.date_add(start, (7 + (F.col("s_suppkey") * 11) % 84).cast("int")).alias(
-            "w_end"
-        ),
-    )
-    lb = li.withColumn("cell", F.explode(F.sequence(cell("t_start"), cell("t_end"))))
-    wb = win.withColumn(
-        "cell", F.explode(F.sequence(cell("w_start"), cell("w_end")))
-    )
-    pairs = lb.join(wb, "cell").where(
-        (F.col("t_start") <= F.col("w_end"))
-        & (F.col("t_end") >= F.col("w_start"))
-        & (F.col("cell") == cell(F.greatest("t_start", "w_start")))
-    )
-    return pairs.groupBy("window_id", "w_start", "w_end").agg(
-        F.count(F.lit(1)).alias("n_transit"),
-        dec_out(F.sum(F.col("l_quantity").cast("decimal(18,2)")), 2).alias(
-            "sum_qty"
-        ),
-    )
-
-
 @query("x7_interval_overlap_sweep", oracle=_INTERVAL_OVERLAP_ORACLE)
 def x7_interval_overlap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100-TB rung of ``x7_interval_overlap``, SAME oracle: when the
-    downstream needs per-window AGGREGATES (not the pairs), the pair
-    join is the wrong algorithm at any scale — matched-pair volume is
-    Θ(|A|·|B| / span) whenever a window overlaps a constant fraction
-    of history (measured: the grid rung's 10× ratio is 14.1 because
-    the pair count itself grows ~100×). The sweep-line identity kills
-    the pairs entirely:
+    """Interval × interval OVERLAP — the temporal-join mode next to
+    point-in-time (x7_temporal_join, an equi key) and point-in-range
+    (ext_range_join): BOTH sides are intervals with arbitrary endpoints
+    and no shared key. Business shape: per supplier audit window, how
+    many shipments were in transit (derived [ship, ship+1..30 d]) at
+    any moment of the window, with total quantity. The oracle states
+    the semantics as the plain inequality join.
+
+    Both names run this body. The output is per-window AGGREGATES, so
+    no overlap pair is ever built: any pair join matches
+    Θ(|A|·|B| / span) pairs whenever a window overlaps a constant
+    fraction of history. The sweep-line identity replaces the pairs:
 
         n_overlap(w)  = #{t_start <= w_end} − #{t_end <= w_start − 1}
         sum_qty(w)    = same difference over decimal qty prefix sums

@@ -1370,19 +1370,31 @@ def x2_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cluster caveat: executor loss loses checkpoint partitions; a
     # long-lived job swaps in checkpoint() with a reliable dir.
     weighted, norms = _tfidf_weighted(spark, sf_dir)
+    return _tfidf_emit(_tfidf_dots(weighted), norms)
+
+
+def _tfidf_sides(weighted: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a pair join over the weighted postings:
+    ``(doc_a, h, wa)`` and ``(doc_b, h, wb)``."""
     a = weighted.select(
         F.col("doc_id").alias("doc_a"), "h", F.col("wq").alias("wa")
     )
     b = weighted.select(
         F.col("doc_id").alias("doc_b"), "h", F.col("wq").alias("wb")
     )
-    dots = (
+    return a, b
+
+
+def _tfidf_dots(weighted: DataFrame) -> DataFrame:
+    """The exhaustive co-term pair join: the decimal-exact dot of every
+    doc pair (doc_a < doc_b) sharing a surviving term."""
+    a, b = _tfidf_sides(weighted)
+    return (
         a.join(b, "h")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
-    return _tfidf_emit(dots, norms)
 
 
 #: adaptive switch for the prefix rung: if the suffix-norm filter keeps
@@ -1492,18 +1504,7 @@ def _tfidf_prefix_dots(
             )
         keep_frac = probe["kept"] / max(probe["n"], 1)
         if keep_frac > TFIDF_PREFIX_SELECTIVITY_MAX:
-            a = weighted.select(
-                F.col("doc_id").alias("doc_a"), "h", F.col("wq").alias("wa")
-            )
-            b = weighted.select(
-                F.col("doc_id").alias("doc_b"), "h", F.col("wq").alias("wb")
-            )
-            return (
-                a.join(b, "h")
-                .filter(F.col("doc_a") < F.col("doc_b"))
-                .groupBy("doc_a", "doc_b")
-                .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-            )
+            return _tfidf_dots(weighted)
     pref = _tfidf_prefix_postings(weighted, norms)
     cand = (
         pref.join(weighted.select(F.col("doc_id").alias("doc_b"), "h"), "h")
@@ -1511,12 +1512,7 @@ def _tfidf_prefix_dots(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    fa = weighted.select(
-        F.col("doc_id").alias("doc_a"), "h", F.col("wq").alias("wa")
-    )
-    fb = weighted.select(
-        F.col("doc_id").alias("doc_b"), "h", F.col("wq").alias("wb")
-    )
+    fa, fb = _tfidf_sides(weighted)
     return (
         cand.join(fa, "doc_a")
         .join(fb, ["doc_b", "h"])

@@ -1026,54 +1026,23 @@ _RFM_ORACLE = """
 
 
 @query("x6_rfm_scores", oracle=_RFM_ORACLE)
-def x6_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation: per-user recency/frequency/monetary from the
-    purchase stream, each scored into quintiles. The aggregation is one
-    partial-agg shuffle on user_id; the NTILE windows are GLOBAL
-    (unpartitioned ORDER BY) — correct here because the windowed input
-    is already one row per user (∼10⁶-10⁹ rows of 4 columns at 100 TB,
-    a single-digit-GB sort, NOT the events table) — and every ORDER BY
-    carries the user_id tiebreak so quintile boundaries are
-    deterministic on both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    agg = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.max("ts").alias("last_purchase"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-            ).alias("monetary"),
-        )
-    )
-    def nt(order):
-        return F.ntile(5).over(Window.orderBy(*order)).cast("int")
-
-    return agg.select(
-        "user_id",
-        "last_purchase",
-        "frequency",
-        "monetary",
-        nt([F.col("last_purchase"), F.col("user_id")]).alias("r_score"),
-        nt([F.col("frequency"), F.col("user_id")]).alias("f_score"),
-        nt([F.col("monetary"), F.col("user_id")]).alias("m_score"),
-    )
-
-
 @query("x6_rfm_scores_scalable", oracle=_RFM_ORACLE)
 def x6_rfm_scores_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The no-global-window rung of ``x6_rfm_scores`` — IDENTICAL
-    output (shared oracle). Each of the three quintile dimensions gets
+    """RFM segmentation: per-user recency/frequency/monetary from the
+    purchase stream, each scored into quintiles; every ORDER BY carries
+    the user_id tiebreak so quintile boundaries are deterministic on
+    both engines.
+
+    Both names run this body. The aggregation is one partial-agg
+    shuffle on user_id. Each of the three quintile dimensions gets
     exact global ranks from ``functions.distributed.global_ranks``
     (range-partition + prefix-sum offsets) and NTILE(5) as arithmetic
-    on (rank, n); the three score columns join back on user_id. Cost:
-    three narrow range exchanges + three user_id joins over per-user
-    rows — heavier than the exact rung at small scale, but no task
-    ever holds the whole user table (the exact rung funnels it through
-    ONE task per dimension). The per-user aggregate is materialized
-    once (localCheckpoint) so the three rank passes don't re-run the
-    events groupBy."""
+    on (rank, n), in place of the oracle's unpartitioned NTILE windows;
+    the three score columns join back on user_id. Cost: three narrow
+    range exchanges + three user_id joins over per-user rows, and no
+    task ever holds the whole user table. The per-user aggregate is
+    materialized once (localCheckpoint) so the three rank passes don't
+    re-run the events groupBy."""
     from ..functions.distributed import global_ranks, ntile_of_rank
 
     ev = load_table(spark, sf_dir, "events")

@@ -13,6 +13,9 @@ Every rung is composed from one copy of each shared piece:
   to DuckDB's ``list_dot_product`` and Spark's ``aggregate``;
 - ``_query_block``: the bounded driver collect of the ``N_QUERIES``
   query vectors;
+- ``_corpus_broadcast``: the exact broadcast rungs' (all-pairs near-dup,
+  NSW graph build) bounded corpus collect, refusing past
+  ``MAX_BROADCAST_VECTORS``;
 - ``_exact_scan``: the one-pass exact query-scan kernel (cosine or
   inner product, optional carried columns);
 - ``_topk``: the per-query top-K window;
@@ -30,9 +33,9 @@ use (sequential left-to-right), and compared at 6 decimals; rankings
 order by the rounded value + vec_id tiebreak so top-k sets are
 engine-stable.
 
-At 100 TB: the corpus side stays partitioned (never collected); queries,
-hyperplanes and centroids broadcast; candidate generation is a hash join
-on bucket ids.
+At 100 TB: the corpus side stays partitioned (only the two
+ceiling-guarded exact rungs collect it); queries, hyperplanes and
+centroids broadcast; candidate generation is a hash join on bucket ids.
 """
 
 from __future__ import annotations
@@ -145,6 +148,23 @@ def _vectors(df: DataFrame, *extra: str) -> DataFrame:
     return df.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), *extra
     )
+
+
+def _corpus_broadcast(spark: SparkSession, vectors: DataFrame, refusal: str):
+    """The whole ``(vec_id, embedding)`` corpus on the driver and in one
+    broadcast ``(ids, matrix, norms)``, for the exact broadcast rungs.
+    At most ``MAX_BROADCAST_VECTORS + 1`` rows are collected; past the
+    ceiling the rung raises ``ValueError(refusal)``, which names the
+    scale rung to use instead. Returns ``(ids, matrix, broadcast)``."""
+    rows = vectors.limit(MAX_BROADCAST_VECTORS + 1).collect()
+    if len(rows) > MAX_BROADCAST_VECTORS:
+        raise ValueError(
+            f"corpus exceeds MAX_BROADCAST_VECTORS={MAX_BROADCAST_VECTORS}: "
+            + refusal
+        )
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    return ids, mat, spark.sparkContext.broadcast((ids, mat, _seq_self_norms(mat)))
 
 
 def _query_block(df: DataFrame, *extra: str):
@@ -262,21 +282,12 @@ def x3_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # Guard job cost is bounded regardless of source format: scan stops
-    # after MAX+1 rows instead of counting the whole corpus.
-    over = emb.limit(MAX_BROADCAST_VECTORS + 1).count() > MAX_BROADCAST_VECTORS
-    if over:
-        raise ValueError(
-            f"x3_embedding_near_dup is the exact all-pairs rung and "
-            f"broadcasts the corpus (> {MAX_BROADCAST_VECTORS} vectors): "
-            f"use x3_lsh_candidate_pairs (bucket-pruned, sub-quadratic) "
-            f"at this scale"
-        )
-    rows = _vectors(emb).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = _seq_self_norms(mat)
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
+    _, _, bc = _corpus_broadcast(
+        spark,
+        _vectors(emb),
+        "x3_embedding_near_dup is the exact all-pairs rung; use "
+        "x3_lsh_candidate_pairs (bucket-pruned, sub-quadratic) at this scale",
+    )
 
     def block_sims(batches):
         c_ids, c_mat, c_norms = bc.value
@@ -2686,17 +2697,12 @@ def x3_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = _vectors(load_table(spark, sf_dir, "embeddings"))
-    rows = emb.sort("vec_id").collect()
-    assert len(rows) <= MAX_BROADCAST_VECTORS, (
-        f"corpus {len(rows)} exceeds MAX_BROADCAST_VECTORS="
-        f"{MAX_BROADCAST_VECTORS}: use x3_nsw_beam_blocked (the "
-        "LSH-blocked kNN-graph build — same beam search, no "
-        "broadcast pass)"
+    ids, mat, bc = _corpus_broadcast(
+        spark,
+        emb.sort("vec_id"),
+        "use x3_nsw_beam_blocked (the LSH-blocked kNN-graph build — "
+        "same beam search, no broadcast pass)",
     )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = _seq_self_norms(mat)
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def knn_edges(batches):
         # NOTE (measured): a fully block-vectorized variant

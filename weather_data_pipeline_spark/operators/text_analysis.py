@@ -1285,7 +1285,8 @@ _LENGTH_BUCKETS_ORACLE = f"""
 
 
 @query("x8_length_buckets", oracle=_LENGTH_BUCKETS_ORACLE)
-def x8_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("x8_length_buckets_scalable", oracle=_LENGTH_BUCKETS_ORACLE)
+def x8_length_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assembly: group documents into fixed-width
     token-length buckets, then assign deterministic training batches of
     ``BATCH_DOCS`` docs within each bucket (ordered by doc_id), reporting
@@ -1293,50 +1294,10 @@ def x8_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists to minimize: batching unsorted docs pads every row to the
     global max; bucketing caps the spread at ``BUCKET_WIDTH``).
 
-    Scale shape: the within-bucket ROW_NUMBER is a per-bucket total
-    order — fine while each bucket's rows fit one task (buckets here are
-    narrow slices of the corpus). This is the ORACLE-EXACT demo rung;
-    ``x8_length_buckets_scalable`` below IS the 100-TB construction
-    (range-partition + per-(partition, bucket) prefix-sum offsets,
-    identical batch ids on the same oracle)."""
-    from pyspark.sql.window import Window as W
-
-    doc = load_table(spark, sf_dir, "documents")
-    d = doc.select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    b = d.withColumn(
-        "bucket", F.expr(f"CAST(n_tokens DIV {BUCKET_WIDTH} AS BIGINT)")
-    ).withColumn(
-        "batch_id",
-        F.expr(
-            f"CAST((ROW_NUMBER() OVER (PARTITION BY CAST(n_tokens DIV "
-            f"{BUCKET_WIDTH} AS BIGINT) ORDER BY doc_id) - 1) DIV "
-            f"{BATCH_DOCS} AS BIGINT)"
-        ),
-    )
-    return _length_buckets_agg(b)
-
-
-def _length_buckets_agg(b: DataFrame) -> DataFrame:
-    return b.groupBy("bucket", "batch_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("n_tokens").cast("bigint").alias("min_tokens"),
-        F.max("n_tokens").cast("bigint").alias("max_tokens"),
-        F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
-        (
-            F.count(F.lit(1)) * F.max("n_tokens") - F.sum("n_tokens")
-        ).cast("bigint").alias("pad_waste"),
-    )
-
-
-@query("x8_length_buckets_scalable", oracle=_LENGTH_BUCKETS_ORACLE)
-def x8_length_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100-TB rung of ``x8_length_buckets`` — IDENTICAL output
-    (shared oracle) with the per-bucket ROW_NUMBER replaced by the
-    grouped distributed prefix sum, so no task ever holds a whole
-    bucket (a bucket is a corpus-sized fraction at scale; the exact
-    rung funnels each one through a single window group):
+    Both names run this body. The oracle's per-bucket ROW_NUMBER is
+    replaced by the grouped distributed prefix sum, so no task ever
+    holds a whole bucket (a bucket is a corpus-sized fraction at
+    scale):
 
     1. range-partition on (bucket, doc_id) — every partition holds a
        contiguous slice, so a bucket spans consecutive partitions and
@@ -1347,13 +1308,12 @@ def x8_length_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
        config + bucket-count, not data — collected and turned into
        exclusive per-bucket prefix offsets on the driver.
     3. local ROW_NUMBER per (partition, bucket) + broadcast offset =
-       the exact global within-bucket rank → identical batch ids.
+       the exact global within-bucket rank → the oracle's batch ids.
 
     Same construction as ``x8_budget_select_scalable`` generalized to
     a grouping key (the offsets are per (pid, bucket), cumulating over
-    pids WITHIN each bucket) — both now the shared
-    ``functions.distributed.global_prefix_sums`` primitive (VERDICT r7
-    ask #3)."""
+    pids WITHIN each bucket) — both the shared
+    ``functions.distributed.global_prefix_sums`` primitive."""
     from ..functions.distributed import global_prefix_sums
 
     doc = load_table(spark, sf_dir, "documents")
@@ -1374,7 +1334,15 @@ def x8_length_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_id",
         F.expr(f"CAST((grank - 1) DIV {BATCH_DOCS} AS BIGINT)"),
     )
-    return _length_buckets_agg(b)
+    return b.groupBy("bucket", "batch_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.min("n_tokens").cast("bigint").alias("min_tokens"),
+        F.max("n_tokens").cast("bigint").alias("max_tokens"),
+        F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
+        (
+            F.count(F.lit(1)) * F.max("n_tokens") - F.sum("n_tokens")
+        ).cast("bigint").alias("pad_waste"),
+    )
 
 
 # ----------------------------------------------------------------------
@@ -1471,7 +1439,8 @@ _PPL_BUCKETS_ORACLE = f"""
 
 
 @query("x4_perplexity_buckets", oracle=_PPL_BUCKETS_ORACLE)
-def x4_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("x4_perplexity_buckets_scalable", oracle=_PPL_BUCKETS_ORACLE)
+def x4_perplexity_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity bucketing: score every document with the
     corpus bigram LM (higher mean logprob = more 'in-distribution' =
     lower perplexity), then cut the corpus into NTILE(10) quality
@@ -1480,32 +1449,7 @@ def x4_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     is engine-exact (the LM scores themselves are oracle-matched
     IEEE-identical doubles via x4_bigram_logprob).
 
-    Scale shape: the scoring is the LM pipeline (corpus-aggregated
-    count tables + per-occurrence join); the decile cut is a global
-    NTILE — a single-partition window over (doc_id, score) pairs ONLY
-    (two narrow columns, never the documents). This is the ORACLE-EXACT
-    rung; ``x4_perplexity_buckets_approx`` below is the 100-TB rung —
-    mergeable ``percentile_approx`` decile edges + a scan-side bucket
-    lookup, no global window at all, band-checked against the exact
-    per-decile mass in the same plan."""
-    from pyspark.sql.window import Window
-
-    lp = x4_bigram_logprob(spark, sf_dir).select("doc_id", "avg_logprob")
-    w = Window.orderBy(F.col("avg_logprob").desc(), F.col("doc_id"))
-    ranked = lp.withColumn("decile", F.ntile(10).over(w))
-    return ranked.groupBy(
-        F.col("decile").cast("long").alias("decile")
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.min("avg_logprob"), 6).alias("min_logprob"),
-        F.round(F.max("avg_logprob"), 6).alias("max_logprob"),
-    )
-
-
-@query("x4_perplexity_buckets_scalable", oracle=_PPL_BUCKETS_ORACLE)
-def x4_perplexity_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The oracle-EXACT 100-TB rung of ``x4_perplexity_buckets`` —
-    identical output (shared oracle) with the global NTILE replaced by
+    Both names run this body. The oracle's global NTILE is replaced by
     exact distributed ranks + NTILE arithmetic:
 
     1. range-partition the (doc_id, avg_logprob) pairs on
@@ -1521,7 +1465,7 @@ def x4_perplexity_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFram
 
     So the exact boundary semantics survive without any task seeing
     more than one range-partition; ``x4_perplexity_buckets_approx``
-    remains the sketch rung for when even exact ranks aren't worth a
+    is the sketch rung for when even exact ranks aren't worth a
     range exchange. The rank construction is the shared
     ``functions.distributed.global_ranks`` primitive."""
     from ..functions.distributed import global_ranks, ntile_of_rank
@@ -1573,14 +1517,14 @@ PPL_SKETCH_ACCURACY = 10_000
     """,
 )
 def x4_perplexity_buckets_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100-TB rung of ``x4_perplexity_buckets`` (band-twin
+    """The sketch rung of ``x4_perplexity_buckets`` (band-twin
     contract, same pattern as ``ext_approx_percentile_band``): decile
     edges come from ONE mergeable ``percentile_approx`` sketch over the
     LM scores — partial-aggregated on every partition, merged once —
     and each document is bucketed scan-side by counting edges below its
     score. No window operator anywhere (the plan gate asserts it): the
-    only global step is a 9-value sketch merge, which is what replaces
-    the exact rung's single-partition NTILE at scale.
+    only global step is a 9-value sketch merge, in place of the
+    oracle's global NTILE and the exact deciles' range exchange.
 
     Output contract: exact total doc count (oracle-matched) plus two
     band booleans computed in-plan — all ten deciles non-empty, and
@@ -1603,7 +1547,7 @@ def x4_perplexity_buckets_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(PPL_SKETCH_ACCURACY),
         ).alias("edges")
     )
-    # decile 1 = highest scores (matches the exact rung's DESC NTILE):
+    # decile 1 = highest scores (matches the oracle's DESC NTILE):
     # count ascending edges strictly below the score, subtract from 10
     bucketed = lp.join(F.broadcast(edges)).select(
         (
@@ -1818,7 +1762,8 @@ _BUDGET_SELECT_ORACLE = f"""
 
 
 @query("x8_budget_select", oracle=_BUDGET_SELECT_ORACLE)
-def x8_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("x8_budget_select_scalable", oracle=_BUDGET_SELECT_ORACLE)
+def x8_budget_select_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data selection under a token budget — 'give me the best
     ~10k tokens': rank documents by quality and take the greedy prefix
     whose cumulative token count fits the budget. The quality key is
@@ -1828,49 +1773,10 @@ def x8_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     on any engine and any partitioning — the property a reproducible
     training-data release needs.
 
-    Scale shape: per-doc stats are scan-side projections; the ranking
-    walks (doc_id, wc, score) triples only — never documents — in one
-    single-partition cumulative window. This is the ORACLE-EXACT rung;
-    ``x8_budget_select_scalable`` below computes the identical output
-    with range-partitioned partial sums + exclusive prefix-sum offsets
-    (no single-partition exchange anywhere) and shares this oracle."""
-    from pyspark.sql.window import Window as W
-
-    scored = _budget_scored(spark, sf_dir)
-    cum = W.orderBy(F.col("score").desc(), "doc_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    return (
-        scored.withColumn(
-            "cum_tokens", F.sum("wc").over(cum).cast("long")
-        )
-        .filter(F.col("cum_tokens") <= SELECT_BUDGET)
-    )
-
-
-def _budget_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, wc, score) triples for the budget selection. The score
-    multiplication is forced to BIGINT BEFORE the *1e6 scale-up:
-    ``size()`` returns INT and with ANSI off ``size(..)*1000000``
-    silently wraps past 2147 distinct words (ADVICE r6 #2) — the DuckDB
-    oracle computes the same product in BIGINT (``len`` is BIGINT)."""
-    doc = load_table(spark, sf_dir, "documents")
-    return doc.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("wc"),
-        F.expr(
-            "CAST(size(array_distinct(split(text, ' '))) AS BIGINT)"
-            " * 1000000 DIV size(split(text, ' '))"
-        ).alias("score"),
-    )
-
-
-@query("x8_budget_select_scalable", oracle=_BUDGET_SELECT_ORACLE)
-def x8_budget_select_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100-TB rung of ``x8_budget_select`` — IDENTICAL output (it
-    shares the oracle), with the global cumulative window replaced by
-    the classic distributed prefix sum, so no operator anywhere sees
-    more than one range-partition of (doc_id, wc, score) triples:
+    Both names run this body. The oracle's global cumulative window is
+    replaced by the classic distributed prefix sum, so no operator
+    anywhere sees more than one range-partition of (doc_id, wc, score)
+    triples:
 
     1. ``repartitionByRange(score DESC, doc_id)`` — the range
        partitioner guarantees every key in partition *i* sorts before
@@ -1887,13 +1793,22 @@ def x8_budget_select_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
        broadcast-joined offset = the exact global prefix sum.
 
     The plan gate (tests/test_plans.py) asserts RangePartitioning and
-    the ABSENCE of any single-partition exchange — the property the
-    exact rung cannot have. The partition/count/offset bookkeeping is
-    the shared ``functions.distributed.global_prefix_sums`` primitive
-    (VERDICT r7 ask #3)."""
+    the ABSENCE of any single-partition exchange. The
+    partition/count/offset bookkeeping is the shared
+    ``functions.distributed.global_prefix_sums`` primitive."""
     from ..functions.distributed import global_prefix_sums
 
-    scored = _budget_scored(spark, sf_dir)
+    # the score product is forced to BIGINT BEFORE the *1e6 scale-up:
+    # ``size()`` returns INT, and with ANSI off ``size(..)*1000000``
+    # silently wraps past 2147 distinct words; DuckDB's ``len`` is BIGINT
+    scored = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(F.split("text", " ")).cast("long").alias("wc"),
+        F.expr(
+            "CAST(size(array_distinct(split(text, ' '))) AS BIGINT)"
+            " * 1000000 DIV size(split(text, ' '))"
+        ).alias("score"),
+    )
     cum, _total = global_prefix_sums(
         spark,
         scored,
