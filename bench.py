@@ -22,10 +22,10 @@ import time
 from pyspark.sql import SparkSession
 
 from weather_data_pipeline_spark import registry
-from weather_data_pipeline_spark.session import tune
+from weather_data_pipeline_spark.session import default_parallelism, tune
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = default_parallelism()
 
 HEADLINE = [
     "ext_q1_pricing_summary",
@@ -320,7 +320,7 @@ def main() -> None:
                 stdevs,
                 runs,
                 _sf_from_dir(SF_DIR),
-                cpus=int(CPUS),
+                cpus=CPUS,
                 default_parallelism=spark.sparkContext.defaultParallelism,
             )
         )

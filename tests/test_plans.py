@@ -281,43 +281,19 @@ def test_round5_op_plan_gates(spark):
     assert num_shuffles(_Q["x2_minhash_portable"](spark, SF)) <= 2
 
 
-def test_min_label_propagate_multi_hop_chain(spark):
-    """A 4-node chain (1-2, 2-3, 3-4) has diameter 3, so min-label
-    propagation must iterate past round one to converge — pins the
-    fixpoint loop, not just the clique-shaped easy case; plus a disjoint
-    pair and a singleton."""
+def test_star_components_multi_hop_chain(spark):
+    """A 4-node chain (1-2, 2-3, 3-4) has diameter 3, so the kernel must
+    run past one contraction to settle — pins the fixpoint loop, not
+    just the clique-shaped easy case; plus a disjoint pair and a
+    singleton."""
     from weather_data_pipeline_spark.operators import dedup
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
     )
-    got = {
-        r.doc_id: r.component
-        for r in dedup.min_label_propagate(nodes, pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
-
-
-def test_min_label_propagate_broadcast_gate_fallback(spark, monkeypatch):
-    """The propagation broadcasts (edges and the per-round nbr_min) are
-    GATED on the shared row budget — a broadcast hint overrides Spark's
-    size threshold, so an ungated hint on a web-scale dup graph would
-    collect it to the driver instead of degrading to a shuffle join.
-    Force the budget to 0 and pin that the shuffle-join path converges
-    to the identical fixpoint."""
-    from weather_data_pipeline_spark.functions import broadcast
-    from weather_data_pipeline_spark.operators import dedup
-
-    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
-    )
-    monkeypatch.setattr(broadcast, "BROADCAST_ROWS", 0)
-    got = {
-        r.doc_id: r.component
-        for r in dedup.min_label_propagate(nodes, pairs).collect()
-    }
+    labels, _ = dedup.star_components(nodes, pairs)
+    got = {r.doc_id: r.component for r in labels.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
 
 
@@ -328,7 +304,7 @@ def test_broadcast_budget_helper_gates_the_hint(spark, monkeypatch):
     import inspect
 
     from weather_data_pipeline_spark.functions import broadcast
-    from weather_data_pipeline_spark.operators import dedup, graph
+    from weather_data_pipeline_spark.operators import graph
     from weather_data_pipeline_spark.plans.inspect import optimized_plan
 
     a = spark.range(100)
@@ -346,7 +322,6 @@ def test_broadcast_budget_helper_gates_the_hint(spark, monkeypatch):
         graph.x9_kcore_peel,
         graph.x9_jaccard_neighbors,
         graph.sssp_rounds,
-        dedup.min_label_propagate,
     ]
     for fn in kernels:
         src = inspect.getsource(fn)
@@ -364,7 +339,6 @@ _BUDGET_GATED = [
     ("x9_kcore_peel", False),
     ("x9_bfs_reach", False),
     ("x9_sssp_weighted", False),
-    ("x2_dup_components", False),
 ]
 
 
@@ -484,20 +458,45 @@ def test_ivf_corpus_cache_scoped(spark):
         assert after <= before, (name, before, after)
 
 
-def test_star_components_matches_min_label_on_random_graphs(spark):
-    """large-star/small-star must agree with min-label propagation (and
-    hence the recursive-CTE oracle) on assorted graph shapes: random
-    sparse graphs, a clique, disjoint pairs, isolated nodes."""
+def _union_find_components(n_max: int, pairs: list) -> dict:
+    """{node: min node reachable} for nodes 1..n_max-1 — the pure-Python
+    reference for the components kernel."""
+    parent = {i: i for i in range(1, n_max)}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum
+    return {i: find(i) for i in parent}
+
+
+def test_star_components_matches_union_find(spark):
+    """large-star/small-star must agree with a union-find reference on
+    assorted graph shapes: random sparse graphs, a clique, disjoint
+    pairs, isolated nodes, a 60-node chain with shuffled ids, a hub
+    (star) whose center is not the minimum, and two disjoint chains.
+    Duplicate and reversed pairs are kept in the random cases."""
     import random
 
     from weather_data_pipeline_spark.operators import dedup
 
     rng = random.Random(7)
+    ids = list(range(1, 61))
+    rng.shuffle(ids)
     cases = [
         [(1, 2), (2, 3), (3, 4), (5, 6)],
         [(a, b) for a in range(1, 6) for b in range(a + 1, 6)],  # clique
         [(rng.randrange(1, 30), rng.randrange(1, 30)) for _ in range(25)],
         [(rng.randrange(1, 50), rng.randrange(1, 50)) for _ in range(40)],
+        list(zip(ids, ids[1:])),  # 60-node chain, shuffled ids
+        [(17, leaf) for leaf in range(1, 40) if leaf != 17],  # hub
+        [(i, i + 1) for i in range(1, 20)]  # two disjoint chains,
+        + [(i + 1, i) for i in range(30, 45)],  # one written backwards
     ]
     for pairs_data in cases:
         pairs_data = [(a, b) for a, b in pairs_data if a != b]
@@ -506,13 +505,9 @@ def test_star_components_matches_min_label_on_random_graphs(spark):
             [(i,) for i in range(1, n_max)], "doc_id long"
         )
         pairs = spark.createDataFrame(pairs_data, "doc_a long, doc_b long")
-        want = {
-            r.doc_id: r.component
-            for r in dedup.min_label_propagate(nodes, pairs).collect()
-        }
         labels, rounds = dedup.star_components(nodes, pairs)
         got = {r.doc_id: r.component for r in labels.collect()}
-        assert got == want, pairs_data
+        assert got == _union_find_components(n_max, pairs_data), pairs_data
         assert rounds <= 12
 
 
@@ -552,9 +547,10 @@ def test_approx_count_distinct_within_hll_band(spark):
 
 def test_star_components_chain_logarithmic_rounds(spark):
     """The case star contraction exists for: a 1024-node chain has
-    diameter 1023 (min-label would need ~1023 rounds — far past
-    _MAX_CC_ITERS), but alternating large/small-star collapses it in
-    O(log n) rounds, every node labeled with the chain minimum."""
+    diameter 1023 (hop-by-hop label propagation would need ~1023
+    rounds — far past _MAX_CC_ITERS), but alternating large/small-star
+    collapses it in O(log n) rounds, every node labeled with the chain
+    minimum."""
     from weather_data_pipeline_spark.operators import dedup
 
     n = 1024
@@ -1084,10 +1080,16 @@ SHARED_BODY_PAIRS = {
 }
 
 
-@pytest.mark.parametrize("alias,body", sorted(SHARED_BODY_PAIRS.items()))
+@pytest.mark.parametrize(
+    "alias,body",
+    sorted(
+        {**SHARED_BODY_PAIRS, "x2_dup_components_star": "x2_dup_components"}.items()
+    ),
+)
 def test_shared_result_contracts_resolve_to_one_body(alias, body):
     """Each exact/scale name pair runs one function: the alias is
-    registered on the scale-safe body, not on a second implementation."""
+    registered on the scale-safe body, not on a second implementation.
+    The two component names share the one star-contraction body."""
     assert _Q[alias].__name__ == _Q[body].__name__ == body
 
 

@@ -3,10 +3,10 @@
 A broadcast hint overrides Spark's size threshold — it never "drops
 out" — so an ungated hint on a web-scale vector collects it to the
 driver where a keyed shuffle join would degrade gracefully. Every gated
-join in ``operators/graph.py`` and ``dedup.min_label_propagate`` hints
-through ``broadcast_under_budget`` with a row count its caller already
-probed (a bounded count over a materialized checkpoint); over the
-budget the hint is withheld and the planner picks a shuffle join.
+join in ``operators/graph.py`` hints through ``broadcast_under_budget``
+with a row count its caller already probed (a bounded count over a
+materialized checkpoint); over the budget the hint is withheld and the
+planner picks a shuffle join.
 """
 
 from __future__ import annotations

@@ -42,10 +42,9 @@ contracts value-checked by ``x2_minhash_lsh_recall`` and
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.broadcast import broadcast_under_budget
 from ..registry import query
 from ..session import fan_out
 from ..sources.testdata import load_table
@@ -555,8 +554,9 @@ def decontaminate_containment_flags(tr: DataFrame, ev: DataFrame) -> DataFrame:
     )
 
 
-#: convergence safety bound for min-label propagation (graph diameter of
-#: near-dup clusters; dup groups are clique-ish, so real diameters are tiny)
+#: convergence safety bound for star contraction: rounds grow with the
+#: log of the largest component's size (a 1024-node chain settles in 10),
+#: so no real pair graph comes near it — it only stops a broken loop
 _MAX_CC_ITERS = 50
 
 
@@ -587,15 +587,16 @@ _DUP_COMPONENTS_ORACLE = f"""
 
 
 def _dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, component) — ``min_label_propagate`` over the
+    """(doc_id, component) — ``star_components`` over the
     ``x2_ngram_jaccard`` pair graph, every document a node: the
     components every keeper policy (canonical, keep-best, soft weights)
     decides over."""
     doc = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = x2_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    return min_label_propagate(doc, pairs)
+    return star_components(doc, pairs)[0]
 
 
+@query("x2_dup_components_star", oracle=_DUP_COMPONENTS_ORACLE)
 @query("x2_dup_components", oracle=_DUP_COMPONENTS_ORACLE)
 def x2_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup ladder's final rung: connected components over the
@@ -604,18 +605,10 @@ def x2_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``is_canonical`` marks the doc a pipeline would keep. Docs with no
     near-dup edge are their own singleton component.
 
-    Implementation is min-label propagation: labels start as own doc_id;
-    each iteration joins labels to the (doubled) edge list, takes the
-    neighborhood min, and ``localCheckpoint``s the result so lineage stays
-    flat across iterations (the standard Spark iterative-algorithm shape —
-    on a cluster this is ``checkpoint()`` to reliable storage). One
-    shuffle per iteration on doc_id; iterations bounded by cluster
-    diameter (clique-ish dup groups → 2-3 in practice), with convergence
-    detected by a did-any-label-shrink existence probe on the
-    checkpointed step — limit-1, overflow-proof at any row count. At
-    100 TB the same loop runs with the large-star/small-star optimization
-    (alternate min over full vs local neighborhoods) to collapse
-    high-diameter chains in O(log n) rounds; the join shape is identical.
+    Both names run this body on ``star_components``, whose round count
+    grows with the log of a component's size, not its diameter: at
+    100 TB a high-diameter near-dup graph (transcript chains, crawl
+    mirrors) still settles in a few rounds.
     Oracle: the identical fixpoint via a recursive reachability CTE."""
     return _dup_labels(spark, sf_dir).select(
         "doc_id",
@@ -624,161 +617,86 @@ def x2_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def min_label_propagate(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Connected components via min-label propagation until fixpoint.
-
-    ``nodes``: (doc_id); ``pairs``: undirected edges as (doc_a, doc_b).
-    Returns (doc_id, component) where component = min doc_id reachable."""
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # near-dup graphs are tiny relative to the corpus: broadcast the edge
-    # list so each propagation round is map-side (the corpus never
-    # reshuffles to meet edges). The hint is gated on a bounded count of
-    # the materialized edge list: past the shared budget both
-    # propagation joins fall back to the planner's shuffle strategy
-    # instead of collecting a web-scale dup graph to the driver.
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    edges = broadcast_under_budget(edges, n_edges)
-    labels = nodes.select("doc_id", F.col("doc_id").alias("component"))
-    labels = labels.localCheckpoint()
-    for _ in range(_MAX_CC_ITERS):
-        nbr_min = (
-            edges.join(labels, edges["src"] == labels["doc_id"])
-            .groupBy(edges["dst"].alias("doc_id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # `shrunk` rides along in the checkpointed step so convergence is
-        # a limit-1 existence probe on materialized data — overflow-proof
-        # at any scale (a SUM(component) probe could alias on int64
-        # overflow once Σ doc_id exceeds 2^63) and no costlier: labels
-        # only decrease, so "no label shrank" IS the fixpoint.
-        # nbr_min is bounded by the edge list's distinct endpoints, so
-        # it broadcasts under the SAME probe as edges: while small, the
-        # |corpus|-row label vector never shuffles per round — the only
-        # per-round exchange left is nbr_min's own groupBy; past the
-        # budget the planner's shuffle join carries the round.
-        stepped = (
-            labels.alias("l")
-            .join(
-                broadcast_under_budget(nbr_min.alias("n"), n_edges),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("l.component"),
-                    F.coalesce(F.col("n.nbr_component"), F.col("l.component")),
-                ).alias("component"),
-                F.coalesce(
-                    F.col("n.nbr_component") < F.col("l.component"), F.lit(False)
-                ).alias("shrunk"),
-            )
-            .localCheckpoint()
-        )
-        labels = stepped.select("doc_id", "component")
-        if stepped.filter("shrunk").isEmpty():
-            break
-    else:
-        raise RuntimeError(
-            f"component labels still moving after {_MAX_CC_ITERS} rounds"
-        )
-    return labels
-
-
-def _star_round(edges: DataFrame, large: bool) -> DataFrame:
+def _star(edges: DataFrame, large: bool) -> DataFrame:
     """One large-star or small-star contraction over a directed edge list.
 
     For each node u with neighborhood Γ(u) (symmetrized) and
     m = min(Γ(u) ∪ {u}): large-star re-points every STRICTLY LARGER
     neighbor at m (collapses long tails toward minima without ever
     disturbing smaller nodes); small-star re-points u and its ≤-neighbors
-    at m (flattens the local minima into stars). Alternating the two
-    converges to per-component stars rooted at the component minimum in
-    O(log n) rounds — Kiveris et al., "Connected Components in MapReduce
-    and Beyond" (SOCC'14) — vs the O(diameter) of plain min-label
-    propagation. Each round is one groupBy(src) shuffle + a distinct."""
+    at m (flattens the local minima into stars). Emissions REPLACE the
+    edge set, nothing is kept; both only emit larger → smaller edges.
+
+    Small-star also flags each emitted edge ``ok`` when its emitter u is
+    settled: a root (m = u) or a leaf with one neighbor. The degree
+    counts rows, so a duplicate edge only delays the flag, never fakes
+    it. m and the degree are window aggregates over u's rows, so each
+    contraction is one exchange on src, not an aggregate plus a join."""
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    m = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
+    hood = Window.partitionBy("src")
+    nbrs = sym.select(
+        "src",
+        "dst",
+        F.least(F.min("dst").over(hood), F.col("src")).alias("m"),
+        F.count(F.lit(1)).over(hood).alias("deg"),
     )
-    joined = sym.join(m, "src")
     if large:
-        # u's strictly-larger neighbors re-point at m(u); smaller-side
-        # rows of each undirected edge are covered by the reversed row's
-        # perspective — emissions REPLACE the edge set, nothing is kept.
-        out = joined.filter(F.col("dst") > F.col("src")).select(
+        return nbrs.filter(F.col("dst") > F.col("src")).select(
             F.col("dst").alias("src"), F.col("m").alias("dst")
         )
-    else:
-        out = joined.filter(F.col("dst") <= F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        ).union(m.select(F.col("src"), F.col("m").alias("dst")))
-    return out.filter(F.col("src") != F.col("dst")).distinct()
-
-
-def star_components(
-    nodes: DataFrame, pairs: DataFrame, max_iters: int = _MAX_CC_ITERS
-) -> tuple[DataFrame, int]:
-    """Connected components via alternating large-star/small-star — the
-    O(log n)-round form of ``min_label_propagate`` (r3 ask #8): a 10⁴-node
-    chain converges in ~2·log₂ rounds where plain propagation needs 10⁴.
-    Same contract: (doc_id) nodes + undirected (doc_a, doc_b) pairs →
-    (doc_id, component = min reachable doc_id). Returns (labels, rounds).
-
-    Fixpoint probe is EXACT and overflow-proof: equal edge count plus an
-    empty multiset difference (``exceptAll``) between consecutive rounds —
-    never a sum that could alias. Each round localCheckpoints so lineage
-    stays flat (cluster form: ``checkpoint()`` to reliable storage)."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    ok = ((F.col("m") == F.col("src")) | (F.col("deg") == 1)).alias("ok")
+    return (
+        nbrs.filter(F.col("dst") <= F.col("src"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"), ok)
+        .union(nbrs.select("src", F.col("m").alias("dst"), ok))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
     )
-    n_edges = edges.count()
-    rounds = 0
-    for _ in range(max_iters):
-        stepped = _star_round(edges, large=True)
-        stepped = _star_round(stepped, large=False).localCheckpoint()
-        rounds += 1
-        n_stepped = stepped.count()
-        if n_stepped == n_edges and stepped.exceptAll(edges).isEmpty():
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star then small-star round → (src, dst, ok), one row per
+    distinct edge, ``ok`` false where any emitter of the edge is
+    unsettled. When every node is settled, large-star's output is
+    already a star forest rooted at each component's minimum and
+    small-star returns it unchanged — the fixpoint, decided by the
+    round itself. Alternating the two contractions converges in
+    O(log n) rounds — Kiveris et al., "Connected Components in
+    MapReduce and Beyond" (SOCC'14) — against the O(diameter) of plain
+    min-label propagation."""
+    small = _star(_star(edges, large=True), large=False)
+    return small.groupBy("src", "dst").agg(F.min("ok").alias("ok"))
+
+
+def star_components(nodes: DataFrame, pairs: DataFrame) -> tuple[DataFrame, int]:
+    """Connected components by alternating large-star/small-star:
+    (doc_id) nodes + undirected (doc_a, doc_b) pairs → (doc_id,
+    component = min reachable doc_id). Returns (labels, rounds).
+
+    Duplicate pairs and self-pairs are harmless. The input edges are
+    checkpointed once (the symmetrizing union reads them twice); each
+    round is checkpointed so lineage stays flat, and one limit-1 probe
+    for an unsettled edge on that checkpoint decides convergence."""
+    edges = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).localCheckpoint()
+    for rounds in range(1, _MAX_CC_ITERS + 1):
+        stepped = _star_round(edges).localCheckpoint()
+        edges = stepped.select("src", "dst")
+        if stepped.filter(~F.col("ok")).isEmpty():
             break
-        edges, n_edges = stepped, n_stepped
     else:
-        raise RuntimeError(f"star contraction still moving after {max_iters} rounds")
-    # Fixpoint edges form stars (child → component root, root < child):
-    # a node's component is its root if it has one, else itself.
-    roots = edges.groupBy(F.col("src").alias("doc_id")).agg(
-        F.min("dst").alias("root")
-    )
+        raise RuntimeError(
+            f"star contraction still moving after {_MAX_CC_ITERS} rounds"
+        )
+    # Settled edges form a star forest: each non-root node has exactly
+    # one edge, to its component's root; a node without one is a root.
+    roots = edges.select(F.col("src").alias("doc_id"), F.col("dst").alias("root"))
     labels = nodes.join(roots, "doc_id", "left").select(
         "doc_id", F.coalesce("root", "doc_id").alias("component")
     )
     return labels, rounds
-
-
-@query("x2_dup_components_star", oracle=_DUP_COMPONENTS_ORACLE)
-def x2_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``x2_dup_components`` computed by the O(log n) star-contraction
-    loop instead of O(diameter) min-label propagation — same oracle, same
-    output, different (scale-preferred) physical algorithm: at 100 TB a
-    high-diameter near-dup graph (transcript chains, crawl mirrors) makes
-    per-round shuffles the dominant cost, and large-star/small-star
-    bounds the round count logarithmically."""
-    doc = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = x2_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _ = star_components(doc, pairs)
-    return labels.select(
-        "doc_id",
-        "component",
-        (F.col("doc_id") == F.col("component")).alias("is_canonical"),
-    )
 
 
 #: portable MinHash: signature length and banding for the LSH twin
@@ -1419,8 +1337,6 @@ def _tfidf_rem_sq(weighted: DataFrame, norms: DataFrame) -> DataFrame:
     norm² INCLUDING the row (1 − (cum − u²)). Any input subset of docs
     yields exactly that subset's rows (the window is per-doc), which
     is what lets the selectivity probe run on a sample."""
-    from pyspark.sql.window import Window
-
     unit = weighted.join(norms, "doc_id").select(
         "doc_id",
         "h",
@@ -1686,8 +1602,6 @@ def x1_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number pass, no pair joins), then one shuffle back on doc_id to
     reassemble. Docs whose every line is a duplicate drop out of the
     output on both engines (C4 drops empty docs too)."""
-    from pyspark.sql.window import Window
-
     lines = doc_lines(load_table(spark, sf_dir, "documents"))
     first = Window.partitionBy("line").orderBy("doc_id", "line_idx")
     kept = (
@@ -1739,8 +1653,6 @@ def x1_intradoc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id the whole op is a single exchange followed by two local
     window/agg passes; no corpus-wide key ever forms (unlike the
     cross-doc variant, whose window keys on the line text itself)."""
-    from pyspark.sql.window import Window
-
     lines = doc_lines(load_table(spark, sf_dir, "documents"))
     first = Window.partitionBy("doc_id", "line").orderBy("line_idx")
     tagged = lines.withColumn("rn", F.row_number().over(first))
@@ -2036,8 +1948,6 @@ def x1_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a 36-token block on 5% of docs). If multiplicity ever
     dominates, the successor is a salted two-phase count
     (groupBy(wh, salt) partial → groupBy(wh) merge + join-back)."""
-    from pyspark.sql.window import Window
-
     doc = load_table(spark, sf_dir, "documents")
     ex = _span_exploded(doc)
 
@@ -2180,8 +2090,6 @@ def x1_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id shuffle join, never wider than |docs with removals|. Token
     filtering is a JVM filter-with-index over exists(intervals) —
     no Python anywhere."""
-    from pyspark.sql.window import Window
-
     doc = load_table(spark, sf_dir, "documents")
     ex = _span_exploded(doc)
 
@@ -2368,7 +2276,7 @@ def x2_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     show helps.
 
     Pure composition of the dedup ladder: the SAME near-dup pair graph
-    (gram-keyed Jaccard join) and the SAME min-label-propagation
+    (gram-keyed Jaccard join) and the SAME ``star_components``
     components as ``x2_dup_components``, then one component-keyed
     count and a co-partitioned join-back — the weight step adds one
     aggregate + one join on top of machinery whose 100 TB posture
@@ -3289,10 +3197,10 @@ def x2_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
       substitution, so the distance is position-mismatch count —
       engine-unambiguous) plus the integer-cents proximity; DISTINCT
       pairs because a pair can meet on up to 3 segments × 2 bands.
-    - CLUSTER: the ladder's shared ``min_label_propagate`` connected
-      components (one shuffle per round, broadcast edge list,
-      fixpoint-probed), then one component-keyed count/sum aggregate
-      — the golden-record merge step.
+    - CLUSTER: the ladder's shared ``star_components`` connected
+      components (logarithmic rounds, one limit-1 fixpoint probe per
+      round), then one component-keyed count/sum aggregate — the
+      golden-record merge step.
 
     Determinism: all keys and aggregates are integers; balance cents
     are exact (2-decimal doubles × 100 round tie-free). Oracle: the
@@ -3372,7 +3280,7 @@ def _rl_link_groups(grp: DataFrame) -> DataFrame:
         .distinct()
     )
     nodes = grp.select(F.col("rep_key").alias("doc_id"))
-    comp = min_label_propagate(nodes, pairs)
+    comp = star_components(nodes, pairs)[0]
     return (
         comp.join(grp, comp["doc_id"] == grp["rep_key"])
         .groupBy(F.col("component").alias("entity_id"))

@@ -8,7 +8,7 @@ BFS reach and weighted shortest paths (one delta-Bellman–Ford kernel,
 ``sssp_rounds``; BFS is its unit-weight case) — plus the one-pass
 shape queries: triangle count, degree histogram and neighborhood
 Jaccard. Connected components live with the dedup tier
-(``dedup.min_label_propagate``).
+(``dedup.star_components``).
 
 Shared pieces, each built once here:
 

@@ -1389,15 +1389,15 @@ def x3_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x2_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication: embedding-cosine near-dup
     PAIRS (the gated exact rung here; LSH buckets past the ceiling)
-    feed the same min-label component propagation as the text dedup
+    feed the same ``star_components`` kernel as the text dedup
     ladder, yielding one canonical keeper per semantic CLUSTER —
     paraphrases and re-encodings that share no n-grams but sit together
     in embedding space. The cross-family composition is the point: the
     pair source swaps (jaccard grams ↔ cosine sims ↔ LSH candidates)
     while the component/keeper machinery is reused verbatim — at
-    100 TB the propagation cost depends on the near-dup GRAPH (tiny),
+    100 TB the component cost depends on the near-dup GRAPH (tiny),
     not the corpus."""
-    from .dedup import min_label_propagate
+    from .dedup import star_components
 
     pairs = x3_embedding_near_dup(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
@@ -1405,7 +1405,7 @@ def x2_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")
     )
-    labels = min_label_propagate(nodes, pairs)
+    labels = star_components(nodes, pairs)[0]
     return labels.select(
         F.col("doc_id").alias("vec_id"),
         F.col("component").alias("cluster"),
