@@ -8,6 +8,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def job_id(spark) -> int:
+    """The DAG scheduler's next job id: the delta around a call counts
+    every job the call ran."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="wdps-tests")

@@ -3,6 +3,7 @@ batch answer — stream-batch parity is the correctness bar."""
 
 from __future__ import annotations
 
+import os
 from functools import partial
 
 import pytest
@@ -14,7 +15,7 @@ from weather_data_pipeline_spark.sources import weather as wsrc
 from weather_data_pipeline_spark.streaming import jobs
 from weather_data_pipeline_spark.transforms import flatten_raw
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, job_id
 
 
 def test_incremental_latest_matches_batch(spark, tmp_path):
@@ -45,6 +46,47 @@ def test_incremental_latest_matches_batch(spark, tmp_path):
         }
         assert got == want, f"divergence after {n_days} day(s)"
         assert len(got) == 9
+        # Superseded snapshots are deleted: the live one and its predecessor stay.
+        assert len([d for d in os.listdir(state) if d.startswith("v")]) <= 2
+
+
+def test_latest_trigger_runs_two_jobs(spark, tmp_path):
+    """Each trigger of the incremental latest-per-key job runs 2 jobs, the
+    fold's shuffle and the snapshot write, over fresh or existing state:
+    the previous snapshot and ``read_state`` are read under the schema the
+    snapshot recorded, so neither runs parquet's footer-inference job."""
+    root = str(tmp_path)
+    state, ckpt = f"{root}/_state", f"{root}/_checkpoint"
+    for date in wsrc.FIXTURE_DATES[:2]:
+        wsrc.write_raw_docs(wsrc.synthesize_raw_docs([date]), root)
+        src = flatten_raw(jobs.stream_raw_weather(spark, root))
+        before = job_id(spark)
+        jobs.incremental_latest_per_key(
+            spark, src, key="city", order="localtime",
+            tiebreak="localtime_epoch", state_path=state, checkpoint=ckpt,
+        )
+        assert job_id(spark) - before == 2, date
+        before = job_id(spark)
+        jobs.read_state(spark, state)
+        assert job_id(spark) == before
+
+
+def test_self_made_checkpoints_are_removed(spark, tmp_path):
+    """A drain without a caller checkpoint deletes the one it made once the
+    query has terminated; a caller's checkpoint stays for the next run."""
+    root = str(tmp_path)
+    wsrc.write_raw_docs(wsrc.synthesize_raw_docs(wsrc.FIXTURE_DATES[:1]), root)
+    before = set(os.listdir(jobs.SCRATCH))
+    for ckpt in (None, f"{root}/_checkpoint"):
+        jobs.incremental_latest_per_key(
+            spark, flatten_raw(jobs.stream_raw_weather(spark, root)),
+            key="city", order="localtime", tiebreak="localtime_epoch",
+            state_path=f"{root}/_state", checkpoint=ckpt,
+        )
+    jobs.tumbling_counts(jobs.stream_events(spark, SF_SMOKE), "tumbling_ckpt_gc")
+    assert spark.table("tumbling_ckpt_gc").count() > 0
+    assert set(os.listdir(jobs.SCRATCH)) == before
+    assert os.path.isdir(f"{root}/_checkpoint/commits")
 
 
 def test_stream_source_schema_full(spark):

@@ -15,7 +15,7 @@ from weather_data_pipeline_spark import pipeline
 from weather_data_pipeline_spark.sources import weather as wsrc
 from weather_data_pipeline_spark.transforms import flatten_raw
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, job_id
 
 
 @pytest.fixture(scope="module")
@@ -86,10 +86,16 @@ def test_flagship_latest_snapshot(spark, curated):
         assert r.localtime == maxes[city]
 
 
-def _job_id(spark) -> int:
-    """The DAG scheduler's next job id: the delta around a call counts
-    every job the call ran."""
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+def test_session_builds_without_call_site_capture(spark):
+    """``get_spark`` turns PySpark's per-Column call-site capture off. It
+    is a static conf, so the builder is the only place it can be set."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException, match="CANNOT_MODIFY_STATIC_CONFIG"):
+        spark.conf.set(key, "true")
 
 
 def _spark_rows(df, city: str) -> list[str]:
@@ -115,9 +121,9 @@ def test_serve_filter_and_json(spark, curated):
     try:
         assert pipeline.serve(snap, "All") == _spark_rows(snap, "All")
         for city in [*wsrc.CITIES, "Atlantis", "All"]:
-            before = _job_id(spark)
+            before = job_id(spark)
             got = pipeline.serve(snap, city)
-            assert _job_id(spark) == before, city
+            assert job_id(spark) == before, city
             assert got == _spark_rows(snap, city), city
         assert pipeline.serve(snap, "Atlantis") == []
     finally:
@@ -149,17 +155,17 @@ def test_serve_memo_invalidation(spark, tmp_path, monkeypatch):
     assert pipeline.serve(snap, "All") == _spark_rows(snap, "All")
 
     snap.unpersist()
-    before = _job_id(spark)
+    before = job_id(spark)
     assert pipeline.serve(snap, "Tokyo") == _spark_rows(snap, "Tokyo")
-    assert _job_id(spark) > before
+    assert job_id(spark) > before
 
     monkeypatch.setattr(pipeline, "SERVE_MEMO_ROWS", 8)
     big = pipeline.latest_snapshot(spark, table).persist()
     try:
         for city in ["London", "All", "Tokyo", "Atlantis"]:
-            before = _job_id(spark)
+            before = job_id(spark)
             assert pipeline.serve(big, city) == _spark_rows(big, city), city
-            assert _job_id(spark) > before, city
+            assert job_id(spark) > before, city
         assert pipeline._memos[big].rows is None
     finally:
         big.unpersist()

@@ -9,10 +9,25 @@ runs ``local[N]``. Scale posture comes from configuration, not code:
 - UTC session timezone (oracle comparability + per-row tz correctness,
   see SURVEY.md §7.4.1)
 - Arrow enabled for any pandas interchange
+- PySpark's DataFrame call-site capture off (``get_spark`` only)
 
 ``tune(spark)`` applies the *runtime-settable* subset to a session we did
 not create (the driver hands us one), so query semantics (timezone, ANSI,
 AQE) never depend on who built the session.
+
+Call-site capture: with ``spark.python.sql.dataFrameDebugging.enabled``
+on (PySpark's default), every ``Column`` method and every ``F.*`` call
+walks the Python stack and makes three extra py4j calls (read
+``spark.sql.stackTracesInDataFrameContext``, set and then clear the JVM's
+``PySparkCurrentOrigin``). That is 1-1.5 ms per ``F.col`` against ~0.1 ms
+for a bare py4j call, and plan building in the pipeline is driver-bound:
+``transforms.flatten_raw``'s 31 columns cost 0.09 s of its 0.12 s. The
+conf is a *static* SQL conf (``spark.conf.set`` raises
+``CANNOT_MODIFY_STATIC_CONFIG``), so only ``get_spark``'s builder can set
+it, and ``tune`` cannot turn it off on a session it is handed. What is
+lost: a runtime error no longer carries the Python ``file:line``
+"DataFrame context" of the call that built the failing expression; the
+error class and message are unchanged.
 """
 
 from __future__ import annotations
@@ -77,6 +92,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Static SQL conf: settable here only (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")

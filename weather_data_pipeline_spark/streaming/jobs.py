@@ -31,17 +31,35 @@ at-least-once: a crash after the flip and before the checkpoint commit
 re-delivers the batch on restart, so a batch whose prefix already heads
 ``_VERSION`` is skipped — additive registries never double-count, and
 every other registry is left as it was.
+
+Each snapshot records its schema as ``_SCHEMA.json`` (written after the
+parquet files, before the flip), and the next trigger's ``prev`` and
+``read_state`` read the snapshot under it, so no read runs parquet's
+footer-inference job: a trigger over existing state runs 2 Spark jobs
+(the fold's shuffle and the write), the same as the first trigger. A
+snapshot without the file (one written before schemas were recorded)
+is read by footer inference. After the flip the step deletes every
+snapshot but the live one and its predecessor, so a state directory
+holds at most two and a reader still scanning the previous
+``read_state`` keeps its files. Checkpoints the jobs create for
+themselves (no ``checkpoint`` argument) are deleted once the query has
+terminated, since no caller knows their path to resume them; a caller's
+checkpoint is kept.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import TESTDATA, WEATHER_RAW
 
@@ -56,6 +74,21 @@ def _ckpt(tag: str) -> str:
     path = os.path.join(SCRATCH, f"{tag}-{uuid.uuid4().hex[:8]}")
     os.makedirs(path, exist_ok=True)
     return path
+
+
+@contextmanager
+def _checkpoint(tag: str, checkpoint: str | None) -> Iterator[str]:
+    """The caller's ``checkpoint``, or a fresh ``_ckpt`` directory that is
+    deleted on exit: nothing can resume a checkpoint whose path only this
+    call knows."""
+    if checkpoint is not None:
+        yield checkpoint
+        return
+    path = _ckpt(tag)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def stream_raw_weather(spark: SparkSession, root: str) -> DataFrame:
@@ -141,12 +174,21 @@ def streaming_dedup(source: DataFrame, sink_table: str) -> None:
 def run_to_completion(writer, tag: str, checkpoint: str | None = None):
     """Start with availableNow (drain backlog, stop) and block until done.
     A caller-supplied ``checkpoint`` makes repeat runs incremental: only
-    files not yet recorded in the checkpoint's file log are processed."""
-    q = writer.option("checkpointLocation", checkpoint or _ckpt(tag)).trigger(
-        availableNow=True
-    ).start()
-    q.awaitTermination()
+    files not yet recorded in the checkpoint's file log are processed;
+    without one, the checkpoint made here is deleted once the query ends."""
+    with _checkpoint(tag, checkpoint) as path:
+        q = writer.option("checkpointLocation", path).trigger(
+            availableNow=True
+        ).start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()  # a no-op once drained; an interrupted wait stops the query
     return q
+
+
+#: A snapshot's schema, as ``StructType.json()`` (hidden from parquet scans).
+_SCHEMA = "_SCHEMA.json"
 
 
 def _state_version(state_path: str) -> str | None:
@@ -157,12 +199,23 @@ def _state_version(state_path: str) -> str | None:
         return f.read().strip() or None
 
 
+def _read_snapshot(spark: SparkSession, state_path: str, version: str) -> DataFrame:
+    """One snapshot, read under its recorded schema when it has one."""
+    snap = os.path.join(state_path, version)
+    try:
+        with open(os.path.join(snap, _SCHEMA)) as f:
+            schema = StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(snap)  # written before schemas were recorded
+    return spark.read.schema(schema).parquet(snap)
+
+
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Read the current snapshot of an incremental state directory."""
     version = _state_version(state_path)
     if version is None:
         raise FileNotFoundError(f"no state snapshot at {state_path}")
-    return spark.read.parquet(os.path.join(state_path, version))
+    return _read_snapshot(spark, state_path, version)
 
 
 def _versioned_merge(
@@ -182,7 +235,10 @@ def _versioned_merge(
     the ``_VERSION`` pointer (tmp file + ``os.replace``) — the
     write-new-then-swap protocol of Delta/Iceberg, done by hand so the
     engine carries no table-format dependency. Each step rewrites the
-    full state, so a drain costs O(batches × |state|).
+    full state, so a drain costs O(batches × |state|). The step also
+    records the snapshot's schema and deletes superseded snapshots
+    (module docstring); that assumes one writer per state directory, as
+    the pointer flip already does.
 
     Replay rule: the run token is the checkpoint path's hash (a fresh
     checkpoint, hence a fresh token, when ``checkpoint=None``). A true
@@ -194,31 +250,37 @@ def _versioned_merge(
     fold — additive ones would double-count, idempotent ones would
     rewrite the same state — and costs one string compare on the
     version the step reads anyway."""
-    checkpoint = checkpoint or _ckpt(tag)
-    token = hashlib.sha1(checkpoint.encode()).hexdigest()[:8]
+    with _checkpoint(tag, checkpoint) as checkpoint:
+        token = hashlib.sha1(checkpoint.encode()).hexdigest()[:8]
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        version = _state_version(state_path)
-        head = f"v{token}b{batch_id}-"
-        if version is not None and version.startswith(head):
-            return  # at-least-once replay: same lineage, same batch id
-        prev = (
-            None
-            if version is None
-            else batch.sparkSession.read.parquet(os.path.join(state_path, version))
-        )
-        new_version = head + uuid.uuid4().hex[:8]
-        fold(batch, prev, batch_id).write.parquet(
-            os.path.join(state_path, new_version)
-        )
-        tmp = os.path.join(state_path, f"_VERSION.{new_version}")
-        with open(tmp, "w") as f:
-            f.write(new_version)
-        os.replace(tmp, os.path.join(state_path, "_VERSION"))  # atomic flip
+        def step(batch: DataFrame, batch_id: int) -> None:
+            version = _state_version(state_path)
+            head = f"v{token}b{batch_id}-"
+            if version is not None and version.startswith(head):
+                return  # at-least-once replay: same lineage, same batch id
+            prev = (
+                None
+                if version is None
+                else _read_snapshot(batch.sparkSession, state_path, version)
+            )
+            new_version = head + uuid.uuid4().hex[:8]
+            snap = os.path.join(state_path, new_version)
+            state = fold(batch, prev, batch_id)
+            state.write.parquet(snap)
+            with open(os.path.join(snap, _SCHEMA), "w") as f:
+                f.write(state.schema.json())
+            tmp = os.path.join(state_path, f"_VERSION.{new_version}")
+            with open(tmp, "w") as f:
+                f.write(new_version)
+            os.replace(tmp, os.path.join(state_path, "_VERSION"))  # atomic flip
+            # The predecessor stays: a reader of the last read_state may still scan it.
+            for name in os.listdir(state_path):
+                if name.startswith("v") and name not in (new_version, version):
+                    shutil.rmtree(os.path.join(state_path, name), ignore_errors=True)
 
-    run_to_completion(
-        source.writeStream.foreachBatch(step).outputMode("update"), tag, checkpoint
-    )
+        run_to_completion(
+            source.writeStream.foreachBatch(step).outputMode("update"), tag, checkpoint
+        )
 
 
 def incremental_latest_per_key(
@@ -644,27 +706,28 @@ def api_stream_ingest(
         spark.readStream.format("weather_api").load(), with_ingest_date=True
     )
     expected = len(wsrc.CITIES) * len(wsrc.FIXTURE_DATES)
-    q = (
-        src.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .option("checkpointLocation", _ckpt(f"apistream-{sink_table}"))
-        .start()
-    )
-    deadline = _t.time() + timeout_s
-    try:
-        while _t.time() < deadline:
-            if spark.table(sink_table).count() >= expected:
-                break
-            _t.sleep(0.3)
-        else:
-            raise TimeoutError(
-                f"api stream drained {spark.table(sink_table).count()} of "
-                f"{expected} rows within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination()
+    with _checkpoint(f"apistream-{sink_table}", None) as checkpoint:
+        q = (
+            src.writeStream.format("memory")
+            .queryName(sink_table)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        deadline = _t.time() + timeout_s
+        try:
+            while _t.time() < deadline:
+                if spark.table(sink_table).count() >= expected:
+                    break
+                _t.sleep(0.3)
+            else:
+                raise TimeoutError(
+                    f"api stream drained {spark.table(sink_table).count()} of "
+                    f"{expected} rows within {timeout_s}s"
+                )
+        finally:
+            q.stop()
+            q.awaitTermination()
 
 
 def streaming_html_extract(source: DataFrame, sink_table: str) -> None:
