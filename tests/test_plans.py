@@ -329,6 +329,27 @@ def test_broadcast_budget_helper_gates_the_hint(spark, monkeypatch):
         assert "F.broadcast(" not in src, fn.__name__
 
 
+def test_whitespace_token_rule_lives_in_one_module():
+    """The ``split(text, " ")`` token rule is written once, in
+    ``functions/tokens.py``; every other package module reaches it
+    through that module's helpers, so no rung can drift to its own
+    tokenization."""
+    import re
+    from pathlib import Path
+
+    import weather_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    rule = re.compile(r"""F\.split\(\s*["']text["']\s*,\s*["'] ["']\s*\)""")
+    assert rule.search('F.split("text", " ")')
+    hits = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "functions" / "tokens.py" and rule.search(p.read_text())
+    ]
+    assert hits == []
+
+
 #: queries whose joins hint through the shared budget; the first three
 #: return a plan that still carries the hint (the others checkpoint it
 #: away before the returned plan)

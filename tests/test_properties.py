@@ -5,7 +5,7 @@ the test rigor the reference never had)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from weather_data_pipeline_spark.operators.flagship import (
@@ -1362,3 +1362,52 @@ def test_unigram_long_word_corpus_runs_via_dp(spark, tmp_path):
     assert {k: tuple(v) for k, v in ap.items()} == {
         k: tuple(v) for k, v in ap2.items()
     }
+
+
+#: documents as (key, text) over a tiny vocabulary; joining token lists
+#: that contain "" yields the empty text, leading and trailing spaces
+#: and double spaces — the "" tokens on which the term-count callers
+#: differ (some keep them, others drop them with min_len)
+token_docs = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2),
+        st.lists(
+            st.sampled_from(["", "a", "b", "ab", "abc"]), max_size=6
+        ).map(" ".join),
+    ),
+    max_size=8,
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(docs=token_docs)
+@example(docs=[(0, ""), (0, " a"), (1, "ab "), (1, "a  b"), (2, "  abc b ")])
+def test_term_counts_match_counter(spark, docs):
+    """``term_counts`` with and without a key, at every ``min_len`` the
+    callers use, equals ``collections.Counter`` over ``str.split(" ")``;
+    ``tokens(pos=True)`` yields each token at its 0-based position."""
+    from collections import Counter
+
+    from weather_data_pipeline_spark.functions.tokens import (
+        term_counts,
+        tokens,
+    )
+
+    doc = spark.createDataFrame(docs, "k int, text string")
+    for min_len in (0, 1, 2):
+        toks = [
+            (k, t) for k, text in docs for t in text.split(" ")
+            if len(t) >= min_len
+        ]
+        keyed = term_counts(doc, "k", min_len=min_len).collect()
+        assert {(r.k, r.term): r.n for r in keyed} == Counter(toks)
+        corpus = term_counts(doc, min_len=min_len).collect()
+        assert {r.term: r.n for r in corpus} == Counter(t for _, t in toks)
+    positions = sorted(tuple(r) for r in tokens(doc, "k", pos=True).collect())
+    assert positions == sorted(
+        (k, i, t) for k, text in docs for i, t in enumerate(text.split(" "))
+    )

@@ -73,7 +73,8 @@ def test_latest_trigger_runs_two_jobs(spark, tmp_path):
 
 def test_self_made_checkpoints_are_removed(spark, tmp_path):
     """A drain without a caller checkpoint deletes the one it made once the
-    query has terminated; a caller's checkpoint stays for the next run."""
+    query has terminated, and the stream-stream join deletes its staged
+    source copy; a caller's checkpoint stays for the next run."""
     root = str(tmp_path)
     wsrc.write_raw_docs(wsrc.synthesize_raw_docs(wsrc.FIXTURE_DATES[:1]), root)
     before = set(os.listdir(jobs.SCRATCH))
@@ -85,6 +86,8 @@ def test_self_made_checkpoints_are_removed(spark, tmp_path):
         )
     jobs.tumbling_counts(jobs.stream_events(spark, SF_SMOKE), "tumbling_ckpt_gc")
     assert spark.table("tumbling_ckpt_gc").count() > 0
+    jobs.stream_stream_left_join(spark, SF_SMOKE, "ssleft_ckpt_gc")
+    assert spark.table("ssleft_ckpt_gc").count() > 0
     assert set(os.listdir(jobs.SCRATCH)) == before
     assert os.path.isdir(f"{root}/_checkpoint/commits")
 

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.tokens import words
 from ..registry import query
 from ..session import fan_out
 from ..sources.testdata import load_table
@@ -95,11 +96,10 @@ def shingle_arrays(df: DataFrame, n: int = 3) -> DataFrame:
     the hottest path of the dedup ladder."""
     from pyspark.ml.feature import NGram
 
-    words = (
-        df.select("doc_id", F.split("text", " ").alias("words"))
-        .filter(F.size("words") >= n)
+    arrays = df.select("doc_id", words().alias("words")).filter(
+        F.size("words") >= n
     )
-    grams = NGram(n=n, inputCol="words", outputCol="raw_grams").transform(words)
+    grams = NGram(n=n, inputCol="words", outputCol="raw_grams").transform(arrays)
     return grams.select("doc_id", F.array_distinct("raw_grams").alias("grams"))
 
 
@@ -942,7 +942,7 @@ def _token_hashes(doc: DataFrame) -> DataFrame:
     return doc.where(F.col("text").isNotNull()).select(
         "doc_id",
         F.transform(
-            F.array_distinct(F.split("text", " ")), lambda w: F.xxhash64(w)
+            F.array_distinct(words()), lambda w: F.xxhash64(w)
         ).alias("hs"),
     )
 
@@ -1042,7 +1042,7 @@ def simhash_sql_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-free cross-check and as documentation of the semantics."""
     doc = load_table(spark, sf_dir, "documents")
     tok = doc.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
+        "doc_id", F.explode(F.array_distinct(words())).alias("w")
     ).withColumn("h", F.xxhash64("w"))
     votes = (
         tok.select("doc_id", "h", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"))
@@ -1090,7 +1090,7 @@ def x2_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit needs signatures recomputable outside the JVM."""
     doc = load_table(spark, sf_dir, "documents")
     tok = doc.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
+        "doc_id", F.explode(F.array_distinct(words())).alias("w")
     ).select(
         "doc_id",
         F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long").alias("h"),
@@ -1198,13 +1198,13 @@ def _tfidf_weighted(spark: SparkSession, sf_dir: str):
     x2_ngram_jaccard bound; use a 128-bit fingerprint at
     trillion-shingle scale."""
     doc = fan_out(load_table(spark, sf_dir, "documents"))
-    words = doc.select("doc_id", F.split("text", " ").alias("words")).filter(
+    arrays = doc.select("doc_id", words().alias("words")).filter(
         F.size("words") >= 3
     )
     from pyspark.ml.feature import NGram
 
     grams = NGram(n=3, inputCol="words", outputCol="raw_grams").transform(
-        words
+        arrays
     )
     tf = (
         grams.select("doc_id", F.explode("raw_grams").alias("term"))
@@ -1552,8 +1552,7 @@ _LINE_CTE = f"""
 def doc_lines(doc: DataFrame) -> DataFrame:
     """documents -> (doc_id, line_idx, line): the Spark twin of
     ``_LINE_CTE``, shared by both line-dedup operators."""
-    words = doc.select("doc_id", F.split("text", " ").alias("words"))
-    return words.select(
+    return doc.select("doc_id", words().alias("words")).select(
         "doc_id",
         "words",
         F.explode(
@@ -1828,7 +1827,7 @@ def _span_exploded(doc: DataFrame) -> DataFrame:
     Generate boundary stops CollapseProject from inlining the md5
     transform into the per-window fold — verified in the optimized
     plan: md5 appears exactly once)."""
-    toks = F.split("text", " ")
+    toks = words()
     th = F.transform(
         toks,
         lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),
@@ -2131,7 +2130,7 @@ def x1_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_list(F.struct("s", "e")).alias("ivs"))
     )
 
-    toks = F.split("text", " ")
+    toks = words()
     joined = doc.select("doc_id", "text").join(ivs, "doc_id", "left")
     ivs0 = F.coalesce(
         F.col("ivs"), F.expr("CAST(array() AS array<struct<s:int,e:int>>)")
@@ -2203,11 +2202,11 @@ def x2_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import NGram
 
     doc = fan_out(load_table(spark, sf_dir, "documents"))
-    words = doc.select("source", F.split("text", " ").alias("words")).filter(
+    arrays = doc.select("source", words().alias("words")).filter(
         F.size("words") >= 3
     )
     grams = NGram(n=3, inputCol="words", outputCol="raw_grams").transform(
-        words
+        arrays
     )
     # the distinct (source, gram) table is read 3× (per-source counts +
     # both pair-join sides) — materialize it once so the scan→explode→
@@ -2932,7 +2931,7 @@ def cdc_chunks(doc: DataFrame) -> DataFrame:
     the edit's boundary window, never shifting later chunks — is
     directly testable on constructed documents
     (tests/test_properties.py::test_cdc_chunking_insertion_stable)."""
-    toks = F.split("text", " ")
+    toks = words()
     th = F.transform(
         toks,
         lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),

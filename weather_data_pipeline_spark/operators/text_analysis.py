@@ -1,18 +1,38 @@
-"""X4 — text analysis over the ``documents`` table (SURVEY.md §2.10).
+"""X4/X8 — text analysis and training-data preparation over the
+``documents`` table (SURVEY.md §2.10).
 
 Training-data-pipeline text ops: doc statistics, term frequencies,
-stopword/quality ratios, token counting, fingerprinting, language-ID
-heuristic. Everything is built-in array/string functions (JVM-side,
-codegen) — no Python in the hot path; at 100 TB these run as a single
-scan + one aggregation shuffle each.
+quality filters and LM scores, fingerprints, language ID, sampling and
+mixing, packing and batching, BPE and unigram tokenizers, sketches.
+Most rungs are built-in array/string functions (JVM-side, codegen); the
+few Python kernels run over bounded or distinct-word relations.
+
+Shared pieces, each built once. Every rung tokenizes through
+``functions.tokens``: ``words()`` is the token array, ``tokens()`` one
+row per occurrence (optionally with its position), and
+``term_counts()`` the ``(*keys, term, n)`` partial-aggregate count that
+the LM, quality, vocabulary, Zipf and tokenizer-training rungs start
+from, each keeping its own filter (``min_len``) and its own
+``localCheckpoint``. ``_unigram_words`` is the two unigram rungs'
+word-count and E-step dispatch preamble, ``_encoded_streams`` the two
+tokenizer-apply emits, ``_ordered_join`` every order-pinned
+fingerprint. The DuckDB oracles mirror them with ``tokens_sql``,
+``term_counts_sql`` and ``_ENCODED_STREAMS_SQL``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.tokens import (
+    term_counts,
+    term_counts_sql,
+    tokens,
+    tokens_sql,
+    words,
+)
 from ..registry import query
 from ..sources.testdata import load_table
 
@@ -27,6 +47,19 @@ _EN_WORDS = _STOPWORDS
 def _hits_spark(words_col, wordlist):
     arr = F.array(*[F.lit(w) for w in wordlist])
     return F.size(F.array_intersect(words_col, arr))
+
+
+def _ordered_join(order: str, value: str, sep: str) -> Column:
+    """A group's ``value`` strings joined by ``sep`` in ``order``: the
+    collected structs are sorted explicitly, so the result does not
+    depend on the order rows reach the aggregate."""
+    return F.concat_ws(
+        sep,
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(order, value))),
+            lambda s: s[value].cast("string"),
+        ),
+    )
 
 
 def _hits_sql(wordlist):
@@ -50,38 +83,27 @@ def _hits_sql(wordlist):
 )
 def x4_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
     return doc.select(
         "doc_id",
         "lang",
         "source",
         F.length("text").alias("n_chars_actual"),
-        F.size(words).alias("n_words"),
+        F.size(words()).alias("n_words"),
         (
             F.length(F.regexp_replace("text", " ", "")).cast("double")
-            / F.size(words)
+            / F.size(words())
         ).alias("avg_word_len"),
     )
 
 
 @query(
     "x4_term_frequency",
-    oracle="""
-    SELECT term, COUNT(*) AS n
-    FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-    GROUP BY term HAVING COUNT(*) >= 5
-    """,
+    oracle=f"SELECT term, n FROM ({term_counts_sql()}) WHERE n >= 5",
 )
 def x4_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """explode → count: the word-count shape. Partial aggregation does the
-    heavy lifting map-side; only (term, partial n) rows shuffle."""
+    """The word-count shape: corpus term counts, terms seen 5+ times."""
     doc = load_table(spark, sf_dir, "documents")
-    return (
-        doc.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 5)
-    )
+    return term_counts(doc).filter(F.col("n") >= 5)
 
 
 @query(
@@ -127,10 +149,9 @@ def x4_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/stopword-ratio quality gate — the classic pretraining-corpus
     filter, as pure column expressions."""
     doc = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
-    stop_hits = F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
-    n_words = F.size(words)
+    stop_hits = F.size(F.filter(words(), lambda w: F.array_contains(sw, w)))
+    n_words = F.size(words())
     ratio = stop_hits.cast("double") / n_words
     return doc.select(
         "doc_id",
@@ -158,7 +179,7 @@ def x4_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     return doc.select(
         "doc_id",
-        F.size(F.split("text", " ")).alias("ws_tokens"),
+        F.size(words()).alias("ws_tokens"),
         F.size(
             F.expr(
                 r"regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]', 0)"
@@ -181,9 +202,7 @@ def x4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     return doc.select(
         "doc_id",
-        F.md5(F.concat_ws(" ", F.array_sort(F.split("text", " ")))).alias(
-            "fingerprint"
-        ),
+        F.md5(F.concat_ws(" ", F.array_sort(words()))).alias("fingerprint"),
     )
 
 
@@ -209,11 +228,11 @@ def x4_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wordlist-vote language ID (n-gram-heuristic family): count distinct
     marker-word hits per language, argmax with a fixed tie order."""
     doc = load_table(spark, sf_dir, "documents")
-    words = F.array_distinct(F.split("text", " "))
+    distinct = F.array_distinct(words())
     en, es, de = (
-        _hits_spark(words, _EN_WORDS),
-        _hits_spark(words, _ES_WORDS),
-        _hits_spark(words, _DE_WORDS),
+        _hits_spark(distinct, _EN_WORDS),
+        _hits_spark(distinct, _ES_WORDS),
+        _hits_spark(distinct, _DE_WORDS),
     )
     guess = (
         F.when((en == 0) & (es == 0) & (de == 0), "unknown")
@@ -303,10 +322,10 @@ def x4_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import NGram
 
     doc = load_table(spark, sf_dir, "documents")
-    words = doc.select("doc_id", F.split("text", " ").alias("words")).filter(
+    arrays = doc.select("doc_id", words().alias("words")).filter(
         F.size("words") >= 3
     )
-    grams = NGram(n=3, inputCol="words", outputCol="raw_grams").transform(words)
+    grams = NGram(n=3, inputCol="words", outputCol="raw_grams").transform(arrays)
     j = grams.select(
         "doc_id",
         (F.size("words") - 2).alias("total_grams"),
@@ -423,7 +442,7 @@ def x4_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     tok_hash = lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")  # noqa: E731
     roll = F.aggregate(
-        F.split("text", " "),
+        words(),
         F.lit(0).cast("long"),
         lambda acc, w: (acc * F.lit(ROLL_BASE) + tok_hash(w)) % F.lit(ROLL_MOD),
     )
@@ -478,11 +497,11 @@ def pack_sequences(
     trades parallelism against packing efficiency (more shards = more
     parallel packers but more partially-filled final bins); at 100 TB
     it should track the write-side file count, so it is an argument, not
-    a constant (r3 ask #7)."""
+    a constant."""
     sharded = doc.select(
         "doc_id",
         (F.col("doc_id") % shards).alias("shard"),
-        F.size(F.split("text", " ")).alias("n_tokens"),
+        F.size(words()).alias("n_tokens"),
     )
     return sharded.groupBy("shard").applyInPandas(
         _pack_shard_fn(budget),
@@ -588,12 +607,12 @@ def x4_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the repo. The only corpus-sized shuffle is the tf groupBy (hits
     only); the final per-doc sum re-exchanges ≤ |docs|·|terms| rows."""
     doc = load_table(spark, sf_dir, "documents")
-    words = doc.select("doc_id", F.split("text", " ").alias("words"))
-    stats = words.agg(
+    arrays = doc.select("doc_id", words().alias("words"))
+    stats = arrays.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("words")).alias("total_tokens"),
     )
-    tok = words.select(
+    tok = arrays.select(
         "doc_id", F.size("words").alias("dl"), F.explode("words").alias("t")
     )
     tf = (
@@ -654,8 +673,7 @@ def x8_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride. The trailing chunk keeps whatever tokens remain (both
     engines share the truncating-slice convention)."""
     doc = load_table(spark, sf_dir, "documents")
-    words = doc.select("doc_id", F.split("text", " ").alias("words"))
-    starts = words.select(
+    starts = doc.select("doc_id", words().alias("words")).select(
         "doc_id",
         "words",
         F.explode(
@@ -737,22 +755,20 @@ def x8_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 @query(
     "x4_unigram_logprob",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents
-    ), vocab AS (
-      SELECT w, COUNT(*) AS c FROM tok GROUP BY w
-    ), total AS (
-      SELECT CAST(SUM(c) AS BIGINT) AS t FROM vocab
+    oracle=f"""
+    WITH tok AS ({tokens_sql("doc_id")}),
+    vocab AS ({term_counts_sql()}),
+    total AS (
+      SELECT CAST(SUM(n) AS BIGINT) AS t FROM vocab
     )
     SELECT doc_id,
            COUNT(*) AS n_tokens,
-           ROUND(CAST(SUM(CAST(FLOOR(ln(c / CAST(t AS DOUBLE))
+           ROUND(CAST(SUM(CAST(FLOOR(ln(n / CAST(t AS DOUBLE))
                                      * 1000000000000)
                                AS DECIMAL(38,0))) AS DOUBLE)
                  / 1000000000000 / COUNT(*), 6)
              AS avg_logprob
-    FROM tok JOIN vocab USING (w) CROSS JOIN total
+    FROM tok JOIN vocab USING (term) CROSS JOIN total
     GROUP BY doc_id
     """,
 )
@@ -763,21 +779,22 @@ def x4_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the mean). Shape: one token-count aggregation builds the LM
     (vocab is |distinct tokens| rows — broadcast at 100 TB when it
     fits, else a shuffle join on the token), then one partial-aggregated
-    per-doc sum. Determinism — INTEGER-MICROUNIT scheme (VERDICT r13
-    ask #3: ln() outputs are derived doubles, so they never cast to
-    decimal): each token's log-prob floor-quantizes to an integer at
-    1e-12 BEFORE the exact DECIMAL(38,0) sum (order-independent by
-    arithmetic; |ln|·1e12 ≤ ~4e13 < 2^53, so the quantization is
-    exact), with one double division + round at the emit boundary."""
+    per-doc sum. Determinism — INTEGER-MICROUNIT scheme (ln() outputs
+    are derived doubles, and a derived double cast to decimal can round
+    a half-tie differently per engine): each token's log-prob
+    floor-quantizes to an integer at 1e-12 BEFORE the exact
+    DECIMAL(38,0) sum (order-independent by arithmetic; |ln|·1e12 ≤
+    ~4e13 < 2^53, so the quantization is exact), with one double
+    division + round at the emit boundary."""
     doc = load_table(spark, sf_dir, "documents")
-    tok = doc.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    vocab = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = vocab.agg(F.sum("c").alias("t"))
+    vocab = term_counts(doc)
+    total = vocab.agg(F.sum("n").alias("t"))
     logp = F.floor(
-        F.log(F.col("c") / F.col("t").cast("double")) * F.lit(1e12)
+        F.log(F.col("n") / F.col("t").cast("double")) * F.lit(1e12)
     ).cast("decimal(38,0)")
     return (
-        tok.join(vocab, "w")
+        tokens(doc, "doc_id")
+        .join(vocab, "term")
         .crossJoin(F.broadcast(total))
         .groupBy("doc_id")
         .agg(
@@ -927,7 +944,7 @@ def x4_token_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.select("doc_id", "pre", norm.alias("norm_text"))
     n_of = lambda c: F.when(  # noqa: E731
         F.col(c) == "", F.lit(0)
-    ).otherwise(F.size(F.split(F.col(c), " ")))
+    ).otherwise(F.size(words(c)))
     return d.select(
         "doc_id",
         "norm_text",
@@ -965,9 +982,7 @@ def x4_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Output is |langs| rows — at 100 TB the whole card costs
     one combined scan."""
     doc = load_table(spark, sf_dir, "documents")
-    t = doc.select(
-        "lang", "source", F.size(F.split("text", " ")).alias("toks")
-    )
+    t = doc.select("lang", "source", F.size(words()).alias("toks"))
     tot = F.broadcast(t.agg(F.count(F.lit(1)).alias("n")))
     return (
         t.crossJoin(tot)
@@ -991,15 +1006,12 @@ def x4_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: bigram-LM per-doc scoring oracle — shared by x4_bigram_logprob and
 #: the perplexity-decile bucketing built on top of it
-_BIGRAM_LP_ORACLE = """
+_BIGRAM_LP_ORACLE = f"""
     WITH w AS (
       SELECT doc_id, string_split(text, ' ') AS words FROM documents
       WHERE len(string_split(text, ' ')) >= 2
-    ), uni AS (
-      SELECT term, COUNT(*) AS c1 FROM (
-        SELECT unnest(string_split(text, ' ')) AS term FROM documents
-      ) GROUP BY term
-    ), vocab AS (SELECT COUNT(*) AS v FROM uni),
+    ), uni AS ({term_counts_sql()}),
+    vocab AS (SELECT COUNT(*) AS v FROM uni),
     bi AS (
       SELECT doc_id, words[i] AS w1, words[i] || ' ' || words[i+1] AS bg
       FROM w, UNNEST(generate_series(1, len(words) - 1)) AS t(i)
@@ -1009,7 +1021,7 @@ _BIGRAM_LP_ORACLE = """
     SELECT doc_id,
            COUNT(*) AS n_bigrams,
            ROUND(CAST(SUM(CAST(FLOOR(LN((bic.c2 + 1.0)
-                                        / (uni.c1 + vocab.v))
+                                        / (uni.n + vocab.v))
                                      * 1000000000000)
                                AS DECIMAL(38,0))) AS DOUBLE)
                  / 1000000000000 / COUNT(*), 6)
@@ -1034,34 +1046,27 @@ def x4_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables are Zipf-skewed — AQE skew-join handles the hot prefixes,
     or pre-filter to a top-V vocabulary exactly like the df ceiling.
     Per-token logs floor-quantize to integers at 1e-12 before the
-    exact DECIMAL(38,0) sum (the unigram-LM microunit convention,
-    VERDICT r13 ask #3 — a derived double never casts to decimal)."""
+    exact DECIMAL(38,0) sum (the unigram-LM microunit convention: a
+    derived double never casts to decimal)."""
     from pyspark.ml.feature import NGram
 
     doc = load_table(spark, sf_dir, "documents")
-    # Materialized once (round-15 optimization): the vocab-size count
-    # below and the scoring join both consume the unigram table — lazily
-    # it was computed TWICE (full explode + groupBy per consumer, ~0.5 s
-    # at sf0.1, ×3 queries that stack on this rung). localCheckpoint
-    # follows the repo's doubly-consumed-intermediate convention
-    # (x2_tfidf_cosine's weighted table).
-    uni = (
-        doc.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
-    )
+    # Materialized once: the vocab-size count below and the scoring join
+    # both read the unigram table, which lazily would pay its corpus
+    # explode + groupBy per consumer (~0.5 s at sf0.1, for each of the
+    # three rungs that stack on this one).
+    uni = term_counts(doc).localCheckpoint(eager=True)
     v = uni.count()  # vocab size — bounded job over the materialized table
-    words = doc.select("doc_id", F.split("text", " ").alias("words")).filter(
+    arrays = doc.select("doc_id", words().alias("words")).filter(
         F.size("words") >= 2
     )
-    grams = NGram(n=2, inputCol="words", outputCol="raw").transform(words)
+    grams = NGram(n=2, inputCol="words", outputCol="raw").transform(arrays)
     bi = grams.select(
         "doc_id", F.explode("raw").alias("bg")
     ).withColumn("w1", F.split_part(F.col("bg"), F.lit(" "), F.lit(1)))
     bic = bi.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     logp = F.floor(
-        F.log((F.col("c2") + F.lit(1.0)) / (F.col("c1") + F.lit(float(v))))
+        F.log((F.col("c2") + F.lit(1.0)) / (F.col("n") + F.lit(float(v))))
         * F.lit(1e12)
     ).cast("decimal(38,0)")
     return (
@@ -1125,9 +1130,8 @@ def _mg_sketch(batches):
 @query(
     "x4_heavy_hitters",
     oracle=f"""
-    WITH t AS (
-      SELECT unnest(string_split(text, ' ')) AS term FROM documents
-    ), tot AS (SELECT COUNT(*) AS n FROM t)
+    WITH t AS ({tokens_sql()}),
+    tot AS (SELECT COUNT(*) AS n FROM t)
     SELECT term, COUNT(*) AS freq
     FROM t CROSS JOIN tot
     GROUP BY term, tot.n
@@ -1154,7 +1158,7 @@ def x4_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term")
         .distinct()
     )
-    tok = doc.select(F.explode(F.split("text", " ")).alias("term"))
+    tok = tokens(doc)
     n = tok.count()  # token total — one bounded job, folds into the gate
     return (
         tok.join(F.broadcast(cand), "term", "left_semi")
@@ -1169,18 +1173,14 @@ def x4_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 @query(
     "x4_gopher_filter",
-    oracle="""
-    WITH tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf
-      FROM (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-            FROM documents)
-      GROUP BY doc_id, term
-    ), s AS (
+    oracle=f"""
+    WITH tf AS ({term_counts_sql("doc_id")}),
+    s AS (
       SELECT doc_id,
-             CAST(SUM(tf) AS BIGINT)            AS wc,
-             CAST(COUNT(*) AS BIGINT)           AS distinct_wc,
-             CAST(MAX(tf) AS BIGINT)            AS max_tf,
-             CAST(SUM(len(term) * tf) AS BIGINT) AS n_chars
+             CAST(SUM(n) AS BIGINT)            AS wc,
+             CAST(COUNT(*) AS BIGINT)          AS distinct_wc,
+             CAST(MAX(n) AS BIGINT)            AS max_tf,
+             CAST(SUM(len(term) * n) AS BIGINT) AS n_chars
       FROM tf GROUP BY doc_id
     )
     SELECT doc_id, wc AS n_words,
@@ -1215,18 +1215,11 @@ def x4_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (wc = Σtf, distinct = count, max_tf, chars = Σ len·tf) in a single
     pass — never one scan per rule."""
     doc = load_table(spark, sf_dir, "documents")
-    tf = (
-        doc.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    s = tf.groupBy("doc_id").agg(
-        F.sum("tf").alias("wc"),
+    s = term_counts(doc, "doc_id").groupBy("doc_id").agg(
+        F.sum("n").alias("wc"),
         F.count(F.lit(1)).alias("distinct_wc"),
-        F.max("tf").alias("max_tf"),
-        F.sum(F.length("term") * F.col("tf")).alias("n_chars"),
+        F.max("n").alias("max_tf"),
+        F.sum(F.length("term") * F.col("n")).alias("n_chars"),
     )
     wc, dwc = F.col("wc"), F.col("distinct_wc")
     mx, ch = F.col("max_tf"), F.col("n_chars")
@@ -1317,9 +1310,7 @@ def x8_length_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.distributed import global_prefix_sums
 
     doc = load_table(spark, sf_dir, "documents")
-    d = doc.select(
-        "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
-    ).withColumn(
+    d = doc.select("doc_id", F.size(words()).alias("n_tokens")).withColumn(
         "bucket", F.expr(f"CAST(n_tokens DIV {BUCKET_WIDTH} AS BIGINT)")
     )
     ranked, _totals = global_prefix_sums(
@@ -1404,19 +1395,7 @@ def x8_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "epoch", F.substring("sortkey", 1, 1).alias("shard")
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("sortkey", "doc_id")
-                        )
-                    ),
-                    lambda x: x["doc_id"].cast("string"),
-                ),
-            )
-        ).alias("order_fp"),
+        F.md5(_ordered_join("sortkey", "doc_id", ",")).alias("order_fp"),
     )
 
 
@@ -1492,7 +1471,7 @@ PPL_SKETCH_ACCURACY = 10_000
 @query(
     "x4_perplexity_buckets_approx",
     # The oracle RECOMPUTES the band contract from the exact NTILE
-    # deciles (VERDICT r7 ask #6) instead of asserting TRUE literals:
+    # deciles instead of asserting TRUE literals:
     # exact decile masses are n/10 ± 1, strictly inside the sketch's
     # tolerance band (±(2 + 2n/accuracy)), so a correct sketch and the
     # exact cut agree on both booleans — and a sketch whose masses
@@ -1533,8 +1512,8 @@ def x4_perplexity_buckets_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Doubly-consumed intermediate (edge sketch + bucket join): the
     # bigram-LM scoring is this query's dominant cost, so materialize
     # the (doc_id, avg_logprob) pairs ONCE — without this the full LM
-    # subtree executed twice (round-7 plan audit, VERDICT r7 #2; same
-    # localCheckpoint pattern as ext_q2/ext_q11/x6_rfm_scores_scalable).
+    # subtree executes twice (same localCheckpoint pattern as
+    # ext_q2/ext_q11/x6_rfm_scores_scalable).
     lp = (
         x4_bigram_logprob(spark, sf_dir)
         .select("doc_id", "avg_logprob")
@@ -1651,17 +1630,14 @@ VOCAB_CUTS = (10, 50, 100, 500)
 @query(
     "x4_vocab_coverage",
     oracle=f"""
-    WITH tf AS (
-      SELECT term, COUNT(*) AS c
-      FROM (SELECT UNNEST(string_split(text, ' ')) AS term FROM documents)
-      GROUP BY term
-    ), ranked AS (
-      SELECT term, c,
-             ROW_NUMBER() OVER (ORDER BY c DESC, term) AS rnk,
-             SUM(c) OVER (ORDER BY c DESC, term
+    WITH tf AS ({term_counts_sql()}),
+    ranked AS (
+      SELECT term, n,
+             ROW_NUMBER() OVER (ORDER BY n DESC, term) AS rnk,
+             SUM(n) OVER (ORDER BY n DESC, term
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS cum,
-             SUM(c) OVER () AS total
+             SUM(n) OVER () AS total
       FROM tf
     )
     SELECT CAST(cut.n AS BIGINT) AS vocab_size,
@@ -1689,8 +1665,8 @@ def x4_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     K-way merged on the driver; the plan gate asserts it), so the
     row_number/cumsum window sees O(max cuts) rows REGARDLESS of
     vocabulary size — the 'curve costs the same at any |vocab|' claim
-    made literal (VERDICT r6 ask #8; previously the window ranked the
-    full |vocab| before the rnk filter). The prune is EXACT, not a
+    made literal (ranking the full |vocab| before the rnk filter would
+    sort the whole vocabulary in one task). The prune is EXACT, not a
     sketch: limit's (count DESC, term) order is the window's order, so
     the kept set is precisely the terms with global rnk ≤ max(cuts).
     Tie order at a cutoff boundary is pinned by (count DESC, term)."""
@@ -1699,21 +1675,15 @@ def x4_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     # Doubly-consumed intermediate (`total` agg + top-K prune below):
     # materialize the |vocab|-row term-frequency aggregate once so the
-    # explode→groupBy token scan never executes twice (ADVICE r7 #2 —
-    # same localCheckpoint pattern as ext_q2/ext_q11/rfm_scalable).
-    tf = (
-        doc.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    total = tf.agg(F.sum("c").alias("total"))
-    topk = tf.orderBy(F.col("c").desc(), "term").limit(max(VOCAB_CUTS))
-    order = W.orderBy(F.col("c").desc(), "term")
+    # explode→groupBy token scan never executes twice.
+    tf = term_counts(doc).localCheckpoint(eager=True)
+    total = tf.agg(F.sum("n").alias("total"))
+    topk = tf.orderBy(F.col("n").desc(), "term").limit(max(VOCAB_CUTS))
+    order = W.orderBy(F.col("n").desc(), "term")
     ranked = topk.select(
-        "c",
+        "n",
         F.row_number().over(order).alias("rnk"),
-        F.sum("c").over(
+        F.sum("n").over(
             order.rowsBetween(W.unboundedPreceding, W.currentRow)
         ).alias("cum"),
     ).join(F.broadcast(total))
@@ -1803,7 +1773,7 @@ def x8_budget_select_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently wraps past 2147 distinct words; DuckDB's ``len`` is BIGINT
     scored = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("wc"),
+        F.size(words()).cast("long").alias("wc"),
         F.expr(
             "CAST(size(array_distinct(split(text, ' '))) AS BIGINT)"
             " * 1000000 DIV size(split(text, ' '))"
@@ -1822,7 +1792,7 @@ def x8_budget_select_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Training-sequence packing (round 8): concat-and-split offsets
+# Training-sequence packing: concat-and-split offsets
 # ----------------------------------------------------------------------
 #: fixed training-sequence length (tokens) for the packing layout
 SEQ_LEN = 512
@@ -1872,10 +1842,7 @@ def x8_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.distributed import global_prefix_sums
 
     doc = load_table(spark, sf_dir, "documents")
-    d = doc.select(
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("wc"),
-    )
+    d = doc.select("doc_id", F.size(words()).cast("long").alias("wc"))
     cum, _total = global_prefix_sums(
         spark, d, [F.col("doc_id")], val_col="wc", out_col="cum_tokens"
     )
@@ -1893,7 +1860,7 @@ def x8_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# BPE pair statistics (round 8): the merge-candidate count of one
+# BPE pair statistics: the merge-candidate count of one
 # byte-pair-encoding training step
 # ----------------------------------------------------------------------
 #: top adjacent-character pairs emitted
@@ -1903,14 +1870,10 @@ BPE_TOP_PAIRS = 20
 @query(
     "x4_bpe_pair_stats",
     oracle=f"""
-    WITH wc AS (
-      SELECT w, COUNT(*) AS n
-      FROM (SELECT UNNEST(string_split(text, ' ')) AS w FROM documents)
-      WHERE len(w) >= 2
-      GROUP BY w
-    ), pairs AS (
-      SELECT substr(w, CAST(i AS INTEGER), 2) AS pair, n
-      FROM wc, UNNEST(range(1, len(w))) AS t(i)
+    WITH wc AS ({term_counts_sql(min_len=2)}),
+    pairs AS (
+      SELECT substr(term, CAST(i AS INTEGER), 2) AS pair, n
+      FROM wc, UNNEST(range(1, len(term))) AS t(i)
     )
     SELECT pair, CAST(SUM(n) AS BIGINT) AS cnt
     FROM pairs GROUP BY pair
@@ -1933,16 +1896,10 @@ def x4_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition top-K, no global sort). Both
     engines floor the same integer weights, ties pinned by pair."""
     doc = load_table(spark, sf_dir, "documents")
-    words = (
-        doc.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 2)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    pairs = words.select(
+    pairs = term_counts(doc, min_len=2).select(
         F.explode(
-            F.expr("transform(sequence(1, length(w) - 1),"
-                   " i -> substring(w, i, 2))")
+            F.expr("transform(sequence(1, length(term) - 1),"
+                   " i -> substring(term, i, 2))")
         ).alias("pair"),
         "n",
     )
@@ -1955,7 +1912,7 @@ def x4_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Temperature-scaled mixture weights (round 8): multilingual sampling
+# Temperature-scaled mixture weights: multilingual sampling
 # ----------------------------------------------------------------------
 #: documents drawn per training epoch by the mixture
 MIXTURE_EPOCH_BUDGET = 1_000_000
@@ -2020,7 +1977,7 @@ def x8_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Composed cleaning pipeline (round 8): quality → lang → dedup funnel
+# Composed cleaning pipeline: quality → lang → dedup funnel
 # ----------------------------------------------------------------------
 #: C4-style quality gates for the composed pipeline
 C4_MIN_WORDS = 5
@@ -2088,7 +2045,7 @@ def x8_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         "text",
-        F.size(F.split("text", " ")).cast("long").alias("wc"),
+        F.size(words()).cast("long").alias("wc"),
     ).withColumn(
         "q_ok",
         (F.col("wc") >= C4_MIN_WORDS) & (F.col("wc") <= C4_MAX_WORDS),
@@ -2134,24 +2091,20 @@ def x8_c4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Word-entropy quality score (round 8)
+# Word-entropy quality score
 # ----------------------------------------------------------------------
 @query(
     "x4_entropy_score",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents
-    ), wc AS (
-      SELECT doc_id, w, COUNT(*) AS c FROM tok GROUP BY doc_id, w
-    )
+    oracle=f"""
+    WITH wc AS ({term_counts_sql("doc_id")})
     SELECT doc_id,
-           CAST(SUM(c) AS BIGINT) AS n_tokens,
+           CAST(SUM(n) AS BIGINT) AS n_tokens,
            COUNT(*) AS distinct_words,
-           ROUND(ln(CAST(SUM(c) AS DOUBLE))
-                 - CAST(SUM(CAST(FLOOR(c * ln(CAST(c AS DOUBLE))
+           ROUND(ln(CAST(SUM(n) AS DOUBLE))
+                 - CAST(SUM(CAST(FLOOR(n * ln(CAST(n AS DOUBLE))
                                        * 10000000000)
                                  AS DECIMAL(38,0))) AS DOUBLE)
-                   / 10000000000 / SUM(c), 6) AS entropy_nats
+                   / 10000000000 / SUM(n), 6) AS entropy_nats
     FROM wc GROUP BY doc_id
     """,
 )
@@ -2166,29 +2119,28 @@ def x4_entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffle keys on (doc_id, word) and partial-aggregates;
     the per-doc combine is exact: each word's c·ln(c) term
     floor-quantizes to an integer at 1e-10 BEFORE the exact
-    DECIMAL(38,0) sum (the microunit convention, VERDICT r13 ask #3 —
-    order-independent by arithmetic; |c·ln c|·1e10 < 2^53 holds for
+    DECIMAL(38,0) sum (the microunit convention — order-independent
+    by arithmetic; |c·ln c|·1e10 < 2^53 holds for
     per-doc counts ≤ ~5e4), with one double ln + division at the emit
     boundary."""
     doc = load_table(spark, sf_dir, "documents")
-    tok = doc.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    wc = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
-    term = F.floor(
-        F.col("c") * F.log(F.col("c").cast("double")) * F.lit(1e10)
-    ).cast("decimal(38,0)")
-    return wc.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
+    c = F.col("n")
+    term = F.floor(c * F.log(c.cast("double")) * F.lit(1e10)).cast(
+        "decimal(38,0)"
+    )
+    return term_counts(doc, "doc_id").groupBy("doc_id").agg(
+        F.sum(c).cast("long").alias("n_tokens"),
         F.count(F.lit(1)).alias("distinct_words"),
         F.round(
-            F.log(F.sum("c").cast("double"))
-            - F.sum(term).cast("double") / F.lit(1e10) / F.sum("c"),
+            F.log(F.sum(c).cast("double"))
+            - F.sum(term).cast("double") / F.lit(1e10) / F.sum(c),
             6,
         ).alias("entropy_nats"),
     )
 
 
 # ----------------------------------------------------------------------
-# Tokenizer application (round 8): words → vocab ids + OOV accounting
+# Tokenizer application: words → vocab ids + OOV accounting
 # ----------------------------------------------------------------------
 #: vocabulary size for the id mapping (top-N by corpus frequency)
 TOKENIZE_VOCAB_N = 200
@@ -2199,24 +2151,19 @@ UNK_ID = 0
 @query(
     "x8_tokenize_to_ids",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, w, ord
-      FROM (SELECT doc_id,
-                   UNNEST(string_split(text, ' ')) AS w,
-                   generate_subscripts(string_split(text, ' '), 1) AS ord
-            FROM documents)
-    ), vocab AS (
-      SELECT w, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, w) AS id
-      FROM tok GROUP BY w
-      ORDER BY COUNT(*) DESC, w LIMIT {TOKENIZE_VOCAB_N}
+    WITH tok AS ({tokens_sql("doc_id", pos=True)}),
+    vocab AS (
+      SELECT term, ROW_NUMBER() OVER (ORDER BY n DESC, term) AS id
+      FROM ({term_counts_sql()})
+      ORDER BY n DESC, term LIMIT {TOKENIZE_VOCAB_N}
     )
     SELECT doc_id,
            COUNT(*) AS n_tokens,
            CAST(SUM(CASE WHEN v.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_oov,
            md5(string_agg(CAST(COALESCE(v.id, {UNK_ID}) AS VARCHAR), ','
-                          ORDER BY ord)) AS ids_fp
-    FROM tok LEFT JOIN vocab v USING (w)
+                          ORDER BY pos)) AS ids_fp
+    FROM tok LEFT JOIN vocab v USING (term)
     GROUP BY doc_id
     """,
 )
@@ -2239,25 +2186,14 @@ def x8_tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit sort — the one place ordering matters, paid only
     within each doc's group."""
     doc = load_table(spark, sf_dir, "documents")
-    tok = doc.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "w"),
-    )
-    vocab = (
-        tok.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "w")
-        .limit(TOKENIZE_VOCAB_N)
-    )
-    from pyspark.sql.window import Window as W
-
+    order = [F.col("n").desc(), "term"]
+    vocab = term_counts(doc).orderBy(*order).limit(TOKENIZE_VOCAB_N)
     vid = vocab.select(
-        "w",
-        F.row_number()
-        .over(W.orderBy(F.col("c").desc(), "w"))
-        .alias("id"),
+        "term", F.row_number().over(Window.orderBy(*order)).alias("id")
     )
-    joined = tok.join(F.broadcast(vid), "w", "left").select(
+    joined = tokens(doc, "doc_id", pos=True).join(
+        F.broadcast(vid), "term", "left"
+    ).select(
         "doc_id",
         "pos",
         F.coalesce(F.col("id"), F.lit(UNK_ID)).alias("id"),
@@ -2267,22 +2203,12 @@ def x8_tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("id") == UNK_ID, 1).otherwise(0))
         .cast("long")
         .alias("n_oov"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "id"))
-                    ),
-                    lambda s: s["id"].cast("string"),
-                ),
-            )
-        ).alias("ids_fp"),
+        F.md5(_ordered_join("pos", "id", ",")).alias("ids_fp"),
     )
 
 
 # ----------------------------------------------------------------------
-# N-gram uniqueness score (round 8): inverse-df quality signal
+# N-gram uniqueness score: inverse-df quality signal
 # ----------------------------------------------------------------------
 @query(
     "x4_uniqueness_score",
@@ -2349,7 +2275,7 @@ def x4_uniqueness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Source-interleaved training order (round 8)
+# Source-interleaved training order
 # ----------------------------------------------------------------------
 #: hash shards for the interleave-order fingerprints (the
 #: x8_epoch_shuffle convention: verify order per shard, never globally)
@@ -2395,10 +2321,10 @@ def x8_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range exchange + per-partition windows + broadcast offsets — NO
     whole-source window task); the source index is derived
     DISTRIBUTIVELY — row_number over the |sources|-row distinct frame,
-    broadcast-joined back (VERDICT r8 #4: the previous create_map
-    literal collected distinct sources to the driver, the package's
-    only data-dependent collect; the single-partition window here is
-    over |sources| rows, a config-sized dim, not data). The interleave
+    broadcast-joined back (a create_map literal would need the distinct
+    sources collected to the driver, a data-dependent collect; the
+    single-partition window here is over |sources| rows, a config-sized
+    dim, not data). The interleave
     position is pure arithmetic on (rank, index). The only other
     exchange is the 16-shard fingerprint rollup, whose per-group sort
     is bounded by shard membership — the same bound x8_epoch_shuffle
@@ -2441,22 +2367,12 @@ def x8_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("position") % INTERLEAVE_SHARDS).cast("long").alias("shard")
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("position", "doc_id"))
-                    ),
-                    lambda s: s["doc_id"].cast("string"),
-                ),
-            )
-        ).alias("order_fp"),
+        F.md5(_ordered_join("position", "doc_id", ",")).alias("order_fp"),
     )
 
 
 # ----------------------------------------------------------------------
-# HTML/markup → text extraction (round 9): the stage upstream of the C4
+# HTML/markup → text extraction: the stage upstream of the C4
 # funnel in a real web-scale corpus (reference analog: the raw-JSON →
 # staged-table parse, weather_etl.py:62-90 — same capability class).
 # ----------------------------------------------------------------------
@@ -2611,7 +2527,7 @@ def html_extract_frame(doc: DataFrame) -> DataFrame:
 @query("x4_html_extract", oracle=HTML_EXTRACT_ORACLE)
 def x4_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML/markup → text extraction (the step upstream of the C4
-    funnel in a web-scale corpus; VERDICT r8 ask #3): render each doc
+    funnel in a web-scale corpus): render each doc
     into deterministic markup scan-side, then extract — drop
     script/style blocks WITH their content (ordering matters: the
     script body contains tags and entities that must never leak),
@@ -2640,7 +2556,7 @@ def x4_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Hashed linear quality classifier (round 9): model-scored filtering
+# Hashed linear quality classifier: model-scored filtering
 # ----------------------------------------------------------------------
 #: fastText-style feature-hash bucket count (kept small so bucket
 #: collisions are exercised at test scale; production uses ~2M)
@@ -2698,7 +2614,7 @@ def x4_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         % F.lit(HLS_BUCKETS)
         - F.lit(half)
     )
-    toks = F.split("text", " ")
+    toks = words()
     score = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, w: acc + wt(w)
     )
@@ -2716,7 +2632,7 @@ def x4_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Curriculum ordering (round 9): difficulty-staged training order
+# Curriculum ordering: difficulty-staged training order
 # ----------------------------------------------------------------------
 #: number of curriculum stages (easy → hard)
 CURRICULUM_STAGES = 4
@@ -2780,7 +2696,7 @@ def x8_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# BPE tokenizer TRAINING loop (round 10): the iterated
+# BPE tokenizer TRAINING loop: the iterated
 # pair-count → merge-argmax → re-pair recurrence that produces the
 # vocab x4_bpe_pair_stats (one step's stats) and x8_tokenize_to_ids
 # (application) presuppose
@@ -2824,15 +2740,12 @@ def _bpe_train_chain(doc, rounds: int, update_last: bool):
     the rounds costs one string column per checkpoint and changes no
     merge decision (stats aggregate only (n, syms))."""
     chars = F.expr(
-        "concat(transform(sequence(1, length(w)), i -> substring(w, i, 1)),"
-        f" array('{BPE_EOW}'))"
+        "concat(transform(sequence(1, length(term)),"
+        f" i -> substring(term, i, 1)), array('{BPE_EOW}'))"
     )
     cur = (
-        doc.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") >= 1)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("w", "n", chars.alias("syms"))
+        term_counts(doc, min_len=1)
+        .select(F.col("term").alias("w"), "n", chars.alias("syms"))
         .localCheckpoint(eager=True)
     )
 
@@ -2842,7 +2755,7 @@ def _bpe_train_chain(doc, rounds: int, update_last: bool):
         " (a, b) -> named_struct('l', a, 'r', b))"
     )
     merges: list[tuple] = []
-    since_ck = 0  # r15: checkpoint the dict every 2nd round (see below)
+    since_ck = 0  # rounds since the dict was last checkpointed
     for rank in range(1, rounds + 1):
         stats = (
             cur.filter(F.size("syms") >= 2)
@@ -2868,11 +2781,11 @@ def _bpe_train_chain(doc, rounds: int, update_last: bool):
                 _bpe_merge_step(row["l"], row["r"], row["l"] + row["r"]),
             ).alias("syms"),
         )
-        # Flat lineage every SECOND round (round-15, the _nsw_beam_rounds
-        # cadence): the per-round .first() forces evaluation anyway, so a
-        # lazy odd round just folds two merge steps in one job instead of
-        # paying a separate materialization per round — interleaved A/B
-        # at sf0.1: x4_bpe_apply median 2.70 s -> 2.51 s. The fold depth
+        # Flat lineage every SECOND round (the _nsw_beam_rounds cadence):
+        # the per-round .first() forces evaluation anyway, so a lazy odd
+        # round just folds two merge steps in one job instead of paying
+        # a separate materialization per round — interleaved A/B at
+        # sf0.1: x4_bpe_apply median 2.70 s -> 2.51 s. The fold depth
         # between checkpoints is bounded at 2 HOF lambdas, so codegen/
         # planning cost stays flat.
         since_ck += 1
@@ -2882,25 +2795,23 @@ def _bpe_train_chain(doc, rounds: int, update_last: bool):
     return cur, merges
 
 
-def _bpe_train_oracle(k: int) -> str:
-    """K-step-unrolled DuckDB twin of the merge-training loop: each
-    round is a (stats_i, top_i, words_i) CTE block; the greedy
-    left-to-right merge application is the same fold both engines run
-    — DuckDB's ``list_reduce`` over a chr(31)-encoded accumulator
-    ("drop last == l, append x == r" collapses to ``acc || r`` because
-    the dropped suffix is exactly ``l``), Spark's ``aggregate`` over a
-    real array accumulator."""
+def _bpe_chain_sql(k: int, update_last: bool) -> str:
+    """K-step-unrolled DuckDB twin of ``_bpe_train_chain``: the word
+    dictionary ``words0`` (w, n, syms), then per round a (stats_i,
+    top_i, words_i) CTE block, the last round's ``words_k`` only with
+    ``update_last``. The greedy left-to-right merge application is the
+    same fold both engines run — DuckDB's ``list_reduce`` over a
+    chr(31)-encoded accumulator ("drop last == l, append x == r"
+    collapses to ``acc || r`` because the dropped suffix is exactly
+    ``l``), Spark's ``aggregate`` over a real array accumulator."""
     parts = [
         f"""
     WITH words0 AS (
-      SELECT n,
-             list_append(list_transform(range(1, len(w) + 1),
-                           i -> substr(w, CAST(i AS INTEGER), 1)),
+      SELECT term AS w, n,
+             list_append(list_transform(range(1, len(term) + 1),
+                           i -> substr(term, CAST(i AS INTEGER), 1)),
                          '{BPE_EOW}') AS syms
-      FROM (SELECT w, COUNT(*) AS n
-            FROM (SELECT UNNEST(string_split(text, ' ')) AS w
-                  FROM documents)
-            WHERE len(w) >= 1 GROUP BY w)
+      FROM ({term_counts_sql(min_len=1)})
     )"""
     ]
     for i in range(1, k + 1):
@@ -2914,10 +2825,10 @@ def _bpe_train_oracle(k: int) -> str:
       SELECT l, r, cnt FROM stats{i} ORDER BY cnt DESC, l, r LIMIT 1
     )"""
         )
-        if i < k:
+        if i < k or update_last:
             parts.append(
                 f""", words{i} AS (
-      SELECT w.n,
+      SELECT w.w, w.n,
              string_split(list_reduce(list_prepend('', w.syms),
                (acc, x) -> CASE
                  WHEN acc = '' THEN x
@@ -2928,18 +2839,22 @@ def _bpe_train_oracle(k: int) -> str:
       FROM words{i - 1} w CROSS JOIN top{i} t
     )"""
             )
+    return "".join(parts)
+
+
+def _bpe_train_oracle(k: int) -> str:
+    """The training chain's K argmax rows as the learned merge table."""
     arms = "\n    UNION ALL ".join(
         f"SELECT {i} AS merge_rank, l AS lft, r AS rgt, l || r AS merged,"
         f" CAST(cnt AS BIGINT) AS pair_n FROM top{i}"
         for i in range(1, k + 1)
     )
-    parts.append("\n    " + arms)
-    return "".join(parts)
+    return _bpe_chain_sql(k, update_last=False) + "\n    " + arms
 
 
 @query("x4_bpe_merge_train", oracle=_bpe_train_oracle(BPE_MERGE_ROUNDS))
 def x4_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING (VERDICT r9 ask #4): the full
+    """Distributed BPE tokenizer TRAINING: the full
     iterated loop — count adjacent symbol pairs, merge the most
     frequent pair everywhere, repeat — for ``BPE_MERGE_ROUNDS`` rounds,
     returning the learned merge table (rank, pair, merged symbol,
@@ -2966,7 +2881,7 @@ def x4_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned merge table is assembled driver-side from the ≤ k
     collected argmax rows (three fields each, already on the driver —
     re-returning the TakeOrdered arms would re-execute every round's
-    argmax at collect, doubling the work; ADVICE r10) into one local
+    argmax at collect, doubling the work) into one local
     relation: the result plan touches NO parquet and launches NO jobs
     (plan-gated), and an empty/degenerate corpus — zero words, or
     every word a single symbol — returns the EMPTY typed table
@@ -2980,55 +2895,31 @@ def x4_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_apply_oracle(k: int) -> str:
-    """K-step-unrolled DuckDB twin of train-then-APPLY: the training
-    chain (same CTE blocks as _bpe_train_oracle, with ``w`` carried and
-    the LAST round's dict update included), then the encoding dict
-    joins back onto per-doc word occurrences."""
-    parts = [
-        f"""
-    WITH words0 AS (
-      SELECT w, n,
-             list_append(list_transform(range(1, len(w) + 1),
-                           i -> substr(w, CAST(i AS INTEGER), 1)),
-                         '{BPE_EOW}') AS syms
-      FROM (SELECT w, COUNT(*) AS n
-            FROM (SELECT UNNEST(string_split(text, ' ')) AS w
-                  FROM documents)
-            WHERE len(w) >= 1 GROUP BY w)
-    )"""
-    ]
-    for i in range(1, k + 1):
-        parts.append(
-            f""", stats{i} AS (
-      SELECT syms[CAST(i AS INTEGER)] AS l,
-             syms[CAST(i AS INTEGER) + 1] AS r, SUM(n) AS cnt
-      FROM words{i - 1}, UNNEST(range(1, len(syms))) AS t(i)
-      GROUP BY 1, 2
-    ), top{i} AS (
-      SELECT l, r, cnt FROM stats{i} ORDER BY cnt DESC, l, r LIMIT 1
-    ), words{i} AS (
-      SELECT w.w, w.n,
-             string_split(list_reduce(list_prepend('', w.syms),
-               (acc, x) -> CASE
-                 WHEN acc = '' THEN x
-                 WHEN (acc = t.l OR suffix(acc, chr(31) || t.l))
-                      AND x = t.r
-                   THEN acc || t.r
-                 ELSE acc || chr(31) || x END), chr(31)) AS syms
-      FROM words{i - 1} w CROSS JOIN top{i} t
-    )"""
+def _encoded_streams(doc: DataFrame, dic: DataFrame) -> DataFrame:
+    """The emit both tokenizer-apply rungs share, over a (term, enc, tk)
+    word → encoding dictionary: per document the word count, the token
+    count, and an md5 fingerprint of the encoded stream in word order.
+    Empty tokens are not words here. The token volume is touched once,
+    by the (occurrence ⇄ dict) equi-join on the word, then one doc_id
+    partial-agg; the order is pinned by sorting (pos, enc) structs."""
+    occ = tokens(doc, "doc_id", pos=True).filter(F.length("term") >= 1)
+    return (
+        occ.join(dic, "term")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_words"),
+            F.sum("tk").cast("long").alias("n_tokens"),
+            F.md5(_ordered_join("pos", "enc", "\x1e")).alias("stream_fp"),
         )
-    parts.append(
-        f""", dict AS (
-      SELECT w, array_to_string(syms, chr(31)) AS enc,
-             CAST(len(syms) AS BIGINT) AS tk
-      FROM words{k}
-    ), occ AS (
-      SELECT doc_id, i AS pos, ws[i] AS w
-      FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           UNNEST(generate_series(1, len(ws))) AS t(i)
-      WHERE len(ws[i]) >= 1
+    )
+
+
+#: DuckDB twin of ``_encoded_streams``, appended to a CTE chain whose
+#: ``dict`` CTE maps each word ``w`` to its encoding ``enc`` and token
+#: count ``tk``.
+_ENCODED_STREAMS_SQL = f""", occ AS (
+      SELECT doc_id, pos, term AS w FROM ({tokens_sql("doc_id", pos=True)})
+      WHERE len(term) >= 1
     )
     SELECT o.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -3036,8 +2927,16 @@ def _bpe_apply_oracle(k: int) -> str:
            md5(string_agg(d.enc, chr(30) ORDER BY o.pos)) AS stream_fp
     FROM occ o JOIN dict d USING (w)
     GROUP BY o.doc_id"""
-    )
-    return "".join(parts)
+
+
+def _bpe_apply_oracle(k: int) -> str:
+    """Train-then-APPLY: the fully-merged training chain as the encoding
+    dict, joined back onto per-doc word occurrences."""
+    return _bpe_chain_sql(k, update_last=True) + f""", dict AS (
+      SELECT w, array_to_string(syms, chr(31)) AS enc,
+             CAST(len(syms) AS BIGINT) AS tk
+      FROM words{k}
+    ){_ENCODED_STREAMS_SQL}"""
 
 
 @query("x4_bpe_apply", oracle=_bpe_apply_oracle(BPE_MERGE_ROUNDS))
@@ -3069,34 +2968,15 @@ def x4_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     dict_df, _ = _bpe_train_chain(doc, BPE_MERGE_ROUNDS, update_last=True)
     enc = dict_df.select(
-        "w",
+        F.col("w").alias("term"),
         F.array_join("syms", "\x1f").alias("enc"),
         F.size("syms").cast("long").alias("tk"),
     )
-    occ = doc.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
-    ).filter(F.length("w") >= 1)
-    return (
-        occ.join(enc, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("tk").cast("long").alias("n_tokens"),
-            F.md5(
-                F.concat_ws(
-                    "\x1e",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "enc"))),
-                        lambda s: s["enc"],
-                    ),
-                )
-            ).alias("stream_fp"),
-        )
-    )
+    return _encoded_streams(doc, enc)
 
 
 # ----------------------------------------------------------------------
-# URL / domain-tier curation (round 10, VERDICT r9 ask #5): the
+# URL / domain-tier curation: the
 # over-represented-domain stage of a CommonCrawl-style pipeline —
 # registrable-domain extraction, per-domain rollup, contribution caps
 # ----------------------------------------------------------------------
@@ -3205,7 +3085,7 @@ def _with_domain(doc: DataFrame) -> DataFrame:
     """,
 )
 def x4_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registrable-domain rollup (VERDICT r9 ask #5): per-domain
+    """Registrable-domain rollup: per-domain
     doc/token/source counts plus corpus share in ppm — the profiling
     stage that decides which domains the cap rung throttles. Reference
     scope: no analog (the reference pipeline has no URL handling);
@@ -3223,7 +3103,7 @@ def x4_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("domain")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
+            F.sum(F.size(words())).alias("n_tokens"),
             F.countDistinct("source").alias("n_sources"),
         )
     )
@@ -3253,7 +3133,7 @@ def x4_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x8_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain contribution caps (VERDICT r9 ask #5): keep at most
+    """Per-domain contribution caps: keep at most
     ``DOMAIN_DOC_CAP`` documents per registrable domain, priority
     n_chars DESC (keep the most substantial pages) with doc_id as the
     deterministic tiebreak — the over-represented-domain mitigation
@@ -3281,7 +3161,7 @@ def x8_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Code-vs-prose detection (round 10): the pretraining curation signal
+# Code-vs-prose detection: the pretraining curation signal
 # that routes documents to code/prose-specific cleaning pipelines
 # ----------------------------------------------------------------------
 #: code-score threshold (per-mille of weighted markers per word)
@@ -3364,7 +3244,7 @@ def x4_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         nb.cast("long").alias("n_braces"),
         ns.cast("long").alias("n_semi"),
         nd.cast("long").alias("n_def"),
-        F.size(F.split("s", " ")).cast("long").alias("n_words"),
+        F.size(words("s")).cast("long").alias("n_words"),
     )
     score = (
         3 * F.col("n_braces") + 2 * F.col("n_semi") + 5 * F.col("n_def")
@@ -3385,7 +3265,7 @@ def x4_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Count-min sketch (round 12): the mergeable-frequency member of the
+# Count-min sketch: the mergeable-frequency member of the
 # sketch tier — Bloom answers membership, HLL cardinality,
 # approx-percentile quantiles; CMS answers "how often", mergeably
 # ----------------------------------------------------------------------
@@ -3440,10 +3320,8 @@ def cms_term_counts(df: DataFrame) -> DataFrame:
     dedup ladder's measured-fastest gram builder."""
     from pyspark.ml.feature import NGram
 
-    words = df.select(F.split("text", " ").alias("words")).filter(
-        F.size("words") >= 3
-    )
-    grams = NGram(n=3, inputCol="words", outputCol="terms").transform(words)
+    arrays = df.select(words().alias("words")).filter(F.size("words") >= 3)
+    grams = NGram(n=3, inputCol="words", outputCol="terms").transform(arrays)
     return (
         grams.select(F.explode("terms").alias("term"))
         .groupBy("term")
@@ -3552,7 +3430,7 @@ def x4_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Zipf rank-frequency fit (round 12): the corpus-naturalness diagnostic
+# Zipf rank-frequency fit: the corpus-naturalness diagnostic
 # ----------------------------------------------------------------------
 #: per-language rank depth for the fit (covers the synthetic corpus's
 #: full vocabulary; on a natural-language corpus the head of the rank
@@ -3566,12 +3444,7 @@ ZIPF_MIN_TERMS = 3
 @query(
     "x4_zipf_fit",
     oracle=f"""
-    WITH tf AS (
-      SELECT lang, term, COUNT(*) AS n
-      FROM (SELECT lang, unnest(string_split(text, ' ')) AS term
-            FROM documents)
-      GROUP BY lang, term
-    ),
+    WITH tf AS ({term_counts_sql("lang")}),
     ranked AS (
       SELECT lang, term, n,
              ROW_NUMBER() OVER (PARTITION BY lang
@@ -3629,7 +3502,7 @@ def x4_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical inputs on both engines; per-row double products
     floor-quantize to integers at 1e-12 BEFORE the exact DECIMAL(38,0)
     sums (order-independent by arithmetic — the x4_unigram_logprob
-    microunit discipline, VERDICT r13 ask #3), and only the final
+    microunit discipline), and only the final
     slope/R² combination runs in double over per-group scalars,
     floor-truncated to 6.
 
@@ -3639,18 +3512,13 @@ def x4_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a full vocabulary sort); the moment sums partial-aggregate
     over ≤ TOP rows per language. Output is |languages| rows."""
     doc = load_table(spark, sf_dir, "documents")
-    tf = (
-        doc.select("lang", F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return zipf_fit_from_tf(tf)
+    return zipf_fit_from_tf(term_counts(doc, "lang"))
 
 
 def zipf_fit_from_tf(tf: DataFrame) -> DataFrame:
     """The Zipf OLS fit over a (lang, term, n) term-frequency relation —
     extracted from the query body so BOTH branches of the naturalness
-    gate are testable (VERDICT r12 ask #4): the firing branch on the
+    gate are testable: the firing branch on the
     template corpus (tests/test_plans.py::
     test_zipf_fit_plan_and_diagnostic_direction pins slope<0, R²<0.5)
     and the green branch on a genuinely Zipf-distributed table
@@ -3659,7 +3527,7 @@ def zipf_fit_from_tf(tf: DataFrame) -> DataFrame:
     lr, ln = F.log(F.col("r").cast("double")), F.log(
         F.col("n").cast("double")
     )
-    # microunit quantization (VERDICT r13 ask #3): ln() outputs are
+    # microunit quantization: ln() outputs are
     # derived doubles — floor-quantize each moment term to an integer
     # at 1e-12 before the exact DECIMAL(38,0) sums (|term|·1e12 ≤
     # ~2e14 < 2^53 for ranks ≤ ZIPF_TOP and any corpus count)
@@ -3708,8 +3576,8 @@ def zipf_fit_from_tf(tf: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Unigram-LM tokenizer training (round 14): the SentencePiece-class
-# algorithm beside BPE train/apply — VERDICT r13 ask #5
+# Unigram-LM tokenizer training: the SentencePiece-class
+# algorithm beside BPE train/apply
 # ----------------------------------------------------------------------
 #: maximum candidate piece length in the seed vocabulary
 UNI_MAX_PIECE = 4
@@ -3722,9 +3590,31 @@ UNI_ROUNDS = 2
 #: (_unigram_dp_segment_fn), which equals the enumeration by the
 #: tiebreak proof there (property-pinned in tests/test_properties.py)
 UNI_MAX_WORD = 16
-#: log-prob microunit scale (the VERDICT r13 ask #3 discipline:
-#: ln() outputs floor-quantize to integers, never cast to decimal)
+#: log-prob microunit scale (ln() outputs floor-quantize to integers,
+#: never cast to decimal)
 UNI_LP_SCALE = 1_000_000_000_000
+
+
+def _viterbi_sql(r: int) -> str:
+    """The E-step under vocab ``l{r}``: ``s{r}`` scores every mask whose
+    pieces are all in the vocab, ``b{r}`` keeps each word's best by
+    (score DESC, mask ASC)."""
+    return f"""
+    s{r} AS (
+      SELECT m.word, m.mask, SUM(l.lp) AS score,
+             COUNT(*) AS matched, MAX(m.nseg) AS nseg
+      FROM mseg m JOIN l{r} l ON l.piece = m.piece
+      GROUP BY m.word, m.mask
+      HAVING COUNT(*) = MAX(m.nseg)
+    ),
+    b{r} AS (
+      SELECT word, mask FROM (
+        SELECT word, mask,
+               ROW_NUMBER() OVER (PARTITION BY word
+                                  ORDER BY score DESC, mask) AS rn
+        FROM s{r}
+      ) WHERE rn = 1
+    )"""
 
 
 def _unigram_cte_chain() -> str:
@@ -3739,10 +3629,7 @@ def _unigram_cte_chain() -> str:
     parts = [
         f"""
     wc AS (
-      SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS n
-      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-      WHERE len(w) >= 1
-      GROUP BY w
+      SELECT term AS word, n FROM ({term_counts_sql(min_len=1)})
     ),
     seed AS (
       SELECT substr(word, s, l) AS piece, SUM(n) AS cnt
@@ -3782,22 +3669,7 @@ def _unigram_cte_chain() -> str:
     ]
     for r in range(UNI_ROUNDS):
         parts.append(
-            f""",
-    s{r} AS (
-      SELECT m.word, m.mask, SUM(l.lp) AS score,
-             COUNT(*) AS matched, MAX(m.nseg) AS nseg
-      FROM mseg m JOIN l{r} l ON l.piece = m.piece
-      GROUP BY m.word, m.mask
-      HAVING COUNT(*) = MAX(m.nseg)
-    ),
-    b{r} AS (
-      SELECT word, mask FROM (
-        SELECT word, mask,
-               ROW_NUMBER() OVER (PARTITION BY word
-                                  ORDER BY score DESC, mask) AS rn
-        FROM s{r}
-      ) WHERE rn = 1
-    ),
+            f""",{_viterbi_sql(r)},
     c{r + 1} AS (
       SELECT m.piece, SUM(m.n) AS cnt
       FROM b{r} JOIN mseg m USING (word, mask)
@@ -3844,41 +3716,14 @@ def _unigram_apply_oracle() -> str:
     return (
         "WITH "
         + _unigram_cte_chain()
-        + f""",
-    sF AS (
-      SELECT m.word, m.mask, SUM(l.lp) AS score,
-             COUNT(*) AS matched, MAX(m.nseg) AS nseg
-      FROM mseg m JOIN l{UNI_ROUNDS} l ON l.piece = m.piece
-      GROUP BY m.word, m.mask
-      HAVING COUNT(*) = MAX(m.nseg)
-    ),
-    bF AS (
-      SELECT word, mask FROM (
-        SELECT word, mask,
-               ROW_NUMBER() OVER (PARTITION BY word
-                                  ORDER BY score DESC, mask) AS rn
-        FROM sF
-      ) WHERE rn = 1
-    ),
+        + f""",{_viterbi_sql(UNI_ROUNDS)},
     dict AS (
-      SELECT m.word,
+      SELECT m.word AS w,
              string_agg(m.piece, chr(31) ORDER BY m.k) AS enc,
              CAST(MAX(m.nseg) AS BIGINT) AS tk
-      FROM bF JOIN mseg m USING (word, mask)
+      FROM b{UNI_ROUNDS} JOIN mseg m USING (word, mask)
       GROUP BY m.word
-    ),
-    occ AS (
-      SELECT doc_id, i AS pos, ws[i] AS w
-      FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           UNNEST(generate_series(1, len(ws))) AS t(i)
-      WHERE len(ws[i]) >= 1
-    )
-    SELECT o.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_words,
-           CAST(SUM(d.tk) AS BIGINT) AS n_tokens,
-           md5(string_agg(d.enc, chr(30) ORDER BY o.pos)) AS stream_fp
-    FROM occ o JOIN dict d ON d.word = o.w
-    GROUP BY o.doc_id
+    ){_ENCODED_STREAMS_SQL}
     """
     )
 
@@ -3931,8 +3776,8 @@ _UNI_SEG_SCHEMA = "word string, n long, nseg int, k int, piece string"
 
 
 def _unigram_dp_segment_fn(bc_vocab):
-    """Linear Viterbi DP per distinct word (VERDICT r14 ask #5 — the
-    kernel the old UNI_MAX_WORD fail-fast only named): left-to-right
+    """Linear Viterbi DP per distinct word (the long-word E-step past
+    ``UNI_MAX_WORD``): left-to-right
     best-score fold with ``UNI_MAX_PIECE`` lookback, O(L·P) per word
     instead of the 2^(L-1) mask enumeration. The tiebreak reproduces
     the enumeration's (score DESC, mask ASC) total order EXACTLY: the
@@ -4141,11 +3986,28 @@ def unigram_vocab_rounds(
     return vocabs
 
 
+def _unigram_words(doc: DataFrame) -> tuple[DataFrame, bool]:
+    """The preamble both unigram rungs share: the distinct-word counts
+    (word, n), materialized once because the length probe, the seed
+    explode, the mask lattice and every EM round read them, and the
+    E-step dispatch. Corpora whose longest word fits ``UNI_MAX_WORD``
+    take the SQL-oracle-expressible mask enumeration; longer words
+    switch the E-step to the linear Viterbi DP kernel (same winner by
+    the tiebreak proof at ``_unigram_dp_segment_fn``)."""
+    wc = (
+        term_counts(doc, min_len=1)
+        .select(F.col("term").alias("word"), "n")
+        .localCheckpoint(eager=True)
+    )
+    max_len = wc.agg(F.max(F.length("word"))).first()[0]
+    return wc, max_len is not None and max_len > UNI_MAX_WORD
+
+
 @query("x4_unigram_train", oracle=_unigram_oracle())
 def x4_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer TRAINING (Kudo 2018, the SentencePiece
     algorithm — public) — the second mainstream tokenizer family
-    beside BPE train/apply (VERDICT r13 ask #5): seed the vocabulary
+    beside BPE train/apply: seed the vocabulary
     with every ≤``UNI_MAX_PIECE``-char substring of the corpus's
     distinct words (counts = corpus occurrences, with a permanent
     Laplace floor on single characters so the alphabet can never be
@@ -4162,7 +4024,7 @@ def x4_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentations per distinct word (equal to the DP by definition of
     argmax; guarded by ``UNI_MAX_WORD``) with the total order
     (score DESC, mask ASC); scores are exact BIGINT sums of
-    floor-quantized log-prob microunits (the ask-#3 discipline — a
+    floor-quantized log-prob microunits (the microunit discipline — a
     derived double never casts to decimal, and ln() sees only exact
     integer ratios).
 
@@ -4177,23 +4039,7 @@ def x4_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice bound the E-step DISPATCHES to the linear Viterbi DP
     Arrow kernel (O(L·P) per word, same winner — URLs/code/
     agglutinative corpora run end-to-end instead of failing)."""
-    doc = load_table(spark, sf_dir, "documents")
-    wc = (
-        doc.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.length("word") >= 1)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        # materialized once (round-15): the max-length dispatch probe,
-        # the seed explode, the mask lattice AND every EM round consume
-        # this relation — lazily each paid its own corpus explode+groupBy
-        .localCheckpoint(eager=True)
-    )
-    max_len = wc.agg(F.max(F.length("word")).alias("m")).first()["m"]
-    # dispatch (VERDICT r14 ask #5): ≤ UNI_MAX_WORD corpora take the
-    # SQL-oracle-expressible mask enumeration; longer words switch the
-    # E-step to the linear Viterbi DP kernel (same winner — tiebreak
-    # proof at _unigram_dp_segment_fn, property-pinned equality)
-    use_dp = max_len is not None and max_len > UNI_MAX_WORD
+    wc, use_dp = _unigram_words(load_table(spark, sf_dir, "documents"))
     final = unigram_vocab_rounds(wc, UNI_ROUNDS, use_dp=use_dp)[-1]
     return final.select(
         "piece",
@@ -4226,56 +4072,14 @@ def x4_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation anywhere: a doc repeating one word a million times
     costs one lattice argmax plus a million dict-join lookups."""
     doc = load_table(spark, sf_dir, "documents")
-    wc = (
-        doc.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.length("word") >= 1)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        # materialized once (round-15): the max-length dispatch probe,
-        # the seed explode, the mask lattice AND every EM round consume
-        # this relation — lazily each paid its own corpus explode+groupBy
-        .localCheckpoint(eager=True)
-    )
-    max_len = wc.agg(F.max(F.length("word")).alias("m")).first()["m"]
-    # dispatch (VERDICT r14 ask #5): same rule as x4_unigram_train —
-    # the DP kernel takes over past UNI_MAX_WORD, same winner
-    use_dp = max_len is not None and max_len > UNI_MAX_WORD
+    wc, use_dp = _unigram_words(doc)
     mseg = None if use_dp else _unigram_mseg(wc)
     final = unigram_vocab_rounds(
         wc, UNI_ROUNDS, mseg=mseg, use_dp=use_dp
     )[-1]
     seg = _unigram_best_seg(wc, final, mseg)
-    dic = (
-        seg
-        .groupBy("word")
-        .agg(
-            F.concat_ws(
-                "\x1f",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("k", "piece"))),
-                    lambda s: s["piece"],
-                ),
-            ).alias("enc"),
-            F.max("nseg").cast("long").alias("tk"),
-        )
+    dic = seg.groupBy(F.col("word").alias("term")).agg(
+        _ordered_join("k", "piece", "\x1f").alias("enc"),
+        F.max("nseg").cast("long").alias("tk"),
     )
-    occ = doc.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word")
-    ).filter(F.length("word") >= 1)
-    return (
-        occ.join(dic, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("tk").cast("long").alias("n_tokens"),
-            F.md5(
-                F.concat_ws(
-                    "\x1e",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "enc"))),
-                        lambda s: s["enc"],
-                    ),
-                )
-            ).alias("stream_fp"),
-        )
-    )
+    return _encoded_streams(doc, dic)

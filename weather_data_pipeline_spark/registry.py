@@ -46,29 +46,21 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver verifies correctness for the first 50 registered queries only,
-# in registration order. Round-7 restructure (VERDICT r6 ask #1): the
-# 24-slot pinned set shrank to THREE non-rotating slots — the flagship and
-# the two round-2 hash-fail regression pins — freeing 47 slots to clear the
-# 49-query rotation backlog (every round-6 addition that had never held a
-# driver CORRECTNESS row) in a single round. Family representation is
-# preserved because the backlog itself spans every family (asserted by
-# tests/test_entry.py::test_first_50_slots_cover_survey_operators with the
-# full family-prefix list, now including x9/ext_cdc/ext_cogroup).
+# The driver checks correctness for the first 50 registered queries only,
+# in registration order, so this list fills exactly those slots: the
+# flagship (also ``entry()``) first, then oracle-bearing queries that
+# between them cover every operator family (x1–x9, mm_, the TPC-H and
+# CDC/cogroup extensions, s_ streaming) plus the band twin of each
+# engine-specific rows-only query. Every query outside the list is still
+# oracle-checked on every test run by tests/test_oracle_parity.py; the
+# list only decides what the external driver sees first.
+# tests/test_entry.py pins the slot count, the oracle pairing and the
+# family coverage.
 #
-# Two backlog members do NOT fit (49 backlog + 3 pins = 52 > 50):
-# x7_asof_join_tolerance and x3_ivf_recall_eval — chosen because each is a
-# parameter/band variant of a family member that IS driver-green in r6
-# (x7_asof_join, x3_ivf_kmeans_topk + x2_minhash_lsh_recall for the
-# recall-band shape) and both are local-parity green at sf0.01 and sf0.1.
-# They head the r8 rotation queue together with the round-7 additions
-# (tests/test_entry.py::test_driver_union_vs_registry pins the queue to
-# exactly that set — the union gap cannot silently grow again).
-#
-# Rows-only queries (VERDICT r5 ask #6 resolution): exactly six queries
-# carry no oracle, each for a stated reason AND each now paired with an
-# oracle-bearing BAND TWIN that runs the same engine-specific op and
-# value-checks its contract (tests/test_oracle_parity.py::
+# Rows-only queries: exactly six queries carry no oracle, each for a
+# stated reason and each paired with an oracle-bearing BAND TWIN that
+# runs the same engine-specific op and value-checks its contract
+# (tests/test_oracle_parity.py::
 # test_rows_only_queries_each_have_a_band_twin pins the pairing):
 #   x2_minhash_lsh        — candidate pairs/distances depend on Spark's
 #                           minhash family + HashingTF murmur3 buckets;
@@ -87,16 +79,10 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #                           plus o28_linreg_baseline
 #   o29_next_day_forecast — GBT values; twin o29_forecast_band (exact
 #                           at_date stamp + plausibility band)
-# All 50 driver slots are oracle-bearing (enforced by tests/test_entry.py).
 _PRIORITY: tuple[str, ...] = (
-    # --- pinned (3): flagship + the two hash-fail regression pins ---
-    "o15_latest_per_key",  # flagship (also entry())
-    "w_corrupt_quarantine",  # r2 hash-fail regression pin
-    "x6_session_windows",  # r2 hash-fail regression pin
-    # --- round-15 STALENESS rotation (32; VERDICT r14 ask #2): ALL
-    # thirty-two r8-stale rows — the oldest oracle-bearing tier in the
-    # union (includes the ext_q16 filler displaced from r14). With
-    # these in-window nothing oracle-bearing is staler than r9.
+    "o15_latest_per_key",
+    "w_corrupt_quarantine",
+    "x6_session_windows",
     "ext_bloom_join_prune",
     "ext_dq_audit",
     "ext_q16_supplier_counts",
@@ -129,75 +115,22 @@ _PRIORITY: tuple[str, ...] = (
     "x8_sequence_pack",
     "x8_temperature_mixture",
     "x8_tokenize_to_ids",
-    # --- rows-only band twins (5 of 6; VERDICT r14 ask #8): a
-    # driver-signed row for the band twin of each engine-specific
-    # rows-only query. x2_simhash_invariants takes its slot in r16
-    # (the ask allows spreading across r15–r16; x2's other twin
-    # x2_minhash_lsh_recall is below).
     "ext_acd_error_band",
     "o27_random_split_invariants",
     "o28_gbt_holdout_band",
     "o29_forecast_band",
     "x2_minhash_lsh_recall",
-    # --- round-15 addition + changed-rung re-entries (standing
-    # convention: changed rungs are driver-checked the round they
-    # change). x3_nsw_beam_blocked is NEW (the LSH-blocked kNN-graph
-    # build, VERDICT r14 ask #1); x3_nsw_beam's search loop was
-    # factored into the shared _nsw_beam_loop + the empty-qsims guard
-    # (ADVICE r14); the unigram rungs gained the DP dispatch (ask #5);
-    # s_cdc_chunk_stream's registry merge gained the run-token replay
-    # guard + legacy-state backfill (ADVICE r14). All swept green at
-    # sf0.001/sf0.01/sf0.1 in-session before entering.
     "x3_nsw_beam_blocked",
     "x3_nsw_beam",
     "x4_unigram_train",
     "x4_unigram_apply",
     "s_cdc_chunk_stream",
-    # --- family representatives (5): sole-member families stay
-    # in-window every round (CDC, cogroup); the x5/x7/x9 reps are the
-    # OLDEST-driver-checked oracle-bearing members of families the
-    # staleness tier above doesn't reach (coverage pinned by
-    # test_first_50_slots_cover_survey_operators).
-    "ext_cdc_merge",  # r14 (sole CDC query)
-    "ext_cogroup_pandas",  # r14 (sole cogroup query)
-    "x5_json_get_path",  # r9 — oldest x5
-    "x7_interval_coverage",  # r9 — oldest x7
-    "x9_degree_hist",  # r10 — oldest x9
-    # Rotated OUT: the r14-window rows not re-listed above — all
-    # r14-green, their rows stand in the union (staleness floor r9).
+    "ext_cdc_merge",
+    "ext_cogroup_pandas",
+    "x5_json_get_path",
+    "x7_interval_coverage",
+    "x9_degree_hist",
 )
-
-#: Next-round rotation queue — every registered query not yet covered by
-#: the union of driver CORRECTNESS rows plus the current window above.
-#: tests/test_entry.py::test_driver_union_vs_registry computes the gap
-#: from the CORRECTNESS_r0*.json files and asserts it equals EXACTLY
-#: this set, so the backlog can never silently grow past one round's
-#: rotation capacity again. As of the r12 rotation: the six round-11
-#: late additions rotated into the window head (VERDICT r11 ask #1),
-#: nine round-12 additions registered straight into the window while
-#: it was open, and every other query holds a row in the r1-r11
-#: union. As of the r14 rotation: the 24 r7-stale rows rotate in
-#: (VERDICT r13 ask #1), the nine microunit-migrated rungs and the
-#: three ADVICE-touched CDC rungs re-enter (changed-this-round
-#: convention), the round-14 additions (x3_nsw_beam,
-#: x4_unigram_train) register straight into the window, and every
-#: other query holds a row in the r1-r13 union — the queue is EMPTY.
-#: As of the r15 rotation: the 32 r8-stale rows rotate in (VERDICT
-#: r14 ask #2), five of the six rows-only band twins get their
-#: driver-signed slot (ask #8; x2_simhash_invariants is DECLARED for
-#: r16), the round-15 addition (x3_nsw_beam_blocked) registers
-#: straight into the window with the four changed-rung re-entries,
-#: and every other query holds a row in the r1-r14 union — the queue
-#: is EMPTY. Queries landing after the r15 window locks go here and
-#: head the r16 rotation (standing convention): x3_hnsw_beam (the
-#: hierarchical-NSW rung, added mid-r15 after the window froze) was
-#: parity-swept at all three SFs in-session per the pre-registration
-#: checklist and takes the x2_simhash_invariants-declared r16 head.
-_R15_QUEUE: set[str] = {
-    "x3_hnsw_beam",
-    "x2_record_linkage",
-    "s_record_linkage_stream",
-}
 
 
 def _prioritized(d: dict[str, object]) -> dict[str, object]:

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..functions.tokens import words
 from ..schemas import TESTDATA, WEATHER_RAW
 
 #: Scratch root for checkpoints/state (inside the repo; gitignored).
@@ -506,7 +507,7 @@ def streaming_c4_gate(source: DataFrame, sink_table: str):
         C4_MIN_WORDS,
     )
 
-    wc = F.size(F.split("text", " "))
+    wc = F.size(words())
     gated = (
         source.filter(
             (wc >= C4_MIN_WORDS)
@@ -548,140 +549,141 @@ def stream_stream_left_join(
     availableNow appends flushes every remaining null row. The memory
     sink then equals the batch LEFT JOIN exactly — deterministic
     stream-batch parity for OUTER results."""
-    import shutil
     import tempfile
 
     from ..sources.testdata import EVENTS_TS_NTZ, events_ts_unit
 
-    work = tempfile.mkdtemp(prefix="ssleft_", dir=SCRATCH)
-    src_file = os.path.join(sf_dir, "events.parquet")
-    shutil.copy(src_file, os.path.join(work, "a_events.parquet"))
-    # sentinel: one far-future view for a user id no purchase carries.
-    # Unit sniff + legacy conf BEFORE the read — parquet schema
-    # inference is eager, and TIMESTAMP(NANOS) without nanosAsLong
-    # fails at DataFrame creation, not at collect.
-    unit = events_ts_unit(sf_dir)
-    if unit == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        max_ts = spark.read.parquet(src_file).agg(
-            F.max(F.timestamp_micros(F.expr("ts div 1000")))
-        ).collect()[0][0]
-    else:
-        max_ts = spark.read.parquet(src_file).agg(
-            F.max(F.col("ts").cast("timestamp"))
-        ).collect()[0][0]
-    sent_dir = os.path.join(work, "_sentinel_build")
-    # sentinels on BOTH sides: the global watermark is the MIN across
-    # the two watermark operators (default multipleWatermarkPolicy), so
-    # a view-only sentinel leaves the purchase side's max — and with it
-    # the global watermark — stuck at the real stream's tail (observed:
-    # wm never advanced and the tail's unmatched rows never flushed).
-    # Distinct negative user ids keep the two sentinels from matching
-    # each other, the view side never appears in left-join output, and
-    # the sentinel purchase itself stays in state (wm stops 1·horizon
-    # short of it) so it never emits either.
-    # far enough that the engine's CONSERVATIVE state watermark
-    # (global watermark minus the interval slack) still clears
-    # every real purchase: watermark arithmetic subtracts the
-    # horizon once more on the buffered side, so 2·horizon is the
-    # minimum and 4·horizon leaves margin
-    sent_ts = (F.col("ts") + F.expr(f"INTERVAL {horizon}") * 4).cast(
-        "timestamp"
-    )
-    # the sentinel file must carry the SAME physical ts unit as the
-    # staged source copy — the stream reads the whole dir under one
-    # schema. ns sources stage ns longs, so the sentinel writes ns
-    # longs too (mirroring stream_events' unit handling, ADVICE r8);
-    # µs sources write NTZ, matching EVENTS_TS_NTZ.
-    if unit == "ns":
-        sent_ts = (F.unix_micros(sent_ts) * F.lit(1000)).alias("ts")
-    else:
-        sent_ts = sent_ts.cast("timestamp_ntz").alias("ts")
-    spark.createDataFrame(
-        [
-            (int(-1), max_ts, int(-2), "view", 0.0, None),
-            (int(-2), max_ts, int(-1), "purchase", 0.0, None),
-        ],
-        schema="event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string",
-    ).select(
-        "event_id",
-        sent_ts,
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    ).coalesce(1).write.mode("overwrite").parquet(sent_dir)
-    part = sorted(
-        p for p in os.listdir(sent_dir) if p.endswith(".parquet")
-    )[0]
-    # TWO sentinel batches: the watermark a batch RUNS WITH comes from
-    # the PREVIOUS batch's max event time, and availableNow terminates
-    # after the last data batch without a trailing no-data cleanup
-    # batch — so the flush of the stream-tail's unmatched purchases
-    # needs a data batch that EXECUTES after the watermark has already
-    # passed them. Sentinel 1 advances the watermark; sentinel 2 is
-    # the batch that runs under it and emits the tail's null rows.
-    shutil.copy(
-        os.path.join(sent_dir, part), os.path.join(work, "b_sentinel.parquet")
-    )
-    shutil.copy(
-        os.path.join(sent_dir, part), os.path.join(work, "c_sentinel.parquet")
-    )
-    if unit == "ns":
-        # the staged copy keeps the source's ns unit and the sentinel
-        # above was written as ns longs, so the whole dir reads under
-        # the long-ts schema and converts exactly as stream_events
-        # does (nanosAsLong was set when max_ts was computed). Covered
-        # by test_stream_left_join_ns_unit against a synthetic ns
-        # fixture — not dead code even though driver testdata has
-        # shipped µs since round 3.
-        raw = (
-            spark.readStream.schema(TESTDATA["events"])
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(work)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # the staged copy is only read while the query runs; the memory sink
+    # holds the drained rows, so the directory goes once it returns
+    with tempfile.TemporaryDirectory(prefix="ssleft_", dir=SCRATCH) as work:
+        src_file = os.path.join(sf_dir, "events.parquet")
+        shutil.copy(src_file, os.path.join(work, "a_events.parquet"))
+        # sentinel: one far-future view for a user id no purchase carries.
+        # Unit sniff + legacy conf BEFORE the read — parquet schema
+        # inference is eager, and TIMESTAMP(NANOS) without nanosAsLong
+        # fails at DataFrame creation, not at collect.
+        unit = events_ts_unit(sf_dir)
+        if unit == "ns":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            max_ts = spark.read.parquet(src_file).agg(
+                F.max(F.timestamp_micros(F.expr("ts div 1000")))
+            ).collect()[0][0]
+        else:
+            max_ts = spark.read.parquet(src_file).agg(
+                F.max(F.col("ts").cast("timestamp"))
+            ).collect()[0][0]
+        sent_dir = os.path.join(work, "_sentinel_build")
+        # sentinels on BOTH sides: the global watermark is the MIN across
+        # the two watermark operators (default multipleWatermarkPolicy), so
+        # a view-only sentinel leaves the purchase side's max — and with it
+        # the global watermark — stuck at the real stream's tail (observed:
+        # wm never advanced and the tail's unmatched rows never flushed).
+        # Distinct negative user ids keep the two sentinels from matching
+        # each other, the view side never appears in left-join output, and
+        # the sentinel purchase itself stays in state (wm stops 1·horizon
+        # short of it) so it never emits either.
+        # far enough that the engine's CONSERVATIVE state watermark
+        # (global watermark minus the interval slack) still clears
+        # every real purchase: watermark arithmetic subtracts the
+        # horizon once more on the buffered side, so 2·horizon is the
+        # minimum and 4·horizon leaves margin
+        sent_ts = (F.col("ts") + F.expr(f"INTERVAL {horizon}") * 4).cast(
+            "timestamp"
         )
-    else:
-        raw = (
-            spark.readStream.schema(EVENTS_TS_NTZ)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(work)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
+        # the sentinel file must carry the SAME physical ts unit as the
+        # staged source copy — the stream reads the whole dir under one
+        # schema. ns sources stage ns longs, so the sentinel writes ns
+        # longs too (mirroring stream_events' unit handling, ADVICE r8);
+        # µs sources write NTZ, matching EVENTS_TS_NTZ.
+        if unit == "ns":
+            sent_ts = (F.unix_micros(sent_ts) * F.lit(1000)).alias("ts")
+        else:
+            sent_ts = sent_ts.cast("timestamp_ntz").alias("ts")
+        spark.createDataFrame(
+            [
+                (int(-1), max_ts, int(-2), "view", 0.0, None),
+                (int(-2), max_ts, int(-1), "purchase", 0.0, None),
+            ],
+            schema="event_id long, ts timestamp, user_id long, "
+            "event_type string, value double, props string",
+        ).select(
+            "event_id",
+            sent_ts,
+            "user_id",
+            "event_type",
+            "value",
+            "props",
+        ).coalesce(1).write.mode("overwrite").parquet(sent_dir)
+        part = sorted(
+            p for p in os.listdir(sent_dir) if p.endswith(".parquet")
+        )[0]
+        # TWO sentinel batches: the watermark a batch RUNS WITH comes from
+        # the PREVIOUS batch's max event time, and availableNow terminates
+        # after the last data batch without a trailing no-data cleanup
+        # batch — so the flush of the stream-tail's unmatched purchases
+        # needs a data batch that EXECUTES after the watermark has already
+        # passed them. Sentinel 1 advances the watermark; sentinel 2 is
+        # the batch that runs under it and emits the tail's null rows.
+        shutil.copy(
+            os.path.join(sent_dir, part), os.path.join(work, "b_sentinel.parquet")
         )
-    views = raw.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("view_id"),
-    ).withWatermark("v_ts", horizon)
-    purchases = raw.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-        "value",
-    ).withWatermark("p_ts", horizon)
-    # join_type="full_outer" adds the symmetric capability: unmatched
-    # VIEWS also emit (NULL purchase columns) once the watermark proves
-    # no purchase in [v_ts, v_ts + horizon] can still arrive. The same
-    # two-sided sentinel staging covers it: the watermark parks ~3x
-    # horizon past the real tail, clearing v_ts + horizon for every
-    # real view, while both sentinels stay in state (4x horizon out)
-    # and never reach the sink on either side of either mode.
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
-        join_type,
-    )
-    run_to_completion(
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append"),
-        f"ssleft-{sink_table}",
-    )
+        shutil.copy(
+            os.path.join(sent_dir, part), os.path.join(work, "c_sentinel.parquet")
+        )
+        if unit == "ns":
+            # the staged copy keeps the source's ns unit and the sentinel
+            # above was written as ns longs, so the whole dir reads under
+            # the long-ts schema and converts exactly as stream_events
+            # does (nanosAsLong was set when max_ts was computed). Covered
+            # by test_stream_left_join_ns_unit against a synthetic ns
+            # fixture — not dead code even though driver testdata has
+            # shipped µs since round 3.
+            raw = (
+                spark.readStream.schema(TESTDATA["events"])
+                .option("maxFilesPerTrigger", "1")
+                .option("pathGlobFilter", "*.parquet")
+                .parquet(work)
+                .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+            )
+        else:
+            raw = (
+                spark.readStream.schema(EVENTS_TS_NTZ)
+                .option("maxFilesPerTrigger", "1")
+                .option("pathGlobFilter", "*.parquet")
+                .parquet(work)
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+            )
+        views = raw.filter(F.col("event_type") == "view").select(
+            F.col("user_id").alias("v_user"),
+            F.col("ts").alias("v_ts"),
+            F.col("event_id").alias("view_id"),
+        ).withWatermark("v_ts", horizon)
+        purchases = raw.filter(F.col("event_type") == "purchase").select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+            F.col("event_id").alias("purchase_id"),
+            "value",
+        ).withWatermark("p_ts", horizon)
+        # join_type="full_outer" adds the symmetric capability: unmatched
+        # VIEWS also emit (NULL purchase columns) once the watermark proves
+        # no purchase in [v_ts, v_ts + horizon] can still arrive. The same
+        # two-sided sentinel staging covers it: the watermark parks ~3x
+        # horizon past the real tail, clearing v_ts + horizon for every
+        # real view, while both sentinels stay in state (4x horizon out)
+        # and never reach the sink on either side of either mode.
+        joined = purchases.join(
+            views,
+            (F.col("p_user") == F.col("v_user"))
+            & (F.col("p_ts") >= F.col("v_ts"))
+            & (F.col("p_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
+            join_type,
+        )
+        run_to_completion(
+            joined.writeStream.format("memory")
+            .queryName(sink_table)
+            .outputMode("append"),
+            f"ssleft-{sink_table}",
+        )
 
 
 def api_stream_ingest(
