@@ -130,3 +130,68 @@ def test_bench_movers_math_and_committed_artifacts(tmp_path):
     q_old, q_new = bm._queries(str(old_path)), bm._queries(str(new_path))
     assert q_old == old and q_new == new
     assert bm.movers(q_old, q_new, 1.25)["total_ratio"] == out["total_ratio"]
+
+
+def _load_tool(name: str):
+    spec = importlib.util.spec_from_file_location(
+        f"_tool_{name}", str(ROOT / "tools" / f"{name}.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_plan_audit_splice_keeps_unmoved_sections():
+    """A plan_audit rerun keeps the committed text of a section whose
+    plan hash and summary held, takes the fresh text where either moved,
+    and adds new sections, in the fresh run's order under its header."""
+    splice = _load_tool("plan_audit").splice
+
+    def sec(name, summary, plan):
+        return f"## {name}\n\n**{summary}**\n\n```\n{plan}\n```\n\n"
+
+    old = (
+        "# PLANS (old)\n\n"
+        + sec("a", "exchanges=1", "Scan #12")
+        + sec("b", "exchanges=2", "Exchange #13")
+        + sec("c", "exchanges=0", "Scan #14")
+    )
+    new = (
+        "# PLANS (new)\n\n"
+        + sec("a", "exchanges=1", "Scan #98")
+        + sec("b", "exchanges=3", "Exchange #99")
+        + sec("c", "exchanges=1", "Scan #97")
+        + sec("d", "exchanges=0", "Scan #96")
+    )
+    got = splice(
+        old, new, {"a": "h1", "b": "h2", "c": "h3"},
+        {"a": "h1", "b": "h5", "c": "h3", "d": "h6"},
+    )
+    assert got == (
+        "# PLANS (new)\n\n"
+        + sec("a", "exchanges=1", "Scan #12")
+        + sec("b", "exchanges=3", "Exchange #99")
+        + sec("c", "exchanges=1", "Scan #97")
+        + sec("d", "exchanges=0", "Scan #96")
+    )
+    assert splice(old, old, {"a": "h1"}, {"a": "h1"}) == old
+
+
+def test_parity_check_filters_by_prefix():
+    """parity_check's name filters are prefixes: ``s_`` selects the
+    streaming names, not every name that merely contains ``s_``."""
+    select = _load_tool("parity_check").select
+    names = [
+        "x9_bfs_reach",
+        "s_dedup_stream",
+        "x6_rfm_scores_scalable",
+        "ext_pandas_x6_ema",
+        "x6_ema_daily",
+    ]
+    assert select(names, ["s_"]) == ["s_dedup_stream"]
+    assert select(names, ["x6_", "s_"]) == [
+        "s_dedup_stream",
+        "x6_ema_daily",
+        "x6_rfm_scores_scalable",
+    ]
+    assert select(names, []) == sorted(names)

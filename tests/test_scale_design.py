@@ -15,10 +15,15 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from weather_data_pipeline_spark.operators.sessionize import (
     EMA_MAX_SHARD_ROWS,
     EMA_SHARDS,
-    _ema_kernel,
+    _daily_close,
+    _ema_walk,
+    _shard_walk,
     ema_daily,
     ema_shards_for,
 )
@@ -28,17 +33,7 @@ from .conftest import SF_ORACLE
 
 
 def _daily(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
+    return _daily_close(load_table(spark, sf_dir, "events"))
 
 
 def test_ema_shard_frames_bounded(spark):
@@ -80,10 +75,58 @@ def test_ema_kernel_fail_fast_on_oversized_shard():
             "close_value": [float(i) for i in range(10)],
         }
     )
+    names = ["user_id", "day", "close_value", "ema"]
     with pytest.raises(ValueError, match="raise `shards`"):
-        _ema_kernel(0.3, max_shard_rows=5)(pdf)
-    out = _ema_kernel(0.3, max_shard_rows=10)(pdf)
+        _shard_walk(_ema_walk, names, ("day",), max_shard_rows=5)(pdf)
+    out = _shard_walk(_ema_walk, names, ("day",), max_shard_rows=10)(pdf)
     assert len(out) == 10
+
+
+def _running_count(uid, rows):
+    for i, r in enumerate(rows, 1):
+        yield uid, r.day, i
+
+
+def _nothing(uid, rows):
+    yield from ()
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.sets(st.tuples(st.integers(0, 40), st.integers(0, 30)), max_size=80)
+)
+def test_shard_walk_matches_per_user_reference(user_days):
+    """The shared walk kernel, called shard by shard on plain pandas
+    frames, gives every user the same running count a plain-Python
+    per-user loop gives, at any shard count; a walk that yields nothing
+    frames no rows under the named columns; a frame past the bound
+    raises with the remedy."""
+    pdf = pd.DataFrame(
+        {
+            "user_id": [u for u, _ in user_days],
+            "day": pd.to_datetime([d for _, d in user_days], unit="D"),
+        },
+        columns=["user_id", "day"],
+    ).sample(frac=1.0, random_state=0)
+    want = []
+    for uid in sorted({u for u, _ in user_days}):
+        days = sorted(d for u, d in user_days if u == uid)
+        want += [(uid, pd.Timestamp(d, unit="D"), i) for i, d in
+                 enumerate(days, 1)]
+    names = ["user_id", "day", "n"]
+    for shards in (1, 3, 17):
+        got = []
+        for _, shard in pdf.groupby(pdf["user_id"] % shards):
+            out = _shard_walk(_running_count, names, ("day",))(shard)
+            assert list(out.columns) == names
+            got += list(out.itertuples(index=False, name=None))
+            empty = _shard_walk(_nothing, names, ("day",))(shard)
+            assert empty.empty and list(empty.columns) == names
+            with pytest.raises(ValueError, match="raise `shards`"):
+                _shard_walk(_running_count, names, ("day",), len(shard) - 1)(
+                    shard
+                )
+        assert sorted(got) == want
 
 
 def test_uncapped_jaccard_gate(spark, monkeypatch):

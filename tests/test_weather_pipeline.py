@@ -241,6 +241,25 @@ def test_weather_api_datasource(spark):
     ]
 
 
+def test_raw_reads_scan_every_day_directory(spark):
+    """The batch raw reads name the ``data`` directory (recursive file
+    lookup), not a ``data/*`` glob, and scan exactly the files of the
+    fixture's day directories — JSON and CSV alike."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from weather_data_pipeline_spark.sources import csv_source as csvsrc
+
+    for root, read in (
+        (wsrc.ensure_fixture(), wsrc.read_raw),
+        (wsrc.ensure_corrupt_fixture(), wsrc.read_raw),
+        (csvsrc.ensure_csv_fixture(), csvsrc.read_csv_permissive),
+    ):
+        want = sorted(str(p) for p in Path(root, "data").glob("*/*"))
+        got = sorted(urlparse(f).path for f in read(spark, root).inputFiles())
+        assert want and got == want, root
+
+
 def test_permissive_scan_quarantines_corrupt(spark, tmp_path):
     """A malformed raw document lands in _corrupt; good rows parse; the
     strict scan stays the default."""

@@ -1,7 +1,10 @@
 """Dev-loop parity checker: run every (queries, oracle_sql) pair in ONE
 Spark session against DuckDB at sf0.01 (or argv[1]) and print a summary.
 
-Usage: python tools/parity_check.py [sf_dir] [name_filter...]
+Usage: python tools/parity_check.py [sf_dir] [name_prefix...]
+
+With prefixes, only the names that start with one of them run
+(``x6_`` selects the X6 ladder, never ``ext_pandas_x6_...``).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ def main() -> int:
     )
     spark = get_spark(app_name="parity-check")
     qs, osql = registry.queries(), registry.oracle_sql()
-    names = [n for n in sorted(qs) if not args or any(a in n for a in args)]
+    names = select(qs, args)
     # streaming state and checkpoints of the s_* queries live for the
     # run only, never in the checkout's .scratch/
     with tempfile.TemporaryDirectory(prefix="parity-") as scratch:
@@ -40,6 +43,12 @@ def main() -> int:
         failed = _check(spark, qs, osql, names, sf_dir)
     print(f"\n{len(names)-len(failed)}/{len(names)} ok; failed: {failed}")
     return 1 if failed else 0
+
+
+def select(names, prefixes) -> list[str]:
+    """The sorted names that start with one of ``prefixes`` (all of
+    them when none are given)."""
+    return sorted(n for n in names if n.startswith(tuple(prefixes or [""])))
 
 
 def _check(spark, qs, osql, names, sf_dir) -> list[str]:

@@ -10,6 +10,11 @@ change — expression/operator/codegen ids, file locations, statistics —
 so a hash moves exactly when the plan SHAPE moves (an exchange added,
 a join strategy flipped, a filter no longer pushed).
 
+A rerun keeps the committed text of every PLANS.md section whose hash
+and summary did not move (formatted plans carry ids that change from
+run to run) and rewrites only the sections that moved, so the diff
+shows plan changes and nothing else.
+
 Run:  python tools/plan_audit.py   (writes PLANS.md + PLANHASHES.json)
 """
 
@@ -140,6 +145,29 @@ def normalized_plan_hash(formatted: str) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
+def _sections(text: str) -> tuple[str, dict[str, str]]:
+    """(head, {name: section}): PLANS.md split at its ``## name`` lines."""
+    head, *parts = re.split(r"^(?=## )", text, flags=re.M)
+    return head, {p.split("\n", 1)[0][3:].strip(): p for p in parts}
+
+
+def splice(old: str, new: str, old_hashes: dict, new_hashes: dict) -> str:
+    """``new`` with each section taken from ``old`` where the plan hash
+    and the summary above the plan are unchanged."""
+    _, kept = _sections(old)
+    head, fresh = _sections(new)
+    out = [head]
+    for name, sec in fresh.items():
+        was = kept.get(name)
+        same = (
+            was is not None
+            and old_hashes.get(name) == new_hashes.get(name)
+            and was.split("```")[0] == sec.split("```")[0]
+        )
+        out.append(was if same else sec)
+    return "".join(out)
+
+
 def main() -> None:
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -188,9 +216,15 @@ def main() -> None:
         out.append("")
         hashes[name] = normalized_plan_hash(formatted)
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    with open(os.path.join(root, "PLANHASHES.json"), "w") as f:
+    plans_md = os.path.join(root, "PLANS.md")
+    hashes_json = os.path.join(root, "PLANHASHES.json")
+    text = "\n".join(out) + "\n"
+    if os.path.exists(plans_md) and os.path.exists(hashes_json):
+        with open(plans_md) as f, open(hashes_json) as h:
+            text = splice(f.read(), text, json.load(h)["plans"], hashes)
+    with open(plans_md, "w") as f:
+        f.write(text)
+    with open(hashes_json, "w") as f:
         json.dump(
             {"sf_dir": SF_DIR, "plans": dict(sorted(hashes.items()))},
             f,

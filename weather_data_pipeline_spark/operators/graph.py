@@ -39,7 +39,7 @@ Reference parity: no graph ops in the reference (440-line pandas ETL);
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.broadcast import broadcast_under_budget
@@ -504,10 +504,12 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape — the textbook Pregel step as plain DataFrame ops: the
     checkpointed edges join the |nodes|-row label vector every round
     (broadcast under the shared budget — no edge shuffle; keyed shuffle
-    past it, the web-scale shape), then the (src,label) count and a
-    max_by(label, (cnt,-label)) argmax per src — the same struct-ordered
-    engine-exact pick as the oracle's ROW_NUMBER. Label vectors
-    localCheckpoint per round (truncated lineage)."""
+    past it, the web-scale shape), then ONE per-src
+    ``mode(label, deterministic=True)`` aggregate — the smallest of the
+    most frequent labels, the oracle's ROW_NUMBER tie rule — whose
+    partial form ships each map task's per-src label counts through a
+    single exchange. Label vectors localCheckpoint per round (truncated
+    lineage)."""
     edges = _trade_edges(spark, sf_dir)
     # Round 0 collapses to min-neighbor-id ("aggregate before you
     # shuffle"): labels start as the node's own id, so round 0's joined
@@ -519,33 +521,24 @@ def x9_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all |edges| joined rows, because identity labels give partial
     # aggregation nothing to combine. Round 0's output is also the first
     # label vector and its row count is |nodes| (every node is the src of
-    # ≥1 edge), so no identity-label init table is built.
+    # ≥1 edge), so no identity-label init table is built; the count
+    # rides the checkpoint's own job as an Observation.
+    obs = Observation()
     labels = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("label"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n = labels.count()  # |nodes| — metadata job over the materialized r0
-    # Rounds ≥ 1: the (src, label) count is a partial aggregate, so each
-    # map task ships its distinct (src, label) combiners, not every
-    # joined edge row; the per-src argmax then takes a second, |nodes|-
-    # bounded exchange. A repartition("src") ahead of the count would
-    # save that exchange but ship all |edges| joined rows: measured on
-    # sf0.1 and on its 10-copy replica (CHANGES.md), that form wrote
-    # 1.8× the shuffle records and 1.5× the bytes and ran slower at
-    # both sizes.
+    n = obs.get["n"]
+    # Rounds ≥ 1: mode's partial aggregate keeps a per-src label-count
+    # map, so each map task ships its (src → label counts) combiners,
+    # not every joined edge row, through the round's one exchange.
     for r in range(1, LPA_ROUNDS):
         lv = labels.withColumnRenamed("node", "dst")
         joined = edges.join(broadcast_under_budget(lv, n), "dst")
-        counts = joined.groupBy("src", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        labels = (
-            counts.withColumn("neg", -F.col("label"))
-            .groupBy(F.col("src").alias("node"))
-            .agg(
-                F.max_by("label", F.struct("cnt", "neg")).alias("label")
-            )
+        labels = joined.groupBy(F.col("src").alias("node")).agg(
+            F.mode("label", deterministic=True).alias("label")
         )
         if r < LPA_ROUNDS - 1:
             # truncate lineage between rounds; the LAST round stays

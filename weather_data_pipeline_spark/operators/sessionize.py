@@ -9,6 +9,8 @@ user_id, no UDFs). The streaming twins live in ``streaming/``.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -187,22 +189,182 @@ def x6_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Time-series rollup + gap fill (hypertable-style downsampling)
+# Shared pieces of the recurrence ladder: the daily series each rung
+# reads, and the one sharded per-user walk the recurrences run in
 # ----------------------------------------------------------------------
-@query(
-    "x6_gap_fill_locf",
-    oracle="""
-    WITH ranked AS (
-      SELECT user_id, date_trunc('day', ts) AS day,
+def _daily_close(ev: DataFrame) -> DataFrame:
+    """(user_id, day, close_value): each user's last value per day under
+    the total (ts, event_id) order — ``max_by`` is a partial aggregate,
+    so one map-side-combined exchange and no window — rounded through
+    DECIMAL(18,2) like every raw value the oracles compare."""
+    return ev.groupBy(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).agg(
+        F.round(
+            F.max_by("value", F.struct("ts", "event_id"))
+            .cast("decimal(18,2)")
+            .cast("double"),
+            2,
+        ).alias("close_value")
+    )
+
+
+#: ``_daily_close``'s DuckDB twin: the ``ranked``/``daily`` CTE pair,
+#: ``daily`` carrying ``rn`` = the day's 1-based position in the user's
+#: series, which the recursive oracles step along (``d.rn = r.rn + 1``).
+_DAILY_CLOSE_CTES = """ranked AS (
+      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
              ROUND(CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE), 2)
                AS close_value,
              ROW_NUMBER() OVER (
                PARTITION BY user_id, date_trunc('day', ts)
-               ORDER BY ts DESC, event_id DESC) AS rn
+               ORDER BY ts DESC, event_id DESC) AS pick
       FROM events
     ), daily AS (
-      SELECT user_id, day, close_value FROM ranked WHERE rn = 1
-    ), spans AS (
+      SELECT user_id, day, close_value,
+             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
+      FROM ranked WHERE pick = 1
+    )"""
+
+
+def _daily_mean(ev: DataFrame) -> DataFrame:
+    """(user_id, d, v, vq): each user's mean value per day, ``d`` = days
+    since the epoch. ``v`` is the exact DECIMAL sum over the count;
+    ``vq`` floor-quantizes it to BIGINT microunits, the integer-microunit
+    scheme of ``x6_acf_lags`` and ``x6_stl_decompose``. One partial-agg
+    (user, day) exchange; a caller that reads one of the two columns
+    has the other pruned."""
+    mean = F.sum(F.col("value").cast("decimal(28,12)")).cast(
+        "double"
+    ) / F.count(F.lit(1))
+    return ev.groupBy(
+        "user_id",
+        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
+        .alias("d"),
+    ).agg(mean.alias("v"), F.floor(mean * F.lit(1e6)).alias("vq"))
+
+
+#: ``_daily_mean``'s DuckDB twin, the ``daily`` CTE.
+_DAILY_MEAN_CTE = """daily AS (
+      SELECT user_id,
+             datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
+             CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE)
+               / COUNT(*) AS v,
+             CAST(FLOOR(v * 1000000) AS BIGINT) AS vq
+      FROM events GROUP BY 1, 2
+    )"""
+
+
+#: Shard-count FLOOR for the walk: one applyInPandas group per shard
+#: (not per user) — grouped-map sends ONE Arrow frame per group, so
+#: per-user grouping paid ~2 ms of frame overhead × |users| (measured
+#: 4.1 s at sf0.1 for the EMA); sharding with the per-user loop inside
+#: cut that to kernel-side microseconds (same trick as
+#: x8_sequence_packing). The default shard count scales to cluster
+#: parallelism, never below this floor.
+EMA_SHARDS = 32
+
+#: Fail-fast memory guard: a grouped-map shard frame is fully
+#: materialized in one executor's memory, so its row count IS the
+#: kernel's memory bound. 5M rows × 4 narrow columns ≈ 160 MB of Arrow
+#: — comfortable in a multi-GB executor. A shard exceeding this raises
+#: with the remedy (raise ``shards``) instead of OOM-killing the
+#: executor mid-job — the same fail-fast posture as the gated all-pairs
+#: similarity rung (similarity.py).
+EMA_MAX_SHARD_ROWS = 5_000_000
+
+
+def ema_shards_for(n_daily_rows: int | None = None) -> int:
+    """Shard count sized to the data: enough shards that every shard
+    frame stays under half the ``EMA_MAX_SHARD_ROWS`` guard (headroom
+    for modulo-hash imbalance), never below cluster parallelism or the
+    ``EMA_SHARDS`` floor. Callers at known scale pass their row count;
+    with no hint the default covers parallelism only."""
+    from ..session import default_parallelism
+
+    base = max(EMA_SHARDS, default_parallelism())
+    if n_daily_rows is None:
+        return base
+    return max(base, math.ceil(n_daily_rows / (EMA_MAX_SHARD_ROWS // 2)))
+
+
+def _shard_walk(walk, names, order, max_shard_rows=EMA_MAX_SHARD_ROWS):
+    """The pandas kernel of ``_walk_users``: guard the shard frame's
+    size, sort it by (user_id, *order), hand each user's rows to
+    ``walk(uid, rows)`` as records with the frame's column names, and
+    frame the tuples it yields as ``names``. Numeric columns become
+    Python scalars (fast arithmetic) and datetime columns stay numpy
+    datetime64 (no per-value Timestamp boxing)."""
+    import itertools
+    from collections import namedtuple
+    from operator import attrgetter
+
+    import pandas as pd
+
+    def walk_shard(pdf):
+        if len(pdf) > max_shard_rows:
+            raise ValueError(
+                f"{walk.__name__}: shard frame has {len(pdf)} rows > "
+                f"bound {max_shard_rows}: raise `shards` "
+                f"(ema_shards_for(n_rows)) so each grouped-map frame "
+                f"fits executor memory"
+            )
+        pdf = pdf.sort_values(["user_id", *order])
+        record = namedtuple("record", pdf.columns)
+        cols = [
+            c.to_numpy() if c.dtype.kind == "M" else c.tolist()
+            for _, c in pdf.items()
+        ]
+        users = itertools.groupby(
+            map(record._make, zip(*cols)), key=attrgetter("user_id")
+        )
+        rows = []
+        for uid, recs in users:
+            rows.extend(walk(uid, list(recs)))
+        return pd.DataFrame.from_records(rows, columns=names)
+
+    return walk_shard
+
+
+def _walk_users(
+    df: DataFrame, walk, schema: str, order, shards: int | None = None
+) -> DataFrame:
+    """The recurrence ladder's one execution shape: ``user_id % shards``
+    sends each user's whole series to one shard (one exchange), and an
+    Arrow-batched ``applyInPandas`` kernel walks the shard's users one
+    at a time in ``order`` — parallel across shards, per-user work
+    bounded by the series length, the shape a 100 TB feature pipeline
+    uses for per-entity state sweeps. ``walk(uid, rows)`` gets one
+    user's rows in order and yields output rows in ``schema`` order. ``shards`` bounds per-executor memory: a
+    shard's whole frame (≈ |df| / shards rows; ``user_id % shards`` is
+    near-uniform, bound test in tests/test_scale_design.py) is
+    materialized per grouped-map call, so at 100 TB it must scale with
+    data — size it via ``ema_shards_for(n_rows)``; the kernel fail-fasts
+    past ``EMA_MAX_SHARD_ROWS`` instead of OOMing. Output is
+    shard-invariant (each user's series lives wholly in one shard)."""
+    if shards is None:
+        shards = ema_shards_for()
+    names = [field.split()[0] for field in schema.split(",")]
+    return (
+        df.withColumn("shard", F.col("user_id") % shards)
+        .groupBy("shard")
+        .applyInPandas(_shard_walk(walk, names, order), schema=schema)
+    )
+
+
+def _trunc6(x: float) -> float:
+    """Floor-truncate to 6 decimals — floor agrees between Python and
+    DuckDB for negatives too, unlike round-half modes."""
+    return math.floor(x * 1_000_000) / 1e6
+
+
+# ----------------------------------------------------------------------
+# Time-series rollup + gap fill (hypertable-style downsampling)
+# ----------------------------------------------------------------------
+@query(
+    "x6_gap_fill_locf",
+    oracle=f"""
+    WITH {_DAILY_CLOSE_CTES}, spans AS (
       SELECT user_id, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY user_id
     ), grid AS (
       SELECT user_id, UNNEST(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
@@ -225,17 +387,7 @@ def x6_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     days are flagged. At scale the grid explode is output-proportional
     (|users| × span days) and the fill is one partition-local window —
     no shuffle beyond the rollup's own key exchange."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
+    daily = _daily_close(load_table(spark, sf_dir, "events"))
     grid = (
         daily.groupBy("user_id")
         .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
@@ -318,123 +470,28 @@ def x6_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: EMA smoothing factor (ema_t = ALPHA * x_t + (1 - ALPHA) * ema_{t-1})
 EMA_ALPHA = 0.3
 
-
-#: Shard-count FLOOR for the EMA kernel: one applyInPandas group per
-#: shard (not per user) — grouped-map sends ONE Arrow frame per group, so
-#: per-user grouping paid ~2 ms of frame overhead × |users| (measured
-#: 4.1 s at sf0.1); sharding with the per-user loop inside cut that to
-#: kernel-side microseconds (same trick as x8_sequence_packing). The
-#: actual shard count is an ARGUMENT (``ema_daily(df, shards=...)``)
-#: scaled to data volume by the caller; the default scales to cluster
-#: parallelism, never below this floor.
-EMA_SHARDS = 32
-
-#: Fail-fast memory guard: a grouped-map shard frame is fully
-#: materialized in one executor's memory, so its row count IS the
-#: kernel's memory bound. 5M rows × 4 narrow columns ≈ 160 MB of Arrow
-#: — comfortable in a multi-GB executor. A shard exceeding this raises
-#: with the remedy (raise ``shards``) instead of OOM-killing the
-#: executor mid-job — the same fail-fast posture as the gated all-pairs
-#: similarity rung (similarity.py).
-EMA_MAX_SHARD_ROWS = 5_000_000
+def _ema_walk(uid, rows):
+    """One user's EMA over the days in order — the textbook recurrence
+    in float64, emitted floor-truncated to 6 decimals."""
+    ema = None
+    for r in rows:
+        x = r.close_value
+        ema = x if ema is None else EMA_ALPHA * x + (1.0 - EMA_ALPHA) * ema
+        yield uid, r.day, x, _trunc6(ema)
 
 
-def ema_shards_for(n_daily_rows: int | None = None) -> int:
-    """Shard count sized to the data: enough shards that every shard
-    frame stays under half the ``EMA_MAX_SHARD_ROWS`` guard (headroom
-    for modulo-hash imbalance), never below cluster parallelism or the
-    ``EMA_SHARDS`` floor. Callers at known scale pass their daily-row
-    count; with no hint the default covers parallelism only."""
-    import math
-
-    from ..session import default_parallelism
-
-    base = max(EMA_SHARDS, default_parallelism())
-    if n_daily_rows is None:
-        return base
-    return max(base, math.ceil(n_daily_rows / (EMA_MAX_SHARD_ROWS // 2)))
-
-
-def _ema_kernel(alpha: float, max_shard_rows: int):
-    """Kernel factory (pack_sequences pattern): per-shard EMA — users in
-    the shard walked one at a time, days in order — the textbook
-    recurrence in float64, truncated to 6 decimals via floor (floor
-    agrees between Python and DuckDB for negatives too, unlike
-    round-half modes)."""
-    import math
-
-    import pandas as pd
-
-    def ema_of_shard(pdf):
-        if len(pdf) > max_shard_rows:
-            raise ValueError(
-                f"EMA shard frame has {len(pdf)} rows > bound "
-                f"{max_shard_rows}: raise `shards` (ema_daily(df, "
-                f"shards=ema_shards_for(n_daily_rows))) so each "
-                f"grouped-map frame fits executor memory"
-            )
-        pdf = pdf.sort_values(["user_id", "day"])
-        out = []
-        for _, g in pdf.groupby("user_id", sort=False):
-            prev = None
-            for x in g["close_value"]:
-                prev = x if prev is None else alpha * x + (1.0 - alpha) * prev
-                out.append(math.floor(prev * 1_000_000) / 1e6)
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "day": pdf["day"],
-                "close_value": pdf["close_value"],
-                "ema": out,
-            }
-        )
-
-    return ema_of_shard
-
-
-def ema_daily(
-    daily: DataFrame,
-    shards: int | None = None,
-    alpha: float = EMA_ALPHA,
-    max_shard_rows: int = EMA_MAX_SHARD_ROWS,
-) -> DataFrame:
-    """Shard → per-user EMA recurrence within each shard (see
-    ``x6_ema_daily``). ``shards`` bounds per-executor memory: a shard's
-    whole frame (≈ |daily| / shards rows; ``user_id % shards`` is
-    near-uniform, bound test in tests/test_scale_design.py) is
-    materialized per grouped-map call, so at 100 TB it must scale with
-    data — size it via ``ema_shards_for(n_daily_rows)``. The kernel
-    fail-fasts past ``max_shard_rows`` instead of OOMing. Output values
-    are shard-invariant (each user's series lives entirely in one
-    shard), so correctness never depends on the chosen count."""
-    if shards is None:
-        shards = ema_shards_for()
-    return (
-        daily.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandas(
-            _ema_kernel(alpha, max_shard_rows),
-            schema="user_id long, day timestamp_ntz, close_value double, ema double",
-        )
-    )
+def ema_daily(daily: DataFrame, shards: int | None = None) -> DataFrame:
+    """Per-user EMA of a ``_daily_close`` frame on the sharded walk
+    (see ``x6_ema_daily``); ``shards`` as in ``_walk_users``."""
+    schema = "user_id long, day timestamp_ntz, close_value double, ema double"
+    return _walk_users(daily, _ema_walk, schema, ("day",), shards)
 
 
 @query(
     "x6_ema_daily",
     oracle=f"""
-    WITH RECURSIVE ranked AS (
-      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             ROUND(CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE), 2)
-               AS close_value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, date_trunc('day', ts)
-               ORDER BY ts DESC, event_id DESC) AS pick
-      FROM events
-    ), daily AS (
-      SELECT user_id, day, close_value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
-      FROM ranked WHERE pick = 1
-    ), rec(user_id, day, close_value, rn, ema) AS (
+    WITH RECURSIVE {_DAILY_CLOSE_CTES},
+    rec(user_id, day, close_value, rn, ema) AS (
       SELECT user_id, day, close_value, rn, close_value
       FROM daily WHERE rn = 1
       UNION ALL
@@ -451,28 +508,15 @@ def x6_ema_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential moving average of each user's daily close — the
     time-series recurrence plain window functions cannot express (each
     row depends on the previous OUTPUT, not the previous input). The
-    scalable form: one shuffle groups users into deterministic shards
-    (count = ``ema_shards_for`` — an argument scaled to data volume,
-    guarded by a per-shard row bound), an Arrow-batched ``applyInPandas``
-    kernel walks each user's series in order — parallelism across
-    shards, per-user work bounded by days-per-user, the same shape a
-    100 TB feature pipeline uses for per-entity state sweeps. Oracle: the identical recurrence as a
-    recursive CTE over per-user day ranks (the x8_sequence_packing
+    scalable form is ``_walk_users``: one shuffle groups users into
+    deterministic shards (count = ``ema_shards_for``, guarded by a
+    per-shard row bound), an Arrow-batched ``applyInPandas`` kernel
+    walks each user's series in order. Oracle: the identical recurrence
+    as a recursive CTE over per-user day ranks (the x8_sequence_packing
     pattern), with floor-based 6-decimal truncation on both engines —
     floor agrees across engines for negative values where round-half
     modes differ."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
-    return ema_daily(daily)
+    return ema_daily(_daily_close(load_table(spark, sf_dir, "events")))
 
 
 # ----------------------------------------------------------------------
@@ -830,67 +874,31 @@ HOLT_ALPHA = 0.3
 HOLT_BETA = 0.1
 
 
-def _holt_kernel(alpha: float, beta: float, max_shard_rows: int):
-    """Per-shard Holt recurrence (the EMA kernel generalized to TWO
+def _holt_walk(uid, rows):
+    """One user's Holt recurrence (the EMA walk generalized to TWO
     mutually-dependent states): level_t = α·x_t + (1-α)(level+trend),
     trend_t = β(level_t - level_{t-1}) + (1-β)·trend. Initialization:
     level_1 = x_1, trend_1 = 0 (first observation carries no slope
     information). Floor-truncated at 6 decimals per emitted value; the
     RAW (untruncated) states carry the recurrence so truncation error
     never compounds — the oracle does the same."""
-    import math
-
-    import pandas as pd
-
-    def run(pdf):
-        if len(pdf) > max_shard_rows:
-            raise ValueError(
-                f"Holt shard frame has {len(pdf)} rows > bound "
-                f"{max_shard_rows}: raise `shards` so each grouped-map "
-                f"frame fits executor memory"
-            )
-        pdf = pdf.sort_values(["user_id", "day"])
-        levels, trends = [], []
-        for _, g in pdf.groupby("user_id", sort=False):
-            level = trend = None
-            for x in g["close_value"]:
-                if level is None:
-                    level, trend = float(x), 0.0
-                else:
-                    prev = level
-                    level = alpha * x + (1.0 - alpha) * (level + trend)
-                    trend = beta * (level - prev) + (1.0 - beta) * trend
-                levels.append(math.floor(level * 1_000_000) / 1e6)
-                trends.append(math.floor(trend * 1_000_000) / 1e6)
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "day": pdf["day"],
-                "close_value": pdf["close_value"],
-                "level": levels,
-                "trend": trends,
-            }
-        )
-
-    return run
+    level = trend = None
+    for r in rows:
+        x = r.close_value
+        if level is None:
+            level, trend = x, 0.0
+        else:
+            prev = level
+            level = HOLT_ALPHA * x + (1.0 - HOLT_ALPHA) * (level + trend)
+            trend = HOLT_BETA * (level - prev) + (1.0 - HOLT_BETA) * trend
+        yield uid, r.day, x, _trunc6(level), _trunc6(trend)
 
 
 @query(
     "x6_holt_smoothing",
     oracle=f"""
-    WITH RECURSIVE ranked AS (
-      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             ROUND(CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE), 2)
-               AS close_value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, date_trunc('day', ts)
-               ORDER BY ts DESC, event_id DESC) AS pick
-      FROM events
-    ), daily AS (
-      SELECT user_id, day, close_value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
-      FROM ranked WHERE pick = 1
-    ), rec(user_id, day, close_value, rn, level, trend) AS (
+    WITH RECURSIVE {_DAILY_CLOSE_CTES},
+    rec(user_id, day, close_value, rn, level, trend) AS (
       SELECT user_id, day, close_value, rn,
              CAST(close_value AS DOUBLE), CAST(0.0 AS DOUBLE)
       FROM daily WHERE rn = 1
@@ -913,34 +921,16 @@ def x6_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double exponential smoothing of each user's daily close —
     level AND trend, the recurrence pair single-EMA can't express
     (each state feeds the other's next step). Same scalable shape as
-    ``x6_ema_daily``: deterministic shards sized by ``ema_shards_for``,
-    one Arrow-batched grouped-map pass with the per-user walk inside,
-    fail-fast per-shard row bound. Oracle: the identical two-state
-    recurrence as a recursive CTE; both engines carry RAW states and
-    floor-truncate only the emitted values, so truncation never
-    compounds through the recursion."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
-    shards = ema_shards_for()
-    return (
-        daily.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandas(
-            _holt_kernel(HOLT_ALPHA, HOLT_BETA, EMA_MAX_SHARD_ROWS),
-            schema=(
-                "user_id long, day timestamp_ntz, close_value double, "
-                "level double, trend double"
-            ),
-        )
+    ``x6_ema_daily``: the ``_walk_users`` sharded walk. Oracle: the
+    identical two-state recurrence as a recursive CTE; both engines
+    carry RAW states and floor-truncate only the emitted values, so
+    truncation never compounds through the recursion."""
+    return _walk_users(
+        _daily_close(load_table(spark, sf_dir, "events")),
+        _holt_walk,
+        "user_id long, day timestamp_ntz, close_value double, "
+        "level double, trend double",
+        ("day",),
     )
 
 
@@ -1377,73 +1367,34 @@ CUSUM_K = 5.0
 CUSUM_H = 20.0
 
 
-def _cusum_kernel(k: float, h: float, max_shard_rows: int):
-    """Per-shard two-sided CUSUM walk: against each user's FIRST daily
+def _cusum_walk(uid, rows):
+    """One user's two-sided CUSUM walk: against the user's FIRST daily
     close as the reference mean μ, accumulate s_hi = max(0, s_hi + x −
     μ − k) and s_lo = max(0, s_lo + μ − x − k); alarm when either
     exceeds h, resetting both on the NEXT step (restart-after-alarm
     form). Emitted statistics floor-truncate at 6 decimals; raw states
     carry the recurrence (the Holt convention)."""
-    import math
-
-    import pandas as pd
-
-    def run(pdf):
-        if len(pdf) > max_shard_rows:
-            raise ValueError(
-                f"CUSUM shard frame has {len(pdf)} rows > bound "
-                f"{max_shard_rows}: raise `shards` so each grouped-map "
-                f"frame fits executor memory"
-            )
-        pdf = pdf.sort_values(["user_id", "day"])
-        his, los, alarms = [], [], []
-        for _, g in pdf.groupby("user_id", sort=False):
-            mu = None
-            s_hi = s_lo = 0.0
-            alarm = False
-            for x in g["close_value"]:
-                x = float(x)
-                if mu is None:
-                    mu, s_hi, s_lo, alarm = x, 0.0, 0.0, False
-                else:
-                    if alarm:
-                        s_hi = s_lo = 0.0
-                    s_hi = max(0.0, s_hi + x - mu - k)
-                    s_lo = max(0.0, s_lo + mu - x - k)
-                    alarm = s_hi > h or s_lo > h
-                his.append(math.floor(s_hi * 1_000_000) / 1e6)
-                los.append(math.floor(s_lo * 1_000_000) / 1e6)
-                alarms.append(bool(alarm))
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "day": pdf["day"],
-                "close_value": pdf["close_value"],
-                "s_hi": his,
-                "s_lo": los,
-                "alarm": alarms,
-            }
-        )
-
-    return run
+    mu = None
+    s_hi = s_lo = 0.0
+    alarm = False
+    for r in rows:
+        x = r.close_value
+        if mu is None:
+            mu = x
+        else:
+            if alarm:
+                s_hi = s_lo = 0.0
+            s_hi = max(0.0, s_hi + x - mu - CUSUM_K)
+            s_lo = max(0.0, s_lo + mu - x - CUSUM_K)
+            alarm = s_hi > CUSUM_H or s_lo > CUSUM_H
+        yield uid, r.day, x, _trunc6(s_hi), _trunc6(s_lo), alarm
 
 
 @query(
     "x6_cusum_changepoints",
     oracle=f"""
-    WITH RECURSIVE ranked AS (
-      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             ROUND(CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE), 2)
-               AS close_value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, date_trunc('day', ts)
-               ORDER BY ts DESC, event_id DESC) AS pick
-      FROM events
-    ), daily AS (
-      SELECT user_id, day, close_value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
-      FROM ranked WHERE pick = 1
-    ), rec(user_id, day, close_value, rn, mu, s_hi, s_lo, alarm) AS (
+    WITH RECURSIVE {_DAILY_CLOSE_CTES},
+    rec(user_id, day, close_value, rn, mu, s_hi, s_lo, alarm) AS (
       SELECT user_id, day, close_value, rn,
              CAST(close_value AS DOUBLE),
              CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE), FALSE
@@ -1476,33 +1427,17 @@ def x6_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated regime changes each fire once.
 
     Same scalable shape as x6_ema_daily/x6_holt_smoothing — the
-    recurrence family windows can't express, as a sharded Arrow
-    grouped-map walk with the fail-fast per-shard row bound; oracle =
-    the identical recurrence as a recursive CTE, raw states carried,
-    floor-truncated only at the emit boundary (max(0,·) is exact in
-    IEEE, so both engines walk bit-identical states)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
-    shards = ema_shards_for()
-    return (
-        daily.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandas(
-            _cusum_kernel(CUSUM_K, CUSUM_H, EMA_MAX_SHARD_ROWS),
-            schema=(
-                "user_id long, day timestamp_ntz, close_value double, "
-                "s_hi double, s_lo double, alarm boolean"
-            ),
-        )
+    recurrence family windows can't express, on the ``_walk_users``
+    sharded walk; oracle = the identical recurrence as a recursive CTE,
+    raw states carried, floor-truncated only at the emit boundary
+    (max(0,·) is exact in IEEE, so both engines walk bit-identical
+    states)."""
+    return _walk_users(
+        _daily_close(load_table(spark, sf_dir, "events")),
+        _cusum_walk,
+        "user_id long, day timestamp_ntz, close_value double, "
+        "s_hi double, s_lo double, alarm boolean",
+        ("day",),
     )
 
 
@@ -2147,53 +2082,27 @@ _LTTB_EXACT_ORACLE = f"""
 """
 
 
-def _lttb_kernel(max_shard_rows: int):
-    """Kernel factory: per-shard exact-LTTB walk — users one at a time,
-    interior points in (bucket, ts) order, the previously SELECTED
-    point as the moving anchor. All arithmetic in Python ints
-    (arbitrary precision — numpy int64 products would overflow
-    silently), so the argmax matches the oracle's HUGEINT walk
+def _lttb_walk(uid, rows):
+    """One user's exact-LTTB walk: interior points in (bucket, ts)
+    order, the previously SELECTED point as the moving anchor. All
+    arithmetic in Python ints — the walk gets numeric columns as Python
+    scalars, arbitrary precision where numpy int64 products would
+    overflow silently — so the argmax matches the oracle's HUGEINT walk
     bit-for-bit."""
-    import pandas as pd
-
-    def lttb_of_shard(pdf):
-        if len(pdf) > max_shard_rows:
-            raise ValueError(
-                f"LTTB shard frame has {len(pdf)} rows > bound "
-                f"{max_shard_rows}: raise `shards` so each grouped-map "
-                f"frame fits executor memory"
-            )
-        pdf = pdf.sort_values(["user_id", "bucket", "ts"])
-        users, pts, vs, slots = [], [], [], []
-        for uid, g in pdf.groupby("user_id", sort=False):
-            px, py = int(g["px"].iloc[0]), int(g["py"].iloc[0])
-            cur = best = None  # cur: bucket; best: (area, ts, v, x, y)
-            for row in g.itertuples(index=False):
-                x, y = int(row.x), int(row.y)
-                nn, sxn, syn = int(row.nn), int(row.sxn), int(row.syn)
-                if cur is not None and row.bucket > cur:
-                    users.append(uid)
-                    pts.append(best[1])
-                    vs.append(best[2])
-                    slots.append(cur + 1)
-                    px, py = best[3], best[4]
-                    best = None
-                cur = row.bucket
-                area = abs(
-                    (px * nn - sxn) * (y - py) - (px - x) * (syn - py * nn)
-                )
-                if best is None or area > best[0]:
-                    best = (area, row.ts, row.v, x, y)
-            if best is not None:
-                users.append(uid)
-                pts.append(best[1])
-                vs.append(best[2])
-                slots.append(cur + 1)
-        return pd.DataFrame(
-            {"user_id": users, "pt": pts, "v": vs, "slot": slots}
-        )
-
-    return lttb_of_shard
+    px, py = rows[0].px, rows[0].py
+    cur = best = None  # cur: bucket; best: (area, ts, v, x, y)
+    for row in rows:
+        x, y, nn, sxn, syn = row.x, row.y, row.nn, row.sxn, row.syn
+        if cur is not None and row.bucket > cur:
+            yield uid, best[1], best[2], cur + 1
+            px, py = best[3], best[4]
+            best = None
+        cur = row.bucket
+        area = abs((px * nn - sxn) * (y - py) - (px - x) * (syn - py * nn))
+        if best is None or area > best[0]:
+            best = (area, row.ts, row.v, x, y)
+    if best is not None:
+        yield uid, best[1], best[2], cur + 1
 
 
 @query("x6_lttb_exact", oracle=_LTTB_EXACT_ORACLE)
@@ -2275,14 +2184,11 @@ def x6_lttb_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("x").alias("px"), F.col("y").alias("py")
     )
     cand = interior.join(nxt, ["user_id", "bucket"]).join(firstpt, "user_id")
-    shards = ema_shards_for()
-    winners = (
-        cand.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandas(
-            _lttb_kernel(EMA_MAX_SHARD_ROWS),
-            schema="user_id long, pt timestamp_ntz, v double, slot long",
-        )
+    winners = _walk_users(
+        cand,
+        _lttb_walk,
+        "user_id long, pt timestamp_ntz, v double, slot long",
+        ("bucket", "ts"),
     )
     return (
         small.unionByName(
@@ -2316,19 +2222,7 @@ HW_GAMMA = 0.2
 HW_M = 7
 
 _HW_ORACLE = f"""
-    WITH RECURSIVE ranked AS (
-      SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             ROUND(CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE), 2)
-               AS close_value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, date_trunc('day', ts)
-               ORDER BY ts DESC, event_id DESC) AS pick
-      FROM events
-    ), daily AS (
-      SELECT user_id, day, close_value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
-      FROM ranked WHERE pick = 1
-    ), seeds AS (
+    WITH RECURSIVE {_DAILY_CLOSE_CTES}, seeds AS (
       SELECT user_id,
              MAX(CASE WHEN rn = 1 THEN close_value END) AS c1,
              MAX(CASE WHEN rn = 2 THEN close_value END) AS c2,
@@ -2407,61 +2301,36 @@ _HW_ORACLE = f"""
 """
 
 
-def _hw_kernel(alpha: float, beta: float, gamma: float, max_shard_rows: int):
-    """Kernel factory: per-shard Holt–Winters walk — raw float64 states,
-    seed = mean of the first 7 closes summed LEFT-TO-RIGHT (the oracle
-    writes the same 7-term sum in the same order, so the seed double is
+def _hw_walk(uid, rows):
+    """One user's Holt–Winters walk — raw float64 states, seed = mean
+    of the first 7 closes summed LEFT-TO-RIGHT (the oracle writes the
+    same 7-term sum in the same order, so the seed double is
     bit-identical), b seeded 0, seasonal seeds y_i − mean. Users with
     fewer than 8 daily closes emit nothing (seed consumes 7, the walk
     starts at the 8th)."""
-    import math
-
-    import pandas as pd
-
-    def hw_of_shard(pdf):
-        if len(pdf) > max_shard_rows:
-            raise ValueError(
-                f"HW shard frame has {len(pdf)} rows > bound "
-                f"{max_shard_rows}: raise `shards` so each grouped-map "
-                f"frame fits executor memory"
-            )
-        pdf = pdf.sort_values(["user_id", "day"])
-        out = {k: [] for k in
-               ("user_id", "day", "close_value", "level", "trend", "season")}
-
-        def trunc(x):
-            return math.floor(x * 1_000_000) / 1e6
-
-        for uid, g in pdf.groupby("user_id", sort=False):
-            ys = [float(v) for v in g["close_value"]]
-            if len(ys) < HW_M + 1:
-                continue
-            acc = 0.0
-            for v in ys[:HW_M]:  # left-to-right, matches the SQL sum
-                acc = acc + v
-            level = acc / HW_M
-            trend = 0.0
-            season = [ys[i] - level for i in range(HW_M)]
-            days = list(g["day"])
-            for i in range(HW_M, len(ys)):
-                pos = i % HW_M  # rn = i+1 → (rn−1) % 7
-                prev_l = level
-                level = alpha * (ys[i] - season[pos]) + (1.0 - alpha) * (
-                    level + trend
-                )
-                trend = beta * (level - prev_l) + (1.0 - beta) * trend
-                season[pos] = gamma * (ys[i] - level) + (1.0 - gamma) * (
-                    season[pos]
-                )
-                out["user_id"].append(uid)
-                out["day"].append(days[i])
-                out["close_value"].append(ys[i])
-                out["level"].append(trunc(level))
-                out["trend"].append(trunc(trend))
-                out["season"].append(trunc(season[pos]))
-        return pd.DataFrame(out)
-
-    return hw_of_shard
+    ys = [r.close_value for r in rows]
+    if len(ys) < HW_M + 1:
+        return
+    acc = 0.0
+    for v in ys[:HW_M]:  # left-to-right, matches the SQL sum
+        acc = acc + v
+    level = acc / HW_M
+    trend = 0.0
+    season = [ys[i] - level for i in range(HW_M)]
+    for i in range(HW_M, len(ys)):
+        pos = i % HW_M  # rn = i+1 → (rn−1) % 7
+        prev_l = level
+        level = HW_ALPHA * (ys[i] - season[pos]) + (1.0 - HW_ALPHA) * (
+            level + trend
+        )
+        trend = HW_BETA * (level - prev_l) + (1.0 - HW_BETA) * trend
+        season[pos] = HW_GAMMA * (ys[i] - level) + (1.0 - HW_GAMMA) * (
+            season[pos]
+        )
+        yield (
+            uid, rows[i].day, ys[i], _trunc6(level), _trunc6(trend),
+            _trunc6(season[pos]),
+        )
 
 
 @query("x6_holt_winters", oracle=_HW_ORACLE)
@@ -2476,35 +2345,18 @@ def x6_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes, trend 0, s_i = y_i − mean), emission starts at the 8th
     close, users with shorter histories emit nothing.
 
-    Same scalable shape as EMA/Holt/CUSUM — the seventh sharded
-    grouped-map recurrence kernel with the fail-fast per-shard row
-    bound. Oracle: the identical triple recurrence as a recursive CTE
+    Same scalable shape as EMA/Holt/CUSUM — the ``_walk_users``
+    sharded walk with its fail-fast per-shard row bound. Oracle: the identical triple recurrence as a recursive CTE
     carrying (l, b, s0..s6) state columns with the seasonal slot
     rotated via CASE; BOTH engines seed the level from the same
     left-to-right 7-term sum and carry RAW float64 states,
     floor-truncating only the emitted values — bit-identical walks."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(
-        F.round(
-            F.max_by("value", F.struct("ts", "event_id"))
-            .cast("decimal(18,2)")
-            .cast("double"),
-            2,
-        ).alias("close_value")
-    )
-    shards = ema_shards_for()
-    return (
-        daily.withColumn("shard", F.col("user_id") % shards)
-        .groupBy("shard")
-        .applyInPandas(
-            _hw_kernel(HW_ALPHA, HW_BETA, HW_GAMMA, EMA_MAX_SHARD_ROWS),
-            schema=(
-                "user_id long, day timestamp_ntz, close_value double, "
-                "level double, trend double, season double"
-            ),
-        )
+    return _walk_users(
+        _daily_close(load_table(spark, sf_dir, "events")),
+        _hw_walk,
+        "user_id long, day timestamp_ntz, close_value double, "
+        "level double, trend double, season double",
+        ("day",),
     )
 
 
@@ -2641,13 +2493,7 @@ THEILSEN_MIN_DAYS = 3
 @query(
     "x6_theil_sen",
     oracle=f"""
-    WITH daily AS (
-      SELECT user_id,
-             datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
-             CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE)
-               / COUNT(*) AS v
-      FROM events GROUP BY 1, 2
-    ),
+    WITH {_DAILY_MEAN_CTE},
     pairs AS (
       SELECT a.user_id, a.d AS d1, b.d AS d2,
              (b.v - a.v) / (b.d - a.d) AS slope
@@ -2701,17 +2547,7 @@ def x6_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces pairs to ≤2 rows per user before the final agg. At 100 TB
     the bound is |users| · days² with days fixed by the analysis
     window — linear in users, the only dimension that grows."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-        .alias("d"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(28,12)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("v")
-    )
+    daily = _daily_mean(load_table(spark, sf_dir, "events"))
     a = daily.select(
         "user_id", F.col("d").alias("d1"), F.col("v").alias("v1")
     )
@@ -2777,13 +2613,7 @@ ACF_MIN_DAYS = 10
 @query(
     "x6_acf_lags",
     oracle=f"""
-    WITH daily AS (
-      SELECT user_id,
-             datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
-             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE)
-                        / COUNT(*) * 1000000) AS BIGINT) AS vq
-      FROM events GROUP BY 1, 2
-    ),
+    WITH {_DAILY_MEAN_CTE},
     stats AS (
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_days,
              CAST(SUM(vq) AS DOUBLE) / COUNT(*) AS mean_q
@@ -2858,18 +2688,7 @@ def x6_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded series (≤ days rows each), and the lag fan-out is
     a |ACF_LAGS|-row broadcast values relation expanded map-side. At
     100 TB the volume is |users| · days · |lags| — linear in users."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-        .alias("d"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(28,12)")).cast("double")
-            / F.count(F.lit(1))
-            * F.lit(1e6)
-        ).alias("vq")
-    )
+    daily = _daily_mean(load_table(spark, sf_dir, "events"))
     stats = daily.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         (F.sum("vq").cast("double") / F.count(F.lit(1))).alias("mean_q"),
@@ -2950,13 +2769,7 @@ STL_MIN_DAYS = 14
 @query(
     "x6_stl_decompose",
     oracle=f"""
-    WITH daily AS (
-      SELECT user_id,
-             datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
-             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DOUBLE)
-                        / COUNT(*) * 1000000) AS BIGINT) AS vq
-      FROM events GROUP BY 1, 2
-    ),
+    WITH {_DAILY_MEAN_CTE},
     days AS (
       SELECT user_id, COUNT(*) AS n_days FROM daily GROUP BY user_id
     ),
@@ -3038,18 +2851,7 @@ def x6_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg exchanges, and the final assembly is two user-keyed
     equi-joins of those bounded relations. At 100 TB the volume is
     |users| · days — linear in users, the only growing dimension."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-        .alias("d"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(28,12)")).cast("double")
-            / F.count(F.lit(1))
-            * F.lit(1e6)
-        ).alias("vq")
-    )
+    daily = _daily_mean(load_table(spark, sf_dir, "events"))
     days = daily.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_days")
     )

@@ -73,7 +73,9 @@ def ensure_csv_fixture(root: str | None = None) -> str:
 def read_csv_permissive(spark: SparkSession, root: str) -> DataFrame:
     """Schema-full CSV scan; unparseable rows land intact in
     ``_corrupt``. Explicit schema always (inference at 100 TB means an
-    extra full scan AND nondeterministic types across days)."""
+    extra full scan AND nondeterministic types across days). The day
+    directories are read through ``data`` with ``recursiveFileLookup``
+    (see ``weather.read_raw``)."""
     schema = T.StructType(
         list(CSV_SCHEMA.fields) + [T.StructField("_corrupt", T.StringType())]
     )
@@ -81,5 +83,6 @@ def read_csv_permissive(spark: SparkSession, root: str) -> DataFrame:
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(os.path.join(root, "data", "*"))
+        .option("recursiveFileLookup", "true")
+        .csv(os.path.join(root, "data"))
     )

@@ -248,9 +248,14 @@ def read_raw(
     can ship malformed documents: instead of failing the scan (or
     silently nulling whole rows), unparseable documents land intact in a
     ``_corrupt`` column for quarantine — at 100 TB one bad upstream file
-    must never kill a day's batch."""
-    path = os.path.join(root, "data", date) if date else os.path.join(root, "data", "*")
-    reader = spark.read
+    must never kill a day's batch.
+
+    Every day is read as the ``data`` directory with
+    ``recursiveFileLookup``, not as a ``data/*`` glob: Spark checks a
+    glob path literally for a sink metadata log, and the failed lookup
+    logs a WARN with a stack trace on every call."""
+    path = os.path.join(root, "data", date) if date else os.path.join(root, "data")
+    reader = spark.read.option("recursiveFileLookup", "true")
     if permissive:
         schema = T.StructType(
             list(WEATHER_RAW.fields) + [T.StructField("_corrupt", T.StringType())]
